@@ -7,18 +7,24 @@ Stages (reference pbp_parser/main.py:33-54):
   2. classify  — event type via the priority when-cascade (events.py).
   3. outs/runs — window functions (W3 running-sum-before, W5 group total,
      W6 reverse running sum), not the reference's index loops.
-  4. base state — grouped FSM (state.py) joined back on (contest, play).
+  4. base state — the FSM (state.py) as a pass-through Arrow map that
+     appends five columns to the windowed rows.
   5. expected-runs matrix — group aggregate + pivot (A1/A8).
 
-Every window declares partition (contest_id[, inning, half]) and total
-order (play_id); games are independent, so the whole pipeline scales with
-the number of games.
+A parse has ONE shuffle: the raw rows are hash-partitioned on contest_id
+up front (game_partitioned). Every window partitions on a superset of
+contest_id, so that partitioning satisfies all of them, and games never
+span partitions — the FSM walks each partition in (contest_id, play_id)
+order. Games are independent, so the whole pipeline scales with the
+number of games.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from d3d_etl_spark.operators.windows import (
     group_total,
@@ -26,7 +32,37 @@ from d3d_etl_spark.operators.windows import (
     running_sum_before,
 )
 from d3d_etl_spark.pbp.events import classify_event, outs_on_play, runs_on_play
-from d3d_etl_spark.pbp.state import BASE_STATE_SCHEMA, base_state_map_iter
+from d3d_etl_spark.pbp.state import _BATTER_VERBS, STATE_COLUMNS, base_state_arrow_iter
+
+# The add_events Column trees, built once per live JVM gateway: building
+# them costs ~150 serialized Python->JVM calls of driver time per parse.
+# Only the unresolved expressions are shared; every parse still analyzes,
+# plans and executes its own plan.
+_EVENT_TREES: tuple = (None, None)  # (gateway, trees)
+
+
+def _event_trees() -> tuple[Column, Column, Column, Column]:
+    """(event_type, outs_on_play, runs_on_play, batter) over play_text."""
+    global _EVENT_TREES
+    gateway = SparkContext._gateway
+    if _EVENT_TREES[0] is not gateway or _EVENT_TREES[1] is None:
+        text = F.col("play_text")
+        first_seg = F.split(text, ";").getItem(0)
+        _EVENT_TREES = (gateway, (
+            classify_event(text),
+            outs_on_play(text, F.col("event_type")),
+            runs_on_play(text),
+            F.regexp_extract(first_seg, rf"^\s*(.*?)\s+(?:{_BATTER_VERBS})", 1),
+        ))
+    return _EVENT_TREES[1]
+
+
+def game_partitioned(raw: DataFrame) -> DataFrame:
+    """The parse's one exchange: drop rows without a game, then hash the
+    rest on contest_id at session parallelism, so whole games share a
+    partition and every later per-game window runs without a shuffle."""
+    n = raw.sparkSession.sparkContext.defaultParallelism
+    return raw.where(F.col("contest_id").isNotNull()).repartition(n, "contest_id")
 
 
 def add_metadata(raw: DataFrame) -> DataFrame:
@@ -49,15 +85,11 @@ def add_metadata(raw: DataFrame) -> DataFrame:
 
 
 def add_events(df: DataFrame) -> DataFrame:
-    from d3d_etl_spark.pbp.state import _BATTER_VERBS
-
-    ev = classify_event(F.col("play_text"))
-    first_seg = F.split(F.col("play_text"), ";").getItem(0)
-    batter = F.regexp_extract(first_seg, rf"^\s*(.*?)\s+(?:{_BATTER_VERBS})", 1)
+    ev, outs, runs, batter = _event_trees()
     return (
         df.withColumn("event_type", ev)
-        .withColumn("outs_on_play", outs_on_play(F.col("play_text"), F.col("event_type")))
-        .withColumn("runs_on_play", runs_on_play(F.col("play_text")))
+        .withColumn("outs_on_play", outs)
+        .withColumn("runs_on_play", runs)
         .withColumn(
             "batter_name", F.when(batter != "", batter).otherwise(F.lit(None).cast("string"))
         )
@@ -149,42 +181,52 @@ def add_source_score_runs(df: DataFrame) -> DataFrame:
 
 
 def add_base_state(df: DataFrame) -> DataFrame:
-    """Base-state FSM via the partitioned multi-game runner: hash
-    repartition co-locates whole games, sortWithinPartitions provides the
-    per-game play order (secondary-sort pattern), and one mapInPandas
-    walks many games per worker (state resets on contest change).
-    Measured 3.6x the per-game grouped map at sf0.1 — see
-    state.base_state_map_iter; parity pinned in tests/test_pbp.py."""
-    cols = df.select("contest_id", "play_id", "inning", "half", "play_text")
-    n = df.sparkSession.sparkContext.defaultParallelism
-    arranged = cols.repartition(n, "contest_id").sortWithinPartitions(
-        "contest_id", "play_id"
+    """Base-state FSM as a pass-through Arrow map: every column of `df`
+    passes through unchanged and bases_before, bases_after and r1..r3_name
+    are appended (state.base_state_arrow_iter). `df` must be partitioned so
+    that no game spans two partitions — parse_pbp's head exchange
+    (game_partitioned) guarantees it; sortWithinPartitions supplies the
+    per-game play order (secondary-sort pattern), so one Python worker
+    walks many games with no fork and no join back."""
+    out_schema = StructType(
+        df.schema.fields + [StructField(c, StringType()) for c in STATE_COLUMNS]
     )
-    state = arranged.mapInPandas(base_state_map_iter, BASE_STATE_SCHEMA)
-    return df.join(state, ["contest_id", "play_id"])
+    return df.sortWithinPartitions("contest_id", "play_id").mapInArrow(
+        base_state_arrow_iter, out_schema
+    )
+
+
+def _with_base_state(spine: DataFrame) -> DataFrame:
+    """FSM last, then the (contest_id, play_id)-first column order the
+    parse has always had."""
+    keys = ["contest_id", "play_id"]
+    rest = [c for c in spine.columns if c not in keys]
+    return add_base_state(spine).select(*keys, *rest, *STATE_COLUMNS)
 
 
 def parse_pbp(raw: DataFrame) -> DataFrame:
-    """Full parse: raw narration -> wide play table.
+    """Full parse: raw narration -> wide play table, one row per raw row
+    with a contest_id and non-empty narration.
 
-    The metadata subtree feeds both the window/classifier chain and the
-    base-state FSM branch of the final join and is computed once per side
-    (no ReusedExchange) — deliberately left UNmaterialized: the subtree is a
-    pruned scan + one window, and a localCheckpoint barrier here measured
-    SLOWER (an extra eager job) than the recompute at every tested scale.
+    One stage after one exchange: game_partitioned hashes the raw rows on
+    contest_id, the metadata/classifier/window chain runs on that
+    partitioning without another shuffle, and the FSM appends its columns
+    last. The narration is scanned once and nothing is broadcast or joined.
     """
-    return add_base_state(
-        add_bat_order(add_scores(add_outs_runs_windows(add_events(add_metadata(raw)))))
+    spine = add_bat_order(
+        add_scores(add_outs_runs_windows(add_events(add_metadata(game_partitioned(raw)))))
     )
+    return _with_base_state(spine)
 
 
 def parse_pbp_with_source_scores(raw: DataFrame) -> DataFrame:
     """Current-year parse (reference's `year >= CURRENT_YEAR` branch): the
     feed's running scores are authoritative — runs come from score deltas
     (add_source_score_runs), narration counting is skipped, and the score
-    columns pass through instead of being re-accumulated."""
-    base = add_source_score_runs(add_events(add_metadata(raw)))
-    return add_base_state(add_bat_order(add_outs_runs_windows(base)))
+    columns pass through instead of being re-accumulated. Same one-exchange
+    shape as parse_pbp."""
+    base = add_source_score_runs(add_events(add_metadata(game_partitioned(raw))))
+    return _with_base_state(add_bat_order(add_outs_runs_windows(base)))
 
 
 def expected_runs_matrix(parsed: DataFrame) -> DataFrame:

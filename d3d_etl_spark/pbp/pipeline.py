@@ -4,9 +4,12 @@
 The reference chains subprocesses with CSV files between stages; here every
 arrow is a DataFrame hand-off inside one session, with the two reused
 intermediates (`parsed`, `with_metrics` — each consumed by 3+ downstream
-stages) cached, mirroring the reference's materialization points
-(parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). Pass `checkpoint_dir` to
-persist them as parquet instead (the debugging/restart surface at scale).
+stages) materialized, mirroring the reference's materialization points
+(parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). `parsed` persists eagerly,
+when run_analytics returns; `pbp_with_metrics` persists lazily, on the
+first access to `with_metrics` or to any board. Pass `checkpoint_dir` to
+persist them as parquet instead (the debugging/restart surface at scale) —
+a caller that reads only `parsed` writes only the parsed_pbp directory.
 
     raw pbp ─ parse ─┬─ expected-runs (long + wide matrix)
                      ├─ linear weights ──┐
@@ -55,7 +58,12 @@ class AnalyticsOutputs:
     materialized eagerly at construction — it is the spine every consumer
     shares and the barrier keeps the parse out of broadcast-build threads;
     `with_metrics` materializes on the first access to it or to any board
-    (all boards read it)."""
+    (all boards read it).
+
+    One thread per instance: `cached_property` takes no lock on Python
+    >= 3.12, so two threads touching boards at once could both run the
+    `with_metrics` materialization and hand different boards different
+    DataFrames."""
 
     def __init__(
         self,

@@ -84,7 +84,7 @@ def _pitcher_map_iter(batches):
     per game, kind=0 rows (lineup, ordered by side/pitch_order) arrive
     first and build the queues; kind=1 rows (plays, ordered by play_id)
     then step the FSM. State carries across arrow batches; resets on
-    contest change. Same rationale as state.base_state_map_iter: many
+    contest change. Same rationale as state.base_state_arrow_iter: many
     games per worker instead of per-game cogroup overhead (and AQE cannot
     collapse the explicit repartition)."""
     cur: object = object()

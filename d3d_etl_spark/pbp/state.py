@@ -1,12 +1,14 @@
-"""Base-state FSM (SURVEY.md §2.8 F1) — per-game grouped map.
+"""Base-state FSM (SURVEY.md §2.8 F1).
 
 Reconstructs (runner-on-1st, -2nd, -3rd) before/after every play from the
 narration text. This is the genuinely sequential core the reference
 implements at pbp_parser/columns.py:332-529: explicit runner-segment
 processing, substitution renames, and the forced-advance cascade when the
-batter takes a base. Implementation is fresh pandas (not a copy) executed as
-an `applyInPandas` grouped map — state never crosses games, so N games
-parallelize perfectly across the cluster.
+batter takes a base. Implementation is fresh Python (not a copy): one pure
+step function, fsm_step, driven by the batch parse's Arrow runner
+(base_state_arrow_iter), by the per-game grouped map (base_state_fsm) and
+by the streaming FSM — state never crosses games, so N games parallelize
+perfectly across the cluster.
 
 Narration grammar per FIXTURES.md §1: segments joined by ';', first segment
 is the batter's event, later segments are runner events
@@ -19,6 +21,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pyarrow as pa
 
 from d3d_etl_spark.pbp.events import EVENT_RULES, NO_PLAY
 
@@ -53,6 +56,10 @@ _RUNNER_ONLY = {"SB", "CS", "PK", "PKE", "WP", "PB", "BK", "DI", "ERR", "ADV"}
 # events where trailing runners are FORCED ahead of the batter
 _FORCE_EVENTS = {"BB", "IBB", "HBP", "CI"}
 
+# what the FSM adds to each play, in output order
+STATE_COLUMNS = ("bases_before", "bases_after", "r1_name", "r2_name", "r3_name")
+
+# the per-game grouped map's output (base_state_fsm, streaming FSM)
 BASE_STATE_SCHEMA = (
     "contest_id long, play_id long, bases_before string, bases_after string, "
     "r1_name string, r2_name string, r3_name string"
@@ -139,8 +146,8 @@ def fsm_step(
     """One play's state transition (pure: copies the base dict).
 
     Returns (new_bases, new_cur_half, bases_before, bases_after,
-    r1_before, r2_before, r3_before). Shared by the batch grouped-map FSM
-    and the streaming applyInPandasWithState FSM so both paths have
+    r1_before, r2_before, r3_before). Shared by every runner (batch Arrow
+    map, grouped map, streaming applyInPandasWithState) so all of them have
     identical semantics by construction.
     """
     half_key = (inning, half)
@@ -197,46 +204,44 @@ def fsm_step(
     return bases, cur_half, before, _code(bases), r1, r2, r3
 
 
-def base_state_map_iter(batches):
-    """Multi-game FSM runner for mapInPandas over a (contest_id, play_id)-
-    sorted partition: state resets whenever contest_id changes, so one
-    Python worker walks MANY games in partition order instead of paying
-    per-game pandas-group overhead.
-
-    Why this exists next to base_state_fsm (the per-game grouped map): the
-    grouped map's shuffle is small enough at bench scale that AQE coalesces
-    it to ONE partition, serializing every game on one core, and each tiny
-    game pays its own pandas construction. The partition runner with an
-    explicit repartition measured 1.85s -> 0.52s at sf0.1 with bit-identical
-    output (pinned by tests/test_pbp.py::test_partitioned_fsm_matches_grouped).
-    State is carried ACROSS arrow batches within the partition — batches
-    arrive in partition order, games never span partitions (hash
-    repartition on contest_id)."""
+def base_state_arrow_iter(batches):
+    """The batch FSM runner, for mapInArrow over a partition sorted by
+    (contest_id, play_id) in which no game spans partitions: every input
+    column passes through and STATE_COLUMNS are appended. State resets
+    whenever contest_id changes, so one Python worker walks MANY games in
+    partition order instead of paying per-game group overhead, and it is
+    carried ACROSS Arrow batches — batches arrive in partition order, so a
+    game may straddle a batch boundary. Bit-identical to the per-game
+    grouped map (base_state_fsm) — pinned by
+    tests/test_pbp.py::test_partitioned_fsm_matches_grouped. The grouped
+    map is not the batch path: at bench scale AQE coalesces its small
+    shuffle to ONE partition, serializing every game on one core, and each
+    game pays its own pandas construction."""
     cur: object = object()
     bases: dict[int, str | None] = {}
     cur_half: tuple | None = None
-    for pdf in batches:
-        out: list[tuple] = []
-        for row in pdf.itertuples(index=False):
-            if row.contest_id != cur:
-                cur = row.contest_id
+    for batch in batches:
+        out: list[list[str | None]] = [[] for _ in STATE_COLUMNS]
+        for cid, inning, half, text in zip(
+            *(batch.column(c).to_pylist() for c in ("contest_id", "inning", "half", "play_text"))
+        ):
+            if cid != cur:
+                cur = cid
                 bases = {1: None, 2: None, 3: None}
                 cur_half = None
-            bases, cur_half, before, after, r1, r2, r3 = fsm_step(
-                bases, cur_half, row.inning, row.half, row.play_text
-            )
-            out.append((row.contest_id, row.play_id, before, after, r1, r2, r3))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "contest_id", "play_id", "bases_before", "bases_after",
-                "r1_name", "r2_name", "r3_name",
-            ],
+            bases, cur_half, *state = fsm_step(bases, cur_half, inning, half, text)
+            for col, v in zip(out, state):
+                col.append(v)
+        yield pa.RecordBatch.from_arrays(
+            batch.columns + [pa.array(col, pa.string()) for col in out],
+            names=batch.schema.names + list(STATE_COLUMNS),
         )
 
 
 def base_state_fsm(group: pd.DataFrame) -> pd.DataFrame:
-    """One game's plays (sorted by play_id) -> base-state columns."""
+    """One game's plays (sorted by play_id) -> base-state columns: the
+    per-game grouped map, kept as the reference the batch Arrow runner and
+    the streaming FSM are tested against."""
     bases: dict[int, str | None] = {1: None, 2: None, 3: None}
     cur_half: tuple | None = None
     out_rows: list[tuple] = []

@@ -231,8 +231,9 @@ def agg_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # part='unpivot' (A9) — real .unpivot over the wide conditional counts,
-    # read from the SHARED events aggregate (same sums, zero extra scan)
+    # part='unpivot' (A9) — real .unpivot over the wide conditional counts:
+    # the same ev_base expression tree as the conditional arm, computed in
+    # a second map-side pass over events (see the note above ev_base)
     wide = ev_base.select(
         "user_id",
         F.col("_c").alias("clicks"),

@@ -195,14 +195,12 @@ def materialized_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         generate_games_df(spark, n_games).write.mode("overwrite").parquet(tmp)
 
     _ensure_materialized(path, marker, os.path.join(_CACHE_DIR, "raw_games_*"), build)
-    # the raw table is tiny on disk, so the scan plans one partition — but
-    # downstream is the CPU-heavy parse (classifier + per-game FSM): fan the
-    # rows back out so the parse runs at session parallelism (the thin-scan
-    # pitfall from the scale doctrine, README)
-    n_parts = spark.sparkContext.defaultParallelism
+    # the raw table is tiny on disk, so the scan plans one partition; the
+    # parse's head exchange (parser.game_partitioned) fans it back out to
+    # session parallelism, so no repartition is needed here
     from d3d_etl_spark.io import read_parquet
 
-    return read_parquet(spark, path).repartition(n_parts, "contest_id")
+    return read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------------------

@@ -188,3 +188,23 @@ def test_ensure_table_builds_once(spark, tmp_path):
     b = ensure_table(spark, path, build)
     assert a.count() == b.count() == 10
     assert len(calls) == 1  # second call scanned, didn't rebuild
+
+
+def test_table_count_sees_rebuilt_table(spark, tmp_path):
+    """table_count memoizes per (path, mtime), as read_parquet does: a
+    table rebuilt under a live process is counted afresh, not served the
+    count of the table it replaced."""
+    import time
+
+    from d3d_etl_spark.io import table_count
+
+    sf_dir = str(tmp_path)
+    path = os.path.join(sf_dir, "nation.parquet")
+    spark.range(10).write.parquet(path)
+    assert table_count(spark, sf_dir, "nation") == 10
+    assert table_count(spark, sf_dir, "nation") == 10  # memo hit
+
+    time.sleep(0.05)  # a distinct mtime even on coarse filesystems
+    spark.range(7).write.mode("overwrite").parquet(path)
+    os.utime(path)
+    assert table_count(spark, sf_dir, "nation") == 7

@@ -311,17 +311,13 @@ def test_source_score_runs_mode(spark):
 
 
 def test_partitioned_fsm_matches_grouped(spark):
-    """The mapInPandas multi-game FSM runner (parser.add_base_state's
-    execution path since round 4) must be bit-identical to the per-game
-    grouped map on generated games — including games whose play batches
-    straddle arrow-batch boundaries (forced tiny batch size)."""
+    """The Arrow FSM runner (parser.add_base_state, run by parse_pbp after
+    its one contest_id exchange) must be bit-identical to the per-game
+    grouped map on generated games — including games whose plays straddle
+    Arrow batch boundaries (forced tiny batch size)."""
     from d3d_etl_spark.operators.fsm import run_grouped_fsm
     from d3d_etl_spark.pbp.parser import add_events, add_metadata
-    from d3d_etl_spark.pbp.state import (
-        BASE_STATE_SCHEMA,
-        base_state_fsm,
-        base_state_map_iter,
-    )
+    from d3d_etl_spark.pbp.state import BASE_STATE_SCHEMA, STATE_COLUMNS, base_state_fsm
     from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
 
     raw = spark.createDataFrame(generate_games(40, seed=7), RAW_SCHEMA)
@@ -331,17 +327,13 @@ def test_partitioned_fsm_matches_grouped(spark):
     grouped = run_grouped_fsm(
         cols, ["contest_id"], ["play_id"], base_state_fsm, BASE_STATE_SCHEMA
     )
+    want = sorted(map(tuple, grouped.collect()))
     saved = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     try:
         # tiny batches: many games AND many batch boundaries per partition
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        arranged = cols.repartition(4, "contest_id").sortWithinPartitions(
-            "contest_id", "play_id"
-        )
-        part = arranged.mapInPandas(base_state_map_iter, BASE_STATE_SCHEMA)
-        assert sorted(map(tuple, part.collect())) == sorted(
-            map(tuple, grouped.collect())
-        )
+        part = parse_pbp(raw).select("contest_id", "play_id", *STATE_COLUMNS)
+        assert sorted(map(tuple, part.collect())) == want
     finally:
         # conf.get(key, None) is None when never explicitly set — restore
         # means UNSET in that case, or every later test runs on tiny batches
@@ -349,3 +341,19 @@ def test_partitioned_fsm_matches_grouped(spark):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", saved)
         else:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+
+
+def test_parse_drops_null_contest_id(spark):
+    """A raw row without a contest_id belongs to no game: the parse drops
+    it (the head filter of parser.game_partitioned), and the games around
+    it parse exactly as they do without it."""
+    from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
+
+    rows = generate_games(3, seed=5)
+    orphan = (rows[0][0], rows[0][1], None, 1, "Ghost singled to left.", None, 10**6)
+    with_orphan = parse_pbp(spark.createDataFrame(rows + [orphan], RAW_SCHEMA))
+    clean = parse_pbp(spark.createDataFrame(rows, RAW_SCHEMA))
+    got = with_orphan.collect()
+    assert all(r.contest_id is not None for r in got)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, clean.collect()))
+    assert len(got) == len(rows)

@@ -429,6 +429,38 @@ def test_no_single_partition_window(spark, sf_dir):
     )
 
 
+def test_pbp_parse_one_exchange(spark, tmp_path):
+    """The parse is one stage after one exchange: the executed plan of
+    parse_pbp scans the narration once, shuffles once (hash on
+    contest_id, the head exchange every per-game window reuses) and
+    neither broadcasts nor joins — the FSM appends its columns in a
+    pass-through Arrow map instead of being joined back."""
+    import contextlib
+    import io
+    import re as _re
+
+    from d3d_etl_spark.io import read_parquet
+    from d3d_etl_spark.pbp.parser import parse_pbp
+    from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
+
+    path = str(tmp_path / "narration")
+    spark.createDataFrame(generate_games(12, seed=3), RAW_SCHEMA).write.parquet(path)
+    df = parse_pbp(read_parquet(spark, path))
+    df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    # the executed plan: AQE's final plan, without the initial plan below it
+    text = buf.getvalue()
+    assert "== Final Plan ==" in text, text
+    final = text.split("== Initial Plan ==")[0]
+    assert len(_re.findall(r"\bFileScan parquet\b", final)) == 1, final
+    exchanges = _re.findall(r"\bExchange (\w+)\((\w+)#", final)
+    assert exchanges == [("hashpartitioning", "contest_id")], final
+    assert "BroadcastExchange" not in final
+    assert not _re.search(r"\w*Join\b", final), final
+
+
 def test_fixture_war_runs_production_chain():
     """Round-8 pin: the fixture-scale WAR twin must exercise the SAME
     engine code path the corpus-scale query runs (war_batting_from_parsed)

@@ -219,17 +219,13 @@ def test_text_lsh_hot_bucket_guard(spark):
 def test_fsm_mega_game_parity(spark):
     """One mega-game (a single contest with ~100x the plays of its
     neighbours — inherently ONE sequential FSM walk) among normal games:
-    the partitioned multi-game runner must stay bit-identical to the
+    the Arrow multi-game runner must stay bit-identical to the
     grouped per-game map under that imbalance, including arrow batches
     straddling the mega-game, and normal games must not be dragged into
     the mega-game's partition beyond hash placement."""
     from d3d_etl_spark.operators.fsm import run_grouped_fsm
-    from d3d_etl_spark.pbp.parser import add_events, add_metadata
-    from d3d_etl_spark.pbp.state import (
-        BASE_STATE_SCHEMA,
-        base_state_fsm,
-        base_state_map_iter,
-    )
+    from d3d_etl_spark.pbp.parser import add_base_state, add_events, add_metadata
+    from d3d_etl_spark.pbp.state import BASE_STATE_SCHEMA, STATE_COLUMNS, base_state_fsm
     from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
 
     rows = generate_games(20, seed=13)
@@ -252,10 +248,9 @@ def test_fsm_mega_game_parity(spark):
     grouped = run_grouped_fsm(
         cols, ["contest_id"], ["play_id"], base_state_fsm, BASE_STATE_SCHEMA
     )
-    arranged = cols.repartition(8, "contest_id").sortWithinPartitions(
-        "contest_id", "play_id"
-    )
-    part = arranged.mapInPandas(base_state_map_iter, BASE_STATE_SCHEMA)
+    # the parse's head exchange, at 8 partitions
+    game_parts = add_events(add_metadata(raw.repartition(8, "contest_id")))
+    part = add_base_state(game_parts).select("contest_id", "play_id", *STATE_COLUMNS)
     got = sorted(map(tuple, part.collect()))
     want = sorted(map(tuple, grouped.collect()))
     assert got == want

@@ -5,28 +5,35 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...},
-     "sf": 0.1, "samples_file": "BENCH.json"}
+     "sf": 0.1, "cpus": 4, "heap": "4g",
+     "host": {"steal": s, "iowait": s, "user": s, "sys": s, "load1": x},
+     "samples_file": "BENCH.json"}
 
-`queries` stays {name: min_sec} (the cross-round trend contract). The
-per-run samples ({name: {min, median, runs}}) moved OFF stdout into the
-sidecar file BENCH.json next to this script: the round driver tail-caps
-its stdout capture (~2 KB — BENCH_r05 lost its head entries and failed
-to parse), so the printed line is kept compact and the full payload —
-the same dict plus `samples` — is always on disk. Samples let a reader
-tell host noise (median far above min, runs scattered) from a real plan
-regression (all runs shifted) without re-benchmarking.
+`queries` stays {name: min_sec} (the cross-run trend contract). The
+printed line stays compact (under ~2 KB, so a tail-capped stdout capture
+still parses it); the full payload, the same dict plus per-query
+`samples`, is written to the sidecar BENCH.json next to this script.
+`cpus` is the session's defaultParallelism and `heap` its live
+spark.driver.memory: runs compare only at the same (sf, cpus, heap).
 
-Since round 7 each sample also carries `max_task` — per-task maxima
-(input MB / shuffle-read MB / peak execution memory MB, plus the top
-memory stage) read from the UI REST API across the query's stages, the
-stress harness's scale-safety read folded into every bench run: wall
-clocks drift with host contention, task maxima do not, so plan-regression
-adjudication is a data read. Absent (not zero) when the UI is
-unreachable.
+Each sample holds the three timed runs ({min, median, runs}), so host
+noise (median far above min, runs scattered) can be told from a plan
+regression (all runs shifted) without re-benchmarking, plus:
 
-Each query is forced end-to-end with the noop sink (full computation, no
-collect/serialization overhead measured). One warm-up of a trivial job runs
-first so JVM/codegen startup is not attributed to the first query.
+- `host`: host-wide steal / iowait / user / sys CPU seconds across the
+  query's three runs and the 1-minute load average after them
+  (perfbench/procstat.py). The printed `host` is the same read over the
+  whole session. Steal or iowait well above zero, or load1 well above
+  `cpus`, means a loaded host: its wall deltas deserve no weight.
+- `max_task`: per-task maxima (input MB / shuffle-read MB / peak execution
+  memory MB, plus the top memory stage) read from the UI REST API across
+  the query's stages. Wall clocks drift with host contention, task maxima
+  do not. Absent (not zero) when the UI is unreachable.
+
+Host and REST reads sit outside the timed sections. Each query is forced
+end-to-end with the noop sink (full computation, no collect/serialization
+overhead measured). Warm-up jobs run first so JVM/codegen startup is not
+attributed to the first query.
 """
 
 from __future__ import annotations
@@ -34,7 +41,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
 import sys
 import time
 
@@ -45,35 +51,24 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from d3d_etl_spark import queries as qmod
 from d3d_etl_spark.queries.registry import REGISTRY
 from d3d_etl_spark.session import get_spark
+from perfbench import procstat
 
 
-# Intentional, adjudicated task-memory growth (same doctrine as the
-# stress tier's exemptions: named, justified, and self-expiring — once
-# the new level is the committed baseline the entry is dead weight and
-# MUST be dropped, or it masks the next genuine regression on that
-# query). Round 12 (ADVICE r11 #1): entries carry a CEILING —
-# {name: (ceiling_mb, reason)} — and a >2x flag diverts to
-# task_mem_acknowledged (visible, not fatal) ONLY while the measured
-# peak stays under the ceiling; past it the flag is a regression again,
-# so an unbounded future jump (45 -> 500 MB) can never hide behind an
-# old adjudication. Round 14: EMPTY again — the 19 round-13 entries
-# (driver-heap re-baseline, 1g -> 0.5 GB/core: spill-early operators
-# started holding state in memory) expired when the r13 BENCH.json
-# committed the post-heap peaks as the comparison baseline; keeping them
-# would mask the next real sub-128 MB regression on those queries
-# (VERDICT r13 next #2 / ADVICE r13 medium — the guard is live again).
+# Intentional, adjudicated task-memory growth: {name: (ceiling_mb, reason)}.
+# A >2x flag diverts to task_mem_acknowledged (visible, not fatal) only
+# while the measured peak stays under the ceiling, so an old adjudication
+# never hides an unbounded jump. An entry expires once its level is the
+# committed baseline; keeping it would mask the next regression.
 _TASK_MEM_ACK: dict[str, tuple[float, str]] = {}
 
+# Task maxima compare only like with like: same scale, same core count
+# (task slots share one JVM) and same driver heap.
+_GUARD_KEYS = ("sf", "cpus", "heap")
 
-def _task_mem_regressions(samples: dict, sf: float) -> tuple[list[str], list[str]]:
-    """Cross-round task-maxima regression guard (VERDICT r7 #5): diff this
-    run's per-query max-task peak execution memory against the COMMITTED
-    BENCH.json (HEAD — i.e. the previous round's accepted numbers) and
-    flag >2x growth. Task maxima are contention-immune, so a flagged entry
-    is a plan regression, not host noise — this turns the manual
-    "byte-identical to last round" adjudication into machinery. Queries
-    under 32 MB are skipped (hash-map resize granularity dominates there).
-    Empty when git/HEAD copy is unavailable (first run, detached tree)."""
+
+def _committed_bench() -> dict:
+    """The committed BENCH.json (git HEAD, the last accepted run); {} when
+    git or the HEAD copy is unavailable."""
     import subprocess
 
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -84,13 +79,32 @@ def _task_mem_regressions(samples: dict, sf: float) -> tuple[list[str], list[str
             cwd=repo,
             timeout=30,
         ).stdout
-        prev = json.loads(raw) if raw else {}
+        return json.loads(raw) if raw else {}
     except Exception:
-        return [], []
-    # task maxima are only comparable at the SAME scale: a run at a
-    # different SPARK_GRAFT_SF_DIR than the committed round would either
-    # write spurious regressions or silently mask real ones (ADVICE r8 #1)
-    if prev.get("sf") != sf:
+        return {}
+
+
+def _task_mem_skip(run: dict, prev: dict) -> str | None:
+    """Why the committed record `prev` is not comparable with this `run`
+    (dicts carrying _GUARD_KEYS), or None when it is."""
+    if not prev:
+        return "no committed BENCH.json"
+    missing = [k for k in _GUARD_KEYS if k not in prev]
+    if missing:
+        return f"committed BENCH.json lacks {', '.join(missing)}"
+    diff = [f"{k} {run.get(k)} vs {prev[k]}" for k in _GUARD_KEYS if run.get(k) != prev[k]]
+    return f"committed run differs: {'; '.join(diff)}" if diff else None
+
+
+def _task_mem_regressions(
+    samples: dict, run: dict, prev: dict
+) -> tuple[list[str], list[str]]:
+    """Diff this run's per-query max-task peak execution memory against the
+    committed run `prev` and flag >2x growth. Task maxima are
+    contention-immune, so a flagged entry is a plan regression, not host
+    noise. Queries under 32 MB are skipped (hash-map resize granularity
+    dominates there). Empty when `_task_mem_skip` names a reason."""
+    if _task_mem_skip(run, prev):
         return [], []
     prev_s = prev.get("samples", {})
     regs, acked = [], []
@@ -111,113 +125,6 @@ def _task_mem_regressions(samples: dict, sf: float) -> tuple[list[str], list[str
     return regs, acked
 
 
-# Fixed-work calibration kernels (VERDICT r9 missing #3; two profiles per
-# VERDICT r10 next #6; REBUILT as TELEMETRY in round 12 per VERDICT r11
-# finding 1). History: the round-10/11 design — sub-second kernels,
-# min-of-3, sampled ONCE at the end of a ~5-minute session — measured
-# ~1.9x run-to-run swings on the SAME host, so its `value_calibrated`
-# (= value * ref / kernel) claimed cross-round regressions that flat
-# per-query raws refuted. Round 12 first hardened the anchor the way the
-# verdict prescribed (kernels lengthened to >= 5 s of fixed work at
-# idle; >= 5 runs per kernel INTERLEAVED across the session as 3 probes
-# at start / mid / end; per-kernel min/median/max spread published) and
-# then ran the verdict's own acceptance experiment — two same-code runs
-# under visibly different host load must agree on the calibrated total
-# within ~5%. MEASURED RESULT (recorded in COVERAGE.md round 12): under
-# a steady 20-process CPU-spinner load the shuffle kernel inflated
-# 5.188 -> 9.118 s (1.76x) while the RAW query total moved only
-# 79.6 -> 81.9 s (+2.9%) — the suite's queries at sf0.1 are short and
-# do not saturate 32 cores the way a fixed-work kernel does, so kernel
-# normalization OVERCORRECTS (a would-be value_calibrated swung -41%).
-# The normalization model "all walls scale with kernel speed" is wrong
-# for this workload; per the verdict's fallback, `value_calibrated` IS
-# RETIRED. What remains — and what cross-round readers should use:
-#   * raw min-vs-min per query + the max_task sidecars (task maxima are
-#     contention-immune) — the primary comparison, as always;
-#   * calibration_sec / calibration_cpu_sec / calibration_spread as
-#     HOST-LOAD TELEMETRY: calibration_vs_pin >> 1 or spread
-#     max/min >> 1.3 means the host was visibly loaded/churning during
-#     the run and wall-clock deltas deserve no adjudication weight.
-# Two kernels, two profiles (shuffle-I/O vs pure-CPU load differ):
-#   calibration_sec      4.8B-row xxhash64 + 1024-key partial-agg SHUFFLE
-#   calibration_cpu_sec  10.24B-row xxhash64 fold into ONE global sum — no
-#                        exchange beyond the single final row (pure
-#                        whole-stage-codegen CPU)
-_CAL_REF = 5.31  # seconds; round-12 idle-host pin (4.8B rows, min-of-5)
-_CAL_CPU_REF = 5.31  # seconds; same pin (10.24B rows, min-of-5 — the two
-# kernels landing on the same wall is coincidence, not a shared constant)
-# Both pins were measured at local[32]: the kernels are fixed TOTAL work,
-# so at a lower SPARK_GRAFT_CPUS the wall rises ~(32/N)x BY DESIGN and
-# calibration_vs_pin >> 1 does NOT mean a loaded host there. The payload
-# carries calibration_pin_cores so a reader of a low-core run (the
-# driver's scaling legs) can tell core-count dilation from real load
-# instead of inventing a per-core normalization (the retired
-# value_calibrated lesson: never normalize without an idle pin at the
-# same configuration).
-_CAL_PIN_CORES = 32
-
-# a degenerate telemetry read (near-0 from a broken noop path, or a
-# stuck executor inflating it) is flagged, not published bare (ADVICE
-# r10 #3; round 12 applies the band to BOTH kernels per ADVICE r11 #4).
-# Sized for the ~5 s kernels: an idle read near 5 s, tolerating hosts a
-# few x slower, never 10x off.
-_CAL_SANE = (1.0, 60.0)
-
-_CAL_PROBE_RUNS = 2  # runs per kernel per probe; 3 probes -> 6 runs/kernel
-
-
-def _cal_kernels(spark):
-    """The two fixed-work kernels (noop sink, no collect)."""
-
-    def shuffle_kernel():
-        (
-            spark.range(0, 4_800_000_000, 1, 32)
-            .selectExpr("xxhash64(id) AS h")
-            .groupBy((F.col("h") % 1024).alias("b"))
-            .agg(F.count("*").alias("n"), F.sum(F.pmod("h", F.lit(1_000_003))).alias("s"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-
-    def cpu_kernel():
-        (
-            spark.range(0, 10_240_000_000, 1, 32)
-            .selectExpr("xxhash64(id) AS h")
-            .agg(F.sum(F.pmod("h", F.lit(1_000_003))).alias("s"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-
-    return shuffle_kernel, cpu_kernel
-
-
-def _cal_probe(spark, runs: dict, position: str) -> None:
-    """One interleaved calibration probe: _CAL_PROBE_RUNS timed walls of
-    each kernel, appended to the session-wide `runs` accumulator."""
-    shuffle_kernel, cpu_kernel = _cal_kernels(spark)
-    for _ in range(_CAL_PROBE_RUNS):
-        for key, job in (("shuffle", shuffle_kernel), ("cpu", cpu_kernel)):
-            t0 = time.perf_counter()
-            job()
-            runs[key].append(round(time.perf_counter() - t0, 3))
-    runs["positions"].append(position)
-
-
-def _cal_summary(vals: list[float]) -> dict:
-    # statistics.median averages the two middle order statistics on the
-    # even run counts this harness produces; the upper-middle pick biased
-    # the published spread median upward (ADVICE r12, telemetry-only)
-    s = sorted(vals)
-    return {
-        "min": s[0],
-        "median": round(statistics.median(s), 3),
-        "max": s[-1],
-        "runs": vals,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -226,12 +133,11 @@ def main() -> None:
     qmod.load_all()
     bench_queries = {n: q for n, q in sorted(REGISTRY.items()) if q.bench}
     # report renamed-but-identical queries under their historical bench keys
-    # so cross-round per-query trends stay comparable (the z_ prefix only
-    # re-sorts them out of the driver's correctness window). z_pbp_dag is
-    # NOT aliased: this round changed what it measures (input read from
-    # materialized parquet instead of in-flight generation), so it reports
-    # under its new name rather than faking continuity with old pbp_dag.
+    # so per-query trends stay comparable across runs (the z_ prefix only
+    # re-sorts them out of the alphabetical verify window); a query whose
+    # measured work changed reports under its own name
     aliases = {"z_join_asof": "join_asof"}
+    host0 = procstat.host_times()
 
     ui_port = int(os.environ.get("SPARK_GRAFT_BENCH_UI_PORT", "4047"))
     spark = get_spark(
@@ -258,15 +164,11 @@ def main() -> None:
         _identity, "id long"
     ).count()
 
-    # r14 (VERDICT r13 next #7): compile one representative WIDE
-    # conditional aggregate before the timed loop. The alphabetically
-    # first benched query (agg_family) otherwise absorbs the session's
-    # first whole-stage-codegen wave — Janino compiler classloading + JIT
-    # of the compiler itself — in its run 1 (r13 committed run: 8.6 s
-    # run-1 vs 1.56 s quiet-window min). Generated classes are
-    # plan-specific, so this warms the COMPILER infrastructure, not any
-    # benched plan; the timed methodology below is unchanged (still 3
-    # runs per query, min reported).
+    # compile one representative WIDE conditional aggregate before the
+    # timed loop: the alphabetically first benched query otherwise absorbs
+    # the session's first whole-stage-codegen wave (Janino classloading +
+    # JIT of the compiler itself) in its run 1. Generated classes are
+    # plan-specific, so this warms the COMPILER, not any benched plan.
     w = spark.range(300_000).selectExpr(
         "id", "id % 97 AS k", "CAST(id % 7 AS STRING) AS e"
     )
@@ -289,7 +191,7 @@ def main() -> None:
     # arms measure STEADY-STATE serving; a cache-cold checkout would
     # otherwise fold the one-time index build into run 1's wall AND into
     # the max_task stage window, poisoning the cross-round regression
-    # guard — the same fix run_registry_audit got this round)
+    # guard)
     from d3d_etl_spark.queries.simsearch import ivf_index_state, pq_index_state
 
     ivf_index_state(spark, sf_dir)
@@ -304,21 +206,20 @@ def main() -> None:
     # damps host noisy-neighbor variance (observed 30-40% machine-wide
     # swings between runs with identical code); the raw runs are published
     # in `samples` so regressions can be told from noise after the fact.
-    cal_runs: dict = {"shuffle": [], "cpu": [], "positions": []}
-    _cal_probe(spark, cal_runs, "start")  # probe 1: before the first query
-    mid_at = len(bench_queries) // 2
-    for qi, (name, q) in enumerate(bench_queries.items()):
-        if qi == mid_at:
-            _cal_probe(spark, cal_runs, f"mid (before query {qi + 1})")
+    for name, q in bench_queries.items():
         before = tm.completed_stages(ui_port, app) if app else {}
+        h0 = procstat.host_times()
         runs = []
         for _ in range(3):
             t0 = time.perf_counter()
             q.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             runs.append(round(time.perf_counter() - t0, 3))
+        host = procstat.host_delta(h0, procstat.host_times())
         key = aliases.get(name, name)
         timings[key] = min(runs)
-        samples[key] = {"min": min(runs), "median": sorted(runs)[1], "runs": runs}
+        samples[key] = {
+            "min": min(runs), "median": sorted(runs)[1], "runs": runs, "host": host,
+        }
         if app:  # REST reads sit OUTSIDE the timed sections
             after = tm.completed_stages(ui_port, app)
             new = {k: v for k, v in after.items() if k not in before}
@@ -331,56 +232,31 @@ def main() -> None:
             }
 
     total = round(sum(timings.values()), 3)
-    _cal_probe(spark, cal_runs, "end")  # probe 3: after the last query
-    cal = min(cal_runs["shuffle"])
-    cal_cpu = min(cal_runs["cpu"])
-    regressions, acknowledged = _task_mem_regressions(samples, sf)
+    run = {
+        "sf": sf,
+        "cpus": n_workers,
+        "heap": spark.conf.get("spark.driver.memory", None),
+    }
+    prev = _committed_bench()
+    regressions, acknowledged = _task_mem_regressions(samples, run, prev)
     payload = {
         "metric": (
             f"e2e wall-clock, {len(timings)} headline queries "
             "(joins/aggs/windows/dedup/simsearch/text), noop sink, "
             "steady-state (min of 3 runs per query)"
         ),
-        "value": total,  # the PRIMARY metric — compare raw min-vs-min
-        # per query; the calibration fields below are host-load
-        # TELEMETRY, not a normalizer (value_calibrated retired in
-        # round 12 — see the calibration block comment)
+        "value": total,  # compare raw min-vs-min per query
         "unit": "sec",
         "queries": timings,
-        "sf": sf,
-        "calibration_sec": cal,
-        "calibration_cpu_sec": cal_cpu,
-        # vs the idle-host pins: >> 1 means the host was visibly loaded
-        # during this run and wall deltas deserve no adjudication weight
-        "calibration_vs_pin": {
-            "shuffle": round(cal / _CAL_REF, 3),
-            "cpu": round(cal_cpu / _CAL_CPU_REF, 3),
-        },
-        # the pins are local[32] idle measurements of FIXED-work kernels:
-        # a run at fewer cores dilates them ~(pin_cores/N)x by design —
-        # read vs_pin only against runs at the same core count
-        "calibration_pin_cores": _CAL_PIN_CORES,
-        # per-kernel spread across the 3 interleaved probes: max/min >>
-        # 1.3 means the host was CHURNING (not just loaded) mid-session.
-        # The PRINTED line carries only min/median/max per kernel — the
-        # raw runs + probe positions live in the sidecar, keeping stdout
-        # safely under the driver's ~2 KB tail-cap (the BENCH_r05 lesson)
-        "calibration_spread": {
-            k: {m: _cal_summary(cal_runs[k])[m] for m in ("min", "median", "max")}
-            for k in ("shuffle", "cpu")
-        },
+        **run,
+        # host-load telemetry over the whole session: steal/iowait >> 0 or
+        # load1 >> cpus means wall deltas deserve no adjudication weight
+        "host": procstat.host_delta(host0, procstat.host_times()),
         "samples_file": "BENCH.json",
     }
-    # a degenerate telemetry read is flagged, not published bare
-    # (ADVICE r10 #3 + r11 #4: both kernels under the band)
-    anomalies = [
-        f"{key} kernel {val}s outside sane band {_CAL_SANE} — "
-        "telemetry unusable for this run"
-        for key, val in (("shuffle", cal), ("cpu", cal_cpu))
-        if not (_CAL_SANE[0] < val < _CAL_SANE[1])
-    ]
-    if anomalies:
-        payload["calibration_anomaly"] = "; ".join(anomalies)
+    skipped = _task_mem_skip(run, prev)
+    if skipped:  # never skip the guard silently
+        payload["task_mem_guard_skipped"] = skipped
     if regressions:  # keep the printed line compact when clean
         payload["task_mem_regressions"] = regressions
     if acknowledged:
@@ -389,11 +265,6 @@ def main() -> None:
     with open(sidecar, "w") as f:
         json.dump(
             {**payload,
-             "calibration_spread": {  # full version: raw runs + probes
-                 "shuffle": _cal_summary(cal_runs["shuffle"]),
-                 "cpu": _cal_summary(cal_runs["cpu"]),
-                 "probes": cal_runs["positions"],
-             },
              "task_mem_regressions": regressions,
              "task_mem_acknowledged": acknowledged, "samples": samples},
             f,

@@ -36,15 +36,6 @@ def sum_money(col: Column) -> Column:
     return dollars(sum_cents(col))
 
 
-def avg_money(col: Column) -> Column:
-    """Deterministic mean of a 2-decimal column: (Σcents / n) / 100.
-
-    Division order is part of the contract — oracle SQL must mirror
-    ``CAST(SUM(cents) AS DOUBLE) / COUNT(col) / 100.0`` exactly.
-    """
-    return F.sum(cents(col)).cast("double") / F.count(col) / 100.0
-
-
 # --- SQL-side mirrors (DuckDB dialect) -------------------------------------
 # Kept beside the Spark builders so the two dialects stay in lock-step.
 

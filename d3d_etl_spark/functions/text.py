@@ -75,15 +75,6 @@ def sql_word_shingles(tokens_expr: str, n: int = 3) -> str:
     )
 
 
-def regexp_count_portable(col: Column, pattern: str) -> Column:
-    """Count non-overlapping matches; mirrors DuckDB len(regexp_extract_all)."""
-    return F.regexp_count(col, F.lit(pattern))
-
-
-def sql_regexp_count(expr: str, pattern: str) -> str:
-    return f"len(regexp_extract_all({expr}, '{pattern}'))"
-
-
 def marker_hits(tok: Column, markers: tuple[str, ...]) -> Column:
     """How many tokens are in the marker set (language-ID signal)."""
     arr = F.array(*[F.lit(m) for m in markers])

@@ -26,9 +26,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # Per-(path, mtime) parquet SCHEMAS. Every `spark.read.parquet(path)`
 # runs a 1-task schema-inference job (the "parquet at <unknown>" jobs in
 # the UI) before the driver can even plan — a serialized ~0.1 s driver
@@ -96,10 +93,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Per-(path, mtime) table row counts. Half a dozen serving queries
 # re-derive the same scalar (serving params, corpus-scaled K, encode-task
 # sizing) with a fresh count job per invocation — a pure
-# driver-orchestration tax at any scale (VERDICT r12 next #2's memoization
-# doctrine: scalars that are constant per scale live in a per-scale cache,
-# not in a per-run job). Keyed like _PARQUET_SCHEMAS, so a table rebuilt
-# under a live process gets a fresh count. This memoizes the COUNT only —
+# driver-orchestration tax at any scale (scalars that are constant per
+# scale live in a per-scale cache, not in a per-run job). Keyed like
+# _PARQUET_SCHEMAS, so a table rebuilt under a live process gets a fresh
+# count. This memoizes the COUNT only —
 # never rows, never results.
 _TABLE_COUNTS: dict[tuple[str, float], int] = {}
 
@@ -139,12 +136,6 @@ def fan_out(df: DataFrame) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so `spark.sql` queries run as-is."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def write_partitioned(

@@ -77,7 +77,7 @@ def jaccard_pairs(
     localCheckpoint (whose LogicalRDD carries the original small stats), so
     the planner happily auto-broadcasts a CORPUS-sized side — measured at
     the sf1 stress tier as a 416 MiB hash relation charged to one task,
-    growing linearly with the corpus (the round-7 weak). Only
+    growing linearly with the corpus. Only
     duplicate-rate-bounded sides (the candidate set) may broadcast;
     everything corpus-grain (shingle rows, per-doc sizes) takes a shuffled
     hash join with the pair-grain side as the build.
@@ -262,8 +262,7 @@ def lsh_candidates(band_df: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> Data
     # Both self-join sides are corpus-grain (n_bands rows per doc), so the
     # join must SHUFFLE on the band key — the checkpointed LogicalRDD keeps
     # the original small size estimate and Catalyst otherwise auto-broadcasts
-    # the whole band table (measured 40 MiB at sf1, linear in the corpus —
-    # the round-7 weak's second site).
+    # the whole band table (measured 40 MiB at sf1, linear in the corpus).
     if not hot.limit(1).count():
         a = band_df.select(F.col("doc").alias("doc_a"), "band_idx", "band_key")
         b = band_df.select(F.col("doc").alias("doc_b"), "band_idx", "band_key")
@@ -327,11 +326,6 @@ def simhash(token_hashes: Column, bits: int = 32) -> Column:
         cnt = F.size(F.filter(token_hashes, bit_set(i)))
         acc = acc + F.when(2 * cnt > n, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
     return acc
-
-
-def simhash_from_text_tokens(tok: Column, bits: int = 32) -> Column:
-    hex_chars = (bits + 3) // 4
-    return simhash(F.transform(tok, lambda t: md5_int(t, hex_chars)), bits)
 
 
 def simhash_signatures(df: DataFrame, id_col: str, tok: Column, bits: int = 32) -> DataFrame:

@@ -73,13 +73,6 @@ def extract_media_features(df: DataFrame, id_col: str = "doc_id", payload_col: s
     return src.mapInPandas(decode_media_batch, DECODED_SCHEMA)
 
 
-def real_decode_stub(payload: bytes):  # pragma: no cover
-    raise NotImplementedError(
-        "real media decoding requires PIL/av which are not installed; "
-        "extract_media_features uses the deterministic fake decoder"
-    )
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

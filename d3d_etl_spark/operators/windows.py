@@ -14,10 +14,6 @@ from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
-def ordered_window(partition: list[str | Column], order: list[str | Column]) -> WindowSpec:
-    return Window.partitionBy(*partition).orderBy(*order)
-
-
 def lag_over(col: Column, w: WindowSpec, n: int = 1, default=None) -> Column:
     """W1 — previous row's value within the group (pandas groupby.shift(n),
     reference pbp_parser/main.py:61-66)."""
@@ -59,10 +55,6 @@ def group_total(col: Column, partition: list[str | Column]) -> Column:
 def row_number_over(w: WindowSpec) -> Column:
     """W7/W8 — 1-based position in group (first/last flags, cumcount)."""
     return F.row_number().over(w)
-
-
-def is_first(w: WindowSpec) -> Column:
-    return F.row_number().over(w) == 1
 
 
 def ffill(col: Column, w: WindowSpec) -> Column:
@@ -111,8 +103,8 @@ def zscore_from_stats(col_int: Column, s1: Column, s2: Column, n: Column) -> Col
     Expression shape is part of the determinism contract — the SQL oracle
     mirrors it verbatim:
         mean = s1/n;  var = (s2 - s1*s1/n)/(n-1);  z = (x - mean)/sqrt(var)
-    The two degenerate-group divisions are try_divide (round 12, the
-    zero-norm doctrine): a SINGLE-MEMBER group (n-1 = 0) or a CONSTANT
+    The two degenerate-group divisions are try_divide (the zero-norm
+    doctrine): a SINGLE-MEMBER group (n-1 = 0) or a CONSTANT
     group (var exactly 0 — the moments are exact integers) would throw
     DIVIDE_BY_ZERO under Spark 4's default ANSI mode, killing the job —
     on such input pandas maps to NaN and the SQL oracle's plain `/` maps

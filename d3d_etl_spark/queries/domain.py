@@ -1,7 +1,7 @@
 """Oracled domain analytics over the materialized FSM output.
 
-`z_pbp_dag`/`z_pbp_war` run the full narration pipeline end-to-end; since
-round 9 both are fully oracled (queries/stateful.py — the last raw-double
+`z_pbp_dag`/`z_pbp_war` run the full narration pipeline end-to-end; both
+are fully oracled (queries/stateful.py — the last raw-double
 sums now aggregate as 1e-9-scaled longs, and the crc32 team ids are
 recomputed from first principles in recursive SQL). This module keeps the
 stage-by-stage verification that predates those oracles, the way the
@@ -310,7 +310,7 @@ _PARSED_SRC = f"read_parquet('{_PARSED_GLOB}')"
 
 def _lw_ctes(src: str = _PARSED_SRC) -> str:
     """Quantized linear-weights CTE chain over the play source `src` —
-    parametrized (round 8) so the fixture-scale WAR twin
+    parametrized so the fixture-scale WAR twin
     (queries/pbp_fixture.py: z_pbp_fixture_war) can run the identical
     chain over the rule-table-generated fixture plays CTE."""
     return f"""
@@ -623,16 +623,10 @@ batwar AS (
 
 _WAR_CTES_CHAIN = _war_ctes_chain()
 
-_WAR_ORACLE = f"""
-WITH {_WAR_CTES_CHAIN}
-SELECT division, year, batter_name, pa, ab, sb, cs, woba, wraa, rar, war
-FROM batwar
-"""
-
 
 def _war_batting_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batting-WAR arithmetic end-to-end over the materialized plays —
-    see war_batting_from_parsed (the chain, extracted in round 8 so the
+    see war_batting_from_parsed (the chain, shared so the
     fixture-scale twin z_pbp_fixture_war can run it over the fixture
     parse instead of the materialized corpus)."""
     return war_batting_from_parsed(materialized_parsed(spark, sf_dir))

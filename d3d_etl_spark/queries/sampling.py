@@ -151,9 +151,9 @@ def _sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 consolidation (VERDICT.md "Next round" #2): the three sampling /
-# splitting queries are one tagged union so the whole deterministic-sampling
-# surface sits inside the driver's 50-query window. Arms keep their own
+# The three sampling / splitting queries are one tagged union so the
+# whole deterministic-sampling surface sits inside the driver's 50-query
+# window. Arms keep their own
 # scan-local hash predicates and oracles; normalized onto
 # (part, k1, k2, n1-n4, v).
 # ---------------------------------------------------------------------------
@@ -230,7 +230,6 @@ def sample_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the accept decision never shuffles the corpus.
 # ---------------------------------------------------------------------------
 
-_MIX_ALPHA_NOTE = "alpha=0.5 (sqrt temperature)"
 _MIX_U_MOD = 1_000_000
 
 from d3d_etl_spark.functions.sampling import sql_hash_bucket  # noqa: E402
@@ -362,7 +361,7 @@ def z_corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      funnel, skew-proof when one stratum dominates the corpus;
 #   3. score ties at the threshold are all kept (md5 ties at 2^-32 —
 #      deterministic superset semantics, same contract as DSIR).
-# Quotas are capped at the stratum size n_l (ADVICE r5): Hamilton can
+# Quotas are capped at the stratum size n_l: Hamilton can
 # only over-apportion when K > N (floor(K*n_l/N)+1 > n_l requires
 # K >= N), and in that regime every stratum should saturate — so the cap
 # alone is exact with no redistribution pass; the sample is exactly K

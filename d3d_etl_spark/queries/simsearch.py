@@ -122,13 +122,6 @@ WHERE ROUND(dot / (SQRT(na2) * SQRT(nb2)), 6) >= {_NEAR_T}
 """
 
 
-def _near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from d3d_etl_spark.operators.similarity import blocked_near_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return blocked_near_pairs(emb, _NEAR_T)
-
-
 # ---------------------------------------------------------------------------
 # sim_ann_lsh — random-hyperplane LSH ANN: bucket the corpus, probe only the
 # query's bucket, exact cosine within it. The sub-linear scale path (the
@@ -408,7 +401,7 @@ def _ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_dedup_canonical — embedding-space dedup as a corpus FILTER: cosine
 # near-dup pairs -> transitive clusters -> keep each cluster's min-id
 # vector. Same connected-components + broadcast-anti-join machinery as the
-# text-side dedup_canonical — INCLUDING the gate: since round 4 the pair
+# text-side dedup_canonical — INCLUDING the gate: the pair
 # stage is ann_gated_near_pairs (hyperplane band buckets -> within-bucket
 # GEMM), the embedding twin of the text side's lsh_gated_pairs. The oracle
 # mirrors the gate itself (md5-derived planes -> band buckets -> candidate
@@ -513,12 +506,12 @@ def _dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 consolidation (VERDICT.md "Next round" #2): the similarity surface
-# is published as three family queries so every LLM-pipeline row sits inside
-# the driver's 50-query correctness window. Each arm above keeps its own
-# operator implementation and oracle SQL; the families union them onto
-# normalized schemas. Per-operator tests in tests/test_operators.py and the
-# full-probe==bruteforce recall pin are unchanged.
+# The similarity surface is published as three family queries so every
+# LLM-pipeline row sits inside the driver's 50-query correctness window. Each
+# arm above keeps its own operator implementation and oracle SQL; the families
+# union them onto normalized schemas. Per-operator tests in
+# tests/test_operators.py and the full-probe==bruteforce recall pin are
+# unchanged.
 # ---------------------------------------------------------------------------
 
 _TOPK_FAMILY_ORACLE = f"""
@@ -651,7 +644,7 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # z_sim_incremental — incremental ANN-index maintenance: the embedding twin
-# of z_corpus_incremental (round-4 north-star addition). The index state —
+# of z_corpus_incremental. The index state —
 # batch-1 centroid components and batch-1 cell assignments — is persisted
 # to parquet ONCE per scale; the measured query handles a new ingest batch
 # alone: assign each new vector against the STORED centroids, probe its
@@ -665,8 +658,7 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The DuckDB oracle reads the SAME persisted state parquet, so the
 # state handoff is inside the hash check, exactly as in the text twin.
 #
-# ROUND 10 — the serving family adopts the engine's own scaled-K doctrine
-# (VERDICT r9's one weak):
+# The serving family follows the engine's own scaled-K doctrine:
 #
 #   * THE SERVED CORPUS IS CLUSTERABLE. The provided embeddings table is
 #     near-random synthetic noise — the one corpus shape on which IVF cell
@@ -682,17 +674,17 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     inside the oracle hash, not behind a persisted handoff.
 #   * K SCALES WITH THE CORPUS: the persisted index trains
 #     K = ceil(sqrt(N_old)) coarse cells (the z_sim_ivf_scaledk doctrine,
-#     kmeans2_assign_emb parametrized) instead of the fixed K=8 the
-#     round-9 audit flagged — candidate cost per served vector is now
-#     Theta(nprobe * N/K) = Theta(sqrt(N)), not linear, while the
+#     kmeans2_assign_emb parametrized) instead of a fixed K — candidate
+#     cost per served vector is Theta(nprobe * N/K) = Theta(sqrt(N)), not
+#     linear, while the
 #     centroid table stays broadcast-sized (~10^5 cells at 10^10
 #     vectors). Recall holds BECAUSE the corpus is clusterable: the
 #     recall-vs-true-NN pin lives in tests/test_serving_scaledk_r10.py.
-#   * THE INGEST BATCH IS FIXED-SIZE (VERDICT r9 missing #2): the batch
-#     modulus derives from the corpus count (bmod = max(4, N // 2048)),
-#     so |batch| is ~_SRV_BATCH_ROWS rows at ANY corpus size (the old
-#     vec_id % 4 rule re-ingested 25% of the corpus — bulk re-indexing,
-#     not serving) and the serving walls measure per-batch serving cost.
+#   * THE INGEST BATCH IS FIXED-SIZE: the batch modulus derives from the
+#     corpus count (bmod = max(4, N // 2048)), so |batch| is ~_SRV_BATCH_ROWS
+#     rows at ANY corpus size (the old vec_id % 4 rule re-ingested 25% of the
+#     corpus — bulk re-indexing, not serving) and the serving walls measure
+#     per-batch serving cost.
 # ---------------------------------------------------------------------------
 
 import os as _os
@@ -710,7 +702,7 @@ _SRV_BATCH_ROWS = 2048
 _INC_NPROBE = 3
 # candidate pairs per verify task — the grain every fan/checkpoint/score
 # partition count is derived from, PER SERVING PATH (a measured sf1 knob
-# sweep, round 9): the exact-cosine verify streams ONE array-dot row per
+# sweep): the exact-cosine verify streams ONE array-dot row per
 # pair, and at 50k its tasks were scheduling-bound — 100k halved the sf1
 # wall (110 -> 62 s) with the task peak unchanged at a fixed 96.4 MB
 # (bit-identical across 50k/100k/200k = saturated allocation, not data
@@ -725,10 +717,10 @@ _PQ_INC_PAIRS_PER_TASK = 50_000
 # per-batch distance table broadcasts (~180 B/row in the hash relation,
 # measured — 262144 rows ~ 47 MB); past it the lookup shuffle-hashes with
 # dt as the build side, partitions scaled so each task's build map stays
-# under _ADC_ROWS_PER_TASK rows at any corpus size (VERDICT r8 weak #1)
+# under _ADC_ROWS_PER_TASK rows at any corpus size
 _ADC_BC_ROWS = 262_144
 _ADC_ROWS_PER_TASK = 262_144
-# "_s" = SCALED-K state-family version (round 10): cells trained over the
+# "_s" = SCALED-K state-family version: cells trained over the
 # clusterable serving corpus with K = ceil(sqrt(N_old)) — a new family
 # name so stale fixed-K / raw-corpus caches can never serve this contract
 # (the "_t" precedent: a contract change renames the family)
@@ -779,9 +771,9 @@ def clustered_corpus(emb: DataFrame, g: int) -> DataFrame:
 def serving_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """(corpus, bmod) for the incremental serving family at this scale.
 
-    The table count feeding (g, bmod) is memoized per scale (r13): every
-    serving query re-derived the same scalar with a fresh count job on
-    every invocation — pure driver-job tax, identical value each time."""
+    The table count feeding (g, bmod) is memoized per scale: a fresh
+    count job per invocation would be pure driver-job tax for a value that
+    is constant per scale."""
     emb = load_table(spark, sf_dir, "embeddings")
     g, bmod = serving_params(table_count(spark, sf_dir, "embeddings"))
     return clustered_corpus(emb, g), bmod
@@ -989,8 +981,8 @@ def _inc_probe_cand(
     by the exact-cosine and the ADC incremental serving paths. `cand`
     comes back checkpointed with pair-count-scaled partitioning (bounds
     every downstream per-task state; fixed-width partitioning of a
-    pair-grain table was the round-8 registry audit's 2.2 GB-task
-    finding). `cand_key`/`checkpoint_cand` (r14): the ADC serving path
+    pair-grain table measured a 2.2 GB task at sf1).
+    `cand_key`/`checkpoint_cand`: the ADC serving path
     consumes cand exactly ONCE and immediately re-keys it on old_id for
     the codes join — for it, the vec_id exchange was a pure waste (two
     back-to-back exchanges of the pair table) and the eager checkpoint a
@@ -999,32 +991,32 @@ def _inc_probe_cand(
     exact arm keeps the defaults: its cand feeds two differently-pruned
     consumers, so the barrier is what keeps the fan join computed once.
     `nprobe` defaults to the serving contract's _INC_NPROBE;
-    the raw-corpus recall sweep (round 12) passes other values to publish
+    the raw-corpus recall sweep passes other values to publish
     the recall/cost trade curve — every REGISTERED query keeps the
     default.
 
-    stats (r13): {"n_pairs", "n_probe_rows", "n_old"} — exact scalars the
+    stats: {"n_pairs", "n_probe_rows", "n_old"} — exact scalars the
     fan-out collect already pays for. n_pairs == cand.count() (every
     (probe, old) pair of a shared label meets exactly once by
     construction), n_probe_rows == probe.count() (sum of per-label probe
     counts over ALL probe labels), n_old == assign.count() (sum of
     per-label occupancies over ALL assign labels — the outer join below
     keeps labels the probes missed). Callers that previously re-counted
-    these tables (three extra driver jobs per invocation, one of them
-    VERDICT r12 finding 2's n_old count) read the dict instead."""
+    these tables would pay three extra driver jobs per invocation; they
+    read the dict instead."""
     from d3d_etl_spark.operators.similarity import centroid_arrays
 
-    # ARRAY-NATIVE probe ranking (r13): the previous shape posexploded the
-    # batch, broadcast-joined the centroid components (|new| x dim x K
-    # rows through a hash aggregate) and ranked with a row_number window
-    # — two exchanges plus a per-task sort. Broadcasting the centroid
+    # ARRAY-NATIVE probe ranking: posexploding the batch against the
+    # centroid components (|new| x dim x K rows through a hash aggregate)
+    # and ranking with a row_number window costs two exchanges plus a
+    # per-task sort. Broadcasting the centroid
     # list as ONE row of array<struct<label, c_arr, nc2>> turns the whole
     # chain into a single projection: per vector, fold each centroid's
     # dot sequentially (ascending pos — the same effective order as the
     # replaced SUMs), sort the K-entry key array, slice nprobe, explode.
     # The sort key struct (coalesce(-psim + 0.0, +inf), label) is the
     # window's (psim DESC NULLS LAST, label ASC) exactly — the committed
-    # min_by-key contract (VERDICT r11 finding 2) — so probe membership
+    # min_by-key contract — so probe membership
     # AND rn ranks are unchanged. fan_out: the batch otherwise rides the
     # embeddings scan's single split at bench scale and the fold chain
     # would run on one core; production-sized scans pass through.
@@ -1063,16 +1055,15 @@ def _inc_probe_cand(
         )
         .localCheckpoint()
     )
-    # DETERMINISTIC, SKEW-PROOF fan-out (round 9, ADVICE r8 + two audit
-    # findings). The cell join multiplies each probe row by its cell's
-    # occupancy, and k-means cells are NOT balanced — at the sf1 slice the
-    # isometry replicas collapse most vectors into a few cells, so neither
-    # a label-hash shuffle (K=8 active tasks), a planner-chosen broadcast
-    # (spread nullified — one map task buffered the whole |cand| exchange
-    # write, 1.38 GB measured), nor a FIXED per-label fan (this round's
-    # first attempt: the hot cell's slices still emitted ~7M pairs each,
-    # 608 MB opportunistic sort buffers + a 917 MB single-task checkpoint
-    # read) bounds the worst task.
+    # DETERMINISTIC, SKEW-PROOF fan-out. The cell join multiplies each probe
+    # row by its cell's occupancy, and k-means cells are NOT balanced — at the
+    # sf1 slice the isometry replicas collapse most vectors into a few cells,
+    # so neither a label-hash shuffle (K=8 active tasks), a planner-chosen
+    # broadcast (spread nullified — one map task buffered the whole |cand|
+    # exchange write, 1.38 GB measured), nor a FIXED per-label fan (measured:
+    # the hot cell's slices still emitted ~7M pairs each, 608 MB opportunistic
+    # sort buffers + a 917 MB single-task checkpoint read) bounds the worst
+    # task.
     #
     # The per-label pair load is EXACTLY probes(l) x occupancy(l) — a
     # K-row driver scalar from two label-grain aggregates. So slice each
@@ -1087,10 +1078,10 @@ def _inc_probe_cand(
     # carries one balanced partitioning through the downstream pair
     # joins + top-1 window (the ride-one-partitioning pattern).
     fan = spark.sparkContext.defaultParallelism
-    # FULL OUTER on label (r13): the inner join this replaces dropped
-    # probe labels with no members and assign labels no probe reached —
-    # fine for the pair fan (their pair load is zero) but it meant the
-    # batch/corpus totals had to be re-counted downstream. With both
+    # FULL OUTER on label: an inner join would drop probe labels with no
+    # members and assign labels no probe reached — fine for the pair fan
+    # (their pair load is zero), but the batch/corpus totals would then
+    # need a re-count downstream. With both
     # sides kept, sum(np) == probe.count() and sum(no) == assign.count()
     # exactly; the fan tables below filter back to the inner rows, so the
     # emitted pair set and its partitioning are byte-identical.
@@ -1169,8 +1160,8 @@ def z_sim_incremental(
     cents, assign = ivf_index_state(spark, sf_dir)
     assign = assign.select(F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label"))
 
-    # The pair verify is ARRAY-NATIVE (round-8 registry audit finding):
-    # the old exploded-components triple join materialized |cand| x dim
+    # The pair verify is ARRAY-NATIVE: an exploded-components triple join
+    # materializes |cand| x dim
     # rows (measured: a 2.2 GB checkpoint partition read by ONE task at
     # sf1, query timed out). One zip_with dot per pair keeps the
     # intermediate at pair grain; the 6-dp rounding contract absorbs the
@@ -1207,7 +1198,7 @@ def z_sim_incremental(
             F.round(cosine(F.col("xv"), F.col("yv")), 6).alias("sim"),
         )
     )
-    # top-1 as a HASH AGGREGATE, not a row_number window (round 11, the
+    # top-1 as a HASH AGGREGATE, not a row_number window (the
     # pq_encode_comps argmin recipe): min_by over the total order
     # (-sim, old_id) is exactly the window's (sim desc, old_id asc) first
     # row — sim is already 6-dp rounded so its negation is exact, and
@@ -1216,7 +1207,7 @@ def z_sim_incremental(
     # further exchange) and drops the window's per-task SORT of the
     # pair-grain table — per-task state becomes batch-grain group slots.
     # coalesce-to-+inf = the window's NULLS-LAST for a zero-norm pair's
-    # NULL sim (VERDICT r11 finding 2; see assign_nearest_centroid).
+    # NULL sim (see assign_nearest_centroid).
     top1 = (
         sims.groupBy("vec_id")
         .agg(
@@ -1246,7 +1237,7 @@ def z_sim_incremental(
 
 def inc_serving_profile(spark: SparkSession, sf_dir: str) -> dict:
     """Measured serving-scale profile at this corpus scale, for the stress
-    tier's sqrt-growth contract (VERDICT r9 missing #1/#2): candidate
+    tier's sqrt-growth contract: candidate
     pairs per served vector must grow ~sqrt(10)x across an sf0.1 -> sf1
     pair (Theta(nprobe * N/K) with K = ceil(sqrt(N_old))), and the batch
     row count must be ~_SRV_BATCH_ROWS once the corpus clears 4x that."""
@@ -1278,7 +1269,7 @@ def _bruteforce_nn(corp_rows: list, bmod: int) -> dict[int, int]:
     _np_round6_half_away helper), matching F.round/DuckDB ROUND — np.round
     is banker's, so a sim on an exact 5e-7 boundary would otherwise give
     the auditor a different "true NN" than the engine's own tie-break
-    contract and turn the recall floors into noise (ADVICE r11 #3).
+    contract and turn the recall floors into noise.
     Driver-side audit machinery (the corpus collects are 2k/20k rows at
     the audited scales)."""
     import numpy as np
@@ -1304,8 +1295,8 @@ def serving_recall_profile(spark: SparkSession, sf_dir: str) -> dict:
     """Measured recall@1 of the exact and rerank serving arms vs the
     brute-force true nearest old neighbor ON THE PLANTED CORPUS at this
     scale — the audit twin of tests/test_serving_scaledk_r10.py's pins,
-    run where the walls are quoted from (VERDICT r10 next #3: the sqrt-N
-    candidate cut must not silently trade recall at scale)."""
+    run where the walls are quoted from (the sqrt-N candidate cut must
+    not silently trade recall at scale)."""
     from d3d_etl_spark.queries.registry import REGISTRY
 
     corp, bmod = serving_corpus(spark, sf_dir)
@@ -1325,7 +1316,7 @@ def serving_recall_profile(spark: SparkSession, sf_dir: str) -> dict:
 def raw_serving_recall(
     spark: SparkSession, sf_dir: str, nprobe: int = _INC_NPROBE
 ) -> dict:
-    """Worst-case serving recall row (ADVICE r10 #1): the SAME scaled-K
+    """Worst-case serving recall row: the SAME scaled-K
     train/probe/verify machinery served over the PROVIDED embeddings
     table — no planted neighborhoods, ephemeral state (nothing
     persisted). The synthetic test embeddings are near-isotropic
@@ -1333,7 +1324,7 @@ def raw_serving_recall(
     barely clusterable and nprobe=3 of K=ceil(sqrt(N)) cells fetches
     ~3*sqrt(N) of N candidates — THIS row documents what that candidate
     cut costs in recall on unstructured data, next to the planted-corpus
-    floors the tests pin. `nprobe` (round 12, VERDICT r11 next #5) lets
+    floors the tests pin. `nprobe` lets
     the stress tier publish the full recall/cost knob curve
     (nprobe in {3, 8, 16, K}); the nprobe=K point probes every cell, so
     its candidates are ALL old vectors and recall@1 must be exactly 1.0
@@ -1750,7 +1741,7 @@ def kmeans2_assign_emb(emb: DataFrame, k: int = _K_CLUSTERS) -> tuple[DataFrame,
     """Two Lloyd iterations of spherical k-means from a hash-seeded random
     partition (no labels consumed): returns (asgn1, asgn2), each
     (vec_id, assigned_label, sim). Shared by the oracled iteration query,
-    the trained-coarse-quantizer IVF-PQ index build, and (round 9) the
+    the trained-coarse-quantizer IVF-PQ index build, and the
     corpus-scaled-K sweep (z_sim_ivf_scaledk)."""
     from d3d_etl_spark.functions.strings import md5_int
 
@@ -1865,8 +1856,8 @@ def z_sim_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# z_sim_contrastive_ann — the ANN-WIDENED negative pool, composed (round-4
-# VERDICT item #4): the candidate set is the hyperplane band-bucket gate
+# z_sim_contrastive_ann — the ANN-WIDENED negative pool, composed: the
+# candidate set is the hyperplane band-bucket gate
 # (ann_gated_near_pairs, the sim_near_dedup canon machinery) instead of
 # the k-means clusters. A k-means cluster boundary can split an anchor
 # from its true hardest negative — vectors at cosine just below tau are
@@ -1934,8 +1925,8 @@ def z_sim_contrastive_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # positives + each task's hardest sub-tau negative candidate. The
     # previous form (threshold -1 through the pair operator) materialized
     # every bucket pair — bucket-size-QUADRATIC output whose dedup agg
-    # measured a 4.6 GiB task at the sf1 stress tier (round-8 scope=all
-    # audit); this one's shuffle volume tracks the duplicate rate.
+    # measured a 4.6 GiB task at the sf1 stress tier (scope=all audit);
+    # this one's shuffle volume tracks the duplicate rate.
     rows = ann_gated_contrastive_rows(
         emb, float(_SEMDEDUP_TAU), _DIM, _GATE_PLANES, _GATE_BANDS
     ).localCheckpoint()
@@ -1978,13 +1969,13 @@ def z_sim_contrastive_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raw float32 vectors. Recall@25 vs exact quantized-L2 is bit-budget-bound
 # on this (unclustered) corpus — measured 9/25 at 32 bits, 12/25 at
 # 64 bits, 16-17/25 at 128 bits — so the knob that matters at scale is
-# (m, ks), pinned in tests/test_pq_r5.py. Since round 6 the two training
-# levers are measured invariants, not claims: Lloyd refinement's
-# quantization-error trajectory is ORACLED (z_sim_pq_refine: ~2x error
-# drop over 2 rounds, monotone pin in tests/test_pq_r6.py — the error
-# improves even where the recall stays budget-bound), and residual
-# encoding (z_sim_ivfpq_residual) is pinned to beat raw codes by >= 3/25
-# recall on a planted clustered corpus at the same 64-bit budget.
+# (m, ks), pinned in tests/test_pq_r5.py. The two training levers are measured
+# invariants, not claims: Lloyd refinement's quantization-error trajectory is
+# ORACLED (z_sim_pq_refine: ~2x error drop over 2 rounds, monotone pin in
+# tests/test_pq_r6.py — the error improves even where the recall stays
+# budget-bound), and residual encoding (z_sim_ivfpq_residual) is pinned to
+# beat raw codes by >= 3/25 recall on a planted clustered corpus at the same
+# 64-bit budget.
 _PQ_M = 16       # sub-quantizers (64-dim -> 16 x 4-dim subspaces)
 _PQ_KS = 16      # codes per subspace
 # vectors per task in the residual-PQ encode fan-out (bounds the
@@ -2326,9 +2317,8 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
     ADC, exact-integer ranking. `label` is whatever coarse-cell column the
     caller provides — planted cells (z_sim_ivfpq_residual) or cells
     LEARNED by the k-means machinery (z_sim_ivfpq_trained). Callers that
-    already know the vector count pass `n_vec` (r13: both registered
-    callers read the memoized table count — the per-invocation count job
-    is gone)."""
+    already know the vector count pass `n_vec` (both registered callers
+    read the memoized table count, so no per-invocation count job runs)."""
     from d3d_etl_spark.operators.pq import pq_codebooks_from_comps, pq_encode_comps
     from d3d_etl_spark.operators.similarity import ivf_probe_labels, label_centroids
 
@@ -2453,8 +2443,8 @@ def z_sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, asgn2 = _kmeans2_assign(spark, sf_dir)
     # stamp the learned assignment on as the coarse-cell column and
     # materialize the RESULT once (it feeds every downstream stage).
-    # r14: the intermediate `cells` localCheckpoint is gone — its single
-    # consumer was this join, so the barrier only serialized the asgn2
+    # No checkpoint on the intermediate `cells`: its single consumer is
+    # this join, so a barrier would only serialize the asgn2
     # reassignment against the join that immediately consumed it (guide
     # §2.6: a single-consumer checkpoint cannot be reused, only waited on);
     # the trained checkpoint keeps the one-materialization contract.
@@ -2463,7 +2453,7 @@ def z_sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.drop("label").join(cells.hint("shuffle_hash"), "vec_id").localCheckpoint()
     )
     # trained joins the full assignment back onto the full table — row
-    # count is the table's (memoized; the count job is gone since r13)
+    # count is the table's (memoized, no count job)
     return _ivfpq_residual_search(trained, n_vec=table_count(spark, sf_dir, "embeddings"))
 
 
@@ -2664,18 +2654,17 @@ def z_sim_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # Count-scaled task grain (VERDICT r10 nit 2: the registry audit
-    # measured this query's top task peak growing 49 -> 164 MB across the
-    # sf0.1 -> sf1 pair — at the SAME fixed 32-partition layout, so the
-    # "fixed allocation" was per-task hash-agg group state, uniform
-    # across tasks because groups distribute evenly, and page-quantized
-    # so it stepped ~4x at 10x data). Attribution (measured this round,
-    # stage tables at both scales): the encode chain's (vec, sub, code)
-    # agg + argmin state is proportional to VECTORS PER TASK; holding
-    # that constant across scales flattens the pair (64/task: 70.0 MB at
-    # sf0.1 == 70.0 MB at sf1, min=med=max uniform, <= 2 MB/task
-    # shuffled). The count is a parquet-metadata read; partitioning-only
-    # — the oracle is unaffected.
+    # Count-scaled task grain (the registry audit measured this query's top
+    # task peak growing 49 -> 164 MB across the sf0.1 -> sf1 pair — at the
+    # SAME fixed 32-partition layout, so the "fixed allocation" was per-task
+    # hash-agg group state, uniform across tasks because groups distribute
+    # evenly, and page-quantized so it stepped ~4x at 10x data). Attribution
+    # (measured from the stage tables at both scales): the encode chain's
+    # (vec, sub, code) agg + argmin state is proportional to VECTORS PER TASK;
+    # holding that constant across scales flattens the pair (64/task: 70.0 MB
+    # at sf0.1 == 70.0 MB at sf1, min=med=max uniform, <= 2 MB/task shuffled).
+    # The count is a parquet-metadata read; partitioning-only — the oracle is
+    # unaffected.
     n_parts = max(
         spark.sparkContext.defaultParallelism,
         -(-table_count(spark, sf_dir, "embeddings") // 64),
@@ -2850,9 +2839,9 @@ def z_sim_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # the index is built on the SURVIVORS: codebooks trained and codes
     # encoded post-dedup (the drop set is pair-bounded -> broadcast anti).
-    # r14: cb's localCheckpoint is gone — pq_encode broadcasts the codebook
-    # exactly once, so the checkpoint was a single-consumer barrier; the
-    # training agg now runs inside the encode's broadcast-build job and the
+    # No checkpoint on cb: pq_encode broadcasts the codebook exactly once,
+    # so a checkpoint would be a single-consumer barrier; the training
+    # agg runs inside the encode's broadcast-build job and the
     # scoring stages overlap with it instead of waiting (guide §2.6)
     surv = emb.join(F.broadcast(drops), "vec_id", "left_anti")
     cb = pq_codebooks(surv, _DIM, _PQ_M, _PQ_KS)
@@ -3028,7 +3017,7 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no row (nothing servable from the index without a wider probe).
 # ---------------------------------------------------------------------------
 
-# "_r" = RESIDUAL-encoded state-family version (round 11): codes quantize
+# "_r" = RESIDUAL-encoded state-family version: codes quantize
 # (vector - assigned coarse centroid) integer residuals, the FAISS IVFADC
 # default (Jégou, Douze, Schmid 2011 §IV) and the repo's own pinned
 # doctrine (z_sim_ivfpq_residual: residual codes >= 3/25 better than raw
@@ -3046,7 +3035,7 @@ def pq_index_state(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(icents, codebooks, old_codes): the batch-1 PQ index, persisted per
-    scale, RESIDUAL-encoded (round 11, VERDICT r10 nit 1): codes quantize
+    scale, RESIDUAL-encoded: codes quantize
     r = x - q1(x) — the old vector minus its assigned coarse centroid,
     integer-quantized per cell — not x itself. The coarse quantizer
     absorbs the between-cell variance, so the (m, ks) bit budget covers
@@ -3096,7 +3085,7 @@ def pq_index_state(
         )
 
     def build_cb(tmp: str) -> None:
-        # SAMPLE-SEEDED + twice-refined codebooks (round 10): the
+        # SAMPLE-SEEDED + twice-refined codebooks: the
         # hash-partition seeding puts all ks sub-centroids at ~the
         # subspace grand mean, which quantizes every neighborhood to the
         # same codes (measured: ADC neighbor landed in the true neighbor's
@@ -3140,11 +3129,11 @@ def pq_index_state(
 # Candidates come from the persisted IVF cell state (the _INC_PROBE_CTES
 # chain — FAISS's IVFADC serving recipe), NOT from code collisions: with
 # ks=16 codes per subspace, "shares ANY code" admits ~1-(15/16)^M of the
-# ENTIRE old corpus as candidates (all-pairs-grade — the round-8 registry
-# audit measured a 3.5 GiB task and a timeout at sf1 before this change).
+# ENTIRE old corpus as candidates (all-pairs-grade — the registry audit
+# measured a 3.5 GiB task and a timeout at sf1 under that rule).
 # The cell gate bounds candidates at nprobe x cell occupancy, and the ADC
 # half still never reads an old float.
-# RESIDUAL serving (round 11): codes quantize (old - c_int(assigned cell))
+# RESIDUAL serving: codes quantize (old - c_int(assigned cell))
 # and the new side mirrors it — newe subtracts the PROBED cell's anchor,
 # so the ADC table dt is per (new vector, probed cell) and scored matches
 # each candidate against the table row of the OLD vector's own cell
@@ -3192,12 +3181,11 @@ SELECT vec_id, old_id AS nn_id, adist FROM (
 # cannot rank finer than code granularity (in-cluster members share
 # codes and tie), so the shortlist must carry the TIE SET into the exact
 # re-rank — and the tie set is a slice of the true cell's OCCUPANCY,
-# which grows ~sqrt(N) under the scaled-K index. Round 11 shipped a
-# FIXED R=16 and measured the predicted decay where the walls are
-# quoted: recall@1 0.924 @ sf0.1 -> 0.861 @ sf1 as the covered fraction
-# of a cell fell 42% -> 12%; linear extrapolation crossed the 0.8 audit
-# floor within another ~10x (VERDICT r11 next #3). Round 12 scales R
-# with occupancy: R = max(16, ceil(0.4 * N_old / K)) with
+# which grows ~sqrt(N) under the scaled-K index. A FIXED R=16 measured
+# the predicted decay where the walls are quoted: recall@1 0.924 @ sf0.1
+# -> 0.861 @ sf1 as the covered fraction of a cell fell 42% -> 12%;
+# linear extrapolation crossed the 0.8 audit floor within another ~10x.
+# So R scales with occupancy: R = max(16, ceil(0.4 * N_old / K)) with
 # K = ceil(sqrt(N_old)) — the covered fraction stays ~0.4 at every
 # scale, the knee the R-sweep measured (R=2/4/8/16/32 ->
 # 65/71/90/123/124 of 125 at sf0.001/sf0.01, where occupancy ~= 19/38
@@ -3209,7 +3197,7 @@ SELECT vec_id, old_id AS nn_id, adist FROM (
 # shipped scales R stays 16 through sf0.1 (occupancy 38: ceil(0.4*38) =
 # 16) and becomes 54 at the sf1 slice (occupancy ~133), which restores
 # the sf0.1-level covered fraction — measured recall back over the 0.9
-# floor (STRESS_registry.json round 12).
+# floor (STRESS_registry.json).
 _PQ_RERANK_R_MIN = 16
 
 
@@ -3282,9 +3270,8 @@ def _pq_inc_scored(
     _PQ_INC_CTES `scored` table. Callers that already derived the serving
     corpus pass (corp, bmod) so the count job and derivation lineage
     aren't planned twice (review finding). `stats` is _inc_probe_cand's
-    scalar dict (r13) — the rerank arm reads n_old from it instead of
-    running the per-invocation corpus count job VERDICT r12 finding 2
-    flagged."""
+    scalar dict — the rerank arm reads n_old from it instead of running
+    a per-invocation corpus count job."""
     from d3d_etl_spark.operators.pq import pq_subspace_comps
 
     if corp is None or bmod is None:
@@ -3298,16 +3285,16 @@ def _pq_inc_scored(
     # fan the thin single-split batch once; _inc_probe_cand's own fan_out
     # then sees >= session parallelism and passes it through, so the qres
     # residual chain below shares the rebalance instead of re-serializing
-    # on the scan split (r13: the dt map side ran as ONE 1.5 s task)
+    # on the scan split (unfanned, the dt map side ran as ONE 1.5 s task)
     new = fan_out(corp.where(F.col("vec_id") % bmod == 0))
     # cand_key="old_id": the ONLY consumer below is the codes join, keyed
-    # on old_id — asking _inc_probe_cand for the vec_id layout meant the
-    # pair table crossed two exchanges back to back (vec_id, then old_id).
-    # checkpoint_cand=False: single consumer, so the eager barrier only
-    # serialized the fan join against the dt/codes subtrees AQE happily
-    # materializes concurrently inside the one scoring job (r14; guide
-    # §2.4/§2.6). Pair-count-scaled partitioning is unchanged — the
-    # repartition inside _inc_probe_cand now lands directly on old_id.
+    # on old_id — the vec_id layout would make the pair table cross two
+    # exchanges back to back (vec_id, then old_id).
+    # checkpoint_cand=False: single consumer, so an eager barrier would
+    # only serialize the fan join against the dt/codes subtrees AQE
+    # materializes concurrently inside the one scoring job (guide
+    # §2.4/§2.6). The pair-count-scaled repartition inside
+    # _inc_probe_cand lands directly on old_id.
     probe, cand, stats = _inc_probe_cand(
         spark,
         new,
@@ -3317,7 +3304,7 @@ def _pq_inc_scored(
         cand_key="old_id",
         checkpoint_cand=False,
     )
-    # per-PROBED-CELL new residual (round 11): the stored codes quantize
+    # per-PROBED-CELL new residual: the stored codes quantize
     # residuals, so the query side must too — r = x_new - c_int(probed
     # cell), one residual per (new vector, probed cell). probe is
     # batch-grain (|new| x nprobe rows) and icents is K x dim — both
@@ -3335,9 +3322,9 @@ def _pq_inc_scored(
     # rows (every (vec, label) carries a full residual, the cb join is
     # complete, and the groupBy emits every (sub, code) cell) — so the
     # broadcast-cap row count is ANALYTIC from the checkpointed probe's
-    # count, and dt itself needs no checkpoint/count job of its own
-    # (round 11: the residual tables are nprobe x bigger, so the round-10
-    # materialize-then-count pass stopped being free)
+    # count, and dt itself needs no checkpoint/count job of its own (the
+    # residual tables are nprobe x bigger, so a materialize-then-count
+    # pass is not free)
     dt = (
         qres.join(F.broadcast(cb), ["sub", "pos"])
         .groupBy("vec_id", "label", "sub", "code")
@@ -3356,13 +3343,11 @@ def _pq_inc_scored(
         -(-n_pairs // _PQ_INC_PAIRS_PER_TASK),
     )
     pair_codes = cand.join(old_codes.hint("shuffle_hash"), "old_id")
-    # ADC lookup: the round-8 code ALWAYS broadcast dt, arguing "ingest-batch
-    # grain" — but the round-8 batch rule (vec_id % 4 == 0) made the
-    # batch 25% of the CORPUS, so the broadcast grew linearly with corpus
-    # size (measured 230 MB at sf1, the registry tail's largest task peak
-    # — VERDICT r8 weak #1; the round-10 fixed-size batch bounds dt by
-    # itself, and the counted cap stays as the enforced guard either
-    # way). The bound is ENFORCED, not asserted:
+    # ADC lookup: an unconditional dt broadcast grows with the ingest
+    # batch (a corpus-proportional batch measured 230 MB at sf1, the
+    # registry tail's largest task peak); the fixed-size batch bounds dt
+    # by itself, and the counted cap stays as the enforced guard either
+    # way. The bound is ENFORCED, not asserted:
     # dt's exact row count (|new| x nprobe x M x ks — the groupBy emits
     # every (vec, label, sub, code) cell, and the checkpointed dt's count
     # is a cheap
@@ -3414,17 +3399,17 @@ def z_sim_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (probe nprobe cells, fetch their members), the residual
     anchors + PQ codes score them (per-(new, probed-cell) ADC table, M
     integer adds per candidate) — old floats never read. Residual
-    encoding (round 11, the z_sim_ivfpq_residual doctrine adopted) lifts
+    encoding (the z_sim_ivfpq_residual doctrine) lifts
     the in-true-cluster rate 87 -> 123/125 by breaking cross-cell code
     aliasing. Beyond-reference LLM-pipeline operator (compressed-index
     maintenance + serving).
 
-    Round-8 registry audit: the previous candidate rule ("shares ANY code
-    with the new vector's encoding") admits ~1-(15/16)^M of the ENTIRE
-    old corpus at ks=16 — all-pairs-grade, measured as a 3.5 GiB task +
-    timeout at sf1. The cell gate bounds candidates at nprobe x cell
-    occupancy and shares its definition (engine helper + oracle CTEs)
-    with z_sim_incremental."""
+    Candidates come from the cell gate, not from code collisions: the rule
+    "shares ANY code with the new vector's encoding" admits ~1-(15/16)^M of
+    the ENTIRE old corpus at ks=16 — all-pairs-grade, measured as a 3.5 GiB
+    task + timeout at sf1. The cell gate bounds candidates at nprobe x cell
+    occupancy and shares its definition (engine helper + oracle CTEs) with
+    z_sim_incremental."""
     scored, _ = _pq_inc_scored(spark, sf_dir)
     # top-1 as a min_by hash aggregate over the (adist, old_id) total
     # order — the exact arm's sort-free argmin recipe; adist is an exact
@@ -3440,22 +3425,22 @@ def z_sim_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "z_sim_pq_rerank", _PQ_RERANK_ORACLE, tags=("similarity", "incremental"), bench=True
 )
 def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC + REFINE (round 10): the ADC arm's top-R shortlist re-ranked
+    """IVFADC + REFINE: the ADC arm's top-R shortlist re-ranked
     by exact cosine — FAISS's IndexRefine recipe, the standard answer to
     PQ quantization loss (with residual codes the remaining loss is
     WITHIN-cell: residuals are near-noise, so in-cell members tie at code
     granularity; the shortlist carries the tie set into the exact
     re-rank — measured 123/125 recall@1 at the shipped R=16, pinned >=
     0.95 in tests/test_serving_scaledk_r10.py). The residual tables cost
-    wall and task memory honestly: BENCH r11 5.1 -> 7.5 s and max-task
-    18.6 -> 45.2 MB vs the raw-code round 10 — the ADC table is nprobe x
+    wall and task memory honestly: 5.1 -> 7.5 s and max-task
+    18.6 -> 45.2 MB vs raw codes — the ADC table is nprobe x
     bigger and its lookup shuffle-hashes past the broadcast cap — both
     batch-grain BOUNDED (fixed |new|), the price of recall 0.88 -> 0.98.
     Old floats are read ONLY
     for the R-per-new shortlist — a
     selective semi-join fetch exactly like z_sim_incremental's, but over
     |new| x R rows instead of the full candidate set; R is
-    OCCUPANCY-SCALED since round 12 (R = max(16, ceil(0.4 * N_old / K)),
+    OCCUPANCY-SCALED (R = max(16, ceil(0.4 * N_old / K)),
     see _PQ_RERANK_R_MIN) so recall holds at scale while the refine
     fetch grows only ~sqrt(N_old), five orders under the candidate set
     it re-ranks. Shares the scored chain (engine helper +
@@ -3467,13 +3452,13 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corp, bmod = serving_corpus(spark, sf_dir)
     scored, stats = _pq_inc_scored(spark, sf_dir, corp, bmod)
-    # occupancy-scaled shortlist width (round 12; see _PQ_RERANK_R_MIN):
+    # occupancy-scaled shortlist width (see _PQ_RERANK_R_MIN):
     # n_old is a driver scalar shared with the oracle's rparams CTE via
-    # the exact integer rerank_r rule. Since r13 it comes from the probe
+    # the exact integer rerank_r rule. It comes from the probe
     # fan-out's label-grain collect (sum of per-cell occupancies of the
     # persisted assignment — every old vector is assigned exactly once,
-    # so the sum IS the old-corpus count), closing VERDICT r12 finding 2:
-    # the per-invocation corpus count job is gone from the plan.
+    # so the sum IS the old-corpus count), so the plan runs no
+    # per-invocation corpus count job.
     n_old = stats["n_old"]
     w_adc = Window.partitionBy("vec_id").orderBy(F.asc("adist"), F.asc("old_id"))
     short = (
@@ -3507,7 +3492,7 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmin): min over (-sim, old_id) = (sim desc, old_id asc) first row;
     # the shortlist window above keeps its row_number (top-R needs ranks).
     # coalesce-to-+inf = the window's NULLS-LAST for a zero-norm pair's
-    # NULL sim (VERDICT r11 finding 2; see assign_nearest_centroid).
+    # NULL sim (see assign_nearest_centroid).
     return (
         sims.groupBy("vec_id")
         .agg(
@@ -3525,7 +3510,7 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # z_sim_ivf_scaledk — the FAISS cell-count doctrine as a driver-hashed
-# measured invariant (round 9). The sf1 sweep audit measured recall@nprobe
+# measured invariant. The sf1 sweep audit measured recall@nprobe
 # collapsing at 10x corpus under the FIXED K=8 coarse cells
 # (STRESS_registry.json sweeps_sf1: 3/10 at nprobe=4): cells must scale
 # with the corpus. This query BUILDS the scaled index — K = ceil(sqrt(N))
@@ -3611,7 +3596,7 @@ def z_sim_ivf_scaledk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count: K = ceil(sqrt(N)) cells trained by two oracled Lloyd
     iterations, probed at nprobe = ceil(K/16 .. K/2). The constructive
     answer to the sf1 sweep finding that fixed K=8 cells under-partition
-    a growing corpus — and, since round 10, the doctrine the incremental
+    a growing corpus — and the doctrine the incremental
     serving family (ivf_index_state) actually serves with."""
     import math
 

@@ -110,13 +110,6 @@ pitwar2 AS (
   FROM pitwar
 )"""
 
-_PIT_ORACLE = f"""
-WITH {_PIT_CTES}
-SELECT player_id, player_name, team_id, conference, division, year,
-       ip_thirds, fip, era, whip, k9, rar, war_raw
-FROM pitwar2
-"""
-
 
 def _pitching_war_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-pitcher counting stats -> cube_pitching shape (ip as the base-3
@@ -423,8 +416,8 @@ def domain_run_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# domain_war_players — batting WAR + pitching WAR as one tagged union
-# (round-3 consolidation): batting arm = the full wOBA->wRAA->RAR->WAR
+# domain_war_players — batting WAR + pitching WAR as one tagged union:
+# batting arm = the full wOBA->wRAA->RAR->WAR
 # chain (reference war_calculation/batting.py:363-418, calculator.py:
 # 124-224); pitching arm = the FIP-based chain (pitching.py:10-87,
 # calculator.py:226-319). Side-specific metric columns are NULL on the

@@ -35,29 +35,10 @@ sink dedups on (doc_a, doc_b) exactly as the batch upsert sink does
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.text import tokens, word_shingles
-
-
-def inline_band_keys(
-    text_col: Column, n_hashes: int, rows_per_band: int, shingle_n: int
-) -> Column:
-    """array<struct<band_idx:int, band_key:string>> computed per row —
-    the streaming-safe (map-only) twin of operators.dedup.lsh_band_keys.
-    Returns an empty array for shingle-less docs (they can never match),
-    matching the batch operator's no-rows behavior.
-
-    CSE caveat (same as band_keys_from_shingle_array): this builds the
-    shingle array as an inline EXPRESSION, so the 16 per-hash transforms
-    re-evaluate it. Fine for one-off scoring of single rows; pipelines
-    should stage the shingle array behind a Generate/checkpoint barrier
-    first, as streaming_incremental_dedup below does."""
-    from d3d_etl_spark.operators.dedup import band_keys_from_shingle_array
-
-    sh = F.array_distinct(word_shingles(tokens(text_col), shingle_n))
-    return band_keys_from_shingle_array(sh, n_hashes, rows_per_band)
 
 
 def _with_shingle_array(df: DataFrame, shingle_n: int, out_col: str) -> DataFrame:

@@ -24,25 +24,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot_with_lit(vec_col: Column, values: list[float]) -> Column:
-    arr = F.array(*[F.lit(float(v)) for v in values])
-    return F.aggregate(
-        F.zip_with(vec_col.cast("array<double>"), arr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(vec_col: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            vec_col.cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
+from d3d_etl_spark.functions.vectors import cosine, dot, norm
 
 
 def streaming_ann_probe(
@@ -73,16 +58,19 @@ def streaming_ann_probe(
     }
     norms = {lab: math.sqrt(sum(x * x for x in vectors[lab])) for lab in labels}
 
-    vnorm = _norm(F.col("embedding"))
+    vnorm = norm(F.col("embedding"))
     cell_scores = F.array(
         *[
             F.struct(
                 F.round(
-                    # try_divide = the batch arm's zero-norm NULL (round
-                    # 12): an all-zero embedding or stored centroid must
-                    # not ANSI-throw inside the stream
+                    # try_divide = the batch arm's zero-norm NULL: an
+                    # all-zero embedding or stored centroid must not
+                    # ANSI-throw inside the stream
                     F.try_divide(
-                        _dot_with_lit(F.col("embedding"), vectors[lab]),
+                        dot(
+                            F.col("embedding"),
+                            F.array(*[F.lit(float(v)) for v in vectors[lab]]),
+                        ),
                         vnorm * F.lit(norms[lab]),
                     ),
                     6,
@@ -119,18 +107,9 @@ def streaming_ann_probe(
     old = old_vectors.select(
         F.col("vec_id").alias("old_id"), F.col("embedding").alias("v_old")
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("v_new").cast("array<double>"),
-            F.col("v_old").cast("array<double>"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # try_divide: a zero-norm pair's NULL sim fails the >= min_sim cut
-    # below (never qualifies), the batch arm's exact semantics
-    sim = F.round(F.try_divide(dot, _norm(F.col("v_new")) * _norm(F.col("v_old"))), 6)
+    # try_divide (via cosine): a zero-norm pair's NULL sim fails the
+    # >= min_sim cut below (never qualifies), the batch arm's exact semantics
+    sim = F.round(cosine(F.col("v_new"), F.col("v_old")), 6)
     return (
         cand.join(old, "old_id")
         .where(F.col("vec_id") != F.col("old_id"))

@@ -1,4 +1,4 @@
-"""sf1 stress tier (VERDICT r5 item #8): one measured 10x point for the
+"""sf1 stress tier: one measured 10x point for the
 three flagship pipelines, converting the "plans survive 100x" argument from
 static analysis into data.
 
@@ -45,6 +45,10 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from d3d_etl_spark.plans import taskmetrics as tm  # noqa: E402
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DST = os.environ.get(
@@ -56,13 +60,11 @@ TASK_BYTES_BOUND = 512 * 1024 * 1024  # max input/shuffle-read per task
 TASK_MEM_BOUND = 1024 * 1024 * 1024  # max peak execution memory per task
 
 FLAGSHIPS = ("corpus_pipeline", "z_sim_pipeline", "z_pbp_dag")
-# round-7 additions: the two newest heavy shapes (VERDICT r6 missing #3) —
-# the tfidf posting-list self-join (prove the df<=256 posting cap holds the
-# worst task flat at 10x) and the fuzzy-join non-broadcast fallback with
-# every block a mega-block (prove the id-hash sub-block bound).
-# round-8 additions (VERDICT r7 #2): the two newest most-expensive benched
-# shapes — the published-width Gopher dup-gram pass (largest bench task
-# peak: the (g,n,gram) hash agg) and the trained residual IVF-PQ index
+# Heavy shapes beyond the flagships: the tfidf posting-list self-join (the
+# df<=256 posting cap holds the worst task flat at 10x), the fuzzy-join
+# non-broadcast fallback with every block a mega-block (the id-hash
+# sub-block bound), the published-width Gopher dup-gram pass (largest bench
+# task peak: the (g,n,gram) hash agg) and the trained residual IVF-PQ index
 # build (two Lloyd iterations + PQ at 10x).
 EXTRA_SHAPES = (
     "z_text_tfidf_topk",
@@ -75,9 +77,8 @@ EXTRA_SHAPES = (
 # every shape except the forced fuzzy fallback (which deliberately grows
 # the block size 10x to prove the sub-block BOUND holds — its memory is
 # bounded, not flat, by design). A shape whose task memory scales with
-# corpus size is exactly the round-7 corpus_pipeline weak; this assertion
-# is the machinery that keeps it closed. Factor 3 absorbs hash-map
-# resize granularity and AQE partition-count steps.
+# corpus size is a scale defect; this assertion keeps it out. Factor 3
+# absorbs hash-map resize granularity and AQE partition-count steps.
 MEM_FLAT_FACTOR = 3.0
 MEM_FLAT_FLOOR_MB = 64.0  # ignore ratios below this absolute size
 MEM_FLAT_EXEMPT = (
@@ -221,7 +222,7 @@ def build_sf1(spark: SparkSession) -> float:
         os.path.join(DST, "events.parquet")
     )
 
-    # TPC-H side (round 8, scope=all): consistent key SHIFTS preserve the
+    # TPC-H side (scope=all): consistent key SHIFTS preserve the
     # FK structure inside each replica (replicated lineitem rows reference
     # replicated orders/parts/suppliers; customers keep their original
     # nations), and block/name keys (p_brand, p_name) are replica-suffixed
@@ -296,38 +297,12 @@ def build_sf1(spark: SparkSession) -> float:
 
 
 # ---------------------------------------------------------------------------
-# UI REST metrics
-# ---------------------------------------------------------------------------
-
-
-# shared with bench.py since round 7 (d3d_etl_spark/plans/taskmetrics.py)
-
-
-def _app_id() -> str:
-    from d3d_etl_spark.plans import taskmetrics as tm
-
-    return tm.rest_get(UI_PORT, "applications")[0]["id"]
-
-
-def _completed_stages(app: str) -> dict[tuple[int, int], dict]:
-    from d3d_etl_spark.plans import taskmetrics as tm
-
-    return tm.completed_stages(UI_PORT, app)
-
-
-def _task_maxima(app: str, stages: dict) -> dict:
-    from d3d_etl_spark.plans import taskmetrics as tm
-
-    return tm.task_maxima(UI_PORT, app, stages)
-
-
-# ---------------------------------------------------------------------------
 # main
 # ---------------------------------------------------------------------------
 
 
 # sf1 task peaks ABOVE this get the benched tier's sf-pair flatness
-# treatment (VERDICT r8 missing #1): a tail query whose peak clears this is
+# treatment: a tail query whose peak clears this is
 # one or two 10x steps from the 1 GiB bound if it is growing linearly, so
 # "big constant" vs "grower" must be measured, not argued. Strictly BELOW
 # the ~96 MB fixed-profile plateau several serving shapes saturate at
@@ -338,8 +313,6 @@ def _task_quantiles(app: str, stages: dict) -> dict:
     shuffle-read bytes — the measured basis of a tail-pair exemption
     (uniform min=med=max = fixed page allocation; a data-sized max on one
     task = a grower). Empty when the UI is unreachable."""
-    from d3d_etl_spark.plans import taskmetrics as tm
-
     best: dict = {}
     for (sid, att) in stages:
         try:
@@ -378,11 +351,11 @@ TAIL_PAIR_MB = 90.0
 # allocation, not data; the stage-level peak is the SUM of those fixed
 # pages across the operators pipelined into one task, so the ceiling is
 # plan-structural, corpus-independent. A genuinely data-proportional
-# grower shows a data-sized max on ONE operator instead. Since round 10
-# the EVIDENCE is not this prose: the audit captures each exempt query's
+# grower shows a data-sized max on ONE operator instead. The EVIDENCE is
+# not this prose: the audit captures each exempt query's
 # top-stage per-task quantiles (min/med/max peak memory + shuffle-read
 # bytes) at BOTH scales into STRESS_registry.json
-# (exempt_evidence_sf0.1/sf1, VERDICT r9 nit), and an exempt top stage
+# (exempt_evidence_sf0.1/sf1), and an exempt top stage
 # whose max task actually INGESTS data at memory scale (shuffle/input
 # > EXEMPT_DATA_MB) is VOIDED as a violation — the table can never hide
 # a grower behind stale prose. (Peak-memory max/median is NOT the gate:
@@ -393,13 +366,6 @@ TAIL_PAIR_EXEMPT: dict[str, str] = {
     "z_corpus_lr_step": "agg first-page quanta over KB-scale model state",
     "z_corpus_lr_train": "agg first-page quanta over KB-scale model state",
     "z_graph_pagerank": "agg first-page quanta over rank/degree tables",
-    # z_sim_pq_refine LEFT this table in round 11 (VERDICT r10 nit 2):
-    # the 49 -> 164 MB pair growth was attributed (two encode chains +
-    # an SMJ re-mean sort pipelined into one task) and PINNED flat —
-    # one checkpointed encode per iteration, min_by argmin instead of a
-    # row_number window, shuffle-hash re-mean; measured 48.6/49.7/49.7 MB
-    # at sf0.01/sf0.1/sf1 (64 vectors/task), under TAIL_PAIR_MB.
-    # caught by the round-9 TAIL_PAIR_MB tightening (90, strict <):
     # SMJ sort-page acquisition quanta over KBs of data per task
     "z_join_salted": "SMJ sort pages; per-task shuffle bytes <0.05 MB at sf1",
 }
@@ -419,7 +385,7 @@ def _capped(spark, group: str, cap_s: int, action):
     the EXCEPTION TEXT (Spark's cancelJobGroup surfaces 'cancelled ...
     <group>'), never inferred from elapsed time — a genuine failure at
     t=cap-1 must stay an error, and a cancel that surfaces late must stay
-    a wall_cap (ADVICE r8 #2). The single home of the cancel-detection
+    a wall_cap. The single home of the cancel-detection
     predicate (review finding: it used to live in two copies)."""
     import threading
 
@@ -515,7 +481,7 @@ def _lsh_missed_pairs(spark) -> dict:
 
 
 def _sweep_curves_sf1(spark, qs: dict, cap_s: int) -> tuple[dict, list[str]]:
-    """VERDICT r8 #6: the LSH-banding and IVF-nprobe tuning curves at sf1 —
+    """The LSH-banding and IVF-nprobe tuning curves at sf1 —
     the same knob invariants tests/test_sweeps_sf01_r8.py pins at sf0.1,
     measured at the scale the bound audit runs at. Curve VALUES are
     recorded (a handful of rows — driver-safe); the invariants checked are
@@ -540,14 +506,13 @@ def _sweep_curves_sf1(spark, qs: dict, cap_s: int) -> tuple[dict, list[str]]:
     # at the production knob + curve shape.
     if lsh[4]["hits"] < 0.99 * lsh[4]["n_true"]:
         problems.append(f"sf1 sweep: production banding (16,4) below 99% recall: {lsh[4]}")
-    # NAME the missed tail (VERDICT r9 next-round #6): a pair the
+    # NAME the missed tail: a pair the
     # production banding misses is NOT recovered downstream — the verify
     # stage only filters band candidates — so the recall floor above is
     # the near-dup flagships' contract at 10x, and this leg records WHICH
     # pairs slipped, their exact Jaccard, and the ANALYTIC miss
-    # probability. The round-9 prose adjudication ("one tau-edge pair's
-    # draw") was FALSIFIED the first time this leg ran: the corpus has
-    # ZERO truth pairs below j=0.5, and the misses sit at j=0.8-0.91 —
+    # probability. The corpus has ZERO truth pairs below j=0.5, and the
+    # misses sit at j=0.8-0.91 —
     # exactly where the (b=4, r=4) S-curve says they should
     # (P(miss) = (1-s^4)^4 = 12% at s=0.8, ~1% at s=0.91; measured
     # expected_misses 4.38 vs 5 observed at sf1). The contract is
@@ -612,20 +577,20 @@ def _sweep_curves_sf1(spark, qs: dict, cap_s: int) -> tuple[dict, list[str]]:
 
 
 def _serving_grain_sweep(spark, cap_s: int, app: str) -> tuple[dict, list[str]]:
-    """(round 9) serving-grain saturation sweep: the incremental-serving
+    """Serving-grain saturation sweep: the incremental-serving
     task peak must be a FIXED allocation — grain-independent at and above
     the production pairs-per-task knob (measured bit-identical 96.4 MB
     across 50k/100k/200k when first established). If the peak grows with
-    the grain, per-task state has become data-proportional again (the
-    round-8 2.2 GB-task failure mode) and the fixed-profile saturation
+    the grain, per-task state has become data-proportional again (a
+    2.2 GB-task failure mode) and the fixed-profile saturation
     argument for the sf-pair memory ratio no longer holds. Walls are
     recorded as advisory context (the 100k production grain halved the
     sf1 wall when adopted), never asserted — host-noisy.
 
     Runs from run_registry_audit INDEPENDENTLY of the tuning-curve legs
     (a capped LSH/IVF sweep must not skip this check — review finding).
-    z_sim_incremental is bench-tagged since round 10 (so the registry
-    loop no longer measures it), and the sweep runs BOTH grain legs
+    z_sim_incremental is bench-tagged (so the registry loop does not
+    measure it), and the sweep runs BOTH grain legs
     itself. The ratio is asserted only when BOTH legs are ok (a
     wall-capped leg records a partial peak; adjudicating on it would be
     misleading either way)."""
@@ -640,7 +605,7 @@ def _serving_grain_sweep(spark, cap_s: int, app: str) -> tuple[dict, list[str]]:
     assert probe_grain != _INC_PAIRS_PER_TASK
 
     def _leg(g: int) -> dict:
-        before = set(_completed_stages(app))
+        before = set(tm.completed_stages(UI_PORT, app))
         status, wall = _run_capped(
             spark,
             lambda s, d, g=g: z_sim_incremental(s, d, pairs_per_task=g),
@@ -648,8 +613,8 @@ def _serving_grain_sweep(spark, cap_s: int, app: str) -> tuple[dict, list[str]]:
             f"sweep_grain_{g}",
             cap_s,
         )
-        new = {k: v for k, v in _completed_stages(app).items() if k not in before}
-        peak = round(_task_maxima(app, new)["peak_exec_mem"] / 2**20, 1)
+        new = {k: v for k, v in tm.completed_stages(UI_PORT, app).items() if k not in before}
+        peak = round(tm.task_maxima(UI_PORT, app, new)["peak_exec_mem"] / 2**20, 1)
         return {"status": status, "wall_s": wall, "peak_mb": peak}
 
     grain_out[probe_grain] = _leg(probe_grain)
@@ -680,8 +645,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     """scope=registry: every NON-benched registered query once at the sf1
     slice under the absolute task bounds + a wall cap — the bound audit for
     the long tail (benched queries get scope=all's sf-pair treatment).
-    Round-8's first run of this audit found the incremental-serving
-    redesigns; this keeps it reproducible. Round 9 adds (a) the sf-PAIR
+    It also runs (a) the sf-PAIR
     flatness measurement for every tail query whose sf1 task peak clears
     TAIL_PAIR_MB — distinguishing big constants from linear growers one
     10x from the bound — and (b) the tuning-sweep curves at sf1. Writes
@@ -697,14 +661,12 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     # STEADY-STATE serving (in production the state persists across
     # sessions; a cache-cold session would otherwise fold the one-time
     # index build's task peaks into the serving rows and poison the
-    # pair-flatness and grain-saturation comparisons — observed when the
-    # round-10 family rename made the audit session cold). The build cost
+    # pair-flatness and grain-saturation comparisons). The build cost
     # is recorded, never hidden.
     from d3d_etl_spark.queries.simsearch import ivf_index_state, pq_index_state
 
-    # COLD builds, honestly labeled (VERDICT r10 nit 3: the old
-    # `state_build_s` recorded warm cache probes — 0.6 s at sf1 was a
-    # parquet-read, not a build). Delete the serving-state families for
+    # COLD builds, honestly labeled (a warm cache probe is a parquet
+    # read, not a build). Delete the serving-state families for
     # the two audited scales first, so the timed leg is the real one-time
     # index construction; everything downstream then runs warm as before.
     import shutil
@@ -741,12 +703,12 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     }
     violations: list[str] = []
     for n in sorted(set(REGISTRY) - skip):
-        before = set(_completed_stages(app))
+        before = set(tm.completed_stages(UI_PORT, app))
         status, wall = _run_capped(spark, qs[n], DST, f"audit_{n}", cap_s)
         if status.startswith("error"):
             violations.append(f"{n}: {status}")
-        new = {k: v for k, v in _completed_stages(app).items() if k not in before}
-        mx = _task_maxima(app, new)
+        new = {k: v for k, v in tm.completed_stages(UI_PORT, app).items() if k not in before}
+        mx = tm.task_maxima(UI_PORT, app, new)
         rec = {
             "status": status,
             "wall_s": wall,
@@ -766,7 +728,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
             if mx[key] > bound:
                 violations.append(f"{n}: task {key} {mx[key]} over bound")
 
-    # COLD parse-path row for the corpus FSM (VERDICT r9 next-round #5):
+    # COLD parse-path row for the corpus FSM:
     # z_pbp_corpus_fsm's own registry leg reads the memoized parsed
     # parquet (built by earlier domain_ legs — 0.6 s / 0.0 MB recorded, a
     # cache read), so the FSM recompute itself had no sf1 task-bound row.
@@ -778,12 +740,12 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
 
         return parse_pbp(materialized_raw(spk, d))
 
-    before = set(_completed_stages(app))
+    before = set(tm.completed_stages(UI_PORT, app))
     status, wall = _run_capped(spark, _fsm_cold, DST, "audit_fsm_cold", cap_s)
     if status.startswith("error"):
         violations.append(f"z_pbp_corpus_fsm_cold: {status}")
-    new = {k: v for k, v in _completed_stages(app).items() if k not in before}
-    mx = _task_maxima(app, new)
+    new = {k: v for k, v in tm.completed_stages(UI_PORT, app).items() if k not in before}
+    mx = tm.task_maxima(UI_PORT, app, new)
     rec = {
         "status": status,
         "wall_s": wall,
@@ -802,13 +764,13 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
         if mx[key] > bound:
             violations.append(f"z_pbp_corpus_fsm_cold: task {key} {mx[key]} over bound")
 
-    # (a) sf-pair flatness for the tail's top peaks (VERDICT r8 missing #1)
+    # (a) sf-pair flatness for the tail's top peaks
     for n, rec in sorted(out["queries"].items()):
         if n not in qs:  # synthetic legs (the cold parse row) have no registry fn
             continue
         if rec["status"] != "ok" or rec["max_task_peak_exec_mem_mb"] < TAIL_PAIR_MB:
             continue
-        before = set(_completed_stages(app))
+        before = set(tm.completed_stages(UI_PORT, app))
         status01, wall01 = _run_capped(spark, qs[n], SRC, f"pair_{n}", cap_s)
         if status01 != "ok":
             # a failed sf0.1 leg leaves the grower UNADJUDICATED — that is
@@ -817,8 +779,8 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
             rec["sf0.1_status"] = status01
             violations.append(f"{n}: sf0.1 pair leg not ok ({status01})")
             continue
-        new = {k: v for k, v in _completed_stages(app).items() if k not in before}
-        lo = round(_task_maxima(app, new)["peak_exec_mem"] / 2**20, 1)
+        new = {k: v for k, v in tm.completed_stages(UI_PORT, app).items() if k not in before}
+        lo = round(tm.task_maxima(UI_PORT, app, new)["peak_exec_mem"] / 2**20, 1)
         hi = rec["max_task_peak_exec_mem_mb"]
         rec["sf0.1_peak_exec_mem_mb"] = lo
         rec["sf0.1_wall_s"] = wall01
@@ -827,7 +789,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
         if n in TAIL_PAIR_EXEMPT:
             rec["mem_flat_exempt"] = TAIL_PAIR_EXEMPT[n]
             rec["exempt_evidence_sf0.1"] = _task_quantiles(app, new)
-            # the exemption is SELF-AUDITING (VERDICT r9 nit): its basis
+            # the exemption is SELF-AUDITING: its basis
             # is fixed page allocation over KB-scale per-task data, so a
             # top task that actually INGESTS data at memory scale voids it
             ev = rec.get("exempt_evidence_sf1") or {}
@@ -838,7 +800,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
             if not ev or not rec.get("exempt_evidence_sf0.1"):
                 # an empty quantile read (UI outage / taskSummary miss)
                 # must not silently revert the exemption to un-audited
-                # prose (ADVICE r10 #2): the exemption is VOID without
+                # prose: the exemption is VOID without
                 # its measured basis
                 rec["exempt_evidence_unavailable"] = True
                 violations.append(
@@ -856,7 +818,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
                 f"({lo} MB @ sf0.1 -> {hi} MB @ sf1, > {MEM_FLAT_FACTOR}x)"
             )
 
-    # (b) tuning-sweep curves at sf1 (VERDICT r8 #6)
+    # (b) tuning-sweep curves at sf1
     out["sweeps_sf1"], sweep_problems = _sweep_curves_sf1(spark, qs, cap_s)
     violations.extend(sweep_problems)
     # independent of the curve legs: a capped LSH/IVF sweep must not skip
@@ -865,7 +827,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     out["sweeps_sf1"]["serving_grain"] = grain_out
     violations.extend(grain_problems)
 
-    # (c) scaled-K serving growth contract (VERDICT r9 missing #1/#2):
+    # (c) scaled-K serving growth contract:
     # candidate pairs per served vector must grow ~sqrt(10)x across the
     # sf0.1 -> sf1 pair (Theta(nprobe * N/K), K = ceil(sqrt(N_old))), not
     # the 10x a fixed-K index pays. 6x is the fail line: sqrt(10) ~ 3.2
@@ -885,7 +847,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
         if not lo:
             # an empty candidate set at sf0.1 means the serving path
             # produced no work to compare — a degenerate profile must
-            # FAIL the growth audit, not skip it (ADVICE r10 #4)
+            # FAIL the growth audit, not skip it
             violations.append(
                 f"serving_scaledk: sf0.1 produced {lo} candidates/new — "
                 "degenerate serving profile, growth contract unverifiable"
@@ -895,20 +857,18 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
                 f"serving_scaledk: cand/new grew {hi / lo:.1f}x across the "
                 f"10x pair (> 6x — not the sqrt scaling the index promises)"
             )
-    # recall AT SCALE (VERDICT r10 next #3): the sqrt-N candidate cut must
-    # not silently trade recall where the walls are quoted from. Floors:
-    # exact 0.9 (measured 1.0 at both scales); rerank 0.9 since round 12
-    # — the round-11 FIXED R=16 shortlist covered a shrinking fraction of
-    # a cell as occupancy (~sqrt(N)) grew (measured decay 0.924 @ sf0.1
-    # -> 0.861 @ sf1, extrapolating through the old 0.8 floor within
-    # ~another 10x), so R is now OCCUPANCY-SCALED
-    # (simsearch._PQ_RERANK_R_MIN: R = max(16, ceil(0.4 * N_old / K)))
-    # and the compressed arm must hold >= 0.9 at BOTH scales. Plus the
-    # raw-corpus worst-case row (ADVICE r10 #1): the same machinery over
+    # recall AT SCALE: the sqrt-N candidate cut must not silently trade
+    # recall where the walls are quoted from. Floors: exact 0.9 (measured
+    # 1.0 at both scales); rerank 0.9 — a FIXED R=16 shortlist covers a
+    # shrinking fraction of a cell as occupancy (~sqrt(N)) grows, so R is
+    # OCCUPANCY-SCALED (simsearch._PQ_RERANK_R_MIN:
+    # R = max(16, ceil(0.4 * N_old / K))) and the compressed arm must hold
+    # >= 0.9 at BOTH scales. Plus the
+    # raw-corpus worst-case row: the same machinery over
     # the PROVIDED near-isotropic embeddings — recall there documents
     # what the sqrt-N candidate cut costs on unclusterable data; the
     # pinned floors apply ONLY to the planted clusterable corpus, and the
-    # raw row carries its nprobe TRADE CURVE (VERDICT r11 next #5) below.
+    # raw row carries its nprobe TRADE CURVE below.
     from d3d_etl_spark.queries.simsearch import (
         raw_serving_recall,
         serving_recall_profile,
@@ -944,7 +904,7 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
                     f"raw-corpus serving {tag}: served 0 vectors — the "
                     "machinery must run on unstructured data too"
                 )
-    # the raw-corpus KNOB CURVE (VERDICT r11 next #5): a real user with
+    # the raw-corpus KNOB CURVE: a real user with
     # unclusterable embeddings needs the recall/cost trade, not one
     # point. Sweep nprobe in {3, 8, 16, K} at sf0.1 and publish
     # (recall@1, cand_per_new) per point; the nprobe=K leg probes every
@@ -990,7 +950,6 @@ def main() -> int:
     if os.environ.get("SPARK_GRAFT_STRESS") != "1":
         print("refusing: set SPARK_GRAFT_STRESS=1 to run the stress tier")
         return 2
-    sys.path.insert(0, REPO)
     from d3d_etl_spark.session import get_spark
     import __spark_entry__ as mod
 
@@ -1009,14 +968,16 @@ def main() -> int:
         },
     )
     build_s = build_sf1(spark)
-    app = _app_id()
+    app = tm.app_id(UI_PORT)
+    if app is None:  # task maxima are this tier's measurement: no UI, no run
+        raise RuntimeError(f"Spark UI REST API unreachable on port {UI_PORT}")
     qs = mod.queries()
 
     # scope=core (default): flagships + the synthetic fallback + the
-    # heavy EXTRA_SHAPES. scope=all (round 8): EVERY bench-tagged query —
+    # heavy EXTRA_SHAPES. scope=all: EVERY bench-tagged query —
     # the complete "would each benched plan survive 10x" audit, enabled
-    # by the slice now carrying the TPC-H tables too. scope=registry
-    # (round 8): the remaining NON-benched registry tail, single-scale
+    # by the slice carrying the TPC-H tables too. scope=registry: the
+    # remaining NON-benched registry tail, single-scale
     # absolute-bound audit (run_registry_audit).
     scope = os.environ.get("SPARK_GRAFT_STRESS_SCOPE", "core")
     if scope == "registry":
@@ -1038,16 +999,16 @@ def main() -> int:
         fn = runnables[name]
         out["sf_pairs"][name] = {}
         for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            before = set(_completed_stages(app))
+            before = set(tm.completed_stages(UI_PORT, app))
             walls = []
             for _ in range(2):  # run twice: [0] pays JIT/cache warmup, [1] is steady-state
                 t0 = time.time()
                 fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
                 walls.append(time.time() - t0)
             wall = min(walls)
-            after = _completed_stages(app)
+            after = tm.completed_stages(UI_PORT, app)
             new = {k: v for k, v in after.items() if k not in before}
-            mx = _task_maxima(app, new)
+            mx = tm.task_maxima(UI_PORT, app, new)
             rec = {
                 "wall_s": round(wall, 2),
                 "wall_runs": [round(w, 2) for w in walls],

@@ -30,10 +30,10 @@ def test_q1_pushdown_and_single_shuffle(spark, sf_dir):
 
 
 def test_q5_scale_aware_join_strategy(spark, sf_dir):
-    """Round-8 revision of the round-1 'all five joins broadcast' pin: the
-    scope=all stress audit measured the broadcast relations of the
-    SF-SCALED sides (orders/customer/supplier) growing linearly with the
-    corpus (the q3 twin breached the 3x flatness bound at 10x). Only the
+    """Only fixed-cardinality dimensions broadcast: the scope=all stress
+    audit measured the broadcast relations of the SF-SCALED sides
+    (orders/customer/supplier) growing linearly with the corpus (the q3
+    twin breached the 3x flatness bound at 10x). Only the
     fixed-cardinality dimensions (nation, region) broadcast; every scaled
     side takes a sort-free shuffled hash join."""
     import re as _re
@@ -84,10 +84,10 @@ def test_complex_pipelines_no_sortmerge(spark, sf_dir):
     """Dimension/candidate joins in the sketch pipelines must broadcast —
     a SortMergeJoin here means a small side lost its broadcast and the
     fact table started shuffling for it."""
-    # dedup_minhash_lsh budget is 5 since round 5: +1 for the hot-bucket
+    # dedup_minhash_lsh budget is 5: +1 for the hot-bucket
     # guard's count probe over the (tiny) band table — the price of
     # bounding the worst self-join task on a boilerplate-heavy corpus.
-    # fuzzy_match_family budget 5 since round 8: the variation tier's
+    # fuzzy_match_family budget is 5: the variation tier's
     # exploded candidate side (corpus x ~6 variants) shuffle-hashes instead
     # of auto-broadcasting (measured 320 MB relation at the sf1 pair) — +2
     # exchanges for a task-memory ceiling.
@@ -360,7 +360,7 @@ def test_semdedup_plan_cluster_local(spark, sf_dir):
 
 
 def test_round5_queries_no_shuffling_sortmerge(spark, sf_dir):
-    """The round-5 z_-tier additions keep the repo's join discipline:
+    """These z_-tier queries keep the repo's join discipline:
     dimension/codebook/state sides broadcast, unique-key corpus joins take
     sort-free shuffled hash — no shuffling SortMergeJoin anywhere."""
     for name in (
@@ -386,10 +386,10 @@ def test_round5_queries_no_shuffling_sortmerge(spark, sf_dir):
 
 
 def test_dedup_pair_stage_no_corpus_broadcast(spark, sf_dir):
-    """Round-8 pin (VERDICT r7 #1, the corpus_pipeline checkpoint-memory
-    weak): Catalyst's size estimates behind a localCheckpoint + explode are
-    structurally wrong, and at sf1 it auto-broadcast the CORPUS-grain
-    shingle/band sides (416 MiB hash relation in one task, linear in the
+    """The dedup pair stage never broadcasts a corpus-grain side: Catalyst's
+    size estimates behind a localCheckpoint + explode are structurally
+    wrong, and at sf1 it auto-broadcast the CORPUS-grain shingle/band
+    sides (416 MiB hash relation in one task, linear in the
     corpus). The pair stage must broadcast ONLY the duplicate-rate-bounded
     candidate set; the band self-join and the array verify's doc_b join are
     shuffled hash joins. Measured fixed: max task peak exec memory flat
@@ -412,9 +412,9 @@ def test_dedup_pair_stage_no_corpus_broadcast(spark, sf_dir):
 
 
 def test_no_single_partition_window(spark, sf_dir):
-    """Round-6 pin (VERDICT r5 #1): `keyed_window_family`'s rescale arm must
-    compute its global scalars as a 1-row agg + broadcast crossJoin, never an
-    empty-partition Window that drags the whole table onto one task. The
+    """`keyed_window_family`'s rescale arm must compute its global scalars
+    as a 1-row agg + broadcast crossJoin, never an empty-partition Window
+    that drags the whole table onto one task. The
     detector is self-checked against a deliberately bad plan first."""
     from pyspark.sql import Window
 
@@ -462,7 +462,7 @@ def test_pbp_parse_one_exchange(spark, tmp_path):
 
 
 def test_fixture_war_runs_production_chain():
-    """Round-8 pin: the fixture-scale WAR twin must exercise the SAME
+    """The fixture-scale WAR twin must exercise the SAME
     engine code path the corpus-scale query runs (war_batting_from_parsed)
     — a twin with its own arithmetic would verify nothing about the
     production chain."""
@@ -479,12 +479,11 @@ def test_fixture_war_runs_production_chain():
 
 
 def test_committed_bench_no_task_mem_regressions():
-    """Round-8 machinery (VERDICT r7 #5): bench.py now diffs each run's
-    per-query max-task peak execution memory against the committed previous
-    round's (git HEAD copy of BENCH.json) and records >2x growth in
-    `task_mem_regressions`. The committed bench state must be clean — a
-    non-empty list at HEAD means a plan regression shipped (task maxima are
-    contention-immune, so this is never host noise)."""
+    """bench.py diffs each run's per-query max-task peak execution memory
+    against the committed run (git HEAD copy of BENCH.json) and records
+    >2x growth in `task_mem_regressions`. The committed bench state must
+    be clean — a non-empty list at HEAD means a plan regression shipped
+    (task maxima are contention-immune, so this is never host noise)."""
     import json
     import pathlib
 
@@ -503,8 +502,8 @@ def test_committed_bench_no_task_mem_regressions():
 def test_no_empty_partitionby_in_package():
     """Package-wide source pin: `Window.partitionBy()` with no columns is
     banned — the A6 1-row-agg + broadcast shape replaces it. Global
-    `Window.orderBy` sites (bucket-/strata-grain, audited in VERDICT r5)
-    are out of this pin's scope."""
+    `Window.orderBy` sites (bucket-/strata-grain, audited one by one) are
+    out of this pin's scope."""
     import pathlib
     import re as _re
 
@@ -517,11 +516,65 @@ def test_no_empty_partitionby_in_package():
     assert not offenders, "empty Window.partitionBy() found:\n" + "\n".join(offenders)
 
 
+def test_no_unreferenced_top_level_names_in_package():
+    """Package-wide source pin: every top-level name defined in
+    d3d_etl_spark/ is referenced somewhere besides its own definition — in
+    the package, the harness (bench.py, stress_sf1.py, __spark_entry__.py,
+    perfbench/) or tests/. A whole-word match anywhere counts (strings and
+    getattr uses included), and an @register'd query is reached through the
+    registry. schemas.py and functions/saber.py are exempt: they mirror the
+    reference's declared schemas and formula catalog as public surfaces."""
+    import ast
+    import collections
+    import pathlib
+    import re as _re
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    pkg = repo / "d3d_etl_spark"
+    corpus = [
+        *pkg.rglob("*.py"),
+        *(repo / n for n in ("bench.py", "stress_sf1.py", "__spark_entry__.py")),
+        *(repo / "perfbench").rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+    ]
+    words = collections.Counter()
+    for py in corpus:
+        words.update(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", py.read_text()))
+
+    def registered(node) -> bool:
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in getattr(node, "decorator_list", ())
+        )
+
+    exempt = {pkg / "schemas.py", pkg / "functions" / "saber.py"}
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py in exempt:
+            continue
+        for node in ast.parse(py.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [] if registered(node) else [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            offenders += [
+                f"{py.relative_to(repo)}:{node.lineno}: {n}"
+                for n in names
+                if not n.startswith("__") and words[n] <= 1
+            ]
+    assert not offenders, "unreferenced top-level names:\n" + "\n".join(offenders)
+
+
 def test_task_mem_comparator_scale_guard():
-    """ADVICE r8 #1: the cross-round task-maxima comparator only compares
-    runs at the SAME scale as the committed BENCH.json — a bench run at a
-    different SPARK_GRAFT_SF_DIR must skip the diff (return []) instead of
-    writing spurious regressions or masking real ones."""
+    """The task-maxima comparator only compares runs at the SAME
+    (sf, cpus, heap) as the committed BENCH.json — a bench run at a
+    different scale or core count must skip the diff (return []) with a
+    stated reason instead of writing spurious regressions or masking real
+    ones."""
     import json
     import pathlib
     import sys as _sys
@@ -533,9 +586,13 @@ def test_task_mem_comparator_scale_guard():
 
         pytest.skip("no BENCH.json at HEAD")
     _sys.path.insert(0, str(repo))
-    from bench import _task_mem_regressions
+    from bench import _GUARD_KEYS, _task_mem_regressions, _task_mem_skip
 
     committed = json.loads(p.read_text())
+    run = {k: committed.get(k) for k in _GUARD_KEYS}
+    assert _task_mem_skip(run, committed) is None, (
+        "the committed BENCH.json must carry sf, cpus and heap"
+    )
     hit = next(
         (
             (n, s)
@@ -556,17 +613,22 @@ def test_task_mem_comparator_scale_guard():
             }
         }
     }
-    # round 12 (ADVICE r11 #1): _TASK_MEM_ACK is empty and entries carry
-    # a CEILING — with no (in-ceiling) entry, a 100x jump must flag as a
-    # FATAL regression, never as acknowledged
-    regs, acked = _task_mem_regressions(inflated, committed["sf"])
+    # _TASK_MEM_ACK entries carry a CEILING — with no (in-ceiling) entry,
+    # a 100x jump must flag as a FATAL regression, never as acknowledged
+    regs, acked = _task_mem_regressions(inflated, run, committed)
     assert regs and not acked, (
         "a 100x un-acknowledged task-memory jump at the committed scale "
         "must flag fatally"
     )
-    assert _task_mem_regressions(inflated, committed["sf"] * 10) == ([], []), (
+    other_sf = {**run, "sf": run["sf"] * 10}
+    assert _task_mem_regressions(inflated, other_sf, committed) == ([], []), (
         "a run at a different scale must skip the comparison"
     )
+    other_cpus = {**run, "cpus": run["cpus"] * 2}
+    assert _task_mem_regressions(inflated, other_cpus, committed) == ([], []), (
+        "a run at a different core count must skip the comparison"
+    )
+    assert "cpus" in _task_mem_skip(other_cpus, committed)
     # ceiling mechanics: an adjudicated entry diverts the flag to
     # acknowledged ONLY while the measured peak stays under its ceiling —
     # past the ceiling the old adjudication cannot mask the new jump
@@ -576,10 +638,10 @@ def test_task_mem_comparator_scale_guard():
     old_ack = _bench._TASK_MEM_ACK
     try:
         _bench._TASK_MEM_ACK = {name: (cur_mb + 1.0, "test: within ceiling")}
-        regs, acked = _task_mem_regressions(inflated, committed["sf"])
+        regs, acked = _task_mem_regressions(inflated, run, committed)
         assert acked and not regs, "an in-ceiling ack entry must divert the flag"
         _bench._TASK_MEM_ACK = {name: (cur_mb / 2.0, "test: ceiling exceeded")}
-        regs, acked = _task_mem_regressions(inflated, committed["sf"])
+        regs, acked = _task_mem_regressions(inflated, run, committed)
         assert regs and not acked, (
             "a jump past its ack ceiling must flag fatally again"
         )

@@ -134,6 +134,31 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
+def barrier(df: DataFrame) -> DataFrame:
+    """Materialize `df` now and return a frame that reads the result.
+
+    The one rule for every barrier in the package. Barrier a frame only
+    when at least one of these holds:
+
+    - it has two or more consumers (without it, each consumer re-runs
+      the whole lineage: ReusedExchange does not reliably cover
+      multi-consumer subtrees);
+    - it cuts an iterative lineage (loop round k+1 must not replay
+      rounds 1..k, and the plan must not grow with the round count);
+    - it keeps corpus-scale work out of a broadcast build (a broadcast
+      side is built in one driver-side thread under broadcastTimeout).
+
+    A single-consumer barrier serves none of these: it cannot be reused,
+    only waited on. `localCheckpoint`, not `cache()`: cache matching is
+    plan-based, so a column-pruned broadcast subtree downstream misses the
+    cache and re-derives the lineage; the checkpointed RDD is shared
+    structurally by every consumer. The consumer that reuses a frame
+    places the barrier, never its producer — a producer cannot know how
+    many consumers its frame has.
+    """
+    return df.localCheckpoint()
+
+
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
+
 
 def word_symbol_counts(words: DataFrame, word_col: str = "w", count_col: str = "c") -> DataFrame:
     """(symbols: array<string>, c) — each distinct word as its initial
@@ -113,7 +115,7 @@ def train_bpe(
     pair remains. Each round checkpoints the re-merged symbol table so
     lineage stays one round deep.
     """
-    wc = word_symbol_counts(words, word_col, count_col).localCheckpoint()
+    wc = barrier(word_symbol_counts(words, word_col, count_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         best = top_pair(pair_counts(wc))
@@ -121,9 +123,9 @@ def train_bpe(
             break
         p1, p2, cnt = best
         merges.append(best)
-        wc = wc.select(
+        wc = barrier(wc.select(
             apply_merge(F.col("symbols"), p1, p2).alias("symbols"), "c"
-        ).localCheckpoint()
+        ))
     if return_table:
         return merges, wc
     return merges
@@ -145,10 +147,10 @@ def encode_with_merges(
     rule k+1's lineage does not replay rules 1..k). Applying a
     production-sized rule list (30-50k merges) batches naturally: the fold
     is per-row, so rules chunk into however many passes fit codegen."""
-    wc = word_symbol_counts(words, word_col, count_col).localCheckpoint()
+    wc = barrier(word_symbol_counts(words, word_col, count_col))
     for rule in merges:
         p1, p2 = rule[0], rule[1]
-        wc = wc.select(
+        wc = barrier(wc.select(
             apply_merge(F.col("symbols"), p1, p2).alias("symbols"), "c"
-        ).localCheckpoint()
+        ))
     return wc

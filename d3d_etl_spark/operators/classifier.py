@@ -122,14 +122,14 @@ def lr_corpus_inputs(docs: DataFrame, n_features: int):
     definition of the eligibility rule (docs with >= 1 token) and the label
     encoding (y_q = X_SCALE iff lang = 'en'), used by the oracled step
     query, the trainer loop, and the streaming-parity test alike. Both
-    frames come back localCheckpointed: each is read by multiple branches
-    of every consumer."""
+    frames come back lazy; lr_gradient_step reads xq twice, and a loop
+    reads both every step, so the caller barriers them."""
     from d3d_etl_spark.functions.text import tokens
 
     tok = tokens(F.col("text"))
     xq = hashed_features(
         docs.select("doc_id", tok.alias("toks")), F.col("toks"), n_features
-    ).localCheckpoint()
+    )
     labels = (
         docs.select(
             "doc_id",
@@ -141,6 +141,5 @@ def lr_corpus_inputs(docs: DataFrame, n_features: int):
         )
         .where(F.col("nd") > 0)
         .select("doc_id", "y_q")
-        .localCheckpoint()
     )
     return xq, labels

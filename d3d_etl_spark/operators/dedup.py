@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from d3d_etl_spark.functions.strings import md5_int
+from d3d_etl_spark.io import barrier
 
 
 def content_digest(cols: list[Column]) -> Column:
@@ -245,7 +246,7 @@ def lsh_candidates(band_df: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> Data
     # shingle table — without a barrier Catalyst recomputes that pass on BOTH
     # join sides (same HOF/CSE trap dedup_simhash_pairs documents; measured
     # ~2x the pair-stage cost at sf0.1).
-    band_df = band_df.localCheckpoint()
+    band_df = barrier(band_df)
     hot = (
         band_df.groupBy("band_idx", "band_key")
         .agg(F.count("*").alias("_bsz"))
@@ -438,7 +439,7 @@ def connected_components(
     global `last_cc_rounds` records the round count of the most recent
     distributed run (test instrumentation).
     """
-    pair = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).localCheckpoint()
+    pair = barrier(edges.select(F.col(a).alias("src"), F.col(b).alias("dst")))
     if pair.count() <= driver_threshold:
         node_type = pair.schema["src"].dataType
         parent: dict = {}
@@ -483,13 +484,12 @@ def connected_components(
         )
 
     # canonical orientation src > dst; both star ops preserve it
-    cur = (
+    cur = barrier(
         pair.where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         )
         .distinct()
-        .localCheckpoint()
     )
     last_cc_rounds = 0
     converged = False
@@ -497,12 +497,11 @@ def connected_components(
         last_cc_rounds += 1
         # large-star: for each u, hang every BIGGER neighbor off m(u)
         s1 = _sym(cur)
-        large = (
+        large = barrier(
             s1.join(_local_min(s1), "src")
             .where(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .distinct()
-            .localCheckpoint()
         )
         # small-star: for each u, hang u and every not-bigger neighbor
         # (except the min itself) off m(u)
@@ -516,7 +515,7 @@ def connected_components(
         small_self = m2.where(F.col("src") != F.col("m")).select(
             "src", F.col("m").alias("dst")
         )
-        nxt = small_n.unionByName(small_self).distinct().localCheckpoint()
+        nxt = barrier(small_n.unionByName(small_self).distinct())
         # converged when the (distinct, canonical) edge set is a fixpoint
         if nxt.count() == cur.count() and nxt.exceptAll(cur).count() == 0:
             cur = nxt

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
+
 # candidate-side sub-block cap for the non-broadcast fallback: the largest
 # candidate set one scoring task may hold (same role as LSH_MAX_BUCKET in
 # operators/dedup.py — bounds the worst O(|block|^2) task losslessly)
@@ -216,7 +218,7 @@ def blocked_fuzzy_join(
     # the final union — without a barrier the block-join subtree runs three
     # times. Its output is tiny (<= one row per probe): materialize once.
     # Measured 2x on the full cascade at sf0.1.
-    exact = exact.localCheckpoint()
+    exact = barrier(exact)
     # The candidate side is broadcast, so the scoring stage inherits the
     # PROBE side's partitioning — a thin scan (one parquet row group) would
     # run the whole O(|block|^2) levenshtein stage on one core. Round-robin
@@ -321,13 +323,12 @@ def roster_cascade(
 
     def _advance(matched: DataFrame) -> None:
         nonlocal remaining
-        matched = matched.localCheckpoint()  # feeds union AND anti-join
+        matched = barrier(matched)  # feeds union AND anti-join
         tiers.append(matched)
         remaining = remaining.join(matched.select(probe_id), probe_id, "left_anti")
 
-    # equality tiers: the matched value is IN the join key (round 9 — the
-    # variation tier's round-8 fix applied to the whole cascade), so the
-    # hash join never materializes the per-block cross product it would
+    # equality tiers: the matched value is IN the join key (as in the
+    # variation tier), so the hash join never materializes the per-block cross product it would
     # otherwise equality-filter
     if probe_number is not None and cand_number is not None:
         cnum = candidates.select(
@@ -566,12 +567,12 @@ def headshot_cascade(
 
     def _advance(matched: DataFrame) -> None:
         nonlocal remaining
-        matched = matched.localCheckpoint()
+        matched = barrier(matched)
         tiers.append(matched)
         remaining = remaining.join(matched.select(probe_id), probe_id, "left_anti")
 
-    # name equality folded INTO the join key (round 9 — the variation tier's
-    # round-8 fix applied here): a block-key-only join materializes each
+    # name equality folded INTO the join key (as in the variation tier):
+    # a block-key-only join materializes each
     # block's cross product just to equality-filter it — O(|block|^2) rows
     # for an equi-match the hash join can do in O(|block|)
     direct = (

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.operators.similarity import SIM_SCALE
 
 
@@ -125,7 +126,7 @@ def power_iterate(gram: DataFrame, dim: int, n_iter: int) -> DataFrame:
     from d3d_etl_spark.functions.strings import md5_int
 
     spark = gram.sparkSession
-    gram = gram.localCheckpoint()
+    gram = barrier(gram)
     v = spark.range(dim).select(
         F.col("id").cast("int").alias("pos"),
         (md5_int(F.concat(F.lit("pc:"), F.col("id").cast("string"))) % 2001 - 1000)
@@ -144,7 +145,7 @@ def power_iterate(gram: DataFrame, dim: int, n_iter: int) -> DataFrame:
             )
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = (
+        v = barrier(
             w.crossJoin(F.broadcast(m))
             .select(
                 F.col("p").alias("pos"),
@@ -154,7 +155,7 @@ def power_iterate(gram: DataFrame, dim: int, n_iter: int) -> DataFrame:
                 .cast("long")
                 .alias("v_q"),
             )
-        ).localCheckpoint()
+        )
     return v
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.vectors import cosine
+from d3d_etl_spark.io import barrier
 
 SIM_SCALE = 1_000_000  # embedding fixed-point scale for exact centroid sums
 
@@ -978,9 +979,9 @@ def resplit_oversized_clusters(
             ]
         )
         # compliant clusters keep label-space parity with the refined ones
-        out = ok.withColumn(
+        out = barrier(ok.withColumn(
             label_col, F.col(label_col) * (sub_k + 1)
-        ).unionByName(refined).localCheckpoint()
+        ).unionByName(refined))
     return out
 
 

@@ -4,12 +4,10 @@
 The reference chains subprocesses with CSV files between stages; here every
 arrow is a DataFrame hand-off inside one session, with the two reused
 intermediates (`parsed`, `with_metrics` — each consumed by 3+ downstream
-stages) materialized, mirroring the reference's materialization points
-(parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). `parsed` persists eagerly,
-when run_analytics returns; `pbp_with_metrics` persists lazily, on the
-first access to `with_metrics` or to any board. Pass `checkpoint_dir` to
-persist them as parquet instead (the debugging/restart surface at scale) —
-a caller that reads only `parsed` writes only the parsed_pbp directory.
+stages) behind an `io.barrier`, mirroring the reference's materialization
+points (parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). `parsed` is
+materialized when run_analytics returns; `with_metrics` on the first
+access to it or to any board.
 
     raw pbp ─ parse ─┬─ expected-runs (long + wide matrix)
                      ├─ linear weights ──┐
@@ -18,7 +16,7 @@ a caller that reads only `parsed` writes only the parsed_pbp directory.
                      ├─ batting / situational boards
                      └─ (+ lineups) pitcher fill ─ pitching board
 
-Every derived table is built LAZILY on first attribute access (r14): merely
+Every derived table is built LAZILY on first attribute access: merely
 CONSTRUCTING a board DataFrame runs Catalyst analysis over its whole plan,
 and the boards' expression trees are wide (event-type CASE cascades over
 the parsed spine) — profiled at ~2.4 s of serialized driver time per
@@ -31,11 +29,11 @@ board's analysis.
 
 from __future__ import annotations
 
-import os
 from functools import cached_property
 
 from pyspark.sql import DataFrame
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.pbp.guts import guts_constants
 from d3d_etl_spark.pbp.leaderboards import (
     baserunning_board,
@@ -54,9 +52,8 @@ from d3d_etl_spark.pbp.win_prob import add_win_probability
 class AnalyticsOutputs:
     """Lazy view over the analytics DAG: each attribute is the same
     DataFrame `run_analytics` always produced, built (and its spine
-    materialized) on first access and cached on the instance. `parsed` is
-    materialized eagerly at construction — it is the spine every consumer
-    shares and the barrier keeps the parse out of broadcast-build threads;
+    materialized) on first access and cached on the instance. `parsed`
+    arrives already materialized (run_analytics barriers it);
     `with_metrics` materializes on the first access to it or to any board
     (all boards read it).
 
@@ -68,14 +65,12 @@ class AnalyticsOutputs:
     def __init__(
         self,
         parsed: DataFrame,
-        materialize,
         pitching_lineups: DataFrame | None,
         win_expectancy: DataFrame | None,
         leverage_index: DataFrame | None,
         lg_obp: float,
     ) -> None:
         self.parsed = parsed
-        self._materialize = materialize
         self._lineups = pitching_lineups
         self._we = win_expectancy
         self._li = leverage_index
@@ -90,12 +85,7 @@ class AnalyticsOutputs:
         wm = add_re24(self.parsed, expected_runs_long(self.parsed))
         if self._we is not None and self._li is not None:
             wm = add_win_probability(wm, self._we, self._li)
-        # the eager barrier stays: an eager=False variant (fold the
-        # materialization into the first board's job) measured a wash on an
-        # interleaved A/B (r14: eager 3.30/4.37/3.39 s vs lazy
-        # 3.35/churn/3.36 s min-of-3 per cycle) — the barrier job is cheap;
-        # the driver cost this round removed was the BOARD ANALYSIS, not it
-        return self._materialize(wm, "pbp_with_metrics")
+        return barrier(wm)  # linear weights, guts and every board read it
 
     @cached_property
     def linear_weights(self) -> DataFrame:
@@ -143,29 +133,13 @@ def run_analytics(
     win_expectancy: DataFrame | None = None,
     leverage_index: DataFrame | None = None,
     lg_obp: float = 0.360,
-    checkpoint_dir: str | None = None,
 ) -> AnalyticsOutputs:
-    """raw narration -> every derived table (lazily, see AnalyticsOutputs)."""
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        if checkpoint_dir:
-            path = os.path.join(checkpoint_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path)
-        # localCheckpoint, not cache(): cache matching is PLAN-based, so the
-        # column-pruned broadcast subtrees downstream (ER lookup, linear
-        # weights, guts) would re-derive the whole parse — FSM included —
-        # before the main job ever populates the cache. The RDD-level
-        # checkpoint is shared structurally by every consumer, and the eager
-        # barrier keeps the parse out of broadcast-build threads (computing
-        # the corpus-scale parse inside a broadcast thread is the wrong
-        # place at scale — broadcastTimeout, single build thread, guide §3.1).
-        return df.localCheckpoint()
-
-    parsed = _materialize(parse_pbp(raw_pbp), "parsed_pbp")
+    """raw narration -> every derived table (lazily, see AnalyticsOutputs).
+    The parse is barriered: the ER matrix, RE24 and the pitcher fill all
+    read it, and the barrier keeps the corpus-scale parse out of the
+    broadcast builds downstream (ER lookup, linear weights, guts)."""
     return AnalyticsOutputs(
-        parsed=parsed,
-        materialize=_materialize,
+        parsed=barrier(parse_pbp(raw_pbp)),
         pitching_lineups=pitching_lineups,
         win_expectancy=win_expectancy,
         leverage_index=leverage_index,

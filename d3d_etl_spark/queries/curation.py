@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.sampling import sql_hash_bucket
 from d3d_etl_spark.functions.text import sql_tokens, sql_word_shingles
-from d3d_etl_spark.io import fan_out, load_table
+from d3d_etl_spark.io import barrier, fan_out, load_table
 from d3d_etl_spark.queries.registry import register
 from d3d_etl_spark.queries.sampling import (
     _MIX_U_MOD,
@@ -95,17 +95,19 @@ GROUP BY s.lang
 
 @register("z_corpus_curation", _CURATION_ORACLE, tags=("corpus", "pipeline"), bench=True)
 def z_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO fan_out on the scan (r13 final): quiet-host A/B measured it +69%
+    # NO fan_out on the scan: quiet-host A/B measured it +69%
     # on this query at bench scale (3.22 -> 5.44 s min-of-cycles) — the
     # doc-grain maps here are too light for the payload rebalance to pay.
     docs = load_table(spark, sf_dir, "documents")
     lm = z_corpus_lm_score(spark, sf_dir).select("doc_id", "nll")
     span = z_corpus_span_dedup(spark, sf_dir).select("doc_id", "would_trim")
 
-    d = mixing_doc_grain(docs, materialize=False)  # surv below carries the barrier
+    d = mixing_doc_grain(docs)
     # lm/span are DOC-grain gate frames (grow with the corpus): shuffle on
-    # doc_id, never broadcast (round-8 corpus-grain-broadcast doctrine)
-    surv = (
+    # doc_id, never broadcast (a corpus-grain side is never a broadcast)
+    # mixing_profile consumes the survivor frame twice (lang stats +
+    # accept groupBy): the barrier runs the lm/span joins once
+    surv = barrier(
         d.join(lm.hint("shuffle_hash"), "doc_id")
         .join(span.hint("shuffle_hash"), "doc_id", "left")
         .where(
@@ -113,9 +115,6 @@ def z_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             & ~F.coalesce(F.col("would_trim"), F.lit(False))
         )
         .select("doc_id", "lang", "n_tok", "u")
-        # mixing_profile consumes the survivor frame twice (lang stats +
-        # accept groupBy): barrier so the lm/span joins run once
-        .localCheckpoint()
     )
     prof = mixing_profile(surv)
     corp = docs.groupBy("lang").agg(F.count("*").alias("n_corpus"))
@@ -223,16 +222,15 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.functions.text import tokens, word_shingles
 
     # fan the thin scan: the bigram explode + per-shingle md5 is the
-    # heavy map of this family and would serialize on a single split (r13)
+    # heavy map of this family and would serialize on a single split
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     sh = word_shingles(tokens(F.col("text")), 2)
-    feat = (
+    # feeds raw stats, target stats, and the per-doc weight sum
+    feat = barrier(
         docs.select("doc_id", "lang", F.explode(sh).alias("s"))
         .withColumn("j", md5_int(F.col("s")) % _DSIR_B)
         .groupBy("doc_id", "lang", "j")
         .agg(F.count("*").alias("c"))
-        # feeds raw stats, target stats, and the per-doc weight sum
-        .localCheckpoint()
     )
     rawc = feat.groupBy("j").agg(F.sum("c").alias("c"))
     tgtc = feat.where(F.col("lang") == "en").groupBy("j").agg(F.sum("c").alias("ct"))
@@ -357,7 +355,7 @@ def z_corpus_dsir_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a scan-local predicate. Beyond-reference LLM-pipeline operator."""
     from pyspark.sql import Window
 
-    scored = _dsir_scored(spark, sf_dir).localCheckpoint()  # feeds cnt + output
+    scored = barrier(_dsir_scored(spark, sf_dir))  # feeds cnt + output
     kdf = scored.agg(
         F.ceil(F.count("*") * _DSIR_FRAC_NUM / _DSIR_FRAC_DEN)
         .cast("long")

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.money import cents
 from d3d_etl_spark.functions.text import sql_tokens, sql_word_shingles, tokens, word_shingles
-from d3d_etl_spark.io import fan_out, load_table, read_parquet
+from d3d_etl_spark.io import barrier, fan_out, load_table, read_parquet
 from d3d_etl_spark.operators.dedup import (
     exact_dedup_groups,
     jaccard_pairs,
@@ -96,9 +96,9 @@ WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= {_JACCARD_T}
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the shingle table feeds sizes + both self-join sides: materialize once
-    sh = shingle_rows(
+    sh = barrier(shingle_rows(
         docs, "doc_id", word_shingles(tokens(F.col("text")), _SHINGLE_N)
-    ).localCheckpoint()
+    ))
     return jaccard_pairs(sh, _JACCARD_T)
 
 
@@ -250,11 +250,11 @@ def z_dedup_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows_per_band 2/4/8 over 16 hashes) — the banding tuning curve,
     every point driver-hashed against the exact-Jaccard truth set."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(
+    sh = barrier(shingle_rows(
         docs, "doc_id", word_shingles(tokens(F.col("text")), _SHINGLE_N)
-    ).localCheckpoint()  # one shingle pass feeds truth + all three bandings
-    truth = (
-        jaccard_pairs(sh, _JACCARD_T).select("doc_a", "doc_b").localCheckpoint()
+    ))  # one shingle pass feeds truth + all three bandings
+    truth = barrier(
+        jaccard_pairs(sh, _JACCARD_T).select("doc_a", "doc_b")
     )
     out = None
     for r in _SWEEP_RPB:
@@ -337,9 +337,9 @@ def z_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair, with the quantized absolute error — the sketch's accuracy as a
     hashed fact."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(
+    sh = barrier(shingle_rows(
         docs, "doc_id", word_shingles(tokens(F.col("text")), _SHINGLE_N)
-    ).localCheckpoint()  # feeds truth pairs + signatures
+    ))  # feeds truth pairs + signatures
     pairs = jaccard_pairs(sh, _JACCARD_T)
     sigs = minhash_signatures(sh, _N_HASHES)
     sa = sigs.select(
@@ -370,35 +370,28 @@ def z_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-4 fast path: one (doc, shingle-array) base feeds everything ------
+# --- fast path: one (doc, shingle-array) base feeds everything -------------
 # The grouped signature pass (explode -> distinct -> 16-min groupBy) pays
 # two shuffles before banding. Keeping shingles as a per-doc ARRAY behind a
-# checkpoint instead lets band keys be computed MAP-ONLY from the stored
+# barrier instead lets band keys be computed MAP-ONLY from the stored
 # arrays (band_keys_from_shingle_array — bit-identical, parity-proven) and
 # the verify join explode the same arrays: zero signature shuffles.
 # Measured at sf0.1: dedup_minhash_lsh 2.4s -> ~1.7s, corpus_pipeline's
-# pair stage proportionally. The checkpoint barrier also blocks Catalyst
+# pair stage proportionally. The barrier also blocks Catalyst
 # from collapsing shingle construction into the 16 per-hash transforms
 # (the HOF CSE trap minhash_signatures documents).
 
 
 def shingle_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Checkpointed (doc_id, distinct-shingle-array) base pass.
+    """(doc_id, distinct-shingle-array) base pass; lazy — every consumer
+    reads it more than once and barriers it.
 
-    fan_out (r13) replaces the unconditional repartition: same rebalance
-    of a thin bench-scale scan, but a production-scale scan (or a caller
-    that already fanned the frame) passes through with NO exchange —
-    guide-§2.4 shuffle removal, values unchanged (the shingle map is
-    row-local)."""
-    return (
-        fan_out(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.array_distinct(
-                word_shingles(tokens(F.col("text")), _SHINGLE_N)
-            ).alias("sh"),
-        )
-        .localCheckpoint()
+    fan_out rebalances a thin bench-scale scan; a production-scale scan
+    (or a caller that already fanned the frame) passes through with NO
+    exchange — values unchanged (the shingle map is row-local)."""
+    return fan_out(docs).select(
+        F.col(id_col).alias("doc_id"),
+        F.array_distinct(word_shingles(tokens(F.col("text")), _SHINGLE_N)).alias("sh"),
     )
 
 
@@ -424,8 +417,7 @@ def lsh_gated_pairs_base(base: DataFrame) -> DataFrame:
     zero signature shuffles (lsh_candidates barriers the band table, which
     is consumed by both self-join sides).
 
-    The exact-Jaccard verify is ARRAY-NATIVE (round-8, closing the round-7
-    weak): candidates broadcast into the doc-grain base to pick up each
+    The exact-Jaccard verify is ARRAY-NATIVE: candidates broadcast into the doc-grain base to pick up each
     side's distinct-shingle ARRAY, and the intersection is
     size(array_intersect(sh_a, sh_b)) computed map-side — identical values
     to the exploded-row verify (both operate on distinct shingle sets), but
@@ -434,6 +426,7 @@ def lsh_gated_pairs_base(base: DataFrame) -> DataFrame:
     shuffle of the base arrays on doc_b; per-task state is the pair-grain
     build side of that shuffled hash join. Parity with jaccard_pairs'
     row-based verify is pinned in tests/test_corpus_ops_r4.py."""
+    base = barrier(base)  # band keys and both verify sides read it
     cand = lsh_candidates(base_band_keys(base))
     a = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -539,11 +532,11 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str, with_sim: DataFrame | None 
     # The banded candidate search self-joins the signatures; without a
     # materialization barrier Catalyst re-derives the whole explode+groupBy
     # signature pass on BOTH join sides (measured 2x the query cost at sf0.1).
-    # localCheckpoint computes the (tiny: one row per doc) signature table
+    # The barrier computes the (tiny: one row per doc) signature table
     # once and the self-join reads it twice. Callers may pass an
-    # already-checkpointed table to share it across more consumers.
+    # already-barriered table to share it across more consumers.
     if with_sim is None:
-        with_sim = _simhash_sigs(spark, sf_dir).localCheckpoint()
+        with_sim = barrier(_simhash_sigs(spark, sf_dir))
     return simhash_near_pairs(
         with_sim, "doc_id", "simhash", _MAX_HAMMING, _SIM_BANDS, _BITS
     )
@@ -766,22 +759,23 @@ def z_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = (F.col("doc_id") % _NEW_MOD) == 0
 
     old_bands = batch1_band_state(spark, sf_dir)
-    # ONE checkpointed (doc_id, shingle-array) pass feeds everything on the
+    # ONE barriered (doc_id, shingle-array) pass feeds everything on the
     # new side: band keys are computed MAP-ONLY from the stored arrays
     # (band_keys_from_shingle_array — no signature groupBy shuffle), and the
     # verify join explodes the same arrays (shingle_base barrier = no HOF
     # CSE re-evaluation). Measured 3.7s -> 1.9s at sf0.1.
-    new_base = shingle_base(docs.where(is_new))
+    new_base = barrier(shingle_base(docs.where(is_new)))
     new_sh = base_shingle_rows(new_base)
     # consumed twice (probe side + the union'd other side): barrier the
     # 16-hash transform so it runs once — the table is n_bands rows/doc
-    new_bands = base_band_keys(new_base).localCheckpoint()
+    new_bands = barrier(base_band_keys(new_base))
 
     probe = new_bands.select(F.col("doc").alias("doc_p"), "band_idx", "band_key")
     other = old_bands.unionByName(new_bands).select(
         F.col("doc").alias("doc_o"), "band_idx", "band_key"
     )
-    cand = (
+    # feeds both the id fetch and the verify join
+    cand = barrier(
         probe.join(other, ["band_idx", "band_key"])
         .where(F.col("doc_p") != F.col("doc_o"))
         .select(
@@ -789,7 +783,6 @@ def z_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("doc_p", "doc_o").alias("doc_b"),
         )
         .distinct()
-        .localCheckpoint()  # feeds both the id fetch and the verify join
     )
 
     # selective re-read: only candidate OLD docs get their text re-shingled —
@@ -807,9 +800,9 @@ def z_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: jaccard_pairs consumes the shingle table three times
     # (sizes + both join sides); without a barrier the semi-join + re-shingle
     # lineage would run three times (measured ~1.3s of the query at sf0.1)
-    old_sh = shingle_rows(
+    old_sh = barrier(shingle_rows(
         old_cand_docs, "doc_id", word_shingles(tokens(F.col("text")), _SHINGLE_N)
-    ).localCheckpoint()
+    ))
 
     pairs = jaccard_pairs(new_sh.unionByName(old_sh), _JACCARD_T, candidates=cand)
     return pairs.withColumn(
@@ -824,7 +817,7 @@ def z_corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_simhash", _SIMHASH_FAMILY_ORACLE, tags=("dedup",))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE signature pass (the dominant stage) feeds both arms
-    sigs = _simhash_sigs(spark, sf_dir).localCheckpoint()
+    sigs = barrier(_simhash_sigs(spark, sf_dir))
     sig = sigs.select(
         F.lit("sig").alias("part"),
         F.col("doc_id").cast("long").alias("a"),
@@ -900,13 +893,12 @@ def z_dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     comp = connected_components(lsh_gated_pairs_base(shingle_base(docs)))
     w = Window.partitionBy("component").orderBy(F.desc("n_chars"), F.asc("node"))
-    ranked = (
+    # one closure pass feeds both the drop and representative sets
+    ranked = barrier(
         comp.join(
             docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
         )
         .withColumn("rn", F.row_number().over(w))
-        # one closure pass feeds both the drop and representative sets
-        .localCheckpoint()
     )
     drops = ranked.where(F.col("rn") > 1).select("node")
     reps = ranked.where(F.col("rn") == 1).select("node", F.lit(1).alias("_rep"))

@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.oracle import register_cache_family
 from d3d_etl_spark.pbp.metrics import LW_CLASSES, REACHING
 from d3d_etl_spark.queries.registry import register
@@ -454,7 +455,7 @@ def _lw_quant(parsed: DataFrame) -> DataFrame:
 @register("domain_linear_weights", _LW_ORACLE, tags=("domain",))
 def domain_linear_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = materialized_parsed(spark, sf_dir)
-    lw = _lw_quant(parsed).localCheckpoint()  # reused by scale + output
+    lw = barrier(_lw_quant(parsed))  # reused by scale + output
     scale = (
         lw.where(F.col("events").isin(*REACHING))
         .groupBy("division", "year")
@@ -675,7 +676,7 @@ def war_batting_from_parsed(parsed: DataFrame) -> DataFrame:
     # lw is consumed by scale/wts/out_lw below; each re-derivation re-runs
     # the ER-matrix + re24 join over the full play scan. The table is tiny
     # (events x division x year): materialize once.
-    lw = _lw_quant(parsed).localCheckpoint()
+    lw = barrier(_lw_quant(parsed))
     scale = (
         lw.where(F.col("events").isin(*REACHING))
         .groupBy("division", "year")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.pbp.events import EVENT_OUTS, EVENT_RULES, PA_EVENTS
 from d3d_etl_spark.pbp.state import _BATTER_DEST, _BATTER_VERBS, _RUNNER_ONLY
 from d3d_etl_spark.queries.registry import register
@@ -616,9 +617,8 @@ def z_pbp_fixture_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.pbp.metrics import add_re24, expected_runs_long
     from d3d_etl_spark.pbp.parser import parse_pbp
 
-    # localCheckpoint, not cache: the ER broadcast subtree is planned
-    # eagerly and would re-derive the parse (the round-2 pbp_dag fix)
-    parsed = parse_pbp(_both_games_raw(spark)).localCheckpoint()
+    # expected_runs_long and add_re24 both read the parse
+    parsed = barrier(parse_pbp(_both_games_raw(spark)))
     plays = add_re24(parsed, expected_runs_long(parsed))
     return plays.select(
         "contest_id",
@@ -682,7 +682,7 @@ def z_pbp_fixture_war(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.pbp.parser import parse_pbp
     from d3d_etl_spark.queries.domain import war_batting_from_parsed
 
-    parsed = parse_pbp(_both_games_raw(spark)).localCheckpoint()
+    parsed = barrier(parse_pbp(_both_games_raw(spark)))
     return war_batting_from_parsed(parsed).select(
         "division",
         "year",

@@ -23,7 +23,7 @@ from d3d_etl_spark.functions.sampling import (
     sql_hash_sample_pred,
     sql_hash_split,
 )
-from d3d_etl_spark.io import load_table
+from d3d_etl_spark.io import barrier, load_table
 from d3d_etl_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -317,14 +317,9 @@ def mixing_profile(d: DataFrame) -> DataFrame:
     )
 
 
-def mixing_doc_grain(docs: DataFrame, salt: str = "mix", materialize: bool = True) -> DataFrame:
-    """(doc_id, lang, n_tok, u): the doc-grain input mixing_profile needs.
-
-    `materialize` barriers the frame for MULTI-consumer use (mixing_profile
-    reads it twice); pass False when the frame feeds a single downstream
-    consumer that applies its own barrier (z_corpus_curation's survivor
-    filter) — an unconditional checkpoint there just writes a corpus-sized
-    table to read it once."""
+def mixing_doc_grain(docs: DataFrame, salt: str = "mix") -> DataFrame:
+    """(doc_id, lang, n_tok, u): the doc-grain input mixing_profile needs
+    (which reads it twice — its caller barriers it)."""
     from d3d_etl_spark.functions.sampling import hash_bucket
     from d3d_etl_spark.functions.text import tokens
 
@@ -334,13 +329,13 @@ def mixing_doc_grain(docs: DataFrame, salt: str = "mix", materialize: bool = Tru
         F.size(tokens(F.lower(F.col("text")))).alias("n_tok"),
         (hash_bucket(F.col("doc_id"), salt) % _MIX_U_MOD).alias("u"),
     )
-    return d.localCheckpoint() if materialize else d
+    return d
 
 
 @register("z_corpus_mixing", _MIX_ORACLE, tags=("sampling", "corpus"))
 def z_corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return mixing_profile(mixing_doc_grain(docs))
+    return mixing_profile(barrier(mixing_doc_grain(docs)))
 
 
 # ---------------------------------------------------------------------------
@@ -427,14 +422,13 @@ def z_sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from d3d_etl_spark.functions.strings import md5_int
-    from d3d_etl_spark.io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sc = docs.select(
+    sc = barrier(docs.select(
         "doc_id",
         "lang",
         md5_int(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))).alias("s"),
-    ).localCheckpoint()  # feeds counts, the threshold machinery, and output
+    ))  # feeds counts, the threshold machinery, and output
 
     counts = sc.groupBy("lang").agg(F.count("*").cast("long").alias("n_l"))
     tot = counts.agg(F.sum("n_l").alias("n"))
@@ -447,7 +441,7 @@ def z_sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = base.agg((F.lit(_STRATX_K) - F.sum("b")).alias("leftover"))
     # stratum-cardinality window: rows = number of strata, never the corpus
     w_rem = Window.orderBy(F.desc("rem"), F.asc("lang"))
-    quota = (
+    quota = barrier(
         base.withColumn("r", F.row_number().over(w_rem))
         .crossJoin(F.broadcast(lo))
         .select(
@@ -461,7 +455,7 @@ def z_sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("quota"),
         )
-    ).localCheckpoint()
+    )
 
     cnt = (
         sc.groupBy("lang", "s")

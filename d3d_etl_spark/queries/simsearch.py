@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from d3d_etl_spark.io import fan_out, load_table, read_parquet, table_count
+from d3d_etl_spark.io import barrier, fan_out, load_table, read_parquet, table_count
 from d3d_etl_spark.operators.similarity import (
     assign_nearest_centroid,
     cosine_topk,
@@ -836,7 +836,7 @@ def _sample_seeded_cells(old: DataFrame, k: int) -> DataFrame:
         .select("cluster", F.posexplode("embedding").alias("pos", "x"))
         .select("cluster", "pos", F.col("x").cast("double").alias("c"))
     )
-    asgn1 = assign_nearest_centroid(old, cents1, "cluster").localCheckpoint()
+    asgn1 = barrier(assign_nearest_centroid(old, cents1, "cluster"))
     relabeled = old.join(
         asgn1.select("vec_id", F.col("assigned_label").alias("cluster")).hint(
             "shuffle_hash"
@@ -873,9 +873,7 @@ def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         old = old_batch()
         k_cells = math.ceil(math.sqrt(old.count()))
         asgn2 = _sample_seeded_cells(old, k_cells)
-        cells = asgn2.select(
-            "vec_id", F.col("assigned_label").alias("label")
-        ).localCheckpoint()
+        cells = asgn2.select("vec_id", F.col("assigned_label").alias("label"))
         trained = old.join(cells.hint("shuffle_hash"), "vec_id")
         label_centroids(trained, "label").write.mode("overwrite").parquet(tmp)
 
@@ -973,23 +971,17 @@ def _inc_probe_cand(
     pairs_per_task: int = _INC_PAIRS_PER_TASK,
     nprobe: int = _INC_NPROBE,
     cand_key: str = "vec_id",
-    checkpoint_cand: bool = True,
 ) -> tuple[DataFrame, DataFrame, dict]:
     """probe (vec_id, label, rn), candidate pairs (vec_id, old_id) and a
     stats dict for the ingest batch `new_batch` (vec_id, embedding) off
     the persisted IVF state — the engine twin of _INC_PROBE_CTES, shared
     by the exact-cosine and the ADC incremental serving paths. `cand`
-    comes back checkpointed with pair-count-scaled partitioning (bounds
-    every downstream per-task state; fixed-width partitioning of a
-    pair-grain table measured a 2.2 GB task at sf1).
-    `cand_key`/`checkpoint_cand`: the ADC serving path
-    consumes cand exactly ONCE and immediately re-keys it on old_id for
-    the codes join — for it, the vec_id exchange was a pure waste (two
-    back-to-back exchanges of the pair table) and the eager checkpoint a
-    pure barrier (guide §2.4: remove the exchange; §2.6: a single-consumer
-    checkpoint only serializes stages AQE would otherwise overlap). The
-    exact arm keeps the defaults: its cand feeds two differently-pruned
-    consumers, so the barrier is what keeps the fan join computed once.
+    comes back lazy with pair-count-scaled partitioning (bounds every
+    downstream per-task state; fixed-width partitioning of a pair-grain
+    table measured a 2.2 GB task at sf1); a caller that reads it twice
+    barriers it. `cand_key`: the ADC serving path consumes cand once and
+    immediately re-keys it on old_id for the codes join — for it, a
+    vec_id layout means two back-to-back exchanges of the pair table.
     `nprobe` defaults to the serving contract's _INC_NPROBE;
     the raw-corpus recall sweep passes other values to publish
     the recall/cost trade curve — every REGISTERED query keeps the
@@ -1037,7 +1029,7 @@ def _inc_probe_cand(
             s["label"].alias("label"),
         )
 
-    probe = (
+    probe = barrier(
         fan_out(new_batch)
         .where(x.isNotNull() & (F.size(x) > 0))
         .crossJoin(F.broadcast(clist))
@@ -1053,7 +1045,6 @@ def _inc_probe_cand(
             F.col("_p.label").alias("label"),
             (F.col("_rn0") + 1).cast("int").alias("rn"),
         )
-        .localCheckpoint()
     )
     # DETERMINISTIC, SKEW-PROOF fan-out. The cell join multiplies each probe
     # row by its cell's occupancy, and k-means cells are NOT balanced — at the
@@ -1140,8 +1131,6 @@ def _inc_probe_cand(
         .select("vec_id", "old_id", "label")
         .repartition(cand_parts, cand_key)
     )
-    if checkpoint_cand:
-        cand = cand.localCheckpoint()
     return probe, cand, stats
 
 
@@ -1170,6 +1159,7 @@ def z_sim_incremental(
     probe, cand, _ = _inc_probe_cand(
         spark, corp.where(F.col("vec_id") % bmod == 0), cents, assign, pairs_per_task
     )
+    cand = barrier(cand)  # old_vecs' id fetch and the pair verify join
 
     new_vecs = (
         corp.where(F.col("vec_id") % bmod == 0)
@@ -1248,7 +1238,7 @@ def inc_serving_profile(spark: SparkSession, sf_dir: str) -> dict:
         F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label")
     )
     new_batch = corp.where(F.col("vec_id") % bmod == 0)
-    probe, cand, stats = _inc_probe_cand(spark, new_batch, cents, assign_l)
+    _, _, stats = _inc_probe_cand(spark, new_batch, cents, assign_l)
     n_batch = n - stats["n_old"]
     n_pairs = stats["n_pairs"]
     return {
@@ -1344,14 +1334,15 @@ def raw_serving_recall(
 
     k_cells = math.ceil(math.sqrt(n - new.count()))
     asgn = _sample_seeded_cells(old, k_cells)
-    cells = asgn.select(
+    cells = barrier(asgn.select(
         "vec_id", F.col("assigned_label").alias("label")
-    ).localCheckpoint()
+    ))
     cents = label_centroids(old.join(cells.hint("shuffle_hash"), "vec_id"), "label")
     assign = cells.select(F.col("vec_id").alias("old_id"), "label")
     probe, cand, rstats = _inc_probe_cand(
         spark, new, cents, assign, nprobe=min(nprobe, k_cells)
     )
+    cand = barrier(cand)  # old_vecs' id fetch and the pair verify join
     new_vecs = new.select("vec_id", F.col("embedding").alias("xv"))
     old_vecs = (
         old.join(
@@ -1519,7 +1510,7 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     cents = label_centroids(seeded, "cluster")
     # unique-key corpus-corpus join: sort-free shuffled hash (per-partition
     # build side is corpus/n_parts rows — the SMJ sorts buy nothing here)
-    clustered = emb.join(
+    clustered = barrier(emb.join(
         assign_nearest_centroid(seeded, cents, "cluster")
         .select(
             "vec_id",
@@ -1528,7 +1519,7 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         )
         .hint("shuffle_hash"),
         "vec_id",
-    ).localCheckpoint()
+    ))
     # csim rides through the pair stage (carry=) — the loser rule reads it
     # off the pair row; no corpus-sized join-back. GEMM engine: one BLAS
     # task per cluster (2x the salted HOF join even at these 64 dims, an
@@ -1750,7 +1741,7 @@ def kmeans2_assign_emb(emb: DataFrame, k: int = _K_CLUSTERS) -> tuple[DataFrame,
     )
     cents1 = label_centroids(seeded, "cluster")
     # one assignment pass feeds iteration-1 output AND iteration-2 centroids
-    asgn1 = assign_nearest_centroid(seeded, cents1, "cluster").localCheckpoint()
+    asgn1 = barrier(assign_nearest_centroid(seeded, cents1, "cluster"))
     relabeled = emb.join(
         asgn1.select("vec_id", F.col("assigned_label").alias("cluster")).hint(
             "shuffle_hash"
@@ -1833,11 +1824,11 @@ def z_sim_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous unthresholded pair pass materialized every cluster pair,
     # measured as a 754 MB-input task at the sf1 registry audit. Same
     # runaway-cluster re-split scope (_pair_lbl) as the dedup pair stage.
-    rows = within_cluster_contrastive_rows(
+    rows = barrier(within_cluster_contrastive_rows(
         _semdedup_pair_scope(clustered),
         float(_SEMDEDUP_TAU),
         label_col="_pair_lbl",
-    ).localCheckpoint()
+    ))
     pos = rows.where(F.col("is_pos")).select(
         "anchor", F.col("other").alias("positive"), F.col("sim").alias("pos_sim")
     )
@@ -1927,9 +1918,9 @@ def z_sim_contrastive_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every bucket pair — bucket-size-QUADRATIC output whose dedup agg
     # measured a 4.6 GiB task at the sf1 stress tier (scope=all audit);
     # this one's shuffle volume tracks the duplicate rate.
-    rows = ann_gated_contrastive_rows(
+    rows = barrier(ann_gated_contrastive_rows(
         emb, float(_SEMDEDUP_TAU), _DIM, _GATE_PLANES, _GATE_BANDS
-    ).localCheckpoint()
+    ))
     # positives: dedupe the per-band/per-block copies (sims identical)
     pos = (
         rows.where(F.col("is_pos"))
@@ -2049,8 +2040,9 @@ FROM r JOIN sig ON r.vec_id = sig.vec_id
 
 
 def _pq_parts(spark: SparkSession, sf_dir: str):
-    """(codes, adc, emb): shared PQ stages — codebooks built, corpus
-    encoded (checkpointed: scoring and the signature both read it), the
+    """(codes, adc, emb): shared PQ stages — codebooks built (barriered:
+    the encode's broadcast and the ADC table both read them), corpus
+    encoded (lazy: a caller that reads the codes twice barriers them), the
     fixed query's ADC table."""
     from d3d_etl_spark.operators.pq import (
         pq_adc_table,
@@ -2060,8 +2052,8 @@ def _pq_parts(spark: SparkSession, sf_dir: str):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebooks(emb, _DIM, _PQ_M, _PQ_KS).localCheckpoint()
-    codes = pq_encode(emb, cb, _DIM, _PQ_M).localCheckpoint()
+    cb = barrier(pq_codebooks(emb, _DIM, _PQ_M, _PQ_KS))
+    codes = pq_encode(emb, cb, _DIM, _PQ_M)
     qc = pq_subspace_comps(
         emb.where(F.col("vec_id") == _QUERY_ID), _DIM, _PQ_M
     ).select("sub", "pos", F.col("xs").alias("qs"))
@@ -2077,6 +2069,7 @@ def z_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.operators.pq import pq_adc_scores
 
     codes, adc, _ = _pq_parts(spark, sf_dir)
+    codes = barrier(codes)  # scoring and the signature both read it
     scores = pq_adc_scores(codes, adc)
     sig = codes.groupBy("vec_id").agg(
         F.array_join(
@@ -2173,9 +2166,9 @@ def z_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != _QUERY_ID)
         .select("vec_id", "label")
     )
-    scores = pq_adc_scores(
+    scores = barrier(pq_adc_scores(
         codes.join(cand.select("vec_id"), "vec_id", "left_semi"), adc
-    ).localCheckpoint()  # feeds the top-k AND the published rows
+    ))  # feeds the top-k AND the published rows
     # partial TakeOrdered + broadcast flag — never a global window over the
     # candidate set (nprobe/k of the corpus at scale)
     topk = (
@@ -2335,10 +2328,10 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
         emb.sparkSession.sparkContext.defaultParallelism,
         -(-n_vec // _VECS_PER_ENCODE_TASK),
     )
-    res = res.repartition(n_parts).localCheckpoint()  # feeds codebook training AND encoding
-    rcb = pq_codebooks_from_comps(
+    res = barrier(res.repartition(n_parts))  # feeds codebook training AND encoding
+    rcb = barrier(pq_codebooks_from_comps(
         res.select("vec_id", "sub", "pos", "xs"), _PQ_KS
-    ).localCheckpoint()
+    ))
     rcodes = pq_encode_comps(res.select("vec_id", "sub", "pos", "xs"), rcb)
 
     cents = label_centroids(emb, "label")
@@ -2374,12 +2367,12 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
     # original small size estimate and Catalyst otherwise auto-broadcasts a
     # side that grows linearly with the corpus (measured 49 -> 161 MB task
     # peak at the 10x stress pair before this hint)
-    scores = (
+    # feeds the top-k AND the published rows
+    scores = barrier(
         rcodes.hint("shuffle_hash").join(cand, "vec_id")
         .join(F.broadcast(radc), ["label", "sub", "code"])
         .groupBy("vec_id", "label")
         .agg(F.sum("d").cast("long").alias("adist"))
-        .localCheckpoint()  # feeds the top-k AND the published rows
     )
     topk = (
         scores.orderBy(F.asc("adist"), F.asc("vec_id"))
@@ -2442,15 +2435,11 @@ def z_sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     _, asgn2 = _kmeans2_assign(spark, sf_dir)
     # stamp the learned assignment on as the coarse-cell column and
-    # materialize the RESULT once (it feeds every downstream stage).
-    # No checkpoint on the intermediate `cells`: its single consumer is
-    # this join, so a barrier would only serialize the asgn2
-    # reassignment against the join that immediately consumed it (guide
-    # §2.6: a single-consumer checkpoint cannot be reused, only waited on);
-    # the trained checkpoint keeps the one-materialization contract.
+    # materialize the RESULT once (it feeds every downstream stage). The
+    # intermediate `cells` has one consumer, this join: no barrier.
     cells = asgn2.select("vec_id", F.col("assigned_label").alias("label"))
-    trained = (
-        emb.drop("label").join(cells.hint("shuffle_hash"), "vec_id").localCheckpoint()
+    trained = barrier(
+        emb.drop("label").join(cells.hint("shuffle_hash"), "vec_id")
     )
     # trained joins the full assignment back onto the full table — row
     # count is the table's (memoized, no count job)
@@ -2530,7 +2519,8 @@ def z_sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_vec")
     )
     ranked = ivf_ranked_cells(label_centroids(emb, "label"), query, "label")
-    sims = (
+    # one scoring pass feeds exact + all four arms
+    sims = barrier(
         emb.where(F.col("vec_id") != _QUERY_ID)
         .crossJoin(F.broadcast(query))
         .select(
@@ -2539,7 +2529,6 @@ def z_sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("sim"),
         )
         .join(F.broadcast(ranked), "label")
-        .localCheckpoint()  # one scoring pass feeds exact + all four arms
     )
     exact = F.broadcast(
         sims.orderBy(F.desc("sim"), F.asc("vec_id")).limit(_SWEEP_K).select("vec_id")
@@ -2669,10 +2658,10 @@ def z_sim_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism,
         -(-table_count(spark, sf_dir, "embeddings") // 64),
     )
-    comps = (
-        pq_subspace_comps(emb, _DIM, _PQ_M).repartition(n_parts).localCheckpoint()
+    comps = barrier(
+        pq_subspace_comps(emb, _DIM, _PQ_M).repartition(n_parts)
     )
-    cb = pq_codebooks_from_comps(comps, _PQ_KS).localCheckpoint()
+    cb = barrier(pq_codebooks_from_comps(comps, _PQ_KS))
     rows = []
     for it in range(_PQ_REFINE_ITERS + 1):
         # ONE encode per iteration, checkpointed: the error readout AND
@@ -2682,7 +2671,7 @@ def z_sim_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # task peaks at sf1 whatever the partition count); the breaker
         # pins the top stage at ONE encode's allocation — measured flat
         # 44 -> 50 MB across the sf0.1 -> sf1 pair at 64 vectors/task.
-        enc = pq_encode_comps(comps, cb, enc_parts=n_parts).localCheckpoint()
+        enc = barrier(pq_encode_comps(comps, cb, enc_parts=n_parts))
         err = enc.agg(F.sum("dist").cast("long").alias("total_err"))
         n_codes = cb.select("sub", "code").distinct().agg(
             F.count("*").cast("long").alias("n_codes")
@@ -2693,9 +2682,9 @@ def z_sim_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if it < _PQ_REFINE_ITERS:
-            cb = pq_refine_step(
+            cb = barrier(pq_refine_step(
                 comps, cb, enc_parts=n_parts, assigned=enc
-            ).localCheckpoint()
+            ))
     out = rows[0]
     for r in rows[1:]:
         out = out.unionByName(r)
@@ -2839,10 +2828,13 @@ def z_sim_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # the index is built on the SURVIVORS: codebooks trained and codes
     # encoded post-dedup (the drop set is pair-bounded -> broadcast anti).
-    # No checkpoint on cb: pq_encode broadcasts the codebook exactly once,
-    # so a checkpoint would be a single-consumer barrier; the training
-    # agg runs inside the encode's broadcast-build job and the
-    # scoring stages overlap with it instead of waiting (guide §2.6)
+    # No barrier on cb: pq_encode broadcasts the codebook exactly once (one
+    # consumer). The training aggregate still stays out of the broadcast
+    # build: AQE stages its exchange as a ShuffleQueryStage — the survivor
+    # scan, partial agg and shuffle write run as their own job first — so
+    # the broadcast thread only merges the shuffled partials into the
+    # M x ks x (dim/M) codebook rows. This holds only with
+    # spark.sql.adaptive.enabled, which get_spark sets.
     surv = emb.join(F.broadcast(drops), "vec_id", "left_anti")
     cb = pq_codebooks(surv, _DIM, _PQ_M, _PQ_KS)
     codes = pq_encode(surv, cb, _DIM, _PQ_M)
@@ -2956,20 +2948,22 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.operators.similarity import ann_gated_near_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = ann_gated_near_pairs(
+    pairs = barrier(ann_gated_near_pairs(
         emb, _DEDUP_T, _DIM, _GATE_PLANES, _GATE_BANDS
-    ).localCheckpoint()
-    edges = pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")).unionByName(
-        pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
-    ).localCheckpoint()
+    ))
+    edges = barrier(
+        pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")).unionByName(
+            pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"))
+        )
+    )
     nodes = emb.select("vec_id")
     nn = nodes.agg(F.count("*").cast("long").alias("n"))
-    deg = edges.groupBy(F.col("src").alias("vec_id")).agg(
+    deg = barrier(edges.groupBy(F.col("src").alias("vec_id")).agg(
         F.count("*").cast("long").alias("d")
-    ).localCheckpoint()
-    pr = nodes.crossJoin(F.broadcast(nn)).select(
+    ))
+    pr = barrier(nodes.crossJoin(F.broadcast(nn)).select(
         "vec_id", F.expr(f"{_PR_SCALE} div n").cast("long").alias("pr")
-    ).localCheckpoint()
+    ))
     for _ in range(_PR_ITERS):
         contrib = (
             edges.join(pr.withColumnRenamed("vec_id", "src"), "src")
@@ -2981,7 +2975,7 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             pr.join(deg, "vec_id", "left_anti")
             .agg(F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("dm"))
         )
-        pr = (
+        pr = barrier(
             pr.join(contrib.hint("shuffle_hash"), "vec_id", "left")
             .crossJoin(F.broadcast(nn))
             .crossJoin(F.broadcast(dang))
@@ -2992,7 +2986,6 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"+ (17 * (coalesce(s_in, 0) + dm div n)) div 20 AS BIGINT)"
                 ).alias("pr"),
             )
-            .localCheckpoint()
         )
     return pr.select("vec_id", F.col("pr").alias("pr_q"))
 
@@ -3098,7 +3091,7 @@ def pq_index_state(
         # changes index content, never the serving contract.
         from d3d_etl_spark.operators.pq import pq_refine_step
 
-        comps = res_comps().localCheckpoint()
+        comps = barrier(res_comps())
         seed_map = spark.createDataFrame(
             [(int(v), c) for c, v in enumerate(_hash_sample_ids(old_batch(), _PQ_KS))],
             "vec_id long, code int",
@@ -3289,12 +3282,10 @@ def _pq_inc_scored(
     new = fan_out(corp.where(F.col("vec_id") % bmod == 0))
     # cand_key="old_id": the ONLY consumer below is the codes join, keyed
     # on old_id — the vec_id layout would make the pair table cross two
-    # exchanges back to back (vec_id, then old_id).
-    # checkpoint_cand=False: single consumer, so an eager barrier would
-    # only serialize the fan join against the dt/codes subtrees AQE
-    # materializes concurrently inside the one scoring job (guide
-    # §2.4/§2.6). The pair-count-scaled repartition inside
-    # _inc_probe_cand lands directly on old_id.
+    # exchanges back to back (vec_id, then old_id). One consumer, so no
+    # barrier: the fan join runs inside the one scoring job, concurrently
+    # with the dt/codes subtrees AQE materializes. The pair-count-scaled
+    # repartition inside _inc_probe_cand lands directly on old_id.
     probe, cand, stats = _inc_probe_cand(
         spark,
         new,
@@ -3302,7 +3293,6 @@ def _pq_inc_scored(
         assign,
         pairs_per_task=_PQ_INC_PAIRS_PER_TASK,
         cand_key="old_id",
-        checkpoint_cand=False,
     )
     # per-PROBED-CELL new residual: the stored codes quantize
     # residuals, so the query side must too — r = x_new - c_int(probed
@@ -3461,11 +3451,11 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-invocation corpus count job.
     n_old = stats["n_old"]
     w_adc = Window.partitionBy("vec_id").orderBy(F.asc("adist"), F.asc("old_id"))
-    short = (
+    # |new| x R rows — batch-grain, reused twice
+    short = barrier(
         scored.withColumn("rn", F.row_number().over(w_adc))
         .where(F.col("rn") <= rerank_r(n_old))
         .select("vec_id", "old_id")
-        .localCheckpoint()  # |new| x R rows — batch-grain, reused twice
     )
     new_vecs = corp.where(F.col("vec_id") % bmod == 0).select(
         "vec_id", F.col("embedding").alias("xv")
@@ -3618,7 +3608,8 @@ def z_sim_ivf_scaledk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_vec")
     )
     ranked = ivf_ranked_cells(cents3, query, "cluster")
-    sims = (
+    # one scoring pass feeds exact + every arm
+    sims = barrier(
         emb.where(F.col("vec_id") != _QUERY_ID)
         .crossJoin(F.broadcast(query))
         .select(
@@ -3632,7 +3623,6 @@ def z_sim_ivf_scaledk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
         )
         .join(F.broadcast(ranked), "cluster")
-        .localCheckpoint()  # one scoring pass feeds exact + every arm
     )
     exact = F.broadcast(
         sims.orderBy(F.desc("sim"), F.asc("vec_id")).limit(_SWEEP_K).select("vec_id")

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.pbp.leaderboards import (
     _HIT_EVENTS,
     _OB_EVENTS,
@@ -184,7 +185,7 @@ _SPLITS_ORACLE = f"WITH {_HANDED_CTES}\n" + "\nUNION ALL\n".join(
 
 @register("domain_splits", _SPLITS_ORACLE, tags=("domain", "splits"))
 def domain_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wp = _plays_with_hands(spark, sf_dir).localCheckpoint()  # 4 grain boards
+    wp = barrier(_plays_with_hands(spark, sf_dir))  # 4 grain boards
     metric_cols = [f"{m}_{s}" for s, _ in _SUFFIXES for m in ("pa", "ab", "h", "ob")] + [
         f"{m}_{s}" for s, _ in _SUFFIXES for m in ("ba", "ob_pct")
     ]

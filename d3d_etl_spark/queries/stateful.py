@@ -545,9 +545,9 @@ JOIN teams t ON p.team_id = t.team_id AND p.division = t.division
 @register("z_pbp_war", _pbp_war_oracle(), tags=("stateful", "domain"))
 def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAR end-to-end on generated narration: parse -> RE24 -> linear
-    weights -> guts constants -> per-batter season counting stats (the
-    cube_batting shape, derived from the same plays) -> batting WAR ->
-    team rollup join-back. Oracled since round 9: the crc32 team ids are
+    weights -> guts constants (run_analytics) -> per-batter season
+    counting stats (the cube_batting shape, derived from the same plays)
+    -> batting WAR -> team rollup join-back. Oracled: the crc32 team ids are
     recomputed from first principles in SQL (recursive table-build +
     byte-fold CTEs — see _pbp_war_oracle), and the linear-weight /
     woba_scale means aggregate as 1e-9-scaled longs on both engines
@@ -558,23 +558,15 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
-    from d3d_etl_spark.pbp.guts import guts_constants
-    from d3d_etl_spark.pbp.leaderboards import baserunning_board
-    from d3d_etl_spark.pbp.metrics import add_re24, expected_runs_long, linear_weights
-    from d3d_etl_spark.pbp.parser import parse_pbp
+    from d3d_etl_spark.pbp.pipeline import run_analytics
     from d3d_etl_spark.pbp.war import batting_war, team_war
     from d3d_etl_spark.queries.domain import ensure_parsed, materialized_raw
 
     # the oracle reads the materialized FSM parquet (marker-stat after the
     # first build); the measured pipeline still parses in-query
     ensure_parsed(spark, sf_dir)
-    # localCheckpoint, not cache: cache is lazy, so eagerly-planned
-    # broadcast subtrees (lw, guts) would re-derive the parse (the
-    # round-2 pbp_dag fix, commit ef41fb6)
-    parsed = parse_pbp(materialized_raw(spark, sf_dir)).localCheckpoint()
-    plays = add_re24(parsed, expected_runs_long(parsed)).localCheckpoint()
-    lw = linear_weights(plays, lg_obp=0.360)
-    guts = guts_constants(plays, lw)
+    out = run_analytics(materialized_raw(spark, sf_dir))
+    plays = out.with_metrics
 
     ev = F.col("event_type")
     n = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
@@ -588,9 +580,8 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
             n(ev == "3B").alias("triple_"),
             n(ev == "HR").alias("hr"),
             # bb INCLUDES ibb — saber.woba/pa's contract (uBB = bb - ibb),
-            # the same convention war_batting_from_parsed's bb_all uses; the
-            # round-9 review found the old BB-only count double-subtracted
-            # IBB from the wOBA numerator
+            # the same convention war_batting_from_parsed's bb_all uses; a
+            # BB-only count would subtract IBB twice from the wOBA numerator
             n(ev.isin("BB", "IBB")).alias("bb"),
             n(ev == "IBB").alias("ibb"),
             n(ev == "HBP").alias("hbp"),
@@ -599,7 +590,7 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
             n(ev == "SH").alias("sh"),
         )
     )
-    bsr = baserunning_board(plays).select(
+    bsr = out.baserunning.select(
         "division", "year",
         F.col("runner_name").alias("batter_name"), "sb", "cs",
     )
@@ -619,7 +610,7 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("cs", F.lit(0)).alias("cs"),
         )
     )
-    war = batting_war(cube, guts).withColumn("war", F.col("war_raw"))
+    war = batting_war(cube, out.guts).withColumn("war", F.col("war_raw"))
     teams = team_war(war)
     return war.join(
         teams.select("team_id", "division", "year", F.col("war").alias("team_war")),

@@ -34,7 +34,7 @@ from d3d_etl_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from d3d_etl_spark.io import fan_out, load_table, read_parquet
+from d3d_etl_spark.io import barrier, fan_out, load_table, read_parquet
 from d3d_etl_spark.queries.registry import register
 
 _TOK = sql_tokens("text")
@@ -463,11 +463,11 @@ GROUP BY 1
 @register("z_corpus_decontam", _DECON_ORACLE, tags=("text", "dedup"))
 def z_corpus_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
+    t = barrier(docs.select(
         "doc_id",
         tokens(F.col("text")).alias("w"),
         (F.col("doc_id") % 97 == 0).alias("is_eval"),
-    ).localCheckpoint()  # feeds shingling AND the final profile
+    ))  # feeds shingling AND the final profile
     sh = t.select(
         "doc_id", "is_eval",
         F.explode(word_shingles(F.col("w"), _DECON_N)).alias("shingle"),
@@ -642,7 +642,7 @@ FROM scored
 
 @register("z_corpus_lm_score", _LM_ORACLE, tags=("textops", "corpus"), bench=True)
 def z_corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO fan_out here (r13 final): the quiet-host interleaved A/B measured
+    # NO fan_out here: the quiet-host interleaved A/B measured
     # the rebalance at +115% on this query at bench scale (1.08 -> 2.34 s
     # min-of-cycles) — the bigram map is cheaper than shuffling the text
     # payload; production split counts make the guard a no-op regardless.
@@ -651,7 +651,9 @@ def z_corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", tok.alias("w"))
 
     n = F.size("w")
-    bi = (
+    # fit + score both consume the bigram stream: materialize the
+    # tokenize+zip+explode once instead of three times
+    bi = barrier(
         toks.where(n >= 2)
         .select(
             "doc_id",
@@ -663,9 +665,6 @@ def z_corpus_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("z"),
         )
         .select("doc_id", F.col("z.w1").alias("w1"), F.col("z.w2").alias("w2"))
-        # fit + score both consume the bigram stream: materialize the
-        # tokenize+zip+explode once instead of three times
-        .localCheckpoint()
     )
     c12 = bi.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
@@ -1121,10 +1120,11 @@ def z_corpus_lr_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # shared eligibility/label/feature construction (ONE definition for the
-    # step query, the trainer loop, and the streaming-parity test) — comes
-    # back checkpointed: lr_gradient_step reads xq in BOTH its margin and
-    # gradient branches
+    # step query, the trainer loop, and the streaming-parity test).
+    # lr_gradient_step reads xq in BOTH its margin and gradient branches;
+    # labels once
     xq, labels = lr_corpus_inputs(docs, _LR_FEATURES)
+    xq = barrier(xq)
     w0 = spark.range(_LR_FEATURES).select(
         F.col("id").alias("j"),
         (
@@ -1216,8 +1216,8 @@ w{s + 1} AS (
 def z_corpus_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three full-batch GD steps of the hashed-BoW logistic quality
     classifier (operators/classifier.py lr_gradient_step iterated from the
-    zero vector). The step loop is driver control flow, but since round 5
-    the WHOLE trajectory is oracled — the chained-CTE unroll in
+    zero vector). The step loop is driver control flow, but the WHOLE
+    trajectory is oracled — the chained-CTE unroll in
     _lr_train_oracle mirrors every step exactly (the integer-quantization
     contract makes the unroll bit-reproducible). Also pinned per-step
     against an independent numpy mirror (and for strict loss descent) in
@@ -1227,9 +1227,10 @@ def z_corpus_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     xq, labels = lr_corpus_inputs(docs, _LR_FEATURES)
+    xq, labels = barrier(xq), barrier(labels)  # read by every step
     w = spark.range(_LR_FEATURES).select(F.col("id").alias("j"), F.lit(0.0).alias("w"))
     for _ in range(_LR_TRAIN_STEPS):
-        w = lr_gradient_step(xq, labels, w, _LR_RATE).select("j", "w").localCheckpoint()
+        w = barrier(lr_gradient_step(xq, labels, w, _LR_RATE).select("j", "w"))
     return w.select(F.col("j").alias("feature"), F.round("w", 8).alias("w"))
 
 
@@ -1291,12 +1292,11 @@ def z_corpus_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.functions.strings import md5_int
 
     docs = load_table(spark, sf_dir, "documents")
-    tc = (
+    # feeds counters, the top-k, and the estimate probe
+    tc = barrier(
         docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("true_c"))
-        # feeds counters, the top-k, and the estimate probe
-        .localCheckpoint()
     )
     hashed = tc.select(
         "tok",
@@ -1362,7 +1362,6 @@ def z_corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint()
     )
     # the trainer materializes the fully-merged table per round — consume
     # it (return_table) instead of re-running all 5 merge passes;
@@ -1804,7 +1803,7 @@ def bm25_corpus_state(
     stats is the 1-row (n_docs, t_tokens); idf is the term-dimensional
     (tok, idf_q) table.
 
-    NO fan_out on the scan (r13 final): quiet-host A/B measured it +56%
+    NO fan_out on the scan: quiet-host A/B measured it +56%
     on z_text_bm25 at bench scale (1.17 -> 1.82 s min-of-cycles); the
     guard is a production no-op, so it bought nothing at scale either."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1816,13 +1815,12 @@ def bm25_corpus_state(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("t_tokens"),
     )
-    tf = (
+    # feeds both the df/idf aggregate and the scoring join
+    tf = barrier(
         toks.select("doc_id", F.explode("w").alias("tok"))
         .where(F.col("tok").isin(*_BM_TERMS))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("long").alias("tf"))
-        # feeds both the df/idf aggregate and the scoring join
-        .localCheckpoint()
     )
     dft = tf.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
     # fit_n_docs/fit_t_tokens fingerprint the fit: the streaming twin
@@ -2126,12 +2124,11 @@ def z_text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    tf = (
+    # feeds N, df, and the weight join
+    tf = barrier(
         docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("long").alias("tf"))
-        # feeds N, df, and the weight join
-        .localCheckpoint()
     )
     n = tf.agg(F.countDistinct("doc_id").cast("long").alias("n_docs"))
     dft = tf.groupBy("tok").agg(F.count("*").cast("long").alias("df"))

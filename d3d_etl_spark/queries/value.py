@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.queries.domain import _PARSED_GLOB, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
@@ -287,9 +288,8 @@ _VALUE_ORACLE = f"WITH {_WP_CTES}\n" + "\nUNION ALL\n".join(
 def domain_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the WE/LI-joined play table feeds runs_win + four grain boards:
     # materialize the spine once instead of re-deriving the RE24 +
-    # win-probability chain per grain (same localCheckpoint doctrine as
-    # the pipeline spine — the barrier side is the already-reduced table)
-    plays = _wp_plays(spark, sf_dir).localCheckpoint()
+    # win-probability chain per grain
+    plays = barrier(_wp_plays(spark, sf_dir))
     rw = _runs_win(plays)
     parts = []
     for grain, id_col, team_col, flip in _VALUE_GRAINS:
@@ -377,7 +377,7 @@ def domain_situational(spark: SparkSession, sf_dir: str) -> DataFrame:
         runners_on_cond,
     )
 
-    plays = _wp_plays(spark, sf_dir).localCheckpoint()  # 4 grain boards
+    plays = barrier(_wp_plays(spark, sf_dir))  # 4 grain boards
     conds = {
         "overall": None,
         "risp": risp_cond(),

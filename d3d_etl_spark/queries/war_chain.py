@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import barrier
 from d3d_etl_spark.queries.domain import (
     _PA_EVENTS,
     _PARSED_GLOB,
@@ -141,7 +142,7 @@ def _pitching_war_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-trip through the reference's "6.2" codec (M4)
         .withColumn("ip", thirds_to_ip(F.col("_thirds")))
     )
-    cube = cube.localCheckpoint()  # consumed by the WAR chain AND the pa join-back
+    cube = barrier(cube)  # consumed by the WAR chain AND the pa join-back
     guts = _pitching_guts(spark, sf_dir)
     return pitching_war(cube, guts, lg_era=_LG_ERA).join(
         cube.select("player_id", "division", "year", "pa"),
@@ -319,13 +320,12 @@ def domain_war_team_sos(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.pbp.war import normalize_division_war, sos_adjust, team_war
 
     # player-grain frames feed allteams AND the sos chain — materialize once
-    bat = _war_batting_full(spark, sf_dir).withColumnRenamed("war", "war_raw").localCheckpoint()
-    pit = (
+    bat = barrier(_war_batting_full(spark, sf_dir).withColumnRenamed("war", "war_raw"))
+    pit = barrier(
         _pitching_war_df(spark, sf_dir)
         .select("division", "year", "team_id", "pa", "rar", "war_raw")
         .withColumn("wraa", F.lit(0.0))
         .withColumn("bsr", F.lit(0.0))
-        .localCheckpoint()
     )
     allteams = (
         bat.select("team_id", "division", "year")

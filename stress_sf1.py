@@ -443,7 +443,7 @@ def _lsh_missed_pairs(spark) -> dict:
     the collect is tail-sized (measured 5 of 2560 at sf1), bounded by the
     99% recall floor asserted alongside."""
     from d3d_etl_spark.functions.text import tokens, word_shingles
-    from d3d_etl_spark.io import load_table
+    from d3d_etl_spark.io import barrier, load_table
     from d3d_etl_spark.operators.dedup import (
         jaccard_pairs,
         lsh_band_keys,
@@ -455,10 +455,10 @@ def _lsh_missed_pairs(spark) -> dict:
     rpb = 4
     n_bands = _N_HASHES // rpb
     docs = load_table(spark, DST, "documents")
-    sh = shingle_rows(
+    sh = barrier(shingle_rows(
         docs, "doc_id", word_shingles(tokens(F.col("text")), _SHINGLE_N)
-    ).localCheckpoint()
-    truth = jaccard_pairs(sh, _JACCARD_T).localCheckpoint()
+    ))
+    truth = barrier(jaccard_pairs(sh, _JACCARD_T))
     e_miss = truth.agg(
         F.sum(F.pow(1 - F.pow("jaccard", rpb), n_bands)).alias("e")
     ).collect()[0]["e"]

@@ -516,6 +516,43 @@ def test_no_empty_partitionby_in_package():
     assert not offenders, "empty Window.partitionBy() found:\n" + "\n".join(offenders)
 
 
+def test_localcheckpoint_only_in_barrier():
+    """Source pin: `io.barrier` is the package's and the harness's only
+    `.localCheckpoint()` call, so every barrier follows the one rule its
+    docstring states, and every barrier job is named `localCheckpoint at
+    ...` (perfbench/tracing.py counts them by that name)."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    files = [
+        *sorted((repo / "d3d_etl_spark").rglob("*.py")),
+        repo / "bench.py",
+        repo / "stress_sf1.py",
+    ]
+    sites = []
+    for py in files:
+        tree = ast.parse(py.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(node, fn.name)  # outermost def wins
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                sites.append(
+                    (str(py.relative_to(repo)), owner.get(node), node.lineno)
+                )
+    assert [s[:2] for s in sites] == [("d3d_etl_spark/io.py", "barrier")], (
+        "localCheckpoint outside io.barrier:\n"
+        + "\n".join(f"{f}:{ln} ({fn})" for f, fn, ln in sites)
+    )
+
+
 def test_no_unreferenced_top_level_names_in_package():
     """Package-wide source pin: every top-level name defined in
     d3d_etl_spark/ is referenced somewhere besides its own definition — in

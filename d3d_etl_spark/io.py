@@ -5,11 +5,17 @@ Reference sink semantics re-expressed Spark-first (SURVEY.md §2.1):
 - S4/S5 delete-slice-then-insert upsert -> dynamic partition overwrite
 - S6 SQL dedup-on-load                  -> `dropDuplicates` before write
 - S17 incremental anti-join             -> `left_anti` helper
+- S19 skip a stage whose output exists  -> `StateFamily` (per-scale state)
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -157,6 +163,106 @@ def barrier(df: DataFrame) -> DataFrame:
     many consumers its frame has.
     """
     return df.localCheckpoint()
+
+
+# --- Persisted per-scale state (S19) ----------------------------------------
+
+STATE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".domain_cache"
+)
+# scales kept side by side per family before the LRU sweep evicts
+_STATE_LRU_KEEP = 4
+# every constructed family by name; oracle.resolve_cache_globs reads it
+STATE_FAMILIES: dict[str, StateFamily] = {}
+
+
+def sf_tag(sf_dir: str) -> str:
+    """The default scale key: the sf token of the data dir, dots mangled
+    for path safety (sf0.01 -> '0p01'). The incremental text and embedding
+    families share it, so a scale switch moves them together."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return (m.group(1) if m else "x").replace(".", "p")
+
+
+class StateFamily:
+    """One family of persisted per-scale state: `<root>/<name>_<key>`.
+
+    The one rule for state the engine keeps between runs (the reference
+    skips a stage whose output file exists, S19):
+
+    - keyed by scale: `key(sf_dir)` names the directory, so scales coexist
+      side by side and switching scale rebuilds nothing;
+    - built once, atomically: `ensure` builds into a dot-prefixed temp dir
+      (outside the family glob, so a crashed build is never read),
+      `os.replace`s it into place, then writes the `.done` marker.
+      Regenerators of one family serialize on a per-family flock —
+      per-family because the parsed build nests the raw build;
+    - bounded: after a build only the _STATE_LRU_KEEP most recently used
+      scales (by marker mtime) survive;
+    - one source: oracle SQL reads the same parquet through `.glob`
+      (`<root>/<name>_*/*.parquet`), which resolve_cache_globs rewrites
+      to the scale's directory. Constructing a family registers it.
+
+    Deleting the root is always safe: every family rebuilds on demand.
+    """
+
+    def __init__(self, name: str, key=sf_tag):
+        self.name = name
+        self.key = key
+        self.root = STATE_ROOT
+        self.glob = os.path.join(self.root, f"{name}_*", "*.parquet")
+        STATE_FAMILIES[name] = self
+
+    def path(self, sf_dir: str) -> str:
+        return os.path.join(self.root, f"{self.name}_{self.key(sf_dir)}")
+
+    def ensure(self, sf_dir: str, build) -> str:
+        """Return the scale's directory, first running `build(tmp)` (which
+        writes the table under `tmp`) unless a completed build exists. The
+        fast path takes no lock: two stats and a marker touch, so the LRU
+        sweep sees the scale as live."""
+        path = self.path(sf_dir)
+        marker = path + ".done"
+        if os.path.exists(marker) and os.path.isdir(path):
+            os.utime(marker)
+            return path
+        os.makedirs(self.root, exist_ok=True)
+        with open(os.path.join(self.root, f".{self.name}_regen.lock"), "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            try:
+                if os.path.exists(marker) and os.path.isdir(path):
+                    return path  # another process built it while we waited
+                # crash leftovers of this family, this scale's included
+                for stale in glob.glob(os.path.join(self.root, f".tmp_{self.name}_*")):
+                    shutil.rmtree(stale, ignore_errors=True)
+                tmp = os.path.join(self.root, ".tmp_" + os.path.basename(path))
+                build(tmp)
+                shutil.rmtree(path, ignore_errors=True)
+                os.replace(tmp, path)
+                with open(marker, "w") as f:
+                    f.write(os.path.basename(path))
+                live = sorted(
+                    (
+                        d
+                        for d in glob.glob(os.path.join(self.root, f"{self.name}_*"))
+                        if os.path.isdir(d) and os.path.exists(d + ".done")
+                    ),
+                    key=lambda d: os.path.getmtime(d + ".done"),
+                    reverse=True,
+                )
+                for other in live[_STATE_LRU_KEEP:]:
+                    if other != path:
+                        self._evict(other)
+            finally:
+                fcntl.flock(lock, fcntl.LOCK_UN)
+        return path
+
+    @staticmethod
+    def _evict(path: str) -> None:
+        """Drop one built scale: its directory, then its marker."""
+        shutil.rmtree(path, ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path + ".done")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -318,20 +424,3 @@ def load_csv(spark: SparkSession, path: str, schema) -> DataFrame:
     works as with parquet minus column statistics; at scale prefer a
     one-time CSV->parquet conversion with `write_partitioned`."""
     return spark.read.schema(schema).options(**CSV_OPTIONS).csv(path)
-
-
-def ensure_table(spark: SparkSession, path: str, build) -> DataFrame:
-    """S19 skip-if-exists stage memoization (reference: output-file existence
-    check, run_all.py:15-20): materialize `build()` at `path` once; later
-    calls scan the existing parquet instead of recomputing. Existence is
-    probed by reading the dataset (not a driver-side path check), so it
-    works on any Hadoop filesystem; Spark's committer writes _SUCCESS last,
-    making a torn write read as absent-or-failing rather than half-present.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        build().write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)

@@ -15,7 +15,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from d3d_etl_spark.io import TESTDATA_TABLES
+from d3d_etl_spark.io import STATE_FAMILIES, TESTDATA_TABLES
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -26,29 +26,13 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-# Per-scale cache families (.domain_cache): oracle SQL embeds
-# '<family>_*' parquet globs; each family registers how its scale key
-# derives from sf_dir, and resolve_cache_globs rewrites the glob to the
-# sf-specific directory at run time. This is what lets caches for
-# DIFFERENT scales coexist side-by-side (verify at sf0.01 and bench at
-# sf0.1 no longer thrash each other's state) while every oracle still
-# reads exactly one scale.
-CACHE_GLOB_RESOLVERS: dict[str, object] = {}
-
-
-def register_cache_family(family: str, key_fn) -> None:
-    """`family` is the cache dir-name prefix (e.g. 'parsed_pbp');
-    `key_fn(sf_dir) -> str` is its scale key (the {n}/{tag} the engine
-    builds under)."""
-    CACHE_GLOB_RESOLVERS[family] = key_fn
-
-
 def resolve_cache_globs(sql: str, sf_dir: str) -> str:
-    """Rewrite every registered '<family>_*' glob in `sql` to the
-    scale-keyed directory for `sf_dir`. Idempotent on SQL with no cache
-    globs."""
-    for family, key_fn in CACHE_GLOB_RESOLVERS.items():
-        sql = sql.replace(f"{family}_*", f"{family}_{key_fn(sf_dir)}")
+    """Rewrite every state family's '<name>_*' glob in `sql` to the
+    scale-keyed directory for `sf_dir` (io.StateFamily), so each oracle
+    reads exactly one scale while scales coexist on disk. Idempotent on
+    SQL with no family globs."""
+    for name, fam in STATE_FAMILIES.items():
+        sql = sql.replace(f"{name}_*", f"{name}_{fam.key(sf_dir)}")
     return sql
 
 

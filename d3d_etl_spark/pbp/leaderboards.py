@@ -314,7 +314,7 @@ def baserunning_board(
         # segment 0 is the BATTER's action (its trailing "advanced to" is a
         # batter extra advance, not a runner) — except on runner-only events,
         # where the acting runner IS segment 0
-        (F.col("pos") > 0) | F.col("event_type").isin(*_RUNNER_ONLY)
+        (F.col("pos") > 0) | F.col("event_type").isin(*sorted(_RUNNER_ONLY))
     )
     name = F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 1)
     action = F.lower(F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 2))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from d3d_etl_spark.functions.strings import hash_id
+from d3d_etl_spark.pbp.state import _RUNNER_ONLY
 
 # the reference's exact keep_columns order (add_pbp_metrics.py:260-342)
 _COLUMNS: list[tuple[str, T.DataType]] = [
@@ -117,9 +118,6 @@ PBP_WITH_METRICS_SCHEMA = T.StructType(
 
 # substitution narration: "X to <pos> for Y" (reference columns.py:259-307)
 _SUB_RE = r"^\s*(.*?)\s+to\s+([a-z0-9]+)\s+for\s+(.*?)\s*[.;]?\s*$"
-
-_RUNNER_ONLY = ("SB", "CS", "PK", "PKE", "WP", "PB", "BK", "DI", "ERR", "ADV")
-
 
 def batted_ball_type(play_text: F.Column, event: F.Column) -> F.Column:
     """Text-keyword batted-ball classifier (reference BattedBallType:
@@ -211,7 +209,7 @@ def add_player_of_interest(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "player_name",
         F.when(
-            F.col("event_type").isin(*_RUNNER_ONLY) & (runner != ""), runner
+            F.col("event_type").isin(*sorted(_RUNNER_ONLY)) & (runner != ""), runner
         ).otherwise(F.col("batter_name")),
     )
 

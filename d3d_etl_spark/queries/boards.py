@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.queries.domain import (
-    _PARSED_GLOB,
+    PARSED_PBP,
     _PA_EVENTS,
     _SO_EVENTS,
     _sql_in,
@@ -66,7 +66,7 @@ def _bb_grain_sql(grain: str, entity: str) -> str:
 _BB_ORACLE = f"""
 WITH wp AS (
 {_IDS_SQL}
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 b AS ({" UNION ALL ".join(_bb_grain_sql(g, e) for g, e in _BB_GRAINS)}),
 t AS (SELECT *, gb + fb + ld + pu AS batted_balls FROM b WHERE gb + fb + ld + pu >= 1)
@@ -141,7 +141,7 @@ WITH wp AS (
          'P' || (CASE WHEN inning <= 2 THEN '0' ELSE '1' END)
              || '_' || (CASE WHEN half = 'Top' THEN 'home' ELSE 'away' END)
              || '_' || CAST(contest_id AS VARCHAR) AS pitcher_name
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 flagged AS (
   SELECT *,
@@ -193,7 +193,7 @@ WITH plays AS (
     'T_' || CAST(contest_id AS VARCHAR) || '_'
          || CASE WHEN half = 'Top' THEN 'away' ELSE 'home' END
     AS batting_team)
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 player AS (
   SELECT division, year, batter_name,
@@ -299,7 +299,7 @@ WITH segs AS (
               || (CASE WHEN half = 'Top' THEN '_away' ELSE '_home' END) AS bat_team_id,
          unnest(string_split(play_text, ';')) AS seg,
          unnest(range(len(string_split(play_text, ';')))) AS pos
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 classed AS (
   SELECT division, year, bat_team_id,

@@ -23,18 +23,12 @@ writer's _000NN file-name tags) — no rewrite.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.io import StateFamily
 from d3d_etl_spark.plans.inspect import count_shuffles
-from d3d_etl_spark.queries.domain import (
-    _CACHE_DIR,
-    _ensure_materialized,
-    _games_for,
-    materialized_parsed,
-)
+from d3d_etl_spark.queries.domain import _games_for, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _N_BUCKETS = 8
@@ -42,8 +36,7 @@ _SPINE_COLS_DDL = (
     "contest_id BIGINT, play_id BIGINT, half STRING, "
     "division STRING, year INT, runs_on_play INT"
 )
-_SPINE_PATH_TPL = os.path.join(_CACHE_DIR, "bucketed_spine_{n}")
-_SPINE_GLOB = os.path.join(_CACHE_DIR, "bucketed_spine_*", "*.parquet")
+BUCKETED_SPINE = StateFamily("bucketed_spine", key=_games_for)
 
 
 def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,10 +48,7 @@ def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     file per bucket -> the scan also reports the sortBy order, letting
     sort-merge joins skip their local sorts).
     """
-    n = _games_for(sf_dir)
-    table = f"z_spine_bkt_{n}"
-    path = _SPINE_PATH_TPL.format(n=n)
-    marker = path + ".done"
+    table = f"z_spine_bkt_{_games_for(sf_dir)}"
 
     def build(tmp: str) -> None:
         tmp_table = f"{table}_tmp"
@@ -75,10 +65,10 @@ def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(tmp_table)
         )
         # external table: dropping the catalog entry keeps the files, which
-        # _ensure_materialized then os.replace's into the final path
+        # StateFamily.ensure then moves into the final path
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
 
-    _ensure_materialized(path, marker, _SPINE_PATH_TPL.format(n="*"), build)
+    path = BUCKETED_SPINE.ensure(sf_dir, build)
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {table} ({_SPINE_COLS_DDL}) "
         f"USING PARQUET CLUSTERED BY (contest_id) "
@@ -93,7 +83,7 @@ WITH g AS (
   SELECT contest_id,
          SUM(runs_on_play) AS game_runs,
          COUNT(*) AS game_plays
-  FROM read_parquet('{_SPINE_GLOB}')
+  FROM read_parquet('{BUCKETED_SPINE.glob}')
   GROUP BY 1
   HAVING SUM(runs_on_play) > 0
 )
@@ -102,7 +92,7 @@ SELECT s.contest_id, s.half,
        CAST(SUM(s.runs_on_play) AS BIGINT) AS runs,
        MAX(g.game_plays) AS game_plays,
        CAST(SUM(s.runs_on_play) AS DOUBLE) / MAX(g.game_runs) AS run_share
-FROM read_parquet('{_SPINE_GLOB}') s
+FROM read_parquet('{BUCKETED_SPINE.glob}') s
 JOIN g ON s.contest_id = g.contest_id
 GROUP BY 1, 2
 """

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.money import cents
 from d3d_etl_spark.functions.text import sql_tokens, sql_word_shingles, tokens, word_shingles
-from d3d_etl_spark.io import barrier, fan_out, load_table, read_parquet
+from d3d_etl_spark.io import StateFamily, barrier, fan_out, load_table, read_parquet
 from d3d_etl_spark.operators.dedup import (
     exact_dedup_groups,
     jaccard_pairs,
@@ -656,19 +656,8 @@ FROM ({_SIMHASH_PAIRS_ORACLE})
 # pairs touching a new doc.
 # ---------------------------------------------------------------------------
 
-import os as _os
-
-from d3d_etl_spark.queries.domain import _CACHE_DIR as _STATE_CACHE_DIR
-from d3d_etl_spark.queries.domain import _ensure_materialized as _ensure_state
-from d3d_etl_spark.queries.domain import sf_tag as _sf_tag
-
 _NEW_MOD = 4  # doc_id % 4 == 0 -> "new" batch (deterministic 25% daily slice)
-_STATE_PATH_TPL = _os.path.join(_STATE_CACHE_DIR, "lsh_bands_{tag}")
-_STATE_GLOB = _os.path.join(_STATE_CACHE_DIR, "lsh_bands_*", "*.parquet")
-
-from d3d_etl_spark.oracle import register_cache_family as _register_family  # noqa: E402
-
-_register_family("lsh_bands", _sf_tag)
+LSH_BANDS = StateFamily("lsh_bands")
 
 
 def batch1_band_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,9 +665,6 @@ def batch1_band_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_bands rows per doc regardless of doc size — the state a real pipeline
     keeps between ingests is THIS compact table, not the corpus."""
-    tag = _sf_tag(sf_dir)
-    path = _STATE_PATH_TPL.format(tag=tag)
-    marker = path + ".done"
 
     def build(tmp: str) -> None:
         old = load_table(spark, sf_dir, "documents").where(
@@ -689,8 +675,7 @@ def batch1_band_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             shingle_df=sh, n_hashes=_N_HASHES, rows_per_band=_ROWS_PER_BAND
         ).write.mode("overwrite").parquet(tmp)
 
-    _ensure_state(path, marker, _STATE_PATH_TPL.format(tag="*"), build)
-    return read_parquet(spark, path)
+    return read_parquet(spark, LSH_BANDS.ensure(sf_dir, build))
 
 
 def _incremental_oracle() -> str:
@@ -717,7 +702,7 @@ new_bands AS (
          unnest(range({n_bands})) AS band_idx
   FROM new_sigs
 ),
-old_bands AS (SELECT doc, band_idx, band_key FROM read_parquet('{_STATE_GLOB}')),
+old_bands AS (SELECT doc, band_idx, band_key FROM read_parquet('{LSH_BANDS.glob}')),
 all_bands AS (SELECT * FROM old_bands UNION ALL SELECT doc, band_idx, band_key FROM new_bands),
 cand AS (
   SELECT LEAST(p.doc, o.doc) AS doc_a, GREATEST(p.doc, o.doc) AS doc_b

@@ -25,32 +25,17 @@ no raw-double accumulation anywhere (functions/money.py doctrine).
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from d3d_etl_spark.io import barrier
-from d3d_etl_spark.oracle import register_cache_family
+from d3d_etl_spark.io import STATE_ROOT as _CACHE_DIR  # noqa: F401 (perfbench reads it)
+from d3d_etl_spark.io import StateFamily, barrier, read_parquet
 from d3d_etl_spark.pbp.metrics import LW_CLASSES, REACHING
 from d3d_etl_spark.queries.registry import register
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_CACHE_DIR = os.path.join(_REPO_ROOT, ".domain_cache")
-# The parquet path is SCALE-SPECIFIC ({n} = game count). Oracle SQL
-# (rendered once at import) globs parsed_pbp_*; resolve_cache_globs
-# rewrites that glob to the sf-specific directory at run time, so scales
-# coexist side-by-side (LRU-capped) and a scale switch can never serve a
-# half-overwritten directory (builds go through a temp dir + os.replace).
-_PARSED_PATH_TPL = os.path.join(_CACHE_DIR, "parsed_pbp_{n}")
-_MARKER_TPL = os.path.join(_CACHE_DIR, "parsed_pbp_{n}.done")
-_PARSED_GLOB = os.path.join(_CACHE_DIR, "parsed_pbp_*", "*.parquet")
-
 _LG_OBP = 0.360
-
-# scales kept side-by-side per cache family before the LRU sweep evicts
-_CACHE_LRU_KEEP = 4
 
 
 def _games_for(sf_dir: str) -> int:
@@ -60,93 +45,8 @@ def _games_for(sf_dir: str) -> int:
     return max(10, int(sf * 3000))
 
 
-register_cache_family("parsed_pbp", lambda sf_dir: str(_games_for(sf_dir)))
-register_cache_family("bucketed_spine", lambda sf_dir: str(_games_for(sf_dir)))
-# the RAW narration family too: the corpus-scale FSM oracle
-# (z_pbp_corpus_fsm) recomputes every transition in SQL from the raw glob
-register_cache_family("raw_games", lambda sf_dir: str(_games_for(sf_dir)))
-
-
-def sf_tag(sf_dir: str) -> str:
-    """Scale tag for per-scale persisted state families (lsh_bands_{tag},
-    ivf_cents_{tag}, ...): the sf token of the data dir, dots mangled for
-    path safety. One definition — the incremental text and embedding state
-    families must key identically or a scale switch desyncs them."""
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return (m.group(1) if m else "x").replace(".", "p")
-
-
-def _ensure_materialized(path: str, marker: str, family_glob: str, build) -> None:
-    """Skip-if-exists materialization with crash/concurrency safety.
-
-    The fast path (marker + dir present) never takes the lock. On the
-    regeneration path: serialize regenerators with an flock'd PER-FAMILY
-    lock file (two processes switching scales used to race the sweep
-    against each other's build; per-family, not global, because the parsed
-    build nests a raw build — one shared lock would self-deadlock the
-    process on its second fd), re-check under the lock, build into a temp dir and
-    `os.replace` it into place (a crashed build can't leave a
-    half-written dir that the marker check would trust), THEN LRU-sweep
-    the family: scales coexist SIDE-BY-SIDE (verify at sf0.01 and bench at
-    sf0.1 no longer thrash each other's state) up to _CACHE_LRU_KEEP
-    entries; only the least-recently-built beyond the cap are removed.
-    Oracle SQL stays unambiguous because resolve_cache_globs
-    (d3d_etl_spark/oracle.py) rewrites each family's '_*' glob to the
-    scale-keyed directory at run time.
-
-    The temp dir is DOT-prefixed (``.tmp_<name>``) so it sits OUTSIDE the
-    family's glob namespace: a build that crashes mid-write must not leave
-    a directory the oracle globs (``<family>_*/\\*.parquet``) silently
-    match — that would poison every subsequent oracle read at the
-    still-valid scale with half-written files. Stale crash leftovers are
-    swept on the next locked regeneration.
-    """
-    import fcntl
-    import glob as _glob
-    import shutil
-
-    if os.path.exists(marker) and os.path.isdir(path):
-        # touch the marker so the LRU sweep sees this scale as live
-        os.utime(marker)
-        return
-    os.makedirs(_CACHE_DIR, exist_ok=True)
-    family = os.path.basename(family_glob).replace("*", "")
-    with open(os.path.join(_CACHE_DIR, f".{family}regen.lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(marker) and os.path.isdir(path):
-                return  # lost the race: another process already built it
-            tmp = os.path.join(
-                os.path.dirname(path), ".tmp_" + os.path.basename(path)
-            )
-            shutil.rmtree(tmp, ignore_errors=True)
-            # sweep crash leftovers from earlier runs of this family
-            for stale in _glob.glob(
-                os.path.join(os.path.dirname(path), ".tmp_" + family + "*")
-            ):
-                shutil.rmtree(stale, ignore_errors=True)
-            build(tmp)
-            shutil.rmtree(path, ignore_errors=True)
-            os.replace(tmp, path)
-            with open(marker, "w") as f:
-                f.write(os.path.basename(path))
-            # LRU sweep: keep the _CACHE_LRU_KEEP most-recently-used scales
-            # of this family (marker mtime = last build/use), drop the rest
-            live = sorted(
-                (
-                    d
-                    for d in _glob.glob(family_glob)
-                    if os.path.isdir(d) and os.path.exists(d + ".done")
-                ),
-                key=lambda d: os.path.getmtime(d + ".done"),
-                reverse=True,
-            )
-            for other in live[_CACHE_LRU_KEEP:]:
-                if other != path:
-                    shutil.rmtree(other, ignore_errors=True)
-                    os.remove(other + ".done")
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+RAW_GAMES = StateFamily("raw_games", key=_games_for)
+PARSED_PBP = StateFamily("parsed_pbp", key=_games_for)
 
 
 def ensure_parsed(spark: SparkSession, sf_dir: str) -> str:
@@ -154,29 +54,19 @@ def ensure_parsed(spark: SparkSession, sf_dir: str) -> str:
     its path. The ensure-only form of materialized_parsed for callers that
     only need the cache on disk (e.g. for an oracle read) — after the
     first build this is a marker-file stat, no Spark scan is planned."""
-    n_games = _games_for(sf_dir)
-    path = _PARSED_PATH_TPL.format(n=n_games)
-    marker = _MARKER_TPL.format(n=n_games)
 
     def build(tmp: str) -> None:
         from d3d_etl_spark.pbp.parser import parse_pbp
 
         parse_pbp(materialized_raw(spark, sf_dir)).write.mode("overwrite").parquet(tmp)
 
-    _ensure_materialized(path, marker, _PARSED_PATH_TPL.format(n="*"), build)
-    return path
+    return PARSED_PBP.ensure(sf_dir, build)
 
 
 def materialized_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parsed plays for `sf_dir`'s scale, materialized to a stable path.
-
-    Skip-if-exists memoization (S19): the marker records the game count;
-    re-generation happens only when the scale changes. Both the Spark
-    queries and their DuckDB oracles read THIS parquet, so the comparison
-    is over identical FSM output by construction.
-    """
-    from d3d_etl_spark.io import read_parquet
-
+    """Parsed plays for `sf_dir`'s scale, materialized once per scale.
+    Both the Spark queries and their DuckDB oracles read THIS parquet, so
+    the comparison is over identical FSM output by construction."""
     return read_parquet(spark, ensure_parsed(spark, sf_dir))
 
 
@@ -186,22 +76,16 @@ def materialized_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     (z_pbp_dag / z_pbp_war) READ this parquet instead of re-generating in
     the measured path — mirroring the reference, whose pipeline stages read
     raw CSV from storage rather than synthesizing their input."""
-    n_games = _games_for(sf_dir)
-    path = os.path.join(_CACHE_DIR, f"raw_games_{n_games}")
-    marker = path + ".done"
 
     def build(tmp: str) -> None:
         from d3d_etl_spark.pbp.synth import generate_games_df
 
-        generate_games_df(spark, n_games).write.mode("overwrite").parquet(tmp)
+        generate_games_df(spark, _games_for(sf_dir)).write.mode("overwrite").parquet(tmp)
 
-    _ensure_materialized(path, marker, os.path.join(_CACHE_DIR, "raw_games_*"), build)
     # the raw table is tiny on disk, so the scan plans one partition; the
     # parse's head exchange (parser.game_partitioned) fans it back out to
     # session parallelism, so no repartition is needed here
-    from d3d_etl_spark.io import read_parquet
-
-    return read_parquet(spark, path)
+    return read_parquet(spark, RAW_GAMES.ensure(sf_dir, build))
 
 
 # ---------------------------------------------------------------------------
@@ -216,7 +100,7 @@ SELECT division, year,
        outs_before AS outs,
        COUNT(*) AS n,
        CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-FROM read_parquet('{_PARSED_GLOB}')
+FROM read_parquet('{PARSED_PBP.glob}')
 WHERE outs_before <= 2
 GROUP BY 1, 2, 3, 4
 """
@@ -272,7 +156,7 @@ WITH b AS (
          CAST(SUM(CASE WHEN event_type = 'HBP' THEN 1 ELSE 0 END) AS BIGINT) AS hbp,
          CAST(SUM(CASE WHEN event_type IN {_sql_in(_SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS so,
          CAST(SUM(runs_on_play) AS BIGINT) AS runs_driven
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   WHERE batter_name IS NOT NULL
   GROUP BY 1, 2, 3
 )
@@ -306,7 +190,7 @@ def _lw_class_sql() -> str:
 
 
 #: default oracle source for the play table — the materialized parse
-_PARSED_SRC = f"read_parquet('{_PARSED_GLOB}')"
+_PARSED_SRC = f"read_parquet('{PARSED_PBP.glob}')"
 
 
 def _lw_ctes(src: str = _PARSED_SRC) -> str:
@@ -502,7 +386,7 @@ league AS (
          CAST(SUM(CASE WHEN event_type IN {_sql_in(_PA_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS lg_pa,
          CAST(SUM(CASE WHEN event_type = 'SB' THEN 1 ELSE 0 END) AS BIGINT) AS lg_sb,
          CAST(SUM(CASE WHEN event_type = 'CS' THEN 1 ELSE 0 END) AS BIGINT) AS lg_cs
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   GROUP BY 1, 2
 ),
 out_lw AS (
@@ -856,7 +740,7 @@ WITH wp AS (
          'P' || (CASE WHEN inning <= 2 THEN '0' ELSE '1' END)
              || '_' || (CASE WHEN half = 'Top' THEN 'home' ELSE 'away' END)
              || '_' || CAST(contest_id AS VARCHAR) AS pitcher_name
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),{grains}
 SELECT grain, division, year, entity, total_pa, roll_ob, roll_ob_prev, trend
 FROM latest_batter WHERE rn = 1

@@ -717,11 +717,8 @@ def _corpus_ctes() -> str:
     """fxc .. tracec: the per-game CTE chain over the raw_games glob, with
     contest_id threaded through the recursion (seed = one row per game,
     step joins on (contest_id, play_id + 1))."""
-    import os as _os
+    from d3d_etl_spark.queries.domain import RAW_GAMES
 
-    from d3d_etl_spark.queries.domain import _CACHE_DIR
-
-    raw_glob = _os.path.join(_CACHE_DIR, "raw_games_*", "*.parquet")
     seg_gate = "event NOT IN ('NP', 'SUB', 'FOUL_ERR')"
     runner_only = ", ".join(f"'{c}'" for c in sorted(_RUNNER_ONLY))
     seg1_runner_only = ", ".join(
@@ -754,7 +751,7 @@ def _corpus_ctes() -> str:
          CASE WHEN away_text IS NOT NULL AND away_text <> ''
               THEN 'Top' ELSE 'Bottom' END AS half,
          COALESCE(away_text, home_text) AS text
-  FROM read_parquet('{raw_glob}')
+  FROM read_parquet('{RAW_GAMES.glob}')
   WHERE COALESCE(away_text, home_text) IS NOT NULL
     AND COALESCE(away_text, home_text) <> ''
 ),

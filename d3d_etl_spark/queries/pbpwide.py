@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from d3d_etl_spark.queries.domain import (
     _LW_CTES,
-    _PARSED_GLOB,
+    PARSED_PBP,
     materialized_parsed,
 )
 from d3d_etl_spark.queries.registry import register
@@ -47,7 +47,7 @@ WITH {_LW_CTES},
 erv AS (
   SELECT division, year, bases_before AS bases, outs_before AS outs,
          CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   WHERE outs_before <= 2
   GROUP BY 1, 2, 3, 4
 ),
@@ -65,7 +65,7 @@ base AS (
                || '_' || CAST(p.contest_id AS VARCHAR) AS pitcher_name,
          'T_' || CAST(p.contest_id AS VARCHAR) || '_home' AS home_team_id,
          'T_' || CAST(p.contest_id AS VARCHAR) || '_away' AS away_team_id
-  FROM read_parquet('{_PARSED_GLOB}') p
+  FROM read_parquet('{PARSED_PBP.glob}') p
 ),
 derived AS (
   SELECT b.*,

@@ -16,7 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from d3d_etl_spark.io import barrier, fan_out, load_table, read_parquet, table_count
+from d3d_etl_spark.io import (
+    StateFamily,
+    barrier,
+    fan_out,
+    load_table,
+    read_parquet,
+    table_count,
+)
 from d3d_etl_spark.operators.similarity import (
     assign_nearest_centroid,
     cosine_topk,
@@ -687,12 +694,6 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     per-batch serving cost.
 # ---------------------------------------------------------------------------
 
-import os as _os
-
-from d3d_etl_spark.queries.domain import _CACHE_DIR as _IVF_CACHE_DIR
-from d3d_etl_spark.queries.domain import _ensure_materialized as _ensure_ivf_state
-from d3d_etl_spark.queries.domain import sf_tag as _ivf_tag
-
 # floor ingest modulus: tiny test corpora still need a few hundred batch
 # rows, so the modulus never drops below 4 (batch <= 25% of the corpus)
 _INC_MOD = 4
@@ -724,15 +725,8 @@ _ADC_ROWS_PER_TASK = 262_144
 # clusterable serving corpus with K = ceil(sqrt(N_old)) — a new family
 # name so stale fixed-K / raw-corpus caches can never serve this contract
 # (the "_t" precedent: a contract change renames the family)
-_IVF_CENTS_TPL = _os.path.join(_IVF_CACHE_DIR, "ivf_cents_s_{tag}")
-_IVF_ASSIGN_TPL = _os.path.join(_IVF_CACHE_DIR, "ivf_assign_s_{tag}")
-_IVF_CENTS_GLOB = _os.path.join(_IVF_CACHE_DIR, "ivf_cents_s_*", "*.parquet")
-_IVF_ASSIGN_GLOB = _os.path.join(_IVF_CACHE_DIR, "ivf_assign_s_*", "*.parquet")
-
-from d3d_etl_spark.oracle import register_cache_family as _register_family  # noqa: E402
-
-for _fam in ("ivf_cents_s", "ivf_assign_s", "pq_icents_r", "pq_cb_r", "pq_codes_r"):
-    _register_family(_fam, _ivf_tag)
+IVF_CENTS = StateFamily("ivf_cents_s")
+IVF_ASSIGN = StateFamily("ivf_assign_s")
 
 
 # ---------------------------------------------------------------------------
@@ -861,10 +855,6 @@ def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     index content, not the serving contract."""
     import math
 
-    tag = _ivf_tag(sf_dir)
-    cents_path = _IVF_CENTS_TPL.format(tag=tag)
-    assign_path = _IVF_ASSIGN_TPL.format(tag=tag)
-
     def old_batch() -> DataFrame:
         corp, bmod = serving_corpus(spark, sf_dir)
         return corp.where(F.col("vec_id") % bmod != 0)
@@ -877,20 +867,14 @@ def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         trained = old.join(cells.hint("shuffle_hash"), "vec_id")
         label_centroids(trained, "label").write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        cents_path, cents_path + ".done", _IVF_CENTS_TPL.format(tag="*"), build_cents
-    )
-    cents = read_parquet(spark, cents_path)
+    cents = read_parquet(spark, IVF_CENTS.ensure(sf_dir, build_cents))
 
     def build_assign(tmp: str) -> None:
         assign_nearest_centroid(old_batch(), cents, "label").write.mode(
             "overwrite"
         ).parquet(tmp)
 
-    _ensure_ivf_state(
-        assign_path, assign_path + ".done", _IVF_ASSIGN_TPL.format(tag="*"), build_assign
-    )
-    return cents, read_parquet(spark, assign_path)
+    return cents, read_parquet(spark, IVF_ASSIGN.ensure(sf_dir, build_assign))
 
 
 # The IVF-state probe -> candidate CTE chain, shared by z_sim_incremental
@@ -902,9 +886,9 @@ newv AS (
   SELECT c.vec_id, c.x, c.pos
   FROM cemb c CROSS JOIN srvp s WHERE c.vec_id % s.bmod = 0
 ),
-cents AS (SELECT label, pos, c FROM read_parquet('{_IVF_CENTS_GLOB}')),
+cents AS (SELECT label, pos, c FROM read_parquet('{IVF_CENTS.glob}')),
 assign AS (SELECT vec_id AS old_id, assigned_label AS label
-           FROM read_parquet('{_IVF_ASSIGN_GLOB}')),
+           FROM read_parquet('{IVF_ASSIGN.glob}')),
 pscore AS (
   SELECT n.vec_id, c.label,
          SUM(n.x * c.c) AS dot, SUM(n.x * n.x) AS nx2, SUM(c.c * c.c) AS nc2
@@ -3016,12 +3000,9 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doctrine (z_sim_ivfpq_residual: residual codes >= 3/25 better than raw
 # at identical storage). A new family name so stale raw-code caches can
 # never serve the residual contract (the "_s"/"_t" precedent).
-_PQ_ICENTS_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_icents_r_{tag}")
-_PQ_CB_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_cb_r_{tag}")
-_PQ_CODES_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_codes_r_{tag}")
-_PQ_ICENTS_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_icents_r_*", "*.parquet")
-_PQ_CB_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_cb_r_*", "*.parquet")
-_PQ_CODES_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_codes_r_*", "*.parquet")
+PQ_ICENTS = StateFamily("pq_icents_r")
+PQ_CB = StateFamily("pq_cb_r")
+PQ_CODES = StateFamily("pq_codes_r")
 
 
 def pq_index_state(
@@ -3042,10 +3023,6 @@ def pq_index_state(
     `ic` CTE, K*dim rows (broadcast-sized at any corpus scale)."""
     from d3d_etl_spark.operators.pq import pq_subspace_comps
 
-    tag = _ivf_tag(sf_dir)
-    ic_path = _PQ_ICENTS_TPL.format(tag=tag)
-    cb_path = _PQ_CB_TPL.format(tag=tag)
-    codes_path = _PQ_CODES_TPL.format(tag=tag)
     _, assign = ivf_index_state(spark, sf_dir)
     lab = assign.select("vec_id", F.col("assigned_label").alias("label"))
 
@@ -3063,10 +3040,7 @@ def pq_index_state(
             F.round(F.sum("xs") / F.count("*")).cast("long").alias("c_int")
         ).write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        ic_path, ic_path + ".done", _PQ_ICENTS_TPL.format(tag="*"), build_icents
-    )
-    icents = read_parquet(spark, ic_path)
+    icents = read_parquet(spark, PQ_ICENTS.ensure(sf_dir, build_icents))
 
     def res_comps() -> DataFrame:
         # (vec_id, sub, pos, xs): exact-integer residuals vs the assigned
@@ -3103,8 +3077,7 @@ def pq_index_state(
             cb = pq_refine_step(comps, cb)
         cb.write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(cb_path, cb_path + ".done", _PQ_CB_TPL.format(tag="*"), build_cb)
-    cb = read_parquet(spark, cb_path)
+    cb = read_parquet(spark, PQ_CB.ensure(sf_dir, build_cb))
 
     def build_codes(tmp: str) -> None:
         from d3d_etl_spark.operators.pq import pq_encode_comps
@@ -3113,10 +3086,7 @@ def pq_index_state(
             "vec_id", "sub", "code"
         ).write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        codes_path, codes_path + ".done", _PQ_CODES_TPL.format(tag="*"), build_codes
-    )
-    return icents, cb, read_parquet(spark, codes_path)
+    return icents, cb, read_parquet(spark, PQ_CODES.ensure(sf_dir, build_codes))
 
 
 # Candidates come from the persisted IVF cell state (the _INC_PROBE_CTES
@@ -3133,9 +3103,9 @@ def pq_index_state(
 # (dt.label = cand.label). Exact-integer contract end-to-end: anchors are
 # round(sum/count) integers, residuals integer differences.
 _PQ_INC_CTES = f"""{_INC_PROBE_CTES},
-cb AS (SELECT sub, code, pos, c_q FROM read_parquet('{_PQ_CB_GLOB}')),
-ic AS (SELECT label, pos, c_int FROM read_parquet('{_PQ_ICENTS_GLOB}')),
-oldc AS (SELECT vec_id AS old_id, sub, code FROM read_parquet('{_PQ_CODES_GLOB}')),
+cb AS (SELECT sub, code, pos, c_q FROM read_parquet('{PQ_CB.glob}')),
+ic AS (SELECT label, pos, c_int FROM read_parquet('{PQ_ICENTS.glob}')),
+oldc AS (SELECT vec_id AS old_id, sub, code FROM read_parquet('{PQ_CODES.glob}')),
 newe AS (
   SELECT c.vec_id, p.label,
          c.pos // {_PQ_DSUB} AS sub,

@@ -27,7 +27,7 @@ from d3d_etl_spark.pbp.leaderboards import (
     handedness_splits_board,
 )
 from d3d_etl_spark.pbp.events import PA_EVENTS
-from d3d_etl_spark.queries.domain import _PARSED_GLOB, materialized_parsed
+from d3d_etl_spark.queries.domain import PARSED_PBP, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _NONAB = ("BB", "IBB", "HBP", "SF", "SH")
@@ -97,7 +97,7 @@ p AS (
              'T_' || CAST(contest_id AS VARCHAR) || '_'
                   || CASE WHEN half = 'Top' THEN 'away' ELSE 'home' END)
     AS batting_team)
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 wp AS (
   SELECT p.*,

@@ -176,12 +176,12 @@ def _er_re24_ctes() -> str:
     oracles (z_pbp_dag / z_pbp_war) build on these — factored so the RE24
     rewrite can never drift between them (the _lw_ctes(src) precedent of
     queries/domain.py)."""
-    from d3d_etl_spark.queries.domain import _PARSED_GLOB
+    from d3d_etl_spark.queries.domain import PARSED_PBP
 
     return f"""er AS (
   SELECT division, year, bases_before AS b, outs_before AS o,
          CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   WHERE outs_before <= 2
   GROUP BY 1, 2, 3, 4
 ),
@@ -189,7 +189,7 @@ p AS (
   SELECT pl.*,
          (CASE WHEN pl.outs_after >= 3 THEN 0.0 ELSE COALESCE(ea.erv, 0.0) END)
            - COALESCE(eb.erv, 0.0) + CAST(pl.runs_on_play AS DOUBLE) AS re24
-  FROM read_parquet('{_PARSED_GLOB}') pl
+  FROM read_parquet('{PARSED_PBP.glob}') pl
   LEFT JOIN er eb ON eb.division = pl.division AND eb.year = pl.year
                  AND eb.b = pl.bases_before AND eb.o = pl.outs_before
   LEFT JOIN er ea ON ea.division = pl.division AND ea.year = pl.year
@@ -361,7 +361,7 @@ def _pbp_war_oracle() -> str:
     from d3d_etl_spark.pbp.guts import _W_EVENTS
     from d3d_etl_spark.pbp.metrics import REACHING
     from d3d_etl_spark.queries.boards import _RUNNER_ACTION_SQL, _RUNNER_ONLY_IN
-    from d3d_etl_spark.queries.domain import _PARSED_GLOB, _lw_class_sql
+    from d3d_etl_spark.queries.domain import PARSED_PBP, _lw_class_sql
 
     _in = _ev_in
     weight_cols = ",\n         ".join(
@@ -410,7 +410,7 @@ league AS (
   SELECT division, year,
          CAST(SUM(runs_on_play) AS BIGINT) AS lg_runs,
          CAST(SUM(outs_on_play) AS BIGINT) AS lg_outs
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   GROUP BY 1, 2
 ),
 gutsrow AS (
@@ -438,7 +438,7 @@ counting AS (
          CAST(SUM(CASE WHEN event_type IN {_in(SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS k,
          CAST(SUM(CASE WHEN event_type = 'SF' THEN 1 ELSE 0 END) AS BIGINT) AS sf,
          CAST(SUM(CASE WHEN event_type = 'SH' THEN 1 ELSE 0 END) AS BIGINT) AS sh
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   WHERE batter_name IS NOT NULL
   GROUP BY 1, 2, 3
 ),
@@ -446,7 +446,7 @@ segs AS (
   SELECT division, year, event_type,
          unnest(string_split(play_text, ';')) AS seg,
          unnest(range(len(string_split(play_text, ';')))) AS pos
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 brclassed AS (
   SELECT division, year,

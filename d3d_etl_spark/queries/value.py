@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.io import barrier
-from d3d_etl_spark.queries.domain import _PARSED_GLOB, materialized_parsed
+from d3d_etl_spark.queries.domain import PARSED_PBP, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _CODES = ["NNN", "YNN", "NYN", "YYN", "NNY", "YNY", "NYY", "YYY"]
@@ -119,7 +119,7 @@ p0 AS (
   SELECT *,
          GREATEST(-10, LEAST(10, home_score_before - away_score_before)) AS dby,
          GREATEST(-10, LEAST(10, home_score_after - away_score_after)) AS day
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 st AS (
   SELECT *,
@@ -164,14 +164,14 @@ q AS (
   LEFT JOIN (
     SELECT division, year, bases_before AS bases, outs_before AS outs,
            CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-    FROM read_parquet('{_PARSED_GLOB}')
+    FROM read_parquet('{PARSED_PBP.glob}')
     WHERE outs_before <= 2 GROUP BY 1, 2, 3, 4
   ) eb ON m.division = eb.division AND m.year = eb.year
       AND m.bases_before = eb.bases AND m.outs_before = eb.outs
   LEFT JOIN (
     SELECT division, year, bases_before AS bases, outs_before AS outs,
            CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-    FROM read_parquet('{_PARSED_GLOB}')
+    FROM read_parquet('{PARSED_PBP.glob}')
     WHERE outs_before <= 2 GROUP BY 1, 2, 3, 4
   ) ea ON m.division = ea.division AND m.year = ea.year
       AND m.bases_after = ea.bases AND m.outs_after = ea.outs
@@ -179,7 +179,7 @@ q AS (
 rw AS (
   SELECT division, year,
          9.0 * (CAST(SUM(runs_on_play) AS DOUBLE) * 3.0 / SUM(outs_on_play)) * 1.5 + 3.0 AS runs_win
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   GROUP BY 1, 2
 )
 """

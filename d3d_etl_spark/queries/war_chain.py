@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from d3d_etl_spark.io import barrier
 from d3d_etl_spark.queries.domain import (
     _PA_EVENTS,
-    _PARSED_GLOB,
+    PARSED_PBP,
     _SO_EVENTS,
     _WAR_CTES_CHAIN,
     _sql_in,
@@ -49,7 +49,7 @@ pwp AS (
              || '_' || CAST(contest_id AS VARCHAR) AS pitcher_name,
          'T_' || CAST(contest_id AS VARCHAR)
               || (CASE WHEN half = 'Top' THEN '_home' ELSE '_away' END) AS pitch_team_id
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 pcount AS (
   SELECT division, year, pitcher_name AS player_id,
@@ -81,7 +81,7 @@ pguts AS (
                    ELSE 0.0 END),
            3) AS cfip,
          9.0 * (CAST(SUM(runs_on_play) AS DOUBLE) * 3.0 / SUM(outs_on_play)) * 1.5 + 3.0 AS runs_win
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   GROUP BY 1, 2
 ),
 pitwar AS (
@@ -369,7 +369,7 @@ WITH feed AS (
          runs_on_play AS runs_narration,
          CAST(away_score_after - (CASE WHEN play_id % 97 = 0 THEN 1 ELSE 0 END) AS VARCHAR) AS away_score,
          CAST(home_score_after - (CASE WHEN play_id % 97 = 0 THEN 1 ELSE 0 END) AS VARCHAR) AS home_score
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
 ),
 lagged AS (
   SELECT *,
@@ -495,7 +495,7 @@ rpa AS (
               THEN CAST(SUM(runs_on_play) AS DOUBLE)
                    / SUM(CASE WHEN event_type IN {_PA_IN} THEN 1 ELSE 0 END)
               ELSE 0.0 END AS runs_pa
-  FROM read_parquet('{_PARSED_GLOB}')
+  FROM read_parquet('{PARSED_PBP.glob}')
   GROUP BY 1, 2
 )"""
 

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.money import cents
-from d3d_etl_spark.io import load_table, read_parquet
+from d3d_etl_spark.io import StateFamily, load_table, read_parquet
 from d3d_etl_spark.queries.registry import register
 
 _Z_BITS = 16        # grid resolution per dimension
@@ -187,16 +187,14 @@ def z_io_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table, so the driver hash proves pruned-read == semantic answer.
 # ---------------------------------------------------------------------------
 
+ZORDERED_EVENTS = StateFamily("zordered_events")
+
+
 def _zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     """(layout_path, stats_df): the z-ordered events layout and its
-    per-bucket zone-map stats, built once per scale under .domain_cache.
-    The stats parquet is written in the same materialized family as the
-    layout so they can never desync."""
-    from d3d_etl_spark.queries.domain import _CACHE_DIR, _ensure_materialized, sf_tag
-
-    tag = sf_tag(sf_dir)
-    path = os.path.join(_CACHE_DIR, f"zordered_events_{tag}")
-    marker = path + ".done"
+    per-bucket zone-map stats, built once per scale. The stats parquet is
+    written in the same state family as the layout so they can never
+    desync."""
 
     def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -208,9 +206,7 @@ def _zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
         )
         z_io_zorder(spark, sf_dir).coalesce(1).write.parquet(os.path.join(tmp, "stats"))
 
-    _ensure_materialized(
-        path, marker, os.path.join(_CACHE_DIR, "zordered_events_*"), build
-    )
+    path = ZORDERED_EVENTS.ensure(sf_dir, build)
     return os.path.join(path, "data"), read_parquet(spark, os.path.join(path, "stats"))
 
 

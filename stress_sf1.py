@@ -669,23 +669,14 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     # read, not a build). Delete the serving-state families for
     # the two audited scales first, so the timed leg is the real one-time
     # index construction; everything downstream then runs warm as before.
-    import shutil
-
-    from d3d_etl_spark.queries.domain import _CACHE_DIR
-    from d3d_etl_spark.queries.domain import sf_tag as _sf_tag
-
-    _SRV_FAMILIES = (
-        "ivf_cents_s", "ivf_assign_s", "pq_icents_r", "pq_cb_r", "pq_codes_r"
+    from d3d_etl_spark.queries.simsearch import (
+        IVF_ASSIGN, IVF_CENTS, PQ_CB, PQ_CODES, PQ_ICENTS,
     )
+
     state_build: dict = {}
     for tag, d in (("sf0.1", SRC), ("sf1", DST)):
-        for fam in _SRV_FAMILIES:
-            base = os.path.join(_CACHE_DIR, f"{fam}_{_sf_tag(d)}")
-            shutil.rmtree(base, ignore_errors=True)
-            try:
-                os.remove(base + ".done")
-            except FileNotFoundError:
-                pass
+        for fam in (IVF_CENTS, IVF_ASSIGN, PQ_ICENTS, PQ_CB, PQ_CODES):
+            fam._evict(fam.path(d))
         t0 = time.time()
         ivf_index_state(spark, d)
         pq_index_state(spark, d)

@@ -104,18 +104,20 @@ def test_mixing_single_language(spark):
     assert rows[0]["n_kept"] <= rows[0]["n_docs"]
 
 
-def test_ensure_materialized_tmp_outside_glob(spark, tmp_path, monkeypatch):
-    """Crash-safety contract of the state materializer: builds happen in a
+def test_ensure_materialized_tmp_outside_glob(tmp_path, monkeypatch):
+    """Crash-safety contract of StateFamily.ensure: builds happen in a
     DOT-prefixed temp dir that the family glob cannot match, and stale
     crash leftovers are swept on the next regeneration."""
     import glob
     import os
 
-    import d3d_etl_spark.queries.domain as dom
+    from d3d_etl_spark import io
 
     cache = str(tmp_path / "cache")
     os.makedirs(cache)
-    monkeypatch.setattr(dom, "_CACHE_DIR", cache)
+    monkeypatch.setattr(io, "STATE_ROOT", cache)
+    monkeypatch.setattr(io, "STATE_FAMILIES", {})
+    fam = io.StateFamily("fam", key=str)
 
     path = os.path.join(cache, "fam_a")
     # a previous crashed build left its temp dir behind
@@ -132,16 +134,17 @@ def test_ensure_materialized_tmp_outside_glob(spark, tmp_path, monkeypatch):
         with open(os.path.join(tmp, "data.parquet"), "w") as f:
             f.write("ok")
 
-    dom._ensure_materialized(path, path + ".done", os.path.join(cache, "fam_*"), build)
+    assert fam.ensure("a", build) == path
 
     # build ran in a dot-prefixed dir the family glob can never see
     assert os.path.basename(seen_tmp["path"]).startswith(".tmp_")
     assert glob.glob(os.path.join(cache, "fam_*", "*.parquet")) == [
         os.path.join(path, "data.parquet")
     ]
+    assert fam.glob == os.path.join(cache, "fam_*", "*.parquet")
     # the crash leftover was swept
     assert not os.path.exists(stale)
     # idempotent fast path: a second call does not rebuild
     seen_tmp.clear()
-    dom._ensure_materialized(path, path + ".done", os.path.join(cache, "fam_*"), build)
+    assert fam.ensure("a", build) == path
     assert not seen_tmp

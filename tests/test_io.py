@@ -174,22 +174,6 @@ def test_write_sizing_and_compaction(spark, sf_dir, tmp_path):
     assert back.count() == n
 
 
-def test_ensure_table_builds_once(spark, tmp_path):
-    from d3d_etl_spark.io import ensure_table
-
-    calls = []
-
-    def build():
-        calls.append(1)
-        return spark.range(10).selectExpr("id", "id * 2 AS v")
-
-    path = str(tmp_path / "memo")
-    a = ensure_table(spark, path, build)
-    b = ensure_table(spark, path, build)
-    assert a.count() == b.count() == 10
-    assert len(calls) == 1  # second call scanned, didn't rebuild
-
-
 def test_table_count_sees_rebuilt_table(spark, tmp_path):
     """table_count memoizes per (path, mtime), as read_parquet does: a
     table rebuilt under a live process is counted afresh, not served the

@@ -142,6 +142,20 @@ def test_batted_ball_board(parsed):
     assert board["LEWIS, I."]["gb"] == 1
 
 
+def test_baserunning_runner_only_in_list_sorted(spark):
+    """The runner-only IN-list is built in sorted order, so the plan text of
+    every query over baserunning_board is the same under any
+    PYTHONHASHSEED (it was the iteration order of a Python set)."""
+    from d3d_etl_spark.pbp.leaderboards import baserunning_board
+
+    plays = spark.createDataFrame(
+        [("ncaa_3", 2024, "SB", "JONES, A. stole second.")],
+        "division string, year int, event_type string, play_text string",
+    )
+    plan = baserunning_board(plays)._jdf.queryExecution().analyzed().toString()
+    assert "IN (ADV,BK,CS,DI,ERR,PB,PK,PKE,SB,WP)" in plan, plan
+
+
 def test_baserunning_board(parsed):
     from d3d_etl_spark.pbp.leaderboards import baserunning_board
 

@@ -553,6 +553,53 @@ def test_localcheckpoint_only_in_barrier():
     )
 
 
+def test_state_layout_only_in_io():
+    """Source pin: io.StateFamily is the only code that knows the layout of
+    persisted per-scale state: the `.done` marker, the flock, the atomic
+    `os.replace`, and every path under the state root. Everything else
+    reaches its state through a family's `ensure`, `path` and `glob`. The
+    one exception is queries/domain.py re-exporting the root as
+    `_CACHE_DIR` (perfbench reads it)."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    files = [
+        *sorted((repo / "d3d_etl_spark").rglob("*.py")),
+        repo / "bench.py",
+        repo / "stress_sf1.py",
+    ]
+    reexport = ("d3d_etl_spark/queries/domain.py", "STATE_ROOT", "_CACHE_DIR")
+    offenders = []
+    for py in files:
+        rel = str(py.relative_to(repo))
+        if rel == "d3d_etl_spark/io.py":
+            continue
+        text = py.read_text()
+        offenders += [
+            f"{rel}: {tok!r}"
+            for tok in (".done", "fcntl", "os.replace", ".domain_cache")
+            if tok in text
+        ]
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names if (rel, a.name, a.asname) != reexport]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [f".{node.attr}"]  # a family's .root
+            else:
+                continue
+            offenders += [
+                f"{rel}:{node.lineno}: {n}"
+                for n in names
+                if n in ("STATE_ROOT", "_CACHE_DIR", ".root")
+            ]
+    assert not offenders, "state layout outside io.StateFamily:\n" + "\n".join(
+        offenders
+    )
+
+
 def test_no_unreferenced_top_level_names_in_package():
     """Package-wide source pin: every top-level name defined in
     d3d_etl_spark/ is referenced somewhere besides its own definition — in

@@ -188,9 +188,9 @@ def test_pq_incremental_state_discipline(spark, sf_dir):
     # appear only for the new-batch scan
     import glob
 
-    from d3d_etl_spark.queries.simsearch import _PQ_CODES_GLOB
+    from d3d_etl_spark.queries.simsearch import PQ_CODES
 
-    assert glob.glob(_PQ_CODES_GLOB), _PQ_CODES_GLOB
+    assert glob.glob(PQ_CODES.glob), PQ_CODES.glob
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("embeddings.parquet") <= 2  # new-batch scan only
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import fcntl
 import glob
+import hashlib
 import os
 import re
 import shutil
@@ -178,10 +179,14 @@ STATE_FAMILIES: dict[str, StateFamily] = {}
 
 def sf_tag(sf_dir: str) -> str:
     """The default scale key: the sf token of the data dir, dots mangled
-    for path safety (sf0.01 -> '0p01'). The incremental text and embedding
-    families share it, so a scale switch moves them together."""
+    for path safety (sf0.01 -> '0p01'). A dir without an sf token is its
+    own scale: 'x' plus a short hash of its absolute path, so two such
+    corpora never share state. The incremental text and embedding
+    families share the key, so a scale switch moves them together."""
     m = re.search(r"sf([0-9.]+)", sf_dir)
-    return (m.group(1) if m else "x").replace(".", "p")
+    if m:
+        return m.group(1).replace(".", "p")
+    return "x" + hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
 
 
 class StateFamily:

@@ -74,12 +74,13 @@ NO_PLAY = "NP"
 # strikeout family (leaderboard K counts); _SAFE/_WP/_PB = batter reached
 SO_EVENTS = ("SO", "SO_WP", "SO_PB", "SO_SAFE")
 
-# events where the batter completes a plate appearance
-PA_EVENTS = {
+# events where the batter completes a plate appearance; sorted, so every
+# IN-list built from it reads the same under any PYTHONHASHSEED
+PA_EVENTS = tuple(sorted({
     "HR", "3B", "2B", "1B", "ROE", "FC", "HBP", "IBB", "BB",
     "SO_WP", "SO_PB", "SO_SAFE", "GDP", "TP", "DP", "SO",
     "SF", "SH", "GO", "FO", "LO", "PO", "FOUL", "IF", "CI",
-}
+}))
 
 # outs charged directly by the batter's event
 EVENT_OUTS = {

@@ -10,10 +10,11 @@ table; each board is then one shuffle on its grain).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.math import safe_div
+from d3d_etl_spark.functions.trees import cols, per_gateway
 from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
 
 _HIT_EVENTS = ("1B", "2B", "3B", "HR")
@@ -24,15 +25,17 @@ def _n(cond) -> F.Column:
     return F.sum(F.when(cond, 1).otherwise(0))
 
 
-def batting_board(plays: DataFrame, min_pa: int = 1) -> DataFrame:
-    """Player-grain counting stats from parsed plays (reference
-    leaderboards/common.py:23-63 event-count aggregation)."""
+_BATTER_GRAIN = ("division", "year", "batter_name")
+
+
+@per_gateway
+def _batting_trees(min_pa: int, has_re24: bool) -> tuple:
+    """(batter rows, aggregates, PA floor, on-base rate)."""
     ev = F.col("event_type")
     pa_cond = ev.isin(*PA_EVENTS)
-    board = (
-        plays.where(F.col("batter_name").isNotNull())
-        .groupBy("division", "year", "batter_name")
-        .agg(
+    return (
+        F.col("batter_name").isNotNull(),
+        [
             _n(pa_cond).alias("pa"),
             _n(ev.isin(*_HIT_EVENTS)).alias("h"),
             _n(ev == "1B").alias("b1"),
@@ -50,14 +53,48 @@ def batting_board(plays: DataFrame, min_pa: int = 1) -> DataFrame:
             (
                 F.sum(F.round(F.col("re24") * 1_000_000_000).cast("long")).cast("double") / 1e9
             ).alias("re24_total")
-            if "re24" in plays.columns
+            if has_re24
             else F.lit(None).alias("re24_total"),
-        )
-        .where(F.col("pa") >= min_pa)
-    )
-    return board.withColumn(
-        "ob_pct",
+        ],
+        F.col("pa") >= min_pa,
         safe_div((F.col("h") + F.col("bb") + F.col("hbp")).cast("double"), F.col("pa")),
+    )
+
+
+def batting_board(plays: DataFrame, min_pa: int = 1) -> DataFrame:
+    """Player-grain counting stats from parsed plays (reference
+    leaderboards/common.py:23-63 event-count aggregation)."""
+    batters, aggs, enough_pa, ob_pct = _batting_trees(min_pa, "re24" in plays.columns)
+    board = plays.where(batters).groupBy(*cols(*_BATTER_GRAIN)).agg(*aggs).where(enough_pa)
+    return board.withColumn("ob_pct", ob_pct)
+
+
+@per_gateway
+def _situational_trees(min_pa: int) -> tuple:
+    """(batter rows, aggregates, PA floor, published columns)."""
+    ev = F.col("event_type")
+    pa_cond = ev.isin(*PA_EVENTS)
+    ob_cond = ev.isin(*_OB_EVENTS)
+    risp = risp_cond()
+    empty = F.col("bases_before") == "NNN"
+    return (
+        F.col("batter_name").isNotNull(),
+        [
+            _n(pa_cond).alias("pa_overall"),
+            _n(ob_cond).alias("ob_overall"),
+            _n(pa_cond & risp).alias("pa_risp"),
+            _n(ob_cond & risp).alias("ob_risp"),
+            _n(pa_cond & empty).alias("pa_empty"),
+            _n(ob_cond & empty).alias("ob_empty"),
+        ],
+        F.col("pa_overall") >= min_pa,
+        [
+            *cols(*_BATTER_GRAIN, "pa_overall", "pa_risp", "pa_empty"),
+            *[
+                safe_div(F.col(f"ob_{s}").cast("double"), F.col(f"pa_{s}")).alias(f"ob_pct_{s}")
+                for s in ("overall", "risp", "empty")
+            ],
+        ],
     )
 
 
@@ -65,30 +102,10 @@ def situational_board(plays: DataFrame, min_pa: int = 1) -> DataFrame:
     """Situational splits (reference situational.py:19-44): overall vs
     runners-in-scoring-position vs bases-empty, as conditional aggs (A8 as
     sum(when) rather than pivot — fixed columns, one pass)."""
-    ev = F.col("event_type")
-    pa_cond = ev.isin(*PA_EVENTS)
-    ob_cond = ev.isin(*_OB_EVENTS)
-    risp = F.col("bases_before").substr(2, 2) != "NN"  # runner on 2nd or 3rd
-    empty = F.col("bases_before") == "NNN"
+    batters, aggs, enough_pa, published = _situational_trees(min_pa)
     return (
-        plays.where(F.col("batter_name").isNotNull())
-        .groupBy("division", "year", "batter_name")
-        .agg(
-            _n(pa_cond).alias("pa_overall"),
-            _n(ob_cond).alias("ob_overall"),
-            _n(pa_cond & risp).alias("pa_risp"),
-            _n(ob_cond & risp).alias("ob_risp"),
-            _n(pa_cond & empty).alias("pa_empty"),
-            _n(ob_cond & empty).alias("ob_empty"),
-        )
-        .where(F.col("pa_overall") >= min_pa)
-        .select(
-            "division", "year", "batter_name",
-            "pa_overall", "pa_risp", "pa_empty",
-            safe_div(F.col("ob_overall").cast("double"), F.col("pa_overall")).alias("ob_pct_overall"),
-            safe_div(F.col("ob_risp").cast("double"), F.col("pa_risp")).alias("ob_pct_risp"),
-            safe_div(F.col("ob_empty").cast("double"), F.col("pa_empty")).alias("ob_pct_empty"),
-        )
+        plays.where(batters).groupBy(*cols(*_BATTER_GRAIN)).agg(*aggs).where(enough_pa)
+        .select(*published)
     )
 
 
@@ -159,13 +176,12 @@ def add_split_rates(board: DataFrame, suffixes: list[str]) -> DataFrame:
     return out
 
 
-def clutch_board(plays_with_wp: DataFrame) -> DataFrame:
-    """Clutch/value stats (reference batting.py:174-211, value.py:34-38):
-    WPA sums with positive/negative splits and mean leverage."""
+@per_gateway
+def _clutch_trees() -> tuple[Column, list[Column]]:
+    """(batter rows with a WPA, aggregates)."""
     return (
-        plays_with_wp.where(F.col("batter_name").isNotNull() & F.col("wpa").isNotNull())
-        .groupBy("division", "year", "batter_name")
-        .agg(
+        F.col("batter_name").isNotNull() & F.col("wpa").isNotNull(),
+        [
             F.sum("wpa").alias("wpa"),
             # pandas' sum over an empty selection is 0, not NULL — a player
             # with no positive (or negative) WPA plays must get 0.0 so
@@ -179,24 +195,23 @@ def clutch_board(plays_with_wp: DataFrame) -> DataFrame:
             F.sum("wpa_li").alias("wpa_li"),
             F.avg("li").alias("avg_li"),
             F.count("*").alias("n_plays"),
-        )
+        ],
     )
 
 
-def pitching_board(plays_with_pitchers: DataFrame) -> DataFrame:
-    """Pitcher-grain board (reference pitching.py:111-168): outs recorded,
-    strikeouts, baserunners allowed, plus W15 reliever detection — a
-    pitcher whose FIRST play in a game is after the 1st inning entered in
-    relief (reference pitching.py:162-168 takes the first row per
-    (pitcher, contest) and tests inning > 1)."""
-    from pyspark.sql import Window
+def clutch_board(plays_with_wp: DataFrame) -> DataFrame:
+    """Clutch/value stats (reference batting.py:174-211, value.py:34-38):
+    WPA sums with positive/negative splits and mean leverage."""
+    batters, aggs = _clutch_trees()
+    return plays_with_wp.where(batters).groupBy(*cols(*_BATTER_GRAIN)).agg(*aggs)
 
+
+@per_gateway
+def _pitching_trees() -> tuple[Column, Column, list[Column]]:
+    """(pitcher rows, first play of the pitcher in a game, aggregates)."""
     ev = F.col("event_type")
     first_seen = Window.partitionBy("contest_id", "pitcher_name").orderBy("play_id")
-    flagged = plays_with_pitchers.where(F.col("pitcher_name").isNotNull()).withColumn(
-        "_first", F.row_number().over(first_seen) == 1
-    )
-    return flagged.groupBy("division", "year", "pitcher_name").agg(
+    return F.col("pitcher_name").isNotNull(), F.row_number().over(first_seen) == 1, [
         F.countDistinct("contest_id").alias("games"),
         F.sum("outs_on_play").alias("outs_recorded"),
         _n(ev.isin(*SO_EVENTS)).alias("so"),
@@ -206,7 +221,18 @@ def pitching_board(plays_with_pitchers: DataFrame) -> DataFrame:
         F.max(F.when(F.col("_first") & (F.col("inning") > 1), 1).otherwise(0)).alias(
             "entered_in_relief"
         ),
-    )
+    ]
+
+
+def pitching_board(plays_with_pitchers: DataFrame) -> DataFrame:
+    """Pitcher-grain board (reference pitching.py:111-168): outs recorded,
+    strikeouts, baserunners allowed, plus W15 reliever detection — a
+    pitcher whose FIRST play in a game is after the 1st inning entered in
+    relief (reference pitching.py:162-168 takes the first row per
+    (pitcher, contest) and tests inning > 1)."""
+    pitchers, first, aggs = _pitching_trees()
+    flagged = plays_with_pitchers.where(pitchers).withColumn("_first", first)
+    return flagged.groupBy(*cols("division", "year", "pitcher_name")).agg(*aggs)
 
 
 def rolling_form_board(
@@ -219,8 +245,6 @@ def rolling_form_board(
     (null until the frame holds n PAs). `entity_col` selects the grain:
     batter (reference rolling.py default) or pitcher (rolling_pitcher —
     on-base rate ALLOWED over the last n batters faced)."""
-    from pyspark.sql import Window
-
     from d3d_etl_spark.operators.windows import latest_per_key, rolling_sum_minp
 
     ev = F.col("event_type")
@@ -252,6 +276,31 @@ def rolling_form_board(
     )
 
 
+_BB_TYPES = ("gb", "fb", "ld", "pu")
+
+
+@per_gateway
+def _batted_ball_trees(min_bb: int, entity_col: str) -> tuple:
+    """(entity rows, aggregates, batted balls, floor, type shares)."""
+    ev = F.col("event_type")
+    kinds = {
+        "gb": ev.isin("GO", "GDP", "TP", "DP"),
+        "fb": ev.isin("FO", "SF"),
+        "ld": ev == "LO",
+        "pu": ev.isin("PO", "IF", "FOUL"),
+    }
+    return (
+        F.col(entity_col).isNotNull(),
+        [_n(kinds[c]).alias(c) for c in _BB_TYPES],
+        F.col("gb") + F.col("fb") + F.col("ld") + F.col("pu"),
+        F.col("batted_balls") >= min_bb,
+        {
+            f"{c}_pct": F.round(safe_div(F.col(c).cast("double"), F.col("batted_balls")), 3)
+            for c in _BB_TYPES
+        },
+    )
+
+
 def batted_ball_board(
     plays: DataFrame, min_bb: int = 1, entity_col: str = "batter_name"
 ) -> DataFrame:
@@ -259,37 +308,60 @@ def batted_ball_board(
     distribution; published at batter, pitcher and both team grains —
     leaderboards/main.py output_files): one conditional-agg pass over
     contact events, grain selected by `entity_col`."""
-    ev = F.col("event_type")
-    gb = ev.isin("GO", "GDP", "TP", "DP")
-    fb = ev.isin("FO", "SF")
-    ld = ev == "LO"
-    pu = ev.isin("PO", "IF", "FOUL")
-    board = (
-        plays.where(F.col(entity_col).isNotNull())
-        .groupBy("division", "year", entity_col)
-        .agg(
-            _n(gb).alias("gb"),
-            _n(fb).alias("fb"),
-            _n(ld).alias("ld"),
-            _n(pu).alias("pu"),
-        )
-        .withColumn(
-            "batted_balls", F.col("gb") + F.col("fb") + F.col("ld") + F.col("pu")
-        )
-        .where(F.col("batted_balls") >= min_bb)
+    entities, aggs, batted_balls, enough, shares = _batted_ball_trees(min_bb, entity_col)
+    return (
+        plays.where(entities)
+        .groupBy(*cols("division", "year", entity_col))
+        .agg(*aggs)
+        .withColumn("batted_balls", batted_balls)
+        .where(enough)
+        .withColumns(shares)
     )
-    for c in ("gb", "fb", "ld", "pu"):
-        board = board.withColumn(
-            f"{c}_pct",
-            F.round(safe_div(F.col(c).cast("double"), F.col("batted_balls")), 3),
-        )
-    return board
 
 
 _RUNNER_ACTION = (
     r"^\s*(.*?)\s+(stole (?:second|third|home)|caught stealing|picked off"
     r"|advanced to (?:second|third|home)|scored|out at (?:second|third|home))"
 )
+
+
+@per_gateway
+def _baserunning_trees(min_events: int, entity_col: str | None) -> tuple:
+    """(segment columns, runner segments, classified columns, classified
+    rows, grouping, aggregates, event total, floor, steal rate)."""
+    from d3d_etl_spark.pbp.state import _RUNNER_ONLY
+
+    group_col = entity_col or "runner_name"
+    carry = ["division", "year", "event_type"] + ([entity_col] if entity_col else [])
+    seg = F.posexplode(F.split(F.col("play_text"), ";"))
+    name = F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 1)
+    action = F.col("action")
+    return (
+        [*cols(*carry), seg.alias("pos", "seg")],
+        # segment 0 is the BATTER's action (its trailing "advanced to" is a
+        # batter extra advance, not a runner) — except on runner-only events,
+        # where the acting runner IS segment 0
+        (F.col("pos") > 0) | F.col("event_type").isin(*sorted(_RUNNER_ONLY)),
+        [
+            *cols("division", "year"),
+            (F.col(entity_col) if entity_col else name).alias(group_col),
+            F.lower(F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 2)).alias("action"),
+            name.alias("_runner"),
+        ],
+        (F.col("_runner") != "") & (action != ""),
+        cols("division", "year", group_col),
+        [
+            _n(action.startswith("stole")).alias("sb"),
+            _n(action == "caught stealing").alias("cs"),
+            _n(action == "picked off").alias("pk"),
+            _n(action.startswith("advanced")).alias("advances"),
+            _n(action == "scored").alias("runs_scored"),
+            _n(action.startswith("out at")).alias("outs_on_bases"),
+        ],
+        F.expr("sb + cs + pk + advances + runs_scored + outs_on_bases"),
+        F.col("n_events") >= min_events,
+        F.round(safe_div(F.col("sb").cast("double"), F.col("sb") + F.col("cs")), 3),
+    )
 
 
 def baserunning_board(
@@ -305,41 +377,15 @@ def baserunning_board(
     `entity_col=None` groups by the extracted runner name; a column name
     (e.g. a batting-team id) groups the same classified segments by that
     play-level column instead — the team rollup."""
-    from d3d_etl_spark.pbp.state import _RUNNER_ONLY
-
-    group_col = entity_col or "runner_name"
-    seg = F.posexplode(F.split(F.col("play_text"), ";"))
-    carry = ["division", "year", "event_type"] + ([entity_col] if entity_col else [])
-    segs = plays.select(*carry, seg.alias("pos", "seg")).where(
-        # segment 0 is the BATTER's action (its trailing "advanced to" is a
-        # batter extra advance, not a runner) — except on runner-only events,
-        # where the acting runner IS segment 0
-        (F.col("pos") > 0) | F.col("event_type").isin(*sorted(_RUNNER_ONLY))
-    )
-    name = F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 1)
-    action = F.lower(F.regexp_extract(F.col("seg"), _RUNNER_ACTION, 2))
-    classed = segs.select(
-        "division", "year",
-        (F.col(entity_col) if entity_col else name).alias(group_col),
-        action.alias("action"),
-        name.alias("_runner"),
-    ).where((F.col("_runner") != "") & (F.col("action") != ""))
+    (
+        seg_cols, runner_segs, classed_cols, classed_rows, grain, aggs,
+        n_events, enough, sb_pct,
+    ) = _baserunning_trees(min_events, entity_col)
+    classed = plays.select(*seg_cols).where(runner_segs).select(*classed_cols).where(classed_rows)
     board = (
-        classed.groupBy("division", "year", group_col)
-        .agg(
-            _n(F.col("action").startswith("stole")).alias("sb"),
-            _n(F.col("action") == "caught stealing").alias("cs"),
-            _n(F.col("action") == "picked off").alias("pk"),
-            _n(F.col("action").startswith("advanced")).alias("advances"),
-            _n(F.col("action") == "scored").alias("runs_scored"),
-            _n(F.col("action").startswith("out at")).alias("outs_on_bases"),
-        )
-        .withColumn("n_events", F.expr("sb + cs + pk + advances + runs_scored + outs_on_bases"))
-        .where(F.col("n_events") >= min_events)
+        classed.groupBy(*grain).agg(*aggs).withColumn("n_events", n_events).where(enough)
     )
-    return board.withColumn(
-        "sb_pct", F.round(safe_div(F.col("sb").cast("double"), F.col("sb") + F.col("cs")), 3)
-    )
+    return board.withColumn("sb_pct", sb_pct)
 
 
 def team_rollup(

@@ -17,44 +17,32 @@ contest_id, so that partitioning satisfies all of them, and games never
 span partitions — the FSM walks each partition in (contest_id, play_id)
 order. Games are independent, so the whole pipeline scales with the
 number of games.
+
+Each stage takes its fixed Column trees from a per_gateway builder
+(functions/trees.py) and adds one dependency level of columns per
+withColumns call, in the parse's published column order.
 """
 
 from __future__ import annotations
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from d3d_etl_spark.functions.trees import cols, per_gateway
 from d3d_etl_spark.operators.windows import (
+    ffill,
     group_total,
     reverse_running_sum,
     running_sum_before,
 )
-from d3d_etl_spark.pbp.events import classify_event, outs_on_play, runs_on_play
+from d3d_etl_spark.pbp.events import PA_EVENTS, classify_event, outs_on_play, runs_on_play
 from d3d_etl_spark.pbp.state import _BATTER_VERBS, STATE_COLUMNS, base_state_arrow_iter
 
-# The add_events Column trees, built once per live JVM gateway: building
-# them costs ~150 serialized Python->JVM calls of driver time per parse.
-# Only the unresolved expressions are shared; every parse still analyzes,
-# plans and executes its own plan.
-_EVENT_TREES: tuple = (None, None)  # (gateway, trees)
 
-
-def _event_trees() -> tuple[Column, Column, Column, Column]:
-    """(event_type, outs_on_play, runs_on_play, batter) over play_text."""
-    global _EVENT_TREES
-    gateway = SparkContext._gateway
-    if _EVENT_TREES[0] is not gateway or _EVENT_TREES[1] is None:
-        text = F.col("play_text")
-        first_seg = F.split(text, ";").getItem(0)
-        _EVENT_TREES = (gateway, (
-            classify_event(text),
-            outs_on_play(text, F.col("event_type")),
-            runs_on_play(text),
-            F.regexp_extract(first_seg, rf"^\s*(.*?)\s+(?:{_BATTER_VERBS})", 1),
-        ))
-    return _EVENT_TREES[1]
+@per_gateway
+def _has_game() -> Column:
+    return F.col("contest_id").isNotNull()
 
 
 def game_partitioned(raw: DataFrame) -> DataFrame:
@@ -62,7 +50,22 @@ def game_partitioned(raw: DataFrame) -> DataFrame:
     rest on contest_id at session parallelism, so whole games share a
     partition and every later per-game window runs without a shuffle."""
     n = raw.sparkSession.sparkContext.defaultParallelism
-    return raw.where(F.col("contest_id").isNotNull()).repartition(n, "contest_id")
+    return raw.where(_has_game()).repartition(n, *cols("contest_id"))
+
+
+@per_gateway
+def _metadata_trees() -> tuple[dict[str, Column], Column, Column]:
+    away = F.col("away_text")
+    text = F.col("play_text")
+    w = Window.partitionBy("contest_id").orderBy("source_seq")
+    return (
+        {
+            "half": F.when(away.isNotNull() & (away != ""), "Top").otherwise("Bottom"),
+            "play_text": F.coalesce(away, F.col("home_text")),
+        },
+        text.isNotNull() & (text != ""),
+        F.row_number().over(w).cast("long"),
+    )
 
 
 def add_metadata(raw: DataFrame) -> DataFrame:
@@ -70,50 +73,62 @@ def add_metadata(raw: DataFrame) -> DataFrame:
 
     Exactly one of home_text/away_text is populated per row; away bats Top.
     """
-    w = Window.partitionBy("contest_id").orderBy("source_seq")
-    return (
-        raw.withColumn(
-            "half",
-            F.when(F.col("away_text").isNotNull() & (F.col("away_text") != ""), "Top").otherwise(
-                "Bottom"
-            ),
-        )
-        .withColumn("play_text", F.coalesce(F.col("away_text"), F.col("home_text")))
-        .where(F.col("play_text").isNotNull() & (F.col("play_text") != ""))
-        .withColumn("play_id", F.row_number().over(w).cast("long"))
+    half_text, has_text, play_id = _metadata_trees()
+    return raw.withColumns(half_text).where(has_text).withColumn("play_id", play_id)
+
+
+@per_gateway
+def _event_trees(has_teams: bool) -> tuple[Column, dict[str, Column]]:
+    """(event_type, the columns that follow it) over play_text; the batting
+    team is NULL when the raw rows carry no team ids."""
+    text = F.col("play_text")
+    batter = F.regexp_extract(
+        F.split(text, ";").getItem(0), rf"^\s*(.*?)\s+(?:{_BATTER_VERBS})", 1
     )
+    team = (
+        F.when(F.col("half") == "Top", F.col("away_team_id")).otherwise(F.col("home_team_id"))
+        if has_teams
+        else F.lit(None).cast("string")
+    )
+    return classify_event(text), {
+        "outs_on_play": outs_on_play(text, F.col("event_type")),
+        "runs_on_play": runs_on_play(text),
+        "batter_name": F.when(batter != "", batter).otherwise(F.lit(None).cast("string")),
+        "batting_team": team,
+    }
 
 
 def add_events(df: DataFrame) -> DataFrame:
-    ev, outs, runs, batter = _event_trees()
-    return (
-        df.withColumn("event_type", ev)
-        .withColumn("outs_on_play", outs)
-        .withColumn("runs_on_play", runs)
-        .withColumn(
-            "batter_name", F.when(batter != "", batter).otherwise(F.lit(None).cast("string"))
-        )
-        .withColumn(
-            "batting_team",
-            F.when(F.col("half") == "Top", F.col("away_team_id")).otherwise(
-                F.col("home_team_id")
-            ) if "away_team_id" in df.columns else F.lit(None).cast("string"),
-        )
-    )
+    event_type, rest = _event_trees("away_team_id" in df.columns)
+    return df.withColumn("event_type", event_type).withColumns(rest)
+
+
+@per_gateway
+def _outs_runs_trees() -> tuple[Column, dict[str, Column]]:
+    w = Window.partitionBy("contest_id", "inning", "half").orderBy("play_id")
+    runs = F.col("runs_on_play")
+    return running_sum_before(F.col("outs_on_play"), w).cast("int"), {
+        "outs_after": (F.col("outs_before") + F.col("outs_on_play")).cast("int"),
+        "runs_this_inn": group_total(runs, ["contest_id", "inning", "half"]).cast("int"),
+        "runs_roi": reverse_running_sum(runs, w).cast("int"),
+    }
 
 
 def add_outs_runs_windows(df: DataFrame) -> DataFrame:
     """W3/W5/W6 over (contest, inning, half) ordered by play_id."""
-    w = Window.partitionBy("contest_id", "inning", "half").orderBy("play_id")
-    part = ["contest_id", "inning", "half"]
-    return (
-        df.withColumn("outs_before", running_sum_before(F.col("outs_on_play"), w).cast("int"))
-        .withColumn("outs_after", (F.col("outs_before") + F.col("outs_on_play")).cast("int"))
-        .withColumn("runs_this_inn", group_total(F.col("runs_on_play"), part).cast("int"))
-        .withColumn(
-            "runs_roi", reverse_running_sum(F.col("runs_on_play"), w).cast("int")
-        )
+    outs_before, rest = _outs_runs_trees()
+    return df.withColumn("outs_before", outs_before).withColumns(rest)
+
+
+@per_gateway
+def _bat_order_tree() -> Column:
+    is_pa = F.col("event_type").isin(*PA_EVENTS)
+    w = Window.partitionBy("contest_id", "half").orderBy("play_id")
+    pa_idx = F.sum(F.when(is_pa, 1).otherwise(0)).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)
     )
+    slot = F.when(is_pa, ((pa_idx - 1) % 9 + 1).cast("int"))
+    return F.coalesce(ffill(slot, w), F.lit(1)).cast("int")
 
 
 def add_bat_order(df: DataFrame) -> DataFrame:
@@ -121,16 +136,22 @@ def add_bat_order(df: DataFrame) -> DataFrame:
     helpers.py:119-128: ``((pa_idx - 1) % 9) + 1`` over plate appearances,
     then propagated to non-PA rows (steals, wild pitches) by grouped
     ffill — helpers.py:131-139)."""
-    from d3d_etl_spark.operators.windows import ffill
-    from d3d_etl_spark.pbp.events import PA_EVENTS
+    return df.withColumn("bat_order", _bat_order_tree())
 
-    is_pa = F.col("event_type").isin(*PA_EVENTS)
-    w = Window.partitionBy("contest_id", "half").orderBy("play_id")
-    pa_idx = F.sum(F.when(is_pa, 1).otherwise(0)).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    slot = F.when(is_pa, ((pa_idx - 1) % 9 + 1).cast("int"))
-    return df.withColumn("bat_order", F.coalesce(ffill(slot, w), F.lit(1)).cast("int"))
+
+@per_gateway
+def _score_trees() -> tuple[dict[str, Column], dict[str, Column]]:
+    w = Window.partitionBy("contest_id").orderBy("play_id")
+    home_r = F.when(F.col("half") == "Bottom", F.col("runs_on_play")).otherwise(F.lit(0))
+    away_r = F.when(F.col("half") == "Top", F.col("runs_on_play")).otherwise(F.lit(0))
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    return {
+        "home_score_before": F.coalesce(F.sum(home_r).over(before), F.lit(0)).cast("int"),
+        "away_score_before": F.coalesce(F.sum(away_r).over(before), F.lit(0)).cast("int"),
+    }, {
+        "home_score_after": (F.col("home_score_before") + home_r).cast("int"),
+        "away_score_after": (F.col("away_score_before") + away_r).cast("int"),
+    }
 
 
 def add_scores(df: DataFrame) -> DataFrame:
@@ -138,22 +159,8 @@ def add_scores(df: DataFrame) -> DataFrame:
     144-159 derives score_before via segmented cumsums; with runs already
     per-play the plain running sum per game suffices — runs credit the
     batting side: Top = away, Bottom = home)."""
-    w = Window.partitionBy("contest_id").orderBy("play_id")
-    home_r = F.when(F.col("half") == "Bottom", F.col("runs_on_play")).otherwise(F.lit(0))
-    away_r = F.when(F.col("half") == "Top", F.col("runs_on_play")).otherwise(F.lit(0))
-    before = w.rowsBetween(Window.unboundedPreceding, -1)
-    return (
-        df.withColumn(
-            "home_score_before",
-            F.coalesce(F.sum(home_r).over(before), F.lit(0)).cast("int"),
-        )
-        .withColumn(
-            "away_score_before",
-            F.coalesce(F.sum(away_r).over(before), F.lit(0)).cast("int"),
-        )
-        .withColumn("home_score_after", (F.col("home_score_before") + home_r).cast("int"))
-        .withColumn("away_score_after", (F.col("away_score_before") + away_r).cast("int"))
-    )
+    before, after = _score_trees()
+    return df.withColumns(before).withColumns(after)
 
 
 def add_source_score_runs(df: DataFrame) -> DataFrame:
@@ -191,7 +198,7 @@ def add_base_state(df: DataFrame) -> DataFrame:
     out_schema = StructType(
         df.schema.fields + [StructField(c, StringType()) for c in STATE_COLUMNS]
     )
-    return df.sortWithinPartitions("contest_id", "play_id").mapInArrow(
+    return df.sortWithinPartitions(*cols("contest_id", "play_id")).mapInArrow(
         base_state_arrow_iter, out_schema
     )
 
@@ -201,7 +208,7 @@ def _with_base_state(spine: DataFrame) -> DataFrame:
     parse has always had."""
     keys = ["contest_id", "play_id"]
     rest = [c for c in spine.columns if c not in keys]
-    return add_base_state(spine).select(*keys, *rest, *STATE_COLUMNS)
+    return add_base_state(spine).select(*cols(*keys, *rest, *STATE_COLUMNS))
 
 
 def parse_pbp(raw: DataFrame) -> DataFrame:
@@ -229,6 +236,27 @@ def parse_pbp_with_source_scores(raw: DataFrame) -> DataFrame:
     return _with_base_state(add_bat_order(add_outs_runs_windows(base)))
 
 
+@per_gateway
+def _er_matrix_trees() -> tuple:
+    """(filter, grouping, cell aggregates, pivot aggregates, wide columns)."""
+    runs, n = F.col("runs_roi"), F.count("*")
+    return (
+        F.col("outs_before") <= 2,
+        [*cols("division", "year"), F.col("bases_before").alias("bases"), F.col("outs_before")],
+        [
+            F.round(F.sum(runs).cast("double") / n, 3).alias("erv"),
+            F.round(F.sum(F.when(runs > 0, 1).otherwise(0)).cast("double") / n, 3).alias(
+                "prob"
+            ),
+        ],
+        [F.first("erv").alias("erv"), F.first("prob").alias("prob")],
+        # pivot emits columns "<value>_<aggalias>": 0_erv, 0_prob, ...
+        [*cols("division", "year", "bases")]
+        + [F.col(f"{o}_erv").alias(f"erv_{o}") for o in (0, 1, 2)]
+        + [F.col(f"{o}_prob").alias(f"prob_{o}") for o in (0, 1, 2)],
+    )
+
+
 def expected_runs_matrix(parsed: DataFrame) -> DataFrame:
     """RE24: mean runs-rest-of-inning and scoring probability by
     (bases_before, outs_before), wide per reference shape
@@ -238,28 +266,11 @@ def expected_runs_matrix(parsed: DataFrame) -> DataFrame:
     Means are exact (integer sums / counts) and rounded to 3 like the
     reference's published matrix.
     """
-    base = (
-        parsed.where(F.col("outs_before") <= 2)
-        .groupBy("division", "year", F.col("bases_before").alias("bases"), "outs_before")
-        .agg(
-            F.round(F.sum("runs_roi").cast("double") / F.count("*"), 3).alias("erv"),
-            F.round(
-                F.sum(F.when(F.col("runs_roi") > 0, 1).otherwise(0)).cast("double")
-                / F.count("*"),
-                3,
-            ).alias("prob"),
-        )
-    )
-    pivoted = (
+    live, cell, cell_aggs, pivot_aggs, wide = _er_matrix_trees()
+    base = parsed.where(live).groupBy(*cell).agg(*cell_aggs)
+    return (
         base.groupBy("division", "year", "bases")
         .pivot("outs_before", [0, 1, 2])
-        .agg(F.first("erv").alias("erv"), F.first("prob").alias("prob"))
-    )
-    # pivot emits columns "<value>_<aggalias>": 0_erv, 0_prob, ...
-    return pivoted.select(
-        "division",
-        "year",
-        "bases",
-        *[F.col(f"{o}_erv").alias(f"erv_{o}") for o in (0, 1, 2)],
-        *[F.col(f"{o}_prob").alias(f"prob_{o}") for o in (0, 1, 2)],
+        .agg(*pivot_aggs)
+        .select(*wide)
     )

@@ -214,3 +214,26 @@ def test_word_shingles_fast_path_parity(spark):
             .count()
         )
         assert bad == 0
+
+
+def test_per_gateway_keys_on_arguments_and_gateway(monkeypatch):
+    """per_gateway builds once per (arguments, live gateway): the same
+    arguments reuse the first build, a different shaping argument builds
+    again, and a new gateway (a new JVM) drops every entry."""
+    from pyspark import SparkContext
+
+    from d3d_etl_spark.functions.trees import per_gateway
+
+    built = []
+
+    @per_gateway
+    def build(min_pa, has_re24):
+        built.append((min_pa, has_re24))
+        return object()
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    first = build(1, True)
+    assert build(1, True) is first and built == [(1, True)]
+    assert build(1, False) is not first and len(built) == 2
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build(1, True) is not first and len(built) == 3

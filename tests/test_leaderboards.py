@@ -156,6 +156,20 @@ def test_baserunning_runner_only_in_list_sorted(spark):
     assert "IN (ADV,BK,CS,DI,ERR,PB,PK,PKE,SB,WP)" in plan, plan
 
 
+def test_pa_in_list_sorted(parsed):
+    """PA_EVENTS is a sorted tuple, so the plate-appearance IN-list reads
+    the same under any PYTHONHASHSEED in the parse (bat order) and in the
+    boards, and the per_gateway trees that hold it never freeze one
+    process's set order."""
+    pa_in = (
+        "IN (1B,2B,3B,BB,CI,DP,FC,FO,FOUL,GDP,GO,HBP,HR,IBB,IF,LO,PO,ROE,"
+        "SF,SH,SO,SO_PB,SO_SAFE,SO_WP,TP)"
+    )
+    for df in (parsed, batting_board(parsed), situational_board(parsed)):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert pa_in in plan, plan
+
+
 def test_baserunning_board(parsed):
     from d3d_etl_spark.pbp.leaderboards import baserunning_board
 

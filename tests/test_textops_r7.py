@@ -1,5 +1,6 @@
-"""Round-7 textops: the Gopher dup-gram family at its PUBLISHED widths
-(z_corpus_repetition_long) and the fixture-scale FSM trace query."""
+"""Textops: the Gopher dup-gram family at its PUBLISHED widths
+(z_corpus_repetition_long), its per-corpus state, and the fixture-scale
+FSM trace query."""
 
 from __future__ import annotations
 
@@ -69,12 +70,15 @@ def _ref_repetition_long(rows):
     return out
 
 
-def test_repetition_long_pure_python_parity(spark, tmp_path):
+def test_repetition_long_pure_python_parity(spark, tmp_path, monkeypatch):
     """Engine == an independent pure-python evaluation on a planted corpus
     spanning two groups: a periodic mega-repeater, mixed prose, and a
     short-token tail; verdict, counts, and every width exact."""
     from d3d_etl_spark.queries import textops
 
+    # a pytest dir is a new sf-less scale on every run: keep its state out
+    # of the shared root, where it would crowd real scales out of the LRU
+    monkeypatch.setattr(textops.LONGDOCS, "root", str(tmp_path / "state"))
     rows = [(i, f"alpha beta gamma delta epsilon zeta doc{i} eta theta") for i in range(1, 40)]
     rows += [(i, "one two three four five " * 4) for i in range(40, 50)]  # repeats
     rows += [(i, f"plain unique text {i} with nothing shared across") for i in range(50, 61)]
@@ -94,6 +98,32 @@ def test_repetition_long_pure_python_parity(spark, tmp_path):
     # the planted repeats genuinely exercise the widths: group 0 carries
     # the periodic docs, so every dup width is strictly positive there
     assert all(want[0][f"dup{n}_q"] > 0 for n in range(5, 11))
+
+
+def test_sfless_corpora_keep_separate_state(spark, tmp_path, monkeypatch):
+    """Two data dirs without an sf token are two scales (io.sf_tag keys
+    them by path): each gets its own longdocs state directory, and each
+    answer matches its own corpus, not the one built first."""
+    from d3d_etl_spark.queries import textops
+
+    monkeypatch.setattr(textops.LONGDOCS, "root", str(tmp_path / "state"))
+    corpora = {
+        "a": [(i, "one two three four five " * 4) for i in range(1, 20)],
+        "b": [(i, f"plain unique text {i} with nothing shared") for i in range(1, 31)],
+    }
+    dirs = {}
+    for name, rows in corpora.items():
+        (tmp_path / name).mkdir()
+        _write_documents(tmp_path / name, rows)
+        dirs[name] = str(tmp_path / name)
+    assert textops.LONGDOCS.path(dirs["a"]) != textops.LONGDOCS.path(dirs["b"])
+    for name, rows in corpora.items():
+        got = {
+            r.long_doc_id: (r.n_tokens, r.rep_pass)
+            for r in textops.z_corpus_repetition_long(spark, dirs[name]).collect()
+        }
+        want = {g: (w["n_tokens"], w["rep_pass"]) for g, w in _ref_repetition_long(rows).items()}
+        assert got == want, name
 
 
 def test_repetition_long_nondegenerate_at_gate_scale(spark):

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.pbp.state import _RUNNER_ONLY
 from d3d_etl_spark.queries.domain import (
     PARSED_PBP,
     _PA_EVENTS,
@@ -281,7 +282,7 @@ _RUNNER_ACTION_SQL = (
     r"^\s*(.*?)\s+(stole (?:second|third|home)|caught stealing|picked off"
     r"|advanced to (?:second|third|home)|scored|out at (?:second|third|home))"
 )
-_RUNNER_ONLY_IN = "('SB','CS','PK','PKE','WP','PB','BK','DI','ERR','ADV')"
+_RUNNER_ONLY_IN = _sql_in(_RUNNER_ONLY)
 
 _BR_METRICS_SQL = """
          CAST(SUM(CASE WHEN action LIKE 'stole%' THEN 1 ELSE 0 END) AS BIGINT) AS sb,

@@ -1,12 +1,11 @@
 """z_pbp_fixture_trace — the narration FSM transition itself, driver-hashed
-at fixture scale (VERDICT r6 missing #4).
+at fixture scale.
 
-The FSM over an arbitrary corpus has no closed relational form, so the
-end-to-end pipelines were long rows-only (both are fully oracled since
-round 9 — queries/stateful.py — via the corpus recursion below plus exact
-integer aggregation of their last raw-double sums).
-This query closes the "downstream-only" argument the bounded way the
-funnel/LR/BPE unrolls did: the ENGINE runs the production parse_pbp — the
+The FSM over an arbitrary corpus has no closed relational form; its SQL
+image is a recursion with one step per play, unrolled here over two
+hand-traced games and, in z_pbp_corpus_fsm, over the whole corpus. The
+fixture queries check the FSM the bounded way the funnel/LR/BPE unrolls
+do: the ENGINE runs the production parse_pbp — the
 same classifier cascade, outs/runs counting, window layer, and
 mapInPandas FSM as the flagships — over the hand-traced 17-play fixture
 game (the tests/test_pbp.py trace), and the ORACLE recomputes every
@@ -38,7 +37,15 @@ from pyspark.sql import functions as F
 from d3d_etl_spark.io import barrier
 from d3d_etl_spark.pbp.events import EVENT_OUTS, EVENT_RULES, PA_EVENTS
 from d3d_etl_spark.pbp.state import _BATTER_DEST, _BATTER_VERBS, _RUNNER_ONLY
+from d3d_etl_spark.queries.domain import (
+    _batting_war_ctes,
+    _er_re24_ctes,
+    _run_value_ctes,
+    _sql_in,
+    run_value_guts,
+)
 from d3d_etl_spark.queries.registry import register
+from d3d_etl_spark.queries.war_chain import _batting_cube_ctes, batting_war_of
 
 # The hand-traced game (tests/test_pbp.py keeps its own copy next to the
 # play-by-play expectations so the pytest trace stays independent of this
@@ -194,14 +201,14 @@ def _pke_levels(inner: str, i: str, o: str) -> str:
     return f"SELECT *,\n      {outs}\n    FROM ({lvl2})"
 
 
-def _extra_advance_levels(inner: str, runner_only_sql: str) -> str:
+def _extra_advance_levels(inner: str) -> str:
     """Batter extra-advance narrated in segment 1 ('reached on a throwing
     error, advanced to second'): applied AFTER placement, engine regex
     mirrored literally ('advanced to ...', state.fsm_step:187-189).
     n1..n3 -> g1..g3."""
     gate = (
         "event NOT IN ('NP', 'SUB', 'FOUL_ERR') AND event <> 'HR' "
-        f"AND event <> 'PKE' AND event NOT IN ({runner_only_sql}) "
+        f"AND event <> 'PKE' AND event NOT IN {_sql_in(_RUNNER_ONLY)} "
         "AND batter IS NOT NULL"
     )
     lvl = f"""SELECT *,
@@ -231,14 +238,13 @@ def _batter_levels(inner: str, i: str) -> str:
     """Two derived-table levels: state._place_batter (+ HR clear,
     runner-only passthrough) from {i}1..{i}3 to n1..n3."""
     dest_arms = " ".join(f"WHEN '{c}' THEN {d}" for c, d in _BATTER_DEST.items())
-    runner_only = ", ".join(f"'{c}'" for c in sorted(_RUNNER_ONLY))
     lvl_dest = f"""SELECT *,
       CASE event {dest_arms} END AS bdest,
       COALESCE(batter, 'UNKNOWN') AS bt
     FROM ({inner})"""
     common = f"""WHEN event IN ('NP', 'SUB', 'FOUL_ERR') THEN {{k}}
         WHEN event = 'HR' THEN NULL
-        WHEN event IN ({runner_only}) THEN {{k}}
+        WHEN event IN {_sql_in(_RUNNER_ONLY)} THEN {{k}}
         WHEN bdest IS NULL OR bdest = 4 THEN {{k}}"""
     n1 = f"""CASE
         {common.format(k=f"{i}1")}
@@ -269,6 +275,13 @@ def _code(c1: str, c2: str, c3: str) -> str:
     )
 
 
+# PKE is handled by its own stay-unless-advanced branch (engine fsm_step
+# checks it before the runner-only dispatch), so segment 1 must NOT be
+# applied as a plain runner action for it — 'picked off' would wrongly
+# remove the safe runner
+_SEG1_RUNNER_GATE = f"event IN {_sql_in(_RUNNER_ONLY - {'PKE'})}"
+
+
 def _fixture_ctes(game: list[tuple[int, str, str]], sfx: str = "") -> str:
     """The per-game CTE chain (fx{sfx} .. trace{sfx}) — factored so the
     full-DAG fixture oracle (z_pbp_fixture_dag) can chain BOTH games'
@@ -281,14 +294,6 @@ def _fixture_ctes(game: list[tuple[int, str, str]], sfx: str = "") -> str:
         for seq, (inning, half, text) in enumerate(game)
     )
     seg_gate = "event NOT IN ('NP', 'SUB', 'FOUL_ERR')"
-    runner_only = ", ".join(f"'{c}'" for c in sorted(_RUNNER_ONLY))
-    # PKE is handled by its own stay-unless-advanced branch (engine
-    # fsm_step checks it before the runner-only dispatch), so segment 1
-    # must NOT be applied as a plain runner action for it — 'picked off'
-    # would wrongly remove the safe runner
-    seg1_runner_only = ", ".join(
-        f"'{c}'" for c in sorted(_RUNNER_ONLY) if c != "PKE"
-    )
     # the fsm_step order: reset -> narrated runner segments 2..4 -> (segment
     # 1 as a runner action for runner-only events | the PKE safe branch) ->
     # batter placement -> batter extra-advance from segment 1
@@ -304,12 +309,10 @@ def _fixture_ctes(game: list[tuple[int, str, str]], sfx: str = "") -> str:
     chain = _seg_levels(chain, "s2", "seg2", seg_gate, "a", "b")
     chain = _seg_levels(chain, "s3", "seg3", seg_gate, "b", "c")
     chain = _seg_levels(chain, "s4", "seg4", seg_gate, "c", "d")
-    chain = _seg_levels(
-        chain, "s1", "seg1", f"event IN ({seg1_runner_only})", "d", "dd"
-    )
+    chain = _seg_levels(chain, "s1", "seg1", _SEG1_RUNNER_GATE, "d", "dd")
     chain = _pke_levels(chain, "dd", "e")
     chain = _batter_levels(chain, "e")
-    chain = _extra_advance_levels(chain, runner_only)
+    chain = _extra_advance_levels(chain)
     return f"""{fx}(play_id, inning, half, text) AS (
   VALUES
     {vals}
@@ -488,21 +491,20 @@ def z_pbp_fixture_trace2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# z_pbp_fixture_dag — the FULL per-play DAG column set at fixture scale
-# (VERDICT r7 #3): everything z_pbp_dag computes per play beyond the FSM
-# trace — batting-order slot (W8 cumcount + modular, W9 grouped ffill to
+# z_pbp_fixture_dag — the FULL per-play DAG column set at fixture scale:
+# everything z_pbp_dag computes per play beyond the FSM trace —
+# batting-order slot (W8 cumcount + modular, W9 grouped ffill to
 # non-PA rows), running team scores (W4 segmented running sums), the
 # pooled RE24 matrix (A1 grouped mean over BOTH games) and the
 # before/after expectancy joins with the end-of-inning key rewrite (J7) —
 # driver-hashed over the two hand-traced fixture games in ONE query (both
-# games flow through one multi-game mapInPandas FSM run). With this row,
-# every column class of the end-to-end pipelines (z_pbp_dag / z_pbp_war
-# upstream — themselves fully oracled since round 9) is hash-verified at
-# fixture scale; the corpus-scale stages stay oracled over the
-# materialized FSM output (domain_*).
+# games flow through one multi-game mapInPandas FSM run), so every column
+# class upstream of the end-to-end pipelines (z_pbp_dag / z_pbp_war) is
+# hash-verified at fixture scale; the corpus-scale stages are oracled over
+# the materialized FSM output (domain_*).
 # ---------------------------------------------------------------------------
 
-_PA_SQL = ", ".join(f"'{c}'" for c in sorted(PA_EVENTS))
+_PA_SQL = _sql_in(PA_EVENTS)
 
 
 def _both_games_raw(spark: SparkSession) -> DataFrame:
@@ -534,7 +536,7 @@ _CUM = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 # Window-derived play columns over a `plays0` CTE (contest_id + the trace
 # columns) — shared by the fixture full-DAG/WAR oracles AND the corpus-scale
-# FSM oracle (round 9), which differ only in where plays0 comes from (two
+# FSM oracle, which differ only in where plays0 comes from (two
 # hand-traced VALUES games vs the whole materialized synthetic corpus).
 _PLAYS_WINDOW_CTES = f"""p1 AS (
   SELECT contest_id, play_id, inning, half, event_type, batter,
@@ -550,8 +552,8 @@ _PLAYS_WINDOW_CTES = f"""p1 AS (
          CAST(SUM(runs_on_play) OVER ({_W_IH}
            ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS INT)
            AS runs_roi,
-         CASE WHEN event_type IN ({_PA_SQL}) THEN
-           ((SUM(CASE WHEN event_type IN ({_PA_SQL}) THEN 1 ELSE 0 END)
+         CASE WHEN event_type IN {_PA_SQL} THEN
+           ((SUM(CASE WHEN event_type IN {_PA_SQL} THEN 1 ELSE 0 END)
                OVER ({_W_H} {_CUM}) - 1) % 9) + 1 END AS slot,
          CAST(COALESCE(SUM(CASE WHEN half = 'Bottom' THEN runs_on_play
                                 ELSE 0 END) OVER ({_W_G} {_B4}), 0) AS INT)
@@ -585,26 +587,15 @@ _DAG_ORACLE = f"""
 WITH RECURSIVE {_fixture_ctes(FIXTURE_GAME, "1")},
 {_fixture_ctes(FIXTURE_GAME2, "2")},
 {_FIXTURE_PLAYS_CTES},
-er AS (
-  SELECT bases_before AS b, outs_before AS o,
-         CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-  FROM fxplays WHERE outs_before <= 2 GROUP BY 1, 2
-)
-SELECT p.contest_id, p.play_id, CAST(p.inning AS INT) AS inning, p.half,
-       p.event_type, p.batter_name,
-       p.bases_before, p.bases_after, p.outs_before, p.outs_after,
-       p.runs_on_play, p.runs_this_inn, p.runs_roi, p.bat_order,
-       p.away_score_before, p.home_score_before,
-       p.away_score_after, p.home_score_after,
-       eb.erv AS re_before,
-       CASE WHEN p.outs_after >= 3 THEN CAST(0.0 AS DOUBLE)
-            ELSE COALESCE(ea.erv, 0.0) END AS re_after,
-       (CASE WHEN p.outs_after >= 3 THEN CAST(0.0 AS DOUBLE)
-             ELSE COALESCE(ea.erv, 0.0) END)
-         - COALESCE(eb.erv, 0.0) + CAST(p.runs_on_play AS DOUBLE) AS re24
-FROM fxplays p
-LEFT JOIN er eb ON eb.b = p.bases_before AND eb.o = p.outs_before
-LEFT JOIN er ea ON ea.b = p.bases_after AND ea.o = p.outs_after
+{_er_re24_ctes("fxplays")}
+SELECT contest_id, play_id, CAST(inning AS INT) AS inning, half,
+       event_type, batter_name,
+       bases_before, bases_after, outs_before, outs_after,
+       runs_on_play, runs_this_inn, runs_roi, bat_order,
+       away_score_before, home_score_before,
+       away_score_after, home_score_after,
+       re_before, re_after, re24
+FROM p
 """
 
 
@@ -646,47 +637,46 @@ def z_pbp_fixture_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# z_pbp_fixture_war — the COMPLETE z_pbp_war chain driver-hashed at fixture
-# scale: raw narration -> production parse (FSM) -> quantized linear
-# weights -> wOBA weights + scale -> league constants -> per-batter
-# counting (incl. SB/CS credited to the pre-play runner on first) -> wRAA
-# -> SB runs -> RAR -> WAR. The oracle chains BOTH games'
-# rule-table-generated recursive CTEs into the SAME parametrized WAR CTE
-# chain the corpus-scale oracles use (queries/domain.py:_war_ctes_chain,
-# src = the fixture plays CTE) — so the entire end-to-end pipeline class is
-# hash-verified from raw text at fixture scale, including
-# the runner-NAME state (r1_name feeds the SB/CS split), which the
-# bases-code traces alone never pinned.
+# z_pbp_fixture_war — the batting-WAR chain driver-hashed at fixture scale:
+# raw narration -> production parse (FSM) -> the production run-value
+# chain (run_value_guts: linear weights -> wOBA weights + scale -> league
+# constants) -> the batting cube (SB/CS credited to the pre-play runner on
+# first) -> batting_war. The oracle chains BOTH games' rule-table-generated
+# recursive CTEs into the same SQL mirror the corpus-scale oracles use
+# (domain._run_value_ctes, queries/war_chain._batting_cube_ctes,
+# domain._batting_war_ctes over src = fxplays), so the runner-NAME state
+# (r1_name feeds the SB/CS split), which the bases-code traces alone never
+# pin, is hash-verified from raw text.
 # ---------------------------------------------------------------------------
 
 
 def _war_fixture_oracle() -> str:
-    from d3d_etl_spark.queries.domain import _war_ctes_chain
-
     return f"""
 WITH RECURSIVE {_fixture_ctes(FIXTURE_GAME, "1")},
 {_fixture_ctes(FIXTURE_GAME2, "2")},
 {_FIXTURE_PLAYS_CTES},
-{_war_ctes_chain("fxplays")}
-SELECT division, year, batter_name, pa, ab, sb, cs, woba, wraa, rar, war
+{_run_value_ctes("fxplays")},
+{_batting_cube_ctes("fxplays")},
+{_batting_war_ctes("bcube")}
+SELECT division, year, player_id AS batter_name, pa, ab, sb, cs, woba, wraa, rar,
+       war_raw AS war
 FROM batwar
 """
 
 
 @register("z_pbp_fixture_war", _war_fixture_oracle(), tags=("stateful", "domain", "war"))
 def z_pbp_fixture_war(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production batting-WAR chain (war_batting_from_parsed — the same
-    code path domain_war_players' batting arm runs over the corpus) over
-    the fixture parse. `sf_dir` is unused — the fixtures are the planted
-    input by design (bounded-scale end-to-end WAR oracle)."""
+    """The production batting-WAR chain (the one domain_war_players'
+    batting arm runs over the corpus) over the fixture parse. `sf_dir` is
+    unused — the fixtures are the planted input by design (bounded-scale
+    end-to-end WAR oracle)."""
     from d3d_etl_spark.pbp.parser import parse_pbp
-    from d3d_etl_spark.queries.domain import war_batting_from_parsed
 
     parsed = barrier(parse_pbp(_both_games_raw(spark)))
-    return war_batting_from_parsed(parsed).select(
+    return batting_war_of(parsed, run_value_guts(parsed)).select(
         "division",
         "year",
-        "batter_name",
+        F.col("player_id").alias("batter_name"),
         F.col("pa").cast("long").alias("pa"),
         F.col("ab").cast("long").alias("ab"),
         F.col("sb").cast("long").alias("sb"),
@@ -694,22 +684,21 @@ def z_pbp_fixture_war(spark: SparkSession, sf_dir: str) -> DataFrame:
         "woba",
         "wraa",
         "rar",
-        "war",
+        F.col("war_raw").alias("war"),
     )
 
 
 # ---------------------------------------------------------------------------
-# z_pbp_corpus_fsm — the FSM + window DAG oracled at CORPUS scale (VERDICT
-# r8 #4): the fixture recursion generalized from two hand-written VALUES
+# z_pbp_corpus_fsm — the FSM + window DAG oracled at CORPUS scale: the
+# fixture recursion generalized from two hand-written VALUES
 # games to the WHOLE materialized synthetic corpus at sf_dir's scale. The
 # engine side reads the materialized FSM parquet (the exact table every
 # domain_* oracle consumes — queries/domain.py:materialized_parsed); the
 # oracle re-derives every per-play transition from the RAW narration
 # parquet with the same rule-table-generated recursive step function the
 # fixture traces use, all games advancing in lockstep (one recursion
-# iteration = one play per game). With this row the corpus-scale FSM
-# output itself is hash-verified — the last computation class that was
-# rows-only-by-proxy (fixture traces + downstream oracles) is closed.
+# iteration = one play per game), so the corpus-scale FSM output itself is
+# hash-verified, not only its downstream aggregates.
 # ---------------------------------------------------------------------------
 
 
@@ -720,10 +709,6 @@ def _corpus_ctes() -> str:
     from d3d_etl_spark.queries.domain import RAW_GAMES
 
     seg_gate = "event NOT IN ('NP', 'SUB', 'FOUL_ERR')"
-    runner_only = ", ".join(f"'{c}'" for c in sorted(_RUNNER_ONLY))
-    seg1_runner_only = ", ".join(
-        f"'{c}'" for c in sorted(_RUNNER_ONLY) if c != "PKE"
-    )
     chain = (
         "SELECT p.contest_id, p.play_id, p.inning, p.half, p.event, p.batter,"
         " p.seg1, p.seg2, p.seg3, p.seg4,"
@@ -737,12 +722,10 @@ def _corpus_ctes() -> str:
     chain = _seg_levels(chain, "s2", "seg2", seg_gate, "a", "b")
     chain = _seg_levels(chain, "s3", "seg3", seg_gate, "b", "c")
     chain = _seg_levels(chain, "s4", "seg4", seg_gate, "c", "d")
-    chain = _seg_levels(
-        chain, "s1", "seg1", f"event IN ({seg1_runner_only})", "d", "dd"
-    )
+    chain = _seg_levels(chain, "s1", "seg1", _SEG1_RUNNER_GATE, "d", "dd")
     chain = _pke_levels(chain, "dd", "e")
     chain = _batter_levels(chain, "e")
-    chain = _extra_advance_levels(chain, runner_only)
+    chain = _extra_advance_levels(chain)
     return f"""fxc AS (
   SELECT contest_id,
          row_number() OVER (PARTITION BY contest_id ORDER BY source_seq)

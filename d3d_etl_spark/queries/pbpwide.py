@@ -5,7 +5,10 @@ oracle over the materialized FSM output.
 The FSM-produced columns (bases, runners, events, outs, runs) are read
 through from the shared parquet; every DERIVED column — flags, subs,
 runner leads, batted-ball class, hash ids, RE24 chain, per-event wOBA
-weight, times-through-order — is recomputed independently by the oracle.
+weight, times-through-order — is recomputed independently by the oracle;
+the RE24 chain and the wOBA weights through the run-value mirror
+(domain._run_value_ctes), the weights being the production linear_weights
+table of the same parse (domain_linear_weights).
 The registered query projects the 68 value-bearing columns of the
 78-column contract: the other 10 (date, is_neutral_site, the six
 win-probability columns, the two leverage flags) are identically NULL at
@@ -20,22 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.pbp.state import _RUNNER_ONLY
 from d3d_etl_spark.queries.domain import (
-    _LW_CTES,
-    PARSED_PBP,
+    _lw_class_sql,
+    _run_value_ctes,
+    _sql_in,
     materialized_parsed,
 )
 from d3d_etl_spark.queries.registry import register
-from d3d_etl_spark.pbp.metrics import LW_CLASSES
 
 _SUB_RE_SQL = r"^\s*(.*?)\s+to\s+([a-z0-9]+)\s+for\s+(.*?)\s*[.;]?\s*$"
 _POI_RE_SQL = r"^\s*(.*?)\s+(?:stole|caught stealing|picked off|advanced|out at|scored)"
-_RUNNER_ONLY_SQL = "('SB','CS','PK','PKE','WP','PB','BK','DI','ERR','ADV')"
-
-
-def _lw_class_case() -> str:
-    whens = " ".join(f"WHEN event_type = '{k}' THEN '{v}'" for k, v in LW_CLASSES.items())
-    return f"CASE {whens} END"
 
 
 def _hash16(expr: str) -> str:
@@ -43,21 +41,7 @@ def _hash16(expr: str) -> str:
 
 
 _PBP_ORACLE = f"""
-WITH {_LW_CTES},
-erv AS (
-  SELECT division, year, bases_before AS bases, outs_before AS outs,
-         CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-  FROM read_parquet('{PARSED_PBP.glob}')
-  WHERE outs_before <= 2
-  GROUP BY 1, 2, 3, 4
-),
-normw AS (
-  SELECT q.division, q.year, q.events,
-         CASE WHEN q.events IN ('walk','hit_by_pitch','single','double','triple','home_run')
-              THEN q.lw_above_outs * s.woba_scale ELSE 0.0 END AS normalized_weight
-  FROM quant q
-  LEFT JOIN scale s ON q.division = s.division AND q.year = s.year
-),
+WITH {_run_value_ctes()},
 base AS (
   SELECT p.*,
          split_part(p.play_text, ';', 1) AS _seg0,
@@ -65,7 +49,7 @@ base AS (
                || '_' || CAST(p.contest_id AS VARCHAR) AS pitcher_name,
          'T_' || CAST(p.contest_id AS VARCHAR) || '_home' AS home_team_id,
          'T_' || CAST(p.contest_id AS VARCHAR) || '_away' AS away_team_id
-  FROM read_parquet('{PARSED_PBP.glob}') p
+  FROM p
 ),
 derived AS (
   SELECT b.*,
@@ -80,12 +64,12 @@ derived AS (
          LEAD(b.r1_name) OVER (PARTITION BY b.contest_id, b.inning, b.half ORDER BY b.play_id) AS r1_after,
          LEAD(b.r2_name) OVER (PARTITION BY b.contest_id, b.inning, b.half ORDER BY b.play_id) AS r2_after,
          LEAD(b.r3_name) OVER (PARTITION BY b.contest_id, b.inning, b.half ORDER BY b.play_id) AS r3_after,
-         {_lw_class_case()} AS _ev_class
+         {_lw_class_sql()} AS _ev_class
   FROM base b
 ),
 named AS (
   SELECT d.*,
-         CASE WHEN d.event_type IN {_RUNNER_ONLY_SQL} AND d._poi_runner != ''
+         CASE WHEN d.event_type IN {_sql_in(_RUNNER_ONLY)} AND d._poi_runner != ''
               THEN d._poi_runner ELSE d.batter_name END AS player_name,
          CASE WHEN d._sub_in != '' THEN 1 ELSE 0 END AS sub_fl
   FROM derived d
@@ -147,25 +131,19 @@ SELECT
   {_hash16("n.r3_name")} AS r3_id,
   n.player_name,
   {_hash16("n.player_name")} AS player_id,
-  COALESCE(w.normalized_weight, CAST(NULL AS DOUBLE)) AS woba,
-  eb.erv AS re_before,
-  CASE WHEN n.outs_after >= 3 THEN 0.0 ELSE COALESCE(ea.erv, 0.0) END AS re_after,
-  (CASE WHEN n.outs_after >= 3 THEN 0.0 ELSE COALESCE(ea.erv, 0.0) END)
-    - COALESCE(eb.erv, 0.0) AS re_delta,
-  (CASE WHEN n.outs_after >= 3 THEN 0.0 ELSE COALESCE(ea.erv, 0.0) END)
-    - COALESCE(eb.erv, 0.0) + CAST(n.runs_on_play AS DOUBLE) AS rea,
+  w.normalized_weight AS woba,
+  n.re_before,
+  n.re_after,
+  n.re_after - COALESCE(n.re_before, 0.0) AS re_delta,
+  n.re24 AS rea,
   CAST(n.home_score_before - n.away_score_before AS INTEGER) AS score_diff_before,
   CAST(n.home_score_after - n.away_score_after AS INTEGER) AS score_diff_after,
   CAST(ROW_NUMBER() OVER (
     PARTITION BY n.contest_id, n.pitcher_name, n.batter_name, n.bat_order
     ORDER BY n.play_id) AS INTEGER) AS times_through_order
 FROM named n
-LEFT JOIN erv eb ON n.division = eb.division AND n.year = eb.year
-                AND n.bases_before = eb.bases AND n.outs_before = eb.outs
-LEFT JOIN erv ea ON n.division = ea.division AND n.year = ea.year
-                AND n.bases_after = ea.bases AND n.outs_after = ea.outs
-LEFT JOIN normw w ON n.division = w.division AND n.year = w.year
-                 AND n._ev_class = w.events
+LEFT JOIN lw w ON n.division = w.division AND n.year = w.year
+              AND n._ev_class = w.events
 """
 
 

@@ -27,7 +27,7 @@ from d3d_etl_spark.pbp.leaderboards import (
     handedness_splits_board,
 )
 from d3d_etl_spark.pbp.events import PA_EVENTS
-from d3d_etl_spark.queries.domain import PARSED_PBP, materialized_parsed
+from d3d_etl_spark.queries.domain import PARSED_PBP, _sql_in, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _NONAB = ("BB", "IBB", "HBP", "SF", "SH")
@@ -84,10 +84,6 @@ def _plays_with_hands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("throws", handedness_dim(F.col("pitcher_name"), "throws"))
         .withColumn("bats", handedness_dim(F.col("batter_name"), "bats"))
     )
-
-
-def _sql_in(events) -> str:
-    return "(" + ", ".join(f"'{e}'" for e in sorted(events)) + ")"
 
 
 _HANDED_CTES = f"""

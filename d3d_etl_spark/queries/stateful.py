@@ -2,11 +2,10 @@
 
 - sessionize_events: the window-expressible stateful shape (segment keys
   from boundary flags — reference columns.py:144-159) — full SQL oracle.
-- fsm_funnel: a genuine per-group FSM via applyInPandas. Since round 6 it
-  IS oracled — the 3-state machine's run has a closed relational form
-  (view-segments; completion = click-before-purchase within the segment),
-  so the oracle is pure window SQL — on top of the pure-python reference
-  pin in tests/test_operators.py.
+- fsm_funnel: a genuine per-group FSM via applyInPandas, oracled through
+  the 3-state machine's closed relational form (view-segments; completion
+  = click-before-purchase within the segment) as pure window SQL, on top
+  of the pure-python reference pin in tests/test_operators.py.
 - multimodal_extract: binary-column decode plumbing via mapInPandas with a
   deterministic fake decoder — byte math only, so it IS oracle-checkable.
 """
@@ -20,6 +19,13 @@ from d3d_etl_spark.io import load_table
 from d3d_etl_spark.operators.fsm import FUNNEL_SCHEMA, funnel_fsm, run_grouped_fsm
 from d3d_etl_spark.operators.multimodal import extract_media_features
 from d3d_etl_spark.operators.sessionize import session_stats, sessionize
+from d3d_etl_spark.queries.domain import (
+    PARSED_PBP,
+    _batting_war_ctes,
+    _er_re24_ctes,
+    _run_value_ctes,
+    _sql_in,
+)
 from d3d_etl_spark.queries.registry import register
 
 _GAP_US = 30 * 60 * 1_000_000
@@ -58,10 +64,9 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The funnel FSM's run has a CLOSED RELATIONAL FORM, so the oracle is
-# pure window SQL (round-6 VERDICT item #7 — converts this registration
-# from rows-only to fully oracled). Derivation: every view starts a
-# segment; within a segment the state can only walk 1 -> 2 -> (complete,
-# 0) and nothing after the completion matters until the next view, so
+# pure window SQL. Derivation: every view starts a segment; within a
+# segment the state can only walk 1 -> 2 -> (complete, 0) and nothing
+# after the completion matters until the next view, so
 #   - a segment COMPLETES a funnel iff it contains a purchase with a
 #     click before it inside the segment (existence == "the first such
 #     purchase fired; later ones are no-ops");
@@ -69,13 +74,12 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     n_abandoned = non-last segments without a completion;
 #   - final_state = 0 with no segments or a completed last segment, else
 #     2 if the last segment has a click, else 1.
-# (A DuckDB 1.0.0 list_reduce fold was tried first and REJECTED: it
-# returned different accumulators for the SAME per-user list under
-# full-table vs WHERE-filtered evaluation — a vectorization bug,
-# unusable as an oracle.) Windows are user- or (user, segment)-grain;
-# epoch_us not raw ts so sub-microsecond orderings tie exactly as they
-# do after Spark's nanos -> micros load, event_id breaking ties
-# identically in both engines.
+# (A DuckDB 1.0.0 list_reduce fold is no oracle: it returns different
+# accumulators for the SAME per-user list under full-table vs
+# WHERE-filtered evaluation — a vectorization bug.) Windows are user- or
+# (user, segment)-grain; epoch_us not raw ts so sub-microsecond orderings
+# tie exactly as they do after Spark's nanos -> micros load, event_id
+# breaking ties identically in both engines.
 _FUNNEL_ORACLE = """
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -131,10 +135,10 @@ def z_fsm_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user conversion-funnel FSM (view->click->purchase with resets).
 
     applyInPandas grouped map — the same execution shape that carries the
-    reference's base-state tracker (columns.py:332-529). Oracled since
-    round 6 via the closed relational form of the 3-state machine (see
-    _FUNNEL_ORACLE's derivation above) — the engine side deliberately
-    stays an FSM so the applyInPandas execution shape remains covered.
+    reference's base-state tracker (columns.py:332-529). Oracled via the
+    closed relational form of the 3-state machine (see _FUNNEL_ORACLE's
+    derivation above) — the engine side deliberately stays an FSM so the
+    applyInPandas execution shape remains covered.
     """
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     return run_grouped_fsm(ev, ["user_id"], ["ts", "event_id"], funnel_fsm, FUNNEL_SCHEMA)
@@ -160,58 +164,19 @@ def _multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_media_features(with_payload)
 
 
-def _ev_in(evts) -> str:
-    """('A', 'B', ...) literal list for SQL IN, sorted for stability —
-    delegates to the package's single SQL-literal renderer."""
-    from d3d_etl_spark.queries.domain import _sql_in
-
-    return _sql_in(tuple(sorted(evts)))
-
-
-def _er_re24_ctes() -> str:
-    """Shared oracle CTEs `er` + `p`: the ER matrix (one exact integer mean
-    per (division, year, bases, outs) cell — bit-identical on any engine)
-    and per-play RE24 via the end-of-inning key rewrite (J7), the exact
-    expression tree of pbp/metrics.add_re24. Both end-to-end pipeline
-    oracles (z_pbp_dag / z_pbp_war) build on these — factored so the RE24
-    rewrite can never drift between them (the _lw_ctes(src) precedent of
-    queries/domain.py)."""
-    from d3d_etl_spark.queries.domain import PARSED_PBP
-
-    return f"""er AS (
-  SELECT division, year, bases_before AS b, outs_before AS o,
-         CAST(SUM(runs_roi) AS DOUBLE) / COUNT(*) AS erv
-  FROM read_parquet('{PARSED_PBP.glob}')
-  WHERE outs_before <= 2
-  GROUP BY 1, 2, 3, 4
-),
-p AS (
-  SELECT pl.*,
-         (CASE WHEN pl.outs_after >= 3 THEN 0.0 ELSE COALESCE(ea.erv, 0.0) END)
-           - COALESCE(eb.erv, 0.0) + CAST(pl.runs_on_play AS DOUBLE) AS re24
-  FROM read_parquet('{PARSED_PBP.glob}') pl
-  LEFT JOIN er eb ON eb.division = pl.division AND eb.year = pl.year
-                 AND eb.b = pl.bases_before AND eb.o = pl.outs_before
-  LEFT JOIN er ea ON ea.division = pl.division AND ea.year = pl.year
-                 AND ea.b = pl.bases_after AND ea.o = pl.outs_after
-)"""
-
-
 def _pbp_dag_oracle() -> str:
     """Full SQL mirror of the end-to-end board: the shared ER/RE24 CTEs,
     then the counting board with re24_total summed as 1e-9-scaled longs
-    (never-sum-raw-doubles, functions/money.py — the round-9 change that
-    made this pipeline's last column hashable). Reads the materialized FSM
+    (never-sum-raw-doubles, functions/money.py). Reads the materialized FSM
     parquet, whose content is itself hash-verified against the rule-table
     recursive recomputation from raw narration (z_pbp_corpus_fsm)."""
     from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
 
-    _in = _ev_in
     return f"""
 WITH {_er_re24_ctes()},
 b AS (
   SELECT division, year, batter_name,
-         CAST(SUM(CASE WHEN event_type IN {_in(PA_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS pa,
+         CAST(SUM(CASE WHEN event_type IN {_sql_in(PA_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS pa,
          CAST(SUM(CASE WHEN event_type IN ('1B', '2B', '3B', 'HR') THEN 1 ELSE 0 END) AS BIGINT) AS h,
          CAST(SUM(CASE WHEN event_type = '1B' THEN 1 ELSE 0 END) AS BIGINT) AS b1,
          CAST(SUM(CASE WHEN event_type = '2B' THEN 1 ELSE 0 END) AS BIGINT) AS b2,
@@ -219,7 +184,7 @@ b AS (
          CAST(SUM(CASE WHEN event_type = 'HR' THEN 1 ELSE 0 END) AS BIGINT) AS hr,
          CAST(SUM(CASE WHEN event_type IN ('BB', 'IBB') THEN 1 ELSE 0 END) AS BIGINT) AS bb,
          CAST(SUM(CASE WHEN event_type = 'HBP' THEN 1 ELSE 0 END) AS BIGINT) AS hbp,
-         CAST(SUM(CASE WHEN event_type IN {_in(SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS so,
+         CAST(SUM(CASE WHEN event_type IN {_sql_in(SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS so,
          CAST(SUM(runs_on_play) AS BIGINT) AS runs_driven,
          CAST(SUM(CAST(ROUND(re24 * 1000000000) AS BIGINT)) AS DOUBLE) / 1e9 AS re24_total
   FROM p
@@ -237,10 +202,9 @@ def z_pbp_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The domain pipeline end-to-end: generated narration (the testdata has
     no baseball tables) -> parse (classifier + windows + base-state FSM) ->
     RE24 -> batting board. Game count scales with the SF in `sf_dir`.
-    Oracled since round 9: the board's re24_total — formerly the one raw
-    double sum the float-parity rule excluded — now aggregates as
-    1e-9-scaled longs (pbp/leaderboards.batting_board), so the whole board
-    is a fixed expression tree over exact integers and hashes end-to-end.
+    The board's re24_total aggregates as 1e-9-scaled longs
+    (pbp/leaderboards.batting_board), so the whole board is a fixed
+    expression tree over exact integers and hashes end-to-end.
     The oracle recomputes the ER matrix + RE24 + board over the
     materialized FSM parquet; the parquet itself is hash-verified against
     the rule-table recursive recomputation from raw text (z_pbp_corpus_fsm),
@@ -331,103 +295,27 @@ def _multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pbp_war_oracle() -> str:
-    """Full SQL mirror of the end-to-end WAR pipeline, including the two
-    formerly-unmirrored pieces that kept this query rows-only:
-
-    - **crc32 team ids**: DuckDB 1.0 ships no crc32 — the oracle derives
-      it from first principles as pure SQL: a recursive CTE folds the
-      256-entry IEEE CRC-32 table (polynomial 0xEDB88320, the one
-      java.util.zip.CRC32 / Spark's F.crc32 implements), then a second
-      recursion folds each distinct batter name over its UTF-8 BYTES (the
-      name hex-encoded once via hex(encode(..)), byte i = hex pair i — so
-      the fold matches Spark's byte-level crc32 for ANY unicode input, not
-      just the ASCII pool the generator happens to emit). Breadth = the
-      dimension-bounded name pool, depth = byte length — trivial at any
-      corpus scale.
-    - **linear weights / woba_scale**: production linear_weights +
-      guts_constants aggregate their weight means as 1e-9-scaled longs
-      since round 9 (never-sum-raw-doubles), so every downstream double is
-      a fixed expression tree over exact integers and mirrors verbatim.
-
-    Dialect trap (review finding): a bare SQL literal like 0.2 is DECIMAL
-    in DuckDB, so `sb * 0.2` would be computed as EXACT decimal and
-    diverge from Spark's IEEE `long * double(0.2)` product by an ulp
-    (e.g. sb=6: 1.2 vs 1.2000000000000002) — every fractional literal
-    that multiplies an integer column is CAST AS DOUBLE explicitly.
+    """Full SQL mirror of the end-to-end WAR pipeline: the run-value chain
+    (domain._run_value_ctes) and batting_war (domain._batting_war_ctes)
+    over this query's own cube, whose crc32 team ids are derived from
+    first principles: DuckDB 1.0 ships no crc32, so a recursive CTE folds
+    the 256-entry IEEE CRC-32 table (polynomial 0xEDB88320, the one
+    java.util.zip.CRC32 / Spark's F.crc32 implements), then a second
+    recursion folds each distinct batter name over its UTF-8 BYTES (the
+    name hex-encoded once via hex(encode(..)), byte i = hex pair i), so
+    the fold matches Spark's byte-level crc32 for ANY unicode input.
+    Breadth = the dimension-bounded name pool, depth = byte length.
 
     The play source is the materialized FSM parquet (itself hash-verified
     against the rule-table recursive recomputation — z_pbp_corpus_fsm)."""
     from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
-    from d3d_etl_spark.pbp.guts import _W_EVENTS
-    from d3d_etl_spark.pbp.metrics import REACHING
     from d3d_etl_spark.queries.boards import _RUNNER_ACTION_SQL, _RUNNER_ONLY_IN
-    from d3d_etl_spark.queries.domain import PARSED_PBP, _lw_class_sql
 
-    _in = _ev_in
-    weight_cols = ",\n         ".join(
-        f"COALESCE(MAX(CASE WHEN events = '{ev}' THEN w END), 0.0) AS {alias}"
-        for alias, ev in _W_EVENTS.items()
-    )
     return f"""
-WITH RECURSIVE {_er_re24_ctes()},
-classed AS (
-  SELECT *, {_lw_class_sql()} AS events FROM p
-),
-per_event AS (
-  SELECT division, year, events,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(ROUND(re24 * 1000000000) AS BIGINT)) AS DOUBLE)
-           / COUNT(*) / 1e9 AS lwaa
-  FROM classed WHERE events IS NOT NULL
-  GROUP BY 1, 2, 3
-),
-out_lw AS (
-  SELECT division, year, lwaa AS out_lwaa FROM per_event WHERE events = 'out'
-),
-lw AS (
-  SELECT pe.division, pe.year, pe.events, pe.n,
-         pe.lwaa - COALESCE(o.out_lwaa, 0.0) AS lwao
-  FROM per_event pe
-  LEFT JOIN out_lw o ON pe.division = o.division AND pe.year = o.year
-),
-scale AS (
-  SELECT division, year,
-         CASE WHEN SUM(CAST(ROUND(lwao * 1000000000) AS BIGINT) * n) != 0
-              THEN 0.360 / (CAST(SUM(CAST(ROUND(lwao * 1000000000) AS BIGINT) * n) AS DOUBLE)
-                            / SUM(n) / 1e9)
-              ELSE NULL END AS woba_scale
-  FROM lw WHERE events IN {_in(REACHING)}
-  GROUP BY 1, 2
-),
-wts AS (
-  SELECT l.division, l.year,
-         {weight_cols}
-  FROM (SELECT lw.*, lw.lwao * s.woba_scale AS w
-        FROM lw JOIN scale s ON lw.division = s.division AND lw.year = s.year) l
-  GROUP BY 1, 2
-),
-league AS (
-  SELECT division, year,
-         CAST(SUM(runs_on_play) AS BIGINT) AS lg_runs,
-         CAST(SUM(outs_on_play) AS BIGINT) AS lg_outs
-  FROM read_parquet('{PARSED_PBP.glob}')
-  GROUP BY 1, 2
-),
-gutsrow AS (
-  SELECT l.division, l.year, w.wbb, w.whbp, w.w1b, w.w2b, w.w3b, w.whr,
-         s.woba_scale,
-         -(2 * (-COALESCE(o.out_lwaa, -0.1)) + 0.075) AS runs_cs,
-         9.0 * (CASE WHEN l.lg_outs != 0
-                     THEN CAST(l.lg_runs AS DOUBLE) * 3.0 / l.lg_outs
-                     ELSE 0.0 END) * 1.5 + 3.0 AS runs_win
-  FROM league l
-  LEFT JOIN wts w ON l.division = w.division AND l.year = w.year
-  LEFT JOIN scale s ON l.division = s.division AND l.year = s.year
-  LEFT JOIN out_lw o ON l.division = o.division AND l.year = o.year
-),
+WITH RECURSIVE {_run_value_ctes()},
 counting AS (
   SELECT division, year, batter_name,
-         CAST(SUM(CASE WHEN event_type IN {_in(PA_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS pa_n,
+         CAST(SUM(CASE WHEN event_type IN {_sql_in(PA_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS pa_n,
          CAST(SUM(CASE WHEN event_type IN ('1B', '2B', '3B', 'HR') THEN 1 ELSE 0 END) AS BIGINT) AS h,
          CAST(SUM(CASE WHEN event_type = '2B' THEN 1 ELSE 0 END) AS BIGINT) AS double_,
          CAST(SUM(CASE WHEN event_type = '3B' THEN 1 ELSE 0 END) AS BIGINT) AS triple_,
@@ -435,7 +323,7 @@ counting AS (
          CAST(SUM(CASE WHEN event_type IN ('BB', 'IBB') THEN 1 ELSE 0 END) AS BIGINT) AS bb,
          CAST(SUM(CASE WHEN event_type = 'IBB' THEN 1 ELSE 0 END) AS BIGINT) AS ibb,
          CAST(SUM(CASE WHEN event_type = 'HBP' THEN 1 ELSE 0 END) AS BIGINT) AS hbp,
-         CAST(SUM(CASE WHEN event_type IN {_in(SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS k,
+         CAST(SUM(CASE WHEN event_type IN {_sql_in(SO_EVENTS)} THEN 1 ELSE 0 END) AS BIGINT) AS k,
          CAST(SUM(CASE WHEN event_type = 'SF' THEN 1 ELSE 0 END) AS BIGINT) AS sf,
          CAST(SUM(CASE WHEN event_type = 'SH' THEN 1 ELSE 0 END) AS BIGINT) AS sh
   FROM read_parquet('{PARSED_PBP.glob}')
@@ -500,45 +388,17 @@ cube AS (
   LEFT JOIN bsr b ON b.division = c.division AND b.year = c.year
                  AND b.batter_name = c.batter_name
 ),
-pw0 AS (
-  SELECT cb.player_id, cb.player_name, cb.team_id, cb.conference,
-         cb.division, cb.year, cb.sb, cb.cs,
-         cb.ab + cb.bb + cb.hbp + cb.sf + cb.sh AS pa,
-         CASE WHEN (cb.ab + cb.bb - cb.ibb + cb.sf + cb.hbp) != 0
-              THEN (g.wbb * (cb.bb - cb.ibb) + g.whbp * cb.hbp
-                    + g.w1b * (cb.h - cb.double_ - cb.triple_ - cb.hr)
-                    + g.w2b * cb.double_ + g.w3b * cb.triple_ + g.whr * cb.hr)
-                   / (cb.ab + cb.bb - cb.ibb + cb.sf + cb.hbp)
-              ELSE 0.0 END AS woba,
-         g.woba_scale, g.runs_cs, g.runs_win
-  FROM cube cb
-  LEFT JOIN gutsrow g ON cb.division = g.division AND cb.year = g.year
-),
-pw1 AS (
-  SELECT *,
-         (CASE WHEN woba_scale != 0 THEN (woba - 0.360) / woba_scale
-               ELSE 0.0 END) * pa AS wraa,
-         sb * CAST(0.2 AS DOUBLE) + cs * runs_cs AS bsr
-  FROM pw0
-),
-pwar AS (
-  SELECT *,
-         wraa + bsr + CAST(0.033 AS DOUBLE) * pa AS rar,
-         CASE WHEN runs_win != 0
-              THEN (wraa + bsr + CAST(0.033 AS DOUBLE) * pa) / runs_win
-              ELSE 0.0 END AS war_raw
-  FROM pw1
-),
+{_batting_war_ctes("cube")},
 teams AS (
   SELECT team_id, division, year,
          CAST(SUM(CAST(ROUND(war_raw * 1000000000) AS BIGINT)) AS DOUBLE) / 1e9 AS team_war
-  FROM pwar GROUP BY 1, 2, 3
+  FROM batwar GROUP BY 1, 2, 3
 )
-SELECT p.player_id, p.player_name, p.team_id, p.conference, p.division, p.year,
-       p.pa, p.woba, p.wraa, p.bsr, p.rar, p.war_raw, t.team_war
-FROM pwar p
-JOIN teams t ON p.team_id = t.team_id AND p.division = t.division
-            AND p.year = t.year
+SELECT w.player_id, w.player_name, w.team_id, w.conference, w.division, w.year,
+       w.pa, w.woba, w.wraa, w.bsr, w.rar, w.war_raw, t.team_war
+FROM batwar w
+JOIN teams t ON w.team_id = t.team_id AND w.division = t.division
+            AND w.year = t.year
 """
 
 
@@ -553,8 +413,8 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
     woba_scale means aggregate as 1e-9-scaled longs on both engines
     (never-sum-raw-doubles), so the whole chain — weights, wOBA, wRAA,
     RAR, WAR, exact team rollup — hashes end-to-end at corpus scale. The
-    FSM upstream is hashed independently (z_pbp_corpus_fsm); the fixture
-    twin (z_pbp_fixture_war) pins the same arithmetic from raw text."""
+    FSM upstream is hashed independently (z_pbp_corpus_fsm), and
+    z_pbp_fixture_war runs the same run-value chain from raw text."""
     from pyspark.sql import functions as F
 
     from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
@@ -580,7 +440,7 @@ def z_pbp_war(spark: SparkSession, sf_dir: str) -> DataFrame:
             n(ev == "3B").alias("triple_"),
             n(ev == "HR").alias("hr"),
             # bb INCLUDES ibb — saber.woba/pa's contract (uBB = bb - ibb),
-            # the same convention war_batting_from_parsed's bb_all uses; a
+            # the same convention war_chain._batting_cube uses; a
             # BB-only count would subtract IBB twice from the wOBA numerator
             n(ev.isin("BB", "IBB")).alias("bb"),
             n(ev == "IBB").alias("ibb"),
@@ -724,7 +584,7 @@ def z_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 consolidation: the four multimodal plumbing queries are one tagged
+# multimodal_family: the four multimodal plumbing queries are one tagged
 # union (part='extract'/'frames'/'resize'/'infer') so the whole
 # binary-column surface sits inside the driver's 50-query window. Each arm
 # keeps its own mapInPandas operator (operators/multimodal.py: stubbed

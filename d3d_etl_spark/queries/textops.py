@@ -33,6 +33,7 @@ from d3d_etl_spark.functions.text import (
     word_shingles,
 )
 from d3d_etl_spark.io import StateFamily, barrier, fan_out, load_table, read_parquet
+from d3d_etl_spark.queries.domain import _sql_in
 from d3d_etl_spark.queries.registry import register
 
 _TOK = sql_tokens("text")
@@ -1748,7 +1749,6 @@ def z_corpus_repetition_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM_Q = 10_000
 _BM_TERMS = ("hash", "join", "dup", "vector", "scan")
 _BM_K = 10
-_BM_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM_TERMS)
 
 _BM_ORACLE = f"""
 WITH toks AS (
@@ -1761,7 +1761,7 @@ stats AS (
 tf AS (
   SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
   FROM (SELECT doc_id, unnest(w) AS tok FROM toks) x
-  WHERE tok IN ({_BM_TERMS_SQL})
+  WHERE tok IN {_sql_in(_BM_TERMS)}
   GROUP BY 1, 2
 ),
 dft AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.io import barrier
-from d3d_etl_spark.queries.domain import PARSED_PBP, materialized_parsed
+from d3d_etl_spark.queries.domain import PARSED_PBP, _sql_in, materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _CODES = ["NNN", "YNN", "NYN", "YYN", "NNY", "YNY", "NYY", "YYY"]
@@ -325,7 +325,7 @@ _SIT_CONDS_SQL = {
 
 from d3d_etl_spark.pbp.events import PA_EVENTS as _PA_EVENTS_SRC
 
-_PA_IN = "(" + ", ".join(f"'{e}'" for e in sorted(_PA_EVENTS_SRC)) + ")"
+_PA_IN = _sql_in(_PA_EVENTS_SRC)
 _HIT_IN = "('1B', '2B', '3B', 'HR')"
 _OB_IN = "('1B', '2B', '3B', 'HR', 'BB', 'IBB', 'HBP')"
 _NONAB_IN = "('BB', 'IBB', 'HBP', 'SF', 'SH')"

@@ -1,14 +1,19 @@
-"""The rest of the reference WAR surface as oracled queries: pitching WAR
-(reference war_calculation/pitching.py:10-87, calculator.py:226-319), the
-team rollup + SoS reward/punish + division normalization chain
-(sos_utils.py:38-138, get_war.py:142-188), and the year-gated score-delta
-run-counting mode (reference pbp_parser/main.py:57-89).
+"""The rest of the reference WAR surface as oracled queries: the guts
+row, batting and pitching WAR (reference war_calculation/batting.py:
+363-418, pitching.py:10-87, calculator.py:124-319), the team rollup +
+SoS reward/punish + division normalization chain (sos_utils.py:38-138,
+get_war.py:142-188), the park and conference adjuncts, and the year-gated
+score-delta run-counting mode (reference pbp_parser/main.py:57-89).
 
-All three run the REAL engine operators (pbp/war.py, pbp/parser.py) over
-the materialized parse; the oracles recompute the identical arithmetic in
-SQL. Determinism: every aggregate of doubles goes through 1e9-scaled longs
-(functions/money.py doctrine), every published double is a fixed expression
-tree over exact integer sums, so the driver's value-hash is stable.
+Each query builds its own cubes from the materialized parse (team-id
+dims, SB/CS credited through r1_name, the pitcher identity) and runs the
+production chain on them: run_value_guts (queries/domain.py) ->
+pbp/war.batting_war / pitching_war -> sos_adjust / team_war /
+normalize_division_war / add_park_adjusted / add_conference_rates. The
+oracles build the same cubes in SQL and mirror the chain through
+domain._run_value_ctes and domain._batting_war_ctes. Every aggregate of
+doubles goes through 1e9-scaled longs (functions/money.py), so every
+published double is a fixed expression tree over exact integer sums.
 """
 
 from __future__ import annotations
@@ -16,17 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark.functions.strings import sql_md5_int, sql_md5_int_seeded
 from d3d_etl_spark.io import barrier
 from d3d_etl_spark.queries.domain import (
     _PA_EVENTS,
+    _PARSED_SRC,
     PARSED_PBP,
     _SO_EVENTS,
-    _WAR_CTES_CHAIN,
+    _batting_war_ctes,
+    _run_value_ctes,
     _sql_in,
-    _war_batting_full,
     materialized_parsed,
+    run_value_guts,
 )
-from d3d_etl_spark.functions.strings import sql_md5_int, sql_md5_int_seeded
 from d3d_etl_spark.queries.registry import register
 
 _SO_IN = _sql_in(_SO_EVENTS)
@@ -34,12 +41,140 @@ _PA_IN = _sql_in(_PA_EVENTS)
 _LG_ERA = 5.5  # pitching_war default replacement anchor
 
 # ---------------------------------------------------------------------------
-# domain_war_pitching — FIP-based pitching WAR over per-pitcher counting
-# stats derived from the plays (pitcher identity = the deterministic
-# mid-game pitching change shared with domain_pitching_board). Exercises
-# the base-3 IP codec (M4) in anger: counting emits the "6.2" string, the
-# WAR chain decodes it back to exact thirds.
+# The cubes. Batting: one row per batter with >= 1 PA, team id = the
+# batting side's T_<contest>_<away|home>, SB/CS credited to the runner on
+# first before the play. Pitching: the deterministic mid-game pitching
+# change shared with domain_pitching_board; ip round-trips through the
+# reference's base-3 "6.2" codec (M4) into pitching_war.
 # ---------------------------------------------------------------------------
+
+
+def _batting_cube(parsed: DataFrame) -> DataFrame:
+    """pbp/war.batting_war's cube_batting from plays. bb includes IBB
+    (saber.woba's unintentional walks are bb - ibb)."""
+    ev = F.col("event_type")
+    n = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
+    bat_team = F.concat(
+        F.lit("T_"),
+        F.col("contest_id").cast("string"),
+        F.when(F.col("half") == "Top", "_away").otherwise("_home"),
+    )
+    counting = (
+        parsed.where(F.col("batter_name").isNotNull())
+        .groupBy("division", "year", "batter_name")
+        .agg(
+            F.min(bat_team).alias("team_id"),
+            n(ev.isin(*_PA_EVENTS)).alias("_pa"),
+            n(ev.isin("1B", "2B", "3B", "HR")).alias("h"),
+            n(ev == "2B").alias("double_"),
+            n(ev == "3B").alias("triple_"),
+            n(ev == "HR").alias("hr"),
+            n(ev.isin("BB", "IBB")).alias("bb"),
+            n(ev == "IBB").alias("ibb"),
+            n(ev == "HBP").alias("hbp"),
+            n(ev == "SF").alias("sf"),
+            n(ev == "SH").alias("sh"),
+        )
+        .where(F.col("_pa") >= 1)
+    )
+    running = (
+        parsed.where(ev.isin("SB", "CS") & F.col("r1_name").isNotNull())
+        .groupBy("division", "year", F.col("r1_name").alias("batter_name"))
+        .agg(n(ev == "SB").alias("sb"), n(ev == "CS").alias("cs"))
+    )
+    return counting.join(running, ["division", "year", "batter_name"], "left").select(
+        F.col("batter_name").alias("player_id"),
+        F.col("batter_name").alias("player_name"),
+        "team_id",
+        F.col("division").alias("conference"),
+        "division", "year",
+        (F.col("_pa") - F.col("bb") - F.col("hbp") - F.col("sf") - F.col("sh")).alias("ab"),
+        "h", "double_", "triple_", "hr", "bb", "ibb", "hbp", "sf", "sh",
+        F.coalesce("sb", F.lit(0)).alias("sb"),
+        F.coalesce("cs", F.lit(0)).alias("cs"),
+    )
+
+
+def _batting_cube_ctes(src: str) -> str:
+    """_batting_cube in SQL over the play source `src`, ending in `bcube`."""
+    n = lambda cond: f"CAST(SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"  # noqa: E731
+    return f"""bcount AS (
+  SELECT division, year, batter_name,
+         MIN('T_' || CAST(contest_id AS VARCHAR)
+                  || (CASE WHEN half = 'Top' THEN '_away' ELSE '_home' END)) AS team_id,
+         {n(f"event_type IN {_PA_IN}")} AS pa_n,
+         {n("event_type IN ('1B', '2B', '3B', 'HR')")} AS h,
+         {n("event_type = '2B'")} AS double_,
+         {n("event_type = '3B'")} AS triple_,
+         {n("event_type = 'HR'")} AS hr,
+         {n("event_type IN ('BB', 'IBB')")} AS bb,
+         {n("event_type = 'IBB'")} AS ibb,
+         {n("event_type = 'HBP'")} AS hbp,
+         {n("event_type = 'SF'")} AS sf,
+         {n("event_type = 'SH'")} AS sh
+  FROM {src}
+  WHERE batter_name IS NOT NULL
+  GROUP BY 1, 2, 3
+  HAVING SUM(CASE WHEN event_type IN {_PA_IN} THEN 1 ELSE 0 END) >= 1
+),
+brun AS (
+  SELECT division, year, r1_name AS batter_name,
+         {n("event_type = 'SB'")} AS sb,
+         {n("event_type = 'CS'")} AS cs
+  FROM {src}
+  WHERE event_type IN ('SB', 'CS') AND r1_name IS NOT NULL
+  GROUP BY 1, 2, 3
+),
+bcube AS (
+  SELECT c.batter_name AS player_id, c.team_id, c.division, c.year,
+         c.pa_n - c.bb - c.hbp - c.sf - c.sh AS ab,
+         c.h, c.double_, c.triple_, c.hr, c.bb, c.ibb, c.hbp, c.sf, c.sh,
+         COALESCE(r.sb, 0) AS sb, COALESCE(r.cs, 0) AS cs
+  FROM bcount c
+  LEFT JOIN brun r
+    ON c.division = r.division AND c.year = r.year AND c.batter_name = r.batter_name
+)"""
+
+
+def batting_war_of(parsed: DataFrame, guts: DataFrame) -> DataFrame:
+    """pbp/war.batting_war over _batting_cube(parsed), with the cube's ab,
+    sb and cs joined back."""
+    from d3d_etl_spark.pbp.war import batting_war
+
+    cube = barrier(_batting_cube(parsed))  # batting_war and the join-back read it
+    return batting_war(cube, guts).join(
+        cube.select("player_id", "division", "year", "ab", "sb", "cs"),
+        ["player_id", "division", "year"],
+    )
+
+
+def _pitching_cube(parsed: DataFrame) -> DataFrame:
+    """pbp/war.pitching_war's cube_pitching from plays, plus pa."""
+    from d3d_etl_spark.functions.math import thirds_to_ip
+    from d3d_etl_spark.queries.boards import _with_ids
+
+    ev = F.col("event_type")
+    n = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
+    return (
+        _with_ids(parsed)
+        .where(F.col("pitcher_name").isNotNull())
+        .groupBy("division", "year", F.col("pitcher_name").alias("player_id"))
+        .agg(
+            F.min("pitch_team_id").alias("team_id"),
+            F.sum("outs_on_play").alias("_thirds"),
+            F.sum("runs_on_play").alias("er"),
+            n(ev == "HR").alias("hr_a"),
+            n(ev.isin("BB", "IBB")).alias("bb"),
+            n(ev == "HBP").alias("hbp"),
+            n(ev.isin(*_SO_EVENTS)).alias("so"),
+            n(ev.isin("1B", "2B", "3B", "HR")).alias("h"),
+            n(ev.isin(*_PA_EVENTS)).alias("pa"),
+        )
+        .withColumn("player_name", F.col("player_id"))
+        .withColumn("conference", F.col("division"))
+        .withColumn("ip", thirds_to_ip(F.col("_thirds")))
+    )
+
 
 _PIT_CTES = f"""
 pwp AS (
@@ -66,24 +201,6 @@ pcount AS (
   WHERE pitcher_name IS NOT NULL
   GROUP BY 1, 2, 3
 ),
-pguts AS (
-  SELECT division, year,
-         ROUND(
-           (CASE WHEN SUM(outs_on_play) != 0
-                 THEN 27.0 * CAST(SUM(runs_on_play) AS DOUBLE) / CAST(SUM(outs_on_play) AS DOUBLE)
-                 ELSE 0.0 END)
-           - (CASE WHEN SUM(outs_on_play) != 0
-                   THEN 3.0 * CAST(13 * SUM(CASE WHEN event_type = 'HR' THEN 1 ELSE 0 END)
-                                   + 3 * (SUM(CASE WHEN event_type IN ('BB', 'IBB') THEN 1 ELSE 0 END)
-                                          + SUM(CASE WHEN event_type = 'HBP' THEN 1 ELSE 0 END))
-                                   - 2 * SUM(CASE WHEN event_type IN {_SO_IN} THEN 1 ELSE 0 END) AS DOUBLE)
-                        / CAST(SUM(outs_on_play) AS DOUBLE)
-                   ELSE 0.0 END),
-           3) AS cfip,
-         9.0 * (CAST(SUM(runs_on_play) AS DOUBLE) * 3.0 / SUM(outs_on_play)) * 1.5 + 3.0 AS runs_win
-  FROM read_parquet('{PARSED_PBP.glob}')
-  GROUP BY 1, 2
-),
 pitwar AS (
   SELECT c.player_id, c.player_id AS player_name, c.team_id,
          c.division AS conference, c.division, c.year,
@@ -104,82 +221,50 @@ pitwar AS (
            / 9.0 * (CAST(c.thirds AS DOUBLE) / 3.0) AS rar,
          g.runs_win
   FROM pcount c
-  JOIN pguts g ON c.division = g.division AND c.year = g.year
+  LEFT JOIN gutsrow g ON c.division = g.division AND c.year = g.year
 ),
 pitwar2 AS (
   SELECT *, CASE WHEN runs_win != 0 THEN rar / runs_win ELSE 0.0 END AS war_raw
   FROM pitwar
 )"""
 
+# the whole chain in SQL, ending in `batwar` and `pitwar2`
+_WAR_CTES = f"""{_run_value_ctes()},
+{_batting_cube_ctes(_PARSED_SRC)},
+{_batting_war_ctes("bcube")},
+{_PIT_CTES}"""
 
-def _pitching_war_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-pitcher counting stats -> cube_pitching shape (ip as the base-3
-    string codec) -> the real pbp.war.pitching_war chain."""
-    from d3d_etl_spark.functions.math import thirds_to_ip
-    from d3d_etl_spark.pbp.events import PA_EVENTS, SO_EVENTS
+
+def _war_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(guts, batting WAR, pitching WAR) of the materialized parse.
+    Batting WAR carries the cube's ab/sb/cs, pitching WAR its pa."""
     from d3d_etl_spark.pbp.war import pitching_war
-    from d3d_etl_spark.queries.boards import _with_ids
-
-    wp = _with_ids(materialized_parsed(spark, sf_dir))
-    ev = F.col("event_type")
-    n = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-    cube = (
-        wp.where(F.col("pitcher_name").isNotNull())
-        .groupBy("division", "year", F.col("pitcher_name").alias("player_id"))
-        .agg(
-            F.min("pitch_team_id").alias("team_id"),
-            F.sum("outs_on_play").alias("_thirds"),
-            F.sum("runs_on_play").alias("er"),
-            n(ev == "HR").alias("hr_a"),
-            n(ev.isin("BB", "IBB")).alias("bb"),
-            n(ev == "HBP").alias("hbp"),
-            n(ev.isin(*SO_EVENTS)).alias("so"),
-            n(ev.isin("1B", "2B", "3B", "HR")).alias("h"),
-            n(ev.isin(*PA_EVENTS)).alias("pa"),
-        )
-        .withColumn("player_name", F.col("player_id"))
-        .withColumn("conference", F.col("division"))
-        # round-trip through the reference's "6.2" codec (M4)
-        .withColumn("ip", thirds_to_ip(F.col("_thirds")))
-    )
-    cube = barrier(cube)  # consumed by the WAR chain AND the pa join-back
-    guts = _pitching_guts(spark, sf_dir)
-    return pitching_war(cube, guts, lg_era=_LG_ERA).join(
-        cube.select("player_id", "division", "year", "pa"),
-        ["player_id", "division", "year"],
-    )
-
-
-def _pitching_guts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """League cfip (rounded 3, reference get_guts.py:103-117) + runs_win
-    from the play totals — the minimal guts slice pitching_war consumes."""
-    from d3d_etl_spark.functions import saber
-    from d3d_etl_spark.pbp.events import SO_EVENTS
 
     parsed = materialized_parsed(spark, sf_dir)
-    ev = F.col("event_type")
-    n = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-    lg = parsed.groupBy("division", "year").agg(
-        F.sum("outs_on_play").alias("_outs"),
-        F.sum("runs_on_play").alias("_runs"),
-        n(ev == "HR").alias("_hr"),
-        n(ev.isin("BB", "IBB")).alias("_bb"),
-        n(ev == "HBP").alias("_hbp"),
-        n(ev.isin(*SO_EVENTS)).alias("_so"),
+    pcube = barrier(_pitching_cube(parsed))  # guts' cFIP, pitching_war and the pa join-back
+    guts = barrier(run_value_guts(parsed, cube_pitching=pcube))  # both WAR sides read it
+    pit = pitching_war(pcube, guts, lg_era=_LG_ERA).join(
+        pcube.select("player_id", "division", "year", "pa"),
+        ["player_id", "division", "year"],
     )
-    return lg.select(
-        "division", "year",
-        F.round(
-            saber.cfip(
-                F.col("_runs"), F.col("_hr"), F.col("_bb"), F.col("_hbp"),
-                F.col("_so"), F.col("_outs"),
-            ),
-            3,
-        ).alias("cfip"),
-        (
-            9.0 * (F.col("_runs").cast("double") * 3.0 / F.col("_outs")) * 1.5 + 3.0
-        ).alias("runs_win"),
-    )
+    return guts, batting_war_of(parsed, guts), pit
+
+
+# ---------------------------------------------------------------------------
+# domain_guts — the league-constants row (reference get_guts.py:120-184):
+# guts_constants' GUTS_CONSTANTS columns, cFIP from the pitcher cube.
+# ---------------------------------------------------------------------------
+
+_GUTS_ORACLE = f"""
+WITH {_run_value_ctes()}
+SELECT * FROM gutsrow
+"""
+
+
+@register("domain_guts", _GUTS_ORACLE, tags=("domain",))
+def domain_guts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    parsed = materialized_parsed(spark, sf_dir)
+    return run_value_guts(parsed, cube_pitching=_pitching_cube(parsed))
 
 
 # ---------------------------------------------------------------------------
@@ -273,10 +358,9 @@ def _sos_chain_sql(src: str, frac: float, zero_wraa: bool) -> str:
 
 
 _TEAM_SOS_ORACLE = f"""
-WITH {_WAR_CTES_CHAIN},
-{_PIT_CTES},
+WITH {_WAR_CTES},
 bat AS (
-  SELECT division, year, team_id, pa, wraa, bsr, rar, war AS war_raw FROM batwar
+  SELECT division, year, team_id, pa, wraa, bsr, rar, war_raw FROM batwar
 ),
 pit AS (
   SELECT division, year, team_id, pa, rar, war_raw FROM pitwar2
@@ -319,11 +403,11 @@ def domain_war_team_sos(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sos_val) and standings (wins, games)."""
     from d3d_etl_spark.pbp.war import normalize_division_war, sos_adjust, team_war
 
+    _, bat, pit = _war_frames(spark, sf_dir)
     # player-grain frames feed allteams AND the sos chain — materialize once
-    bat = barrier(_war_batting_full(spark, sf_dir).withColumnRenamed("war", "war_raw"))
+    bat = barrier(bat)
     pit = barrier(
-        _pitching_war_df(spark, sf_dir)
-        .select("division", "year", "team_id", "pa", "rar", "war_raw")
+        pit.select("division", "year", "team_id", "pa", "rar", "war_raw")
         .withColumn("wraa", F.lit(0.0))
         .withColumn("bsr", F.lit(0.0))
     )
@@ -425,14 +509,13 @@ def domain_run_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WAR_PLAYERS_ORACLE = f"""
-WITH {_WAR_CTES_CHAIN},
-{_PIT_CTES}
-SELECT 'batting' AS grain, division, year, batter_name AS player, team_id,
+WITH {_WAR_CTES}
+SELECT 'batting' AS grain, division, year, player_id AS player, team_id,
        pa, ab, sb, cs, woba, wraa,
        CAST(NULL AS BIGINT) AS ip_thirds, CAST(NULL AS DOUBLE) AS fip,
        CAST(NULL AS DOUBLE) AS era, CAST(NULL AS DOUBLE) AS whip,
        CAST(NULL AS DOUBLE) AS k9,
-       rar, war
+       rar, war_raw AS war
 FROM batwar
 UNION ALL
 SELECT 'pitching', division, year, player_id, team_id,
@@ -447,9 +530,10 @@ FROM pitwar2
 def domain_war_players(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_null = F.lit(None).cast("long")
     d_null = F.lit(None).cast("double")
-    bat = _war_batting_full(spark, sf_dir).select(
+    _, bat, pit = _war_frames(spark, sf_dir)
+    bat = bat.select(
         F.lit("batting").alias("grain"), "division", "year",
-        F.col("batter_name").alias("player"), "team_id",
+        F.col("player_id").alias("player"), "team_id",
         F.col("pa").cast("long").alias("pa"),
         F.col("ab").cast("long").alias("ab"),
         F.col("sb").cast("long").alias("sb"),
@@ -457,9 +541,10 @@ def domain_war_players(spark: SparkSession, sf_dir: str) -> DataFrame:
         "woba", "wraa",
         b_null.alias("ip_thirds"), d_null.alias("fip"), d_null.alias("era"),
         d_null.alias("whip"), d_null.alias("k9"),
-        "rar", "war",
+        "rar",
+        F.col("war_raw").alias("war"),
     )
-    pit = _pitching_war_df(spark, sf_dir).select(
+    pit = pit.select(
         F.lit("pitching").alias("grain"), "division", "year",
         F.col("player_id").alias("player"), "team_id",
         F.col("pa").cast("long").alias("pa"),
@@ -474,35 +559,20 @@ def domain_war_players(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# z_war_park — the last two unoracled links of reference calculator.py as a
-# tagged union over the REAL operators:
-#   grain='park': add_park_adjusted (pbp/war.py:172; reference
+# z_war_park — the last two links of reference calculator.py as a tagged
+# union over the REAL operators:
+#   grain='park': add_park_adjusted (pbp/war.py; reference
 #     calculator.py:82 park-factor dict lookup, get_war.py:118,
-#     batting.py:115-125 wRC+) over the full batting-WAR chain, with an
-#     md5-derived park-factor dim (pf in 90..110; ~1/4 of teams absent from
-#     the dim to exercise the neutral-100 coalesce).
-#   grain='conf': add_conference_rates (pbp/war.py:154; reference
-#     calculator.py:171-174 groupby(conference).transform('sum')) over the
-#     pitching-WAR chain with an md5-derived 3-way conference split.
-# Every published double is a fixed expression tree over already-oracled
-# inputs (wraa, war_raw, exact counting sums), so the value hash is stable.
+#     batting.py:115-125 wRC+) over batting WAR and the guts runs_pa, with
+#     an md5-derived park-factor dim (pf in 90..110; ~1/4 of teams absent
+#     from the dim to exercise the neutral-100 coalesce).
+#   grain='conf': add_conference_rates (pbp/war.py; reference
+#     calculator.py:171-174 groupby(conference).transform('sum')) over
+#     pitching WAR with an md5-derived 3-way conference split.
 # ---------------------------------------------------------------------------
 
-_GUTS_RPA_CTE = f"""
-rpa AS (
-  SELECT division, year,
-         CASE WHEN SUM(CASE WHEN event_type IN {_PA_IN} THEN 1 ELSE 0 END) != 0
-              THEN CAST(SUM(runs_on_play) AS DOUBLE)
-                   / SUM(CASE WHEN event_type IN {_PA_IN} THEN 1 ELSE 0 END)
-              ELSE 0.0 END AS runs_pa
-  FROM read_parquet('{PARSED_PBP.glob}')
-  GROUP BY 1, 2
-)"""
-
 _PARK_ORACLE = f"""
-WITH {_WAR_CTES_CHAIN},
-{_PIT_CTES},
-{_GUTS_RPA_CTE},
+WITH {_WAR_CTES},
 pfdim AS (
   SELECT team_id,
          CAST(90 + {sql_md5_int("team_id")} % 21 AS DOUBLE) AS pf
@@ -510,13 +580,13 @@ pfdim AS (
   WHERE {sql_md5_int_seeded("team_id", 7)} % 4 != 0
 ),
 parkbase AS (
-  SELECT b.division, b.year, b.batter_name AS player, b.team_id,
+  SELECT b.division, b.year, b.player_id AS player, b.team_id,
          COALESCE(p.pf, 100.0) AS pf,
          b.wraa + g.runs_pa * b.pa AS wrc,
          g.runs_pa, b.pa
   FROM batwar b
   LEFT JOIN pfdim p ON b.team_id = p.team_id
-  LEFT JOIN rpa g ON b.division = g.division AND b.year = g.year
+  LEFT JOIN gutsrow g ON b.division = g.division AND b.year = g.year
 ),
 park AS (
   SELECT division, year, player, team_id, pf, wrc,
@@ -558,24 +628,10 @@ FROM conf
 @register("z_war_park", _PARK_ORACLE, tags=("domain", "war"))
 def z_war_park(spark: SparkSession, sf_dir: str) -> DataFrame:
     from d3d_etl_spark.functions.strings import md5_int, md5_int_seeded
-    from d3d_etl_spark.pbp.events import PA_EVENTS
     from d3d_etl_spark.pbp.war import add_conference_rates, add_park_adjusted
 
     d_null = F.lit(None).cast("double")
-
-    # league run environment (pbp/guts.py:96 runs_pa) straight off the plays
-    parsed = materialized_parsed(spark, sf_dir)
-    lg_pa = F.sum(F.when(F.col("event_type").isin(*PA_EVENTS), 1).otherwise(0))
-    guts = parsed.groupBy("division", "year").agg(
-        F.sum("runs_on_play").alias("lg_runs"), lg_pa.alias("lg_pa")
-    ).select(
-        "division", "year",
-        F.when(
-            F.col("lg_pa") != 0, F.col("lg_runs").cast("double") / F.col("lg_pa")
-        ).otherwise(F.lit(0.0)).alias("runs_pa"),
-    )
-
-    bat = _war_batting_full(spark, sf_dir)
+    guts, bat, pit = _war_frames(spark, sf_dir)
     pf_dim = (
         bat.select("team_id").distinct()
         .where(F.pmod(md5_int_seeded(F.col("team_id"), 7), F.lit(4)) != 0)
@@ -587,14 +643,14 @@ def z_war_park(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     park = add_park_adjusted(bat, pf_dim, guts).select(
         F.lit("park").alias("grain"), "division", "year",
-        F.col("batter_name").alias("player"), "team_id",
+        F.col("player_id").alias("player"), "team_id",
         "pf", "wrc", "wrc_plus",
         F.lit(None).cast("string").alias("conference"),
         F.lit(None).cast("long").alias("conf_pa"),
         d_null.alias("conf_rate"),
     )
 
-    pit = _pitching_war_df(spark, sf_dir).withColumn(
+    pit = pit.withColumn(
         "conference",
         F.concat(F.lit("c"), F.pmod(md5_int(F.col("team_id")), F.lit(3)).cast("string")),
     )

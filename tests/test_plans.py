@@ -497,21 +497,70 @@ def test_pbp_refresh_build_trips(spark, tmp_path, monkeypatch):
     assert trips[0] < 500, trips[0]
 
 
-def test_fixture_war_runs_production_chain():
-    """The fixture-scale WAR twin must exercise the SAME
-    engine code path the corpus-scale query runs (war_batting_from_parsed)
-    — a twin with its own arithmetic would verify nothing about the
-    production chain."""
-    import inspect
+def test_fixture_war_runs_production_chain(spark, monkeypatch):
+    """The fixture-scale WAR query must run the engine chain the
+    corpus-scale queries and run_analytics run (linear_weights ->
+    guts_constants -> batting_war) — a twin with its own arithmetic would
+    verify nothing about the production chain — and its oracle must be the
+    one run-value SQL mirror over the fixture plays CTE."""
+    import sys
 
-    import d3d_etl_spark.queries.domain as dom
     import d3d_etl_spark.queries.pbp_fixture as pf
+    from d3d_etl_spark.pbp import guts, metrics, war
+    from d3d_etl_spark.queries.domain import _batting_war_ctes, _run_value_ctes
 
-    src = inspect.getsource(pf.z_pbp_fixture_war)
-    assert "war_batting_from_parsed" in src and "parse_pbp" in src
-    assert "war_batting_from_parsed" in inspect.getsource(dom._war_batting_full)
-    # and the oracle is the parametrized CORPUS chain over the fixture CTE
-    assert '_war_ctes_chain("fxplays")' in inspect.getsource(pf._war_fixture_oracle)
+    called = set()
+    for owner, name in (
+        (metrics, "linear_weights"), (guts, "guts_constants"), (war, "batting_war"),
+    ):
+        real = getattr(owner, name)
+
+        def spy(*args, _real=real, _name=name, **kwargs):
+            called.add(_name)
+            return _real(*args, **kwargs)
+
+        # patch every package module that bound the function by name
+        for mod in list(sys.modules.values()):
+            if getattr(mod, "__name__", "").startswith("d3d_etl_spark") and (
+                getattr(mod, name, None) is real
+            ):
+                monkeypatch.setattr(mod, name, spy)
+    pf.z_pbp_fixture_war(spark, "")
+    assert called == {"linear_weights", "guts_constants", "batting_war"}, called
+    oracle = pf._war_fixture_oracle()
+    assert _run_value_ctes("fxplays") in oracle
+    assert _batting_war_ctes("bcube") in oracle
+
+
+def test_one_run_value_chain():
+    """Run values have one implementation (pbp/metrics -> pbp/guts ->
+    pbp/war) and one SQL mirror: the names of the 1e-6-quantized twin are
+    gone from the package, and exactly one function emits the woba_scale
+    CTE text (domain._run_value_ctes)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "d3d_etl_spark"
+    twin = ("erv_u", "re24_u", "lwao_u", "tot_u", "_lw_quant", "war_batting_from_parsed")
+    leftovers, emitters = [], []
+    for py in sorted(pkg.rglob("*.py")):
+        text = py.read_text()
+        leftovers += [f"{py.relative_to(pkg)}: {n}" for n in twin if n in text]
+        funcs = [
+            n for n in ast.walk(ast.parse(text))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            if "AS woba_scale" not in line:
+                continue
+            owner = min(
+                (f for f in funcs if f.lineno <= i <= f.end_lineno),
+                key=lambda f: f.end_lineno - f.lineno,
+                default=None,
+            )
+            emitters.append(f"{py.relative_to(pkg)}:{getattr(owner, 'name', '<module>')}")
+    assert not leftovers, leftovers
+    assert emitters == ["queries/domain.py:_run_value_ctes"], emitters
 
 
 def test_committed_bench_no_task_mem_regressions():

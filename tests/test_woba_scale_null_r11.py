@@ -1,11 +1,13 @@
-"""Degenerate woba_scale = NULL parity (round 11, VERDICT r10 nit 4).
+"""Degenerate woba_scale = NULL parity.
 
 The reference emits np.nan when the count-weighted reaching-events mean
 is zero (processors/get_linear_weights.py:137:
 ``woba_scale = league_obp / denominator if denominator != 0 else np.nan``).
 NaN's engine image is NULL — a 0.0 fill would silently zero downstream
 wOBA where the reference's NaN propagates visibly. Real corpora never hit
-the arm (the full registry stays hash-green); this fixture forces it.
+the arm (the registry hashes cannot see it); these fixtures force it in
+the engine (pbp/metrics.linear_weights) and in its one SQL mirror
+(queries/domain._run_value_ctes).
 """
 
 from __future__ import annotations
@@ -44,27 +46,32 @@ def test_degenerate_woba_scale_is_null_spark(spark):
 
 
 def test_degenerate_woba_scale_is_null_duckdb():
-    """The oracle's scale arm — the same CASE the registry oracles embed —
-    yields NULL on the degenerate weighted mean in DuckDB too."""
-    val = duckdb.sql(
-        """
-        WITH quant(lwao_u, n) AS (VALUES (0, 3), (0, 5))
-        SELECT CASE WHEN SUM(lwao_u * n) != 0
-                    THEN 0.360 / (CAST(SUM(lwao_u * n) AS DOUBLE) / SUM(n) / 1000000.0)
-                    ELSE NULL END AS woba_scale
-        FROM quant
-        """
-    ).fetchone()[0]
-    assert val is None
+    """The run-value SQL mirror every registry oracle embeds yields a NULL
+    scale in DuckDB on a league whose every play has re24 = 0."""
+    from d3d_etl_spark.queries.domain import _run_value_ctes
+
+    rows = ", ".join(
+        f"('d1', 2024, '{et}', 'NNN', 0, 'NNN', 1, 0, 0, 1)"
+        for et in ("BB", "HBP", "1B", "2B", "3B", "HR", "SO", "GO", "FO")
+        for _ in range(3)
+    )
+    src = (
+        f"(SELECT * FROM (VALUES {rows}) t(division, year, event_type, bases_before,"
+        " outs_before, bases_after, outs_after, runs_roi, runs_on_play, outs_on_play))"
+    )
+    scale = duckdb.sql(f"WITH {_run_value_ctes(src)} SELECT woba_scale FROM scale").fetchall()
+    assert scale == [(None,)]
 
 
 def test_oracle_strings_carry_the_null_arm():
-    """Pin the production oracle text: every scale CTE fills NULL, not
-    0.0, on the degenerate arm (so a regression to the old fill cannot
-    pass silently — the arm is invisible to the hash gate on real data)."""
-    from d3d_etl_spark.queries.domain import _LW_CTES
+    """Pin the oracle text: the one scale CTE fills NULL, not 0.0, on the
+    degenerate arm (so a regression to the old fill cannot pass silently —
+    the arm is invisible to the hash gate on real data), and the
+    end-to-end WAR oracle embeds it."""
+    from d3d_etl_spark.queries.domain import _run_value_ctes
     from d3d_etl_spark.queries.stateful import _pbp_war_oracle
 
-    assert "ELSE NULL END AS woba_scale" in _LW_CTES
-    assert "ELSE 0.0 END AS woba_scale" not in _LW_CTES
-    assert "ELSE NULL END AS woba_scale" in _pbp_war_oracle()
+    ctes = _run_value_ctes()
+    assert "ELSE NULL END AS woba_scale" in ctes
+    assert "ELSE 0.0 END AS woba_scale" not in ctes
+    assert ctes in _pbp_war_oracle()

@@ -121,9 +121,9 @@ def lr_corpus_inputs(docs: DataFrame, n_features: int):
     """Shared (features, labels) construction for the LR surface — the ONE
     definition of the eligibility rule (docs with >= 1 token) and the label
     encoding (y_q = X_SCALE iff lang = 'en'), used by the oracled step
-    query, the trainer loop, and the streaming-parity test alike. Both
-    frames come back lazy; lr_gradient_step reads xq twice, and a loop
-    reads both every step, so the caller barriers them."""
+    query and the trainer loop alike. Both frames come back lazy;
+    lr_gradient_step reads xq twice, and a loop reads both every step, so
+    the caller barriers them."""
     from d3d_etl_spark.functions.text import tokens
 
     tok = tokens(F.col("text"))

@@ -182,11 +182,11 @@ def band_keys_from_shingle_array(
     sh_col: Column, n_hashes: int = 16, rows_per_band: int = 4
 ) -> Column:
     """array<struct<band_idx:int, band_key:string>> from a (distinct)
-    shingle-array column — the MAP-ONLY twin of :func:`lsh_band_keys`,
+    shingle-array column — the MAP-ONLY form of :func:`lsh_band_keys`,
     bit-identical keys (same md5 family, same "j:shingle" seeding, same
-    band concat; parity pinned in tests/test_streaming.py and the
-    z_corpus_incremental oracle). Empty array for shingle-less docs,
-    matching the grouped operator's no-rows behavior.
+    band concat; parity pinned by the z_corpus_incremental oracle). Empty
+    array for shingle-less docs, matching the grouped operator's no-rows
+    behavior.
 
     Use when the shingle array is ALREADY materialized per document (a
     checkpointed or stored column): the signature then needs no groupBy

@@ -14,9 +14,9 @@ reconcile_players.py:413-469) as one generic, scale-safe operator:
        break (SURVEY.md §7.3).
 
 Similarity here is normalized Levenshtein (JVM built-in, codegen-friendly,
-and mirrored exactly by the SQL oracle). The reference's token_sort_ratio
-can be plugged in as a pandas UDF scorer without changing the operator
-shape — blocking and top-1 selection are where the scale behavior lives.
+and mirrored exactly by the SQL oracle), over token-sorted names where the
+reference uses rapidfuzz token_sort_ratio. Blocking and top-1 selection
+are where the scale behavior lives.
 """
 
 from __future__ import annotations
@@ -92,31 +92,28 @@ def subblocked_pairs(
     aggregation, and no WindowExec buffering a whole mega-block in one task
     on the candidate branch.
 
-    The explicit repartition(N, block+salt) on BOTH sides is LOAD-BEARING
-    (round 9, the _inc_probe_cand lesson): the fan sides' shuffled bytes
-    are small name strings while the blow-up is the join's OUTPUT, so AQE
-    would coalesce a planner-made exchange and re-concentrate several
-    sub-blocks into one task — a user-specified repartition is exempt,
-    and sharing (N, keys) means the join adds no further exchange. N = the
-    total sub-slice count (a 1-row driver scalar off the nsub map), so one
-    task ~ one sub-block.
+    The explicit repartition(N, block+salt) on BOTH sides is LOAD-BEARING:
+    the fan sides' shuffled bytes are small name strings while the blow-up
+    is the join's OUTPUT, so AQE would coalesce a planner-made exchange and
+    re-concentrate several sub-blocks into one task — a user-specified
+    repartition is exempt, and sharing (N, keys) means the join adds no
+    further exchange. N = the total sub-slice count (a 1-row driver scalar
+    off the nsub map), so one task ~ one sub-block.
     """
     from d3d_etl_spark.functions.strings import md5_int
 
     nsub_map = candidates.groupBy(*block_keys).agg(
         F.ceil(F.count("*") / FUZZY_MAX_BLOCK).cast("int").alias("_nsub")
     )
-    # One candidates scan, not three (review finding, the _inc_probe_cand
-    # recipe): collect the block-grain map once, derive the slice count
-    # driver-side, and rejoin it as a broadcast literal — the main job no
-    # longer re-aggregates candidates under each join branch. Fuzzy blocks
-    # are domain-bounded (brand / (team, year) / team) so the map is a
-    # driver scalar. The CAP GATES THE COLLECT ITSELF (ADVICE r9 #1): a
+    # One candidates scan, not three: collect the block-grain map once,
+    # derive the slice count driver-side, and rejoin it as a broadcast
+    # literal — the main job never re-aggregates candidates under each join
+    # branch. Fuzzy blocks are domain-bounded (brand / (team, year) / team)
+    # so the map is a driver scalar. The CAP GATES THE COLLECT ITSELF: a
     # limit(cap+1) probe decides first, so a pathological block-key
     # cardinality never materializes the full map on the driver — the
     # over-cap branch keeps the distributed map (re-aggregated per join
-    # branch, the pre-round-9 shape) and takes the slice total as a 1-row
-    # scalar aggregate.
+    # branch) and takes the slice total as a 1-row scalar aggregate.
     nsub_rows = nsub_map.limit(_NSUB_DRIVER_CAP + 1).collect()
     if nsub_rows and len(nsub_rows) <= _NSUB_DRIVER_CAP:
         n_slices = sum(r["_nsub"] for r in nsub_rows)
@@ -289,7 +286,6 @@ def roster_cascade(
     probe_number: str | None = None,
     cand_number: str | None = None,
     cutoff: float = 0.7,
-    use_rapidfuzz: bool = False,
 ) -> DataFrame:
     """The reference's five-tier roster reconciliation
     (map_ncaa_to_cube.py:125-175) as ONE cascade over blocked joins:
@@ -303,12 +299,8 @@ def roster_cascade(
     Each tier sees only probes unmatched by earlier tiers; every ambiguous
     pick is determinized by min candidate id (extractOne's list-order tie
     break made partition-stable). Returns (probe_id, matched_id, tier).
-
-    `use_rapidfuzz=True` swaps tier 5's JVM token-sort-Levenshtein score
-    for the reference's exact rapidfuzz token_sort_ratio semantics via an
-    Arrow-batched pandas UDF (functions/fuzzscore.py; pure-python fallback
-    when rapidfuzz isn't installed). The default stays JVM-side: codegen'd,
-    and mirrored exactly by SQL oracles.
+    Tier 5 scores JVM-side (token-sorted Levenshtein): codegen'd, and
+    mirrored exactly by SQL oracles.
     """
     from d3d_etl_spark.functions.strings import normalize_name
 
@@ -403,25 +395,16 @@ def roster_cascade(
         )
         _advance(m)
 
-    # tier 5: fuzzy top-1 over token-sorted names. Same scoring discipline
-    # as the sibling cascades (round 9, VERDICT r8 weak #2): precomputed
-    # per-SIDE token-sort keys + the lossless length prune on the JVM
-    # scorer, broadcast-or-subblocked block join on both. The rapidfuzz
-    # parity tier keeps raw names (the UDF preprocesses internally, so no
-    # provably-lossless prune exists for it) — it is the off-path tier.
+    # tier 5: fuzzy top-1 over token-sorted names, with the sibling
+    # cascades' scoring discipline: per-SIDE precomputed token-sort keys,
+    # the lossless length prune before the DP, and a broadcast-or-subblocked
+    # block join. All three keep the pair set above the cutoff exact.
     n_parts = probes.sparkSession.sparkContext.defaultParallelism
     w_fuzzy = Window.partitionBy(probe_id).orderBy(F.desc("_score"), F.asc(cand_id))
-    if use_rapidfuzz:
-        from d3d_etl_spark.functions.fuzzscore import token_sort_ratio_udf
-
-        score = token_sort_ratio_udf(F.col(probe_name), F.col(cand_name)) / 100.0
-        len_ok = F.lit(True)
-        rem_k, cands_k = remaining, candidates
-    else:
-        score = levenshtein_sim(F.col("_pk"), F.col("_ck"))
-        len_ok = length_prune(F.col("_pk"), F.col("_ck"), cutoff)
-        rem_k = remaining.withColumn("_pk", token_sort_key(F.col(probe_name)))
-        cands_k = candidates.withColumn("_ck", token_sort_key(F.col(cand_name)))
+    score = levenshtein_sim(F.col("_pk"), F.col("_ck"))
+    len_ok = length_prune(F.col("_pk"), F.col("_ck"), cutoff)
+    rem_k = remaining.withColumn("_pk", token_sort_key(F.col(probe_name)))
+    cands_k = candidates.withColumn("_ck", token_sort_key(F.col(cand_name)))
     if fits_broadcast(candidates):
         pairs = rem_k.repartition(n_parts).join(F.broadcast(cands_k), block_keys)
     else:
@@ -591,9 +574,8 @@ def headshot_cascade(
     )
     _advance(direct)
 
-    # Scoring tiers (round 9, VERDICT r8 weak #2 — previously every
-    # within-block pair ran the full token-sort + levenshtein with no
-    # pruning; 58.8 s -> 325.8 s at the sf0.1/sf1 stress pair):
+    # Scoring tiers — without these three, every within-block pair runs
+    # the full token-sort + levenshtein unpruned:
     #   - the token-sort key is PRECOMPUTED per side (one split/sort/join
     #     per ROW, not per pair — only the levenshtein DP remains per-pair);
     #   - the lossless length prune gates the DP on the same keyed strings;

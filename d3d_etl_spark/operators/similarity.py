@@ -126,9 +126,9 @@ def assign_nearest_centroid(
     # — exactly the old row_number window's (sim desc, label asc) first
     # row (sim is already 6-dp rounded, so negation is exact; label is
     # unique within a group, so no ties), without the window's per-task
-    # sort of the corpus x K score table (round 11, the pq_encode_comps
-    # argmin recipe). restrict_cols join the ORDER key after label: the
-    # window never ordered on them, so any cross-restrict tie was
+    # sort of the corpus x K score table (the pq_encode_comps argmin
+    # recipe). restrict_cols join the ORDER key after label: the window
+    # never ordered on them, so any cross-restrict tie was
     # nondeterministic before — this makes it deterministic. The `+ 0.0`
     # on the negated key normalizes IEEE -0.0 to +0.0: Spark's struct
     # ordering is Double.compare (distinguishes the zeros) while both
@@ -138,13 +138,12 @@ def assign_nearest_centroid(
     # window's NULLS-LAST: a zero-norm vector or centroid makes sim NULL
     # (try_divide above), and struct ordering would sort that NULL key
     # FIRST — i.e. a degenerate all-zero centroid would capture every
-    # vector instead of none (VERDICT r11 finding 2); keying it +inf
-    # makes NULL-sim candidates lose exactly as they did under desc(sim).
-    # The nanvl keys a NaN sim -inf so it WINS: Spark's struct ordering
-    # sorts NaN after +inf (would lose) while both the replaced desc(sim)
-    # window and the oracle's ORDER BY sim DESC put NaN FIRST (ADVICE r12
-    # medium — hostile inf/overflow components; same pattern at every
-    # coalesce-key site, batch and streaming).
+    # vector instead of none; keying it +inf makes NULL-sim candidates
+    # lose exactly as they do under desc(sim). The nanvl keys a NaN sim
+    # -inf so it WINS: Spark's struct ordering sorts NaN after +inf (would
+    # lose) while a desc(sim) window and the oracle's ORDER BY sim DESC put
+    # NaN FIRST (hostile inf/overflow components produce it; same pattern
+    # at every coalesce-key site).
     best = F.min_by(
         F.struct(*restrict_cols, F.col(label_col), F.col("sim")),
         F.struct(
@@ -532,9 +531,9 @@ def ann_gated_contrastive_rows(
     This exists because mining triplets through the pair operator with
     threshold -1 materializes EVERY bucket pair — output (and the
     downstream dedup agg's state) is bucket-size-QUADRATIC, measured as a
-    4.6 GiB task at the sf1 stress tier (the round-8 scope=all audit's
-    worst finding). Here the quadratic sims matrix still exists inside
-    each task (bounded at max_bucket^2 by the hot-bucket guard), but only
+    4.6 GiB task at the sf1 stress tier. Here the quadratic sims matrix
+    still exists inside each task (bounded at max_bucket^2 by the
+    hot-bucket guard), but only
     O(positives + 1) rows per vector per task LEAVE it, so shuffle volume
     and downstream state track the duplicate rate, never bucket^2.
 

@@ -32,9 +32,8 @@ def pitcher_step(
     away pitches the Bottom. A 'to p for' substitution takes effect for the
     side currently fielding, preferring the named sub; when the narration
     name is absent the queue supplies the next pitcher (the reference's
-    fallback order, names/names.py:59-92). Shared by the batch cogroup FSM
-    and the streaming twin (streaming/stateful.streaming_pitchers) so the
-    two agree by construction.
+    fallback order, names/names.py:59-92). Shared by the partitioned runner
+    and the cogroup FSM so the two agree by construction.
     """
     fielding = "home" if half == "Top" else "away"
     text = play_text or ""

@@ -6,9 +6,9 @@ implements at pbp_parser/columns.py:332-529: explicit runner-segment
 processing, substitution renames, and the forced-advance cascade when the
 batter takes a base. Implementation is fresh Python (not a copy): one pure
 step function, fsm_step, driven by the batch parse's Arrow runner
-(base_state_arrow_iter), by the per-game grouped map (base_state_fsm) and
-by the streaming FSM — state never crosses games, so N games parallelize
-perfectly across the cluster.
+(base_state_arrow_iter) and by the per-game grouped map (base_state_fsm)
+— state never crosses games, so N games parallelize perfectly across the
+cluster.
 
 Narration grammar per FIXTURES.md §1: segments joined by ';', first segment
 is the batter's event, later segments are runner events
@@ -59,7 +59,7 @@ _FORCE_EVENTS = {"BB", "IBB", "HBP", "CI"}
 # what the FSM adds to each play, in output order
 STATE_COLUMNS = ("bases_before", "bases_after", "r1_name", "r2_name", "r3_name")
 
-# the per-game grouped map's output (base_state_fsm, streaming FSM)
+# the per-game grouped map's output (base_state_fsm)
 BASE_STATE_SCHEMA = (
     "contest_id long, play_id long, bases_before string, bases_after string, "
     "r1_name string, r2_name string, r3_name string"
@@ -146,9 +146,8 @@ def fsm_step(
     """One play's state transition (pure: copies the base dict).
 
     Returns (new_bases, new_cur_half, bases_before, bases_after,
-    r1_before, r2_before, r3_before). Shared by every runner (batch Arrow
-    map, grouped map, streaming applyInPandasWithState) so all of them have
-    identical semantics by construction.
+    r1_before, r2_before, r3_before). Shared by both runners (batch Arrow
+    map, grouped map) so they have identical semantics by construction.
     """
     half_key = (inning, half)
     if half_key != cur_half:
@@ -240,8 +239,8 @@ def base_state_arrow_iter(batches):
 
 def base_state_fsm(group: pd.DataFrame) -> pd.DataFrame:
     """One game's plays (sorted by play_id) -> base-state columns: the
-    per-game grouped map, kept as the reference the batch Arrow runner and
-    the streaming FSM are tested against."""
+    per-game grouped map, kept as the reference the batch Arrow runner is
+    tested against."""
     bases: dict[int, str | None] = {1: None, 2: None, 3: None}
     cur_half: tuple | None = None
     out_rows: list[tuple] = []

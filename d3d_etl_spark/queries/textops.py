@@ -8,11 +8,11 @@ functions / regex expressions on the `text` column — a single narrow map
 stage, zero shuffles, fully whole-stage-codegen. At 100 TB this scans and
 emits without any exchange; only the downstream aggregations shuffle.
 
-Round-3 consolidation (VERDICT.md "Next round" #2): the per-document
-metrics (tokens, quality, language-ID, fingerprint, regex classify/extract)
-are ONE wide query (`corpus_doc_stats`) — formerly six queries, still zero
-shuffles (plan-pinned in tests/test_plans.py). The corpus-level aggregates
-(TF-IDF top terms, vocabulary histogram) are one tagged union
+Consolidation: the per-document metrics (tokens, quality, language-ID,
+fingerprint, regex classify/extract) are ONE wide query
+(`corpus_doc_stats`) with zero shuffles (plan-pinned in
+tests/test_plans.py). The corpus-level aggregates (TF-IDF top terms,
+vocabulary histogram) are one tagged union
 (`corpus_tfidf_hist`); chunking and sequence packing are one tagged union
 (`corpus_chunk_pack`).
 """
@@ -576,9 +576,9 @@ def z_corpus_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # z_corpus_lm_score — statistical LM quality scoring (the CCNet/KenLM-style
-# perplexity filter, round-4 north-star addition): fit add-one-smoothed
-# bigram probabilities on the corpus itself, score each document by mean
-# negative log likelihood, and bucket into keep/review/drop bands.
+# perplexity filter): fit add-one-smoothed bigram probabilities on the
+# corpus itself, score each document by mean negative log likelihood, and
+# bucket into keep/review/drop bands.
 #
 # Determinism contract: every per-bigram surprisal term
 # -ln((c12+1)/(c1+V)) is quantized to an INTEGER (1e-4 units) BEFORE the
@@ -865,11 +865,11 @@ _BPE_TRAIN_ROUNDS = 5
 
 
 def _bpe_ctes(rounds: int) -> str:
-    """The full BPE training trajectory as one chained-CTE DuckDB oracle
-    (round-4 VERDICT item #6, BPE half). The blocker was the left-to-right
-    merge FOLD — SQL has no per-row sequential fold — but plain `replace`
-    IS a left-to-right non-overlapping scan, which is exactly the fold's
-    semantics under the right encoding: symbols joined by DOUBLE tabs
+    """The full BPE training trajectory as one chained-CTE DuckDB oracle.
+    The hard part is the left-to-right merge FOLD — SQL has no per-row
+    sequential fold — but plain `replace` IS a left-to-right
+    non-overlapping scan, which is exactly the fold's semantics under the
+    right encoding: symbols joined by DOUBLE tabs
     (tokens are whitespace-split, so symbol text can never contain a tab),
     merge pattern `\\t p1 \\t\\t p2 \\t` -> `\\t p1p2 \\t`. Each match
     consumes one tab of each outer boundary and leaves one, so adjacent
@@ -936,7 +936,7 @@ def z_corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     TYPES, driver-fetches the argmax, and applies the merge as a per-row
     left-to-right fold. The round-over-round greedy argmax is driver
     control flow, like connected_components and the k-means loop — but
-    since round 5 the WHOLE trajectory is oracled (_bpe_train_oracle's
+    the WHOLE trajectory is oracled (_bpe_train_oracle's
     replace-encoding unroll), on top of the exact pin against a
     pure-python BPE reference in tests/test_operators.py and the oracled
     round-1 statistic z_corpus_bpe_pairs."""
@@ -1119,7 +1119,7 @@ def z_corpus_lr_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # shared eligibility/label/feature construction (ONE definition for the
-    # step query, the trainer loop, and the streaming-parity test).
+    # step query and the trainer loop).
     # lr_gradient_step reads xq in BOTH its margin and gradient branches;
     # labels once
     xq, labels = lr_corpus_inputs(docs, _LR_FEATURES)
@@ -1157,8 +1157,7 @@ def _lr_train_oracle(steps: int) -> str:
     identical doubles) makes each unrolled step bit-reproducible, so the
     driver-loop trainer is SQL-expressible after all — the loop is just
     `steps` copies of the z_corpus_lr_step CTE block threaded through the
-    weight table. Converts a rows-only registration into a fully oracled
-    row (round-4 VERDICT item #6)."""
+    weight table, so the trainer is fully oracled."""
     ctes = [
         f"""toks AS (SELECT doc_id, lang, {_TOK} AS w FROM documents),
 ex AS (
@@ -1786,19 +1785,21 @@ FROM top
 """
 
 
-def bm25_corpus_state(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The BM25 fit: (dl, tf, stats, idf) over the corpus for the fixed
-    query terms — the frozen state the batch ranker aggregates and the
-    streaming twin (streaming/retrieval.py) collects to literals. dl is
-    (doc_id, dl); tf is (doc_id, tok, tf) restricted to the query terms;
-    stats is the 1-row (n_docs, t_tokens); idf is the term-dimensional
-    (tok, idf_q) table.
+@register("z_text_bm25", _BM_ORACLE, tags=("textops", "retrieval"), bench=True)
+def z_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 top-10 lexical retrieval for the fixed query terms
+    (hash, join, dup, vector, scan): exact-integer per-term scores
+    (quantized idf x rational-cleared tf-norm), deterministic
+    (score desc, doc_id asc) ranking. Beyond-reference LLM-pipeline
+    operator (retrieval / hard-negative sourcing).
 
-    NO fan_out on the scan: quiet-host A/B measured it +56%
-    on z_text_bm25 at bench scale (1.17 -> 1.82 s min-of-cycles); the
+    The fit: dl is (doc_id, dl); tf is (doc_id, tok, tf) restricted to the
+    query terms; stats is the 1-row (n_docs, t_tokens); idf is the
+    term-dimensional (tok, idf_q) table. NO fan_out on the scan: quiet-host
+    A/B measured it +56% at bench scale (1.17 -> 1.82 s min-of-cycles); the
     guard is a production no-op, so it bought nothing at scale either."""
+    from pyspark.sql import Window
+
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("w")).where(
         F.size("w") > 0
@@ -1816,10 +1817,6 @@ def bm25_corpus_state(
         .agg(F.count("*").cast("long").alias("tf"))
     )
     dft = tf.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
-    # fit_n_docs/fit_t_tokens fingerprint the fit: the streaming twin
-    # asserts they match the stats frame it was handed, so an idf/stats
-    # pair from two different corpora (same terms) fails fast instead of
-    # scoring wrong-but-plausible
     idf = dft.crossJoin(F.broadcast(stats)).select(
         "tok",
         F.round(
@@ -1827,22 +1824,7 @@ def bm25_corpus_state(
         )
         .cast("long")
         .alias("idf_q"),
-        F.col("n_docs").alias("fit_n_docs"),
-        F.col("t_tokens").alias("fit_t_tokens"),
     )
-    return dl, tf, stats, idf
-
-
-@register("z_text_bm25", _BM_ORACLE, tags=("textops", "retrieval"), bench=True)
-def z_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 lexical retrieval for the fixed query terms
-    (hash, join, dup, vector, scan): exact-integer per-term scores
-    (quantized idf x rational-cleared tf-norm), deterministic
-    (score desc, doc_id asc) ranking. Beyond-reference LLM-pipeline
-    operator (retrieval / hard-negative sourcing)."""
-    from pyspark.sql import Window
-
-    dl, tf, stats, idf = bm25_corpus_state(spark, sf_dir)
     scored = (
         tf.join(dl, "doc_id")
         .join(F.broadcast(idf), "tok")

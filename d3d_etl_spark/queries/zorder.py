@@ -173,10 +173,10 @@ def z_io_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# z_io_zorder_read — the READ half of the z-order lever as a benched query
-# (round-5 VERDICT item #4): answer a user-range predicate THROUGH the
-# zone map against the written layout, with the pruning contract enforced
-# inside the query body (like z_bucketed_spine's zero-exchange raise).
+# z_io_zorder_read — the READ half of the z-order lever as a benched query:
+# answer a user-range predicate THROUGH the zone map against the written
+# layout, with the pruning contract enforced inside the query body (like
+# z_bucketed_spine's zero-exchange raise).
 #
 # Layout + per-bucket stats are S19-memoized per scale (the write shuffle
 # is paid once, exactly as OPTIMIZE ZORDER would be); each run reads the
@@ -259,51 +259,3 @@ def z_io_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     if "PartitionFilters" not in plan or "zbucket" not in plan.split("PartitionFilters", 1)[1][:400]:
         raise RuntimeError("zbucket predicate is not a PartitionFilter at the scan")
     return out
-
-
-def streaming_zorder_bucket(
-    ev_stream: DataFrame,
-    bounds: DataFrame,
-    us_col: Column,
-    user_col: Column,
-    out_col: str = "zbucket",
-) -> DataFrame:
-    """Streaming twin of the z-order write path: bucket rows ARRIVING as a
-    stream against the PERSISTED grid bounds (the batch layout's min/max —
-    4 scalars, collected once into literals; re-gridding per batch would
-    move every old row's bucket, so the bounds are frozen index state
-    exactly like the PQ codebooks or IVF centroids). Pure per-row bit
-    arithmetic — stateless, zero shuffle; rows outside the frozen bounds
-    clamp to the edge cells (the standard zone-map behavior for
-    out-of-range appends, pinned in tests/test_zorder_r5.py)."""
-    row = bounds.collect()
-    if len(row) != 1:
-        raise ValueError(f"bounds must be exactly one row; got {len(row)}")
-    b = row[0]
-    min_us, max_us = int(b["min_us"]), int(b["max_us"])
-    min_u, max_u = int(b["min_u"]), int(b["max_u"])
-    span_us = max(max_us - min_us, 1)
-    span_u = max(max_u - min_u, 1)
-
-    def _int_div(x: Column, y: int) -> Column:
-        # exact integer floor-division as columns: subtract the pmod first
-        # so the float division is of an EXACT multiple (identical to the
-        # batch path's `div` on the in-bounds domain — parity-pinned)
-        return ((x - F.pmod(x, F.lit(y))) / F.lit(y)).cast("long")
-
-    def _clamp_raw(c: Column, lo: int, hi: int) -> Column:
-        # clamp BEFORE the affine map (monotone, so equivalent to clamping
-        # the grid) — an out-of-range append must never overflow the
-        # (value - min) * GRID multiply under ANSI arithmetic
-        return F.greatest(F.lit(lo), F.least(F.lit(hi), c))
-
-    xg = _int_div(
-        (_clamp_raw(us_col, min_us, max_us) - F.lit(min_us)) * _GRID_MAX, span_us
-    )
-    yg = _int_div(
-        (_clamp_raw(user_col, min_u, max_u) - F.lit(min_u)) * _GRID_MAX, span_u
-    )
-    z = morton_interleave(xg, yg)
-    return ev_stream.withColumn(
-        out_col, F.shiftright(z, 2 * _Z_BITS - _Z_BUCKET_BITS)
-    )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.functions.math import clip, ip_to_innings, ip_to_thirds, safe_div, thirds_to_ip
@@ -124,12 +125,12 @@ def test_grouped_agg_pandas_udaf(spark):
     interquartile range — not natively expressible as one aggregate) agrees
     with the two-sided native percentile computation. The UDAF slot is for
     genuinely custom statistics; everything standard stays JVM-native."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # hint-free + explicit functionType: evaluated type hints (PEP 563, this
-    # module's `from __future__ import annotations`) break inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def iqr(v):
+    # Series -> scalar hints make this a grouped-agg UDF; pandas is imported
+    # at module level so the string hints (PEP 563) resolve
+    @pandas_udf("double")
+    def iqr(v: pd.Series) -> float:
         return float(v.quantile(0.75) - v.quantile(0.25))
 
     df = spark.range(1000).selectExpr("id % 4 AS g", "CAST(id AS DOUBLE) AS x")

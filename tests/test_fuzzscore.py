@@ -1,10 +1,11 @@
-"""token_sort_ratio parity (reference names/helpers.py:186-200): the
+"""token_sort_ratio parity (reference names/helpers.py:186-200): a
 pure-python scorer against hand-computed values, against an INDEPENDENT
 second implementation (Wagner-Fischer indel DP — a different algorithm
 from the scorer's LCS route), against rapidfuzz's own published
 documentation examples, and against rapidfuzz itself when installed.
-The first three run unconditionally, so parity evidence no longer
-depends on rapidfuzz being present in the environment."""
+The first three run unconditionally, so parity evidence does not depend
+on rapidfuzz being present in the environment. The engine's cascades
+score JVM-side (token-sorted Levenshtein, operators/fuzzy_join.py)."""
 
 from __future__ import annotations
 
@@ -14,10 +15,42 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from d3d_etl_spark.functions.fuzzscore import (
-    HAVE_RAPIDFUZZ,
-    token_sort_ratio_py,
-)
+try:
+    from rapidfuzz.fuzz import token_sort_ratio as _rapidfuzz_tsr
+except ImportError:
+    _rapidfuzz_tsr = None
+
+_NON_ALNUM = re.compile(r"[^a-z0-9]+")
+
+
+def _process(s: str) -> str:
+    """rapidfuzz default_process + token sort."""
+    return " ".join(sorted(_NON_ALNUM.sub(" ", str(s).lower()).split()))
+
+
+def _lcs_len(a: str, b: str) -> int:
+    """Longest-common-subsequence length, O(len(a)*len(b)) rolling rows."""
+    if not a or not b:
+        return 0
+    prev = [0] * (len(b) + 1)
+    for ca in a:
+        cur = [0]
+        for j, cb in enumerate(b, start=1):
+            cur.append(prev[j - 1] + 1 if ca == cb else max(prev[j], cur[j - 1]))
+        prev = cur
+    return prev[-1]
+
+
+def token_sort_ratio_py(a: str, b: str) -> float:
+    """token_sort_ratio as rapidfuzz defines it:
+    100 * (1 - indel / (la + lb)) with indel = la + lb - 2 * LCS."""
+    pa, pb = _process(a), _process(b)
+    la, lb = len(pa), len(pb)
+    if la + lb == 0:
+        return 100.0
+    indel = la + lb - 2 * _lcs_len(pa, pb)
+    return 100.0 * (1.0 - indel / (la + lb))
+
 
 # (a, b, expected) — hand-computed: process (lower, non-alnum -> space,
 # sort tokens, single-space join), indel = la + lb - 2*LCS,
@@ -37,8 +70,8 @@ def _indel_ratio_dp(a: str, b: str) -> float:
     """Independent oracle: full Wagner-Fischer DP with insert=1, delete=1,
     substitute=2 (the Indel metric rapidfuzz documents for fuzz.ratio),
     applied after the same token-sort preprocessing. Deliberately a
-    DIFFERENT algorithm from fuzzscore's ``la + lb - 2*LCS`` route so the
-    two can cross-check each other."""
+    DIFFERENT algorithm from token_sort_ratio_py's ``la + lb - 2*LCS``
+    route so the two can cross-check each other."""
     proc = lambda s: " ".join(sorted(re.sub(r"[^a-z0-9]+", " ", str(s).lower()).split()))
     pa, pb = proc(a), proc(b)
     if not pa and not pb:
@@ -61,10 +94,8 @@ def test_scorer_parity(a, b, want):
     got = token_sort_ratio_py(a, b)
     assert got == pytest.approx(want)
     assert got == pytest.approx(_indel_ratio_dp(a, b))
-    if HAVE_RAPIDFUZZ:
-        from rapidfuzz.fuzz import token_sort_ratio
-
-        assert got == pytest.approx(token_sort_ratio(a, b))
+    if _rapidfuzz_tsr is not None:
+        assert got == pytest.approx(_rapidfuzz_tsr(a, b))
 
 
 # Published rapidfuzz documentation examples (README / API docs) — an
@@ -99,16 +130,13 @@ def test_property_scorer_vs_dp(a, b):
     assert 0.0 <= got <= 100.0
     assert got == pytest.approx(token_sort_ratio_py(b, a))
     assert token_sort_ratio_py(a, a) == 100.0
-    if HAVE_RAPIDFUZZ:
-        from rapidfuzz.fuzz import token_sort_ratio
-
-        assert got == pytest.approx(token_sort_ratio(a, b))
+    if _rapidfuzz_tsr is not None:
+        assert got == pytest.approx(_rapidfuzz_tsr(a, b))
 
 
-def test_udf_tier_in_cascade(spark):
-    """use_rapidfuzz=True routes tier 5 through the pandas UDF; the
-    corrupted probe resolves to the right candidate at the reference's
-    0.7 cutoff."""
+def test_fuzzy_tier_in_cascade(spark):
+    """Tier 5 (JVM token-sorted Levenshtein) resolves the corrupted probe
+    to the right candidate at the reference's 0.7 cutoff."""
     from d3d_etl_spark.operators.fuzzy_join import roster_cascade
 
     cands = spark.createDataFrame(
@@ -127,7 +155,7 @@ def test_udf_tier_in_cascade(spark):
             block_keys=["blk"],
             probe_id="probe_id", probe_name="pname",
             cand_id="cand_id", cand_name="cname",
-            cutoff=0.7, use_rapidfuzz=True,
+            cutoff=0.7,
         ).collect()
     }
     assert out[11]["tier"] == "exact" and out[11]["matched_id"] == 2

@@ -25,16 +25,23 @@ def test_partition_overwrite_upsert(spark, tmp_path):
     )
     upsert_partition(v2, path, ("year", "division"), dedup_keys=("year", "division", "k"))
 
-    got = {
-        (r["year"], r["division"], r["k"]): r["v"]
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        (2023, "d1", 1): "new",
-        (2023, "d1", 9): "new",
-        (2023, "d2", 2): "old",   # untouched partition survives
-        (2024, "d1", 3): "old",   # untouched partition survives
-    }
+    def read():
+        return sorted(
+            (r["year"], r["division"], r["k"], r["v"])
+            for r in spark.read.parquet(path).collect()
+        )
+
+    first = read()
+    assert first == [
+        (2023, "d1", 1, "new"),
+        (2023, "d1", 9, "new"),
+        (2023, "d2", 2, "old"),   # untouched partition survives
+        (2024, "d1", 3, "old"),   # untouched partition survives
+    ]
+    # replaying the same upsert is idempotent: at-least-once delivery of a
+    # slice gives exactly-once table contents, duplicates included
+    upsert_partition(v2, path, ("year", "division"), dedup_keys=("year", "division", "k"))
+    assert read() == first
 
 
 def test_incremental_anti_join(spark):

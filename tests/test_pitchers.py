@@ -103,3 +103,40 @@ def test_partitioned_pitcher_fsm_matches_cogroup(spark):
         else:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     assert got == want and len(got) == plays.count()
+
+
+def test_pitcher_queue_second_in_queue_sub(spark):
+    """A later in-queue sub consumes the NEXT queue entry after an earlier
+    sub advanced the pointer."""
+    game = [
+        (1, "T", "A1 singled"),
+        (1, "B", "H1 struck out swinging"),
+        (2, "T", "RELIEF, R. to p for STARTER, S."),
+        (2, "T", "A2 walked"),
+        (3, "T", "A3 flied out to cf"),
+        (3, "B", "H2 singled"),
+        (4, "T", "CLOSER, C. to p for RELIEF, R."),
+        (4, "T", "A4 grounded out to ss"),
+    ]
+    raw = spark.createDataFrame(
+        [
+            (300, inning, t if h == "T" else None, t if h == "B" else None, seq)
+            for seq, (inning, h, t) in enumerate(game)
+        ],
+        "contest_id long, inning int, away_text string, home_text string, source_seq long",
+    )
+    plays = add_metadata(raw)
+    lineups = spark.createDataFrame(
+        [
+            (300, "home", 1, "STARTER, S."),
+            (300, "home", 2, "RELIEF, R."),
+            (300, "home", 3, "CLOSER, C."),
+            (300, "away", 1, "AWAY1, A."),
+        ],
+        "contest_id long, side string, pitch_order int, player_name string",
+    )
+    got = {r["play_id"]: r["pitcher_name"] for r in fill_pitchers(plays, lineups).collect()}
+    assert got == {
+        1: "STARTER, S.", 2: "AWAY1, A.", 3: "RELIEF, R.", 4: "RELIEF, R.",
+        5: "RELIEF, R.", 6: "AWAY1, A.", 7: "CLOSER, C.", 8: "CLOSER, C.",
+    }

@@ -563,6 +563,24 @@ def test_one_run_value_chain():
     assert emitters == ["queries/domain.py:_run_value_ctes"], emitters
 
 
+def test_no_stream_api_in_package():
+    """The engine is batch-only: each operator has one batch path, pinned by
+    its oracle. No Structured Streaming source, sink or stateful-stream API
+    appears in the package or the harness."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    files = [*(repo / "d3d_etl_spark").rglob("*.py"), repo / "bench.py", repo / "stress_sf1.py"]
+    apis = ("readStream", "writeStream", "applyInPandasWithState", "transformWithState")
+    hits = [
+        f"{py.relative_to(repo)}: {api}"
+        for py in sorted(files)
+        for api in apis
+        if api in py.read_text()
+    ]
+    assert not hits, hits
+
+
 def test_committed_bench_no_task_mem_regressions():
     """bench.py diffs each run's per-query max-task peak execution memory
     against the committed run (git HEAD copy of BENCH.json) and records

@@ -117,63 +117,6 @@ def test_zorder_write_and_zone_map_pruning(spark, sf_dir, tmp_path):
     assert m, plan[:1500]
 
 
-def test_streaming_zorder_twin_parity(spark, sf_dir, tmp_path):
-    """The streaming z-order twin, driven as a real availableNow stream
-    against frozen batch bounds, must assign the EXACT bucket the batch
-    write path assigns for in-bounds rows, and clamp out-of-range appends
-    to edge cells instead of silently re-gridding."""
-    import os
-
-    from d3d_etl_spark.io import load_table
-    from d3d_etl_spark.queries.zorder import (
-        streaming_zorder_bucket,
-        with_zorder_bucket,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.unix_micros("ts").alias("us"), "user_id"
-    )
-    batch = with_zorder_bucket(ev, F.col("us"), F.col("user_id"))
-    want = {r.event_id: r.zbucket for r in batch.collect()}
-
-    bounds = ev.agg(
-        F.min("us").alias("min_us"),
-        F.max("us").alias("max_us"),
-        F.min("user_id").alias("min_u"),
-        F.max("user_id").alias("max_u"),
-    )
-    staged = os.path.join(str(tmp_path), "ev")
-    ev.write.parquet(staged)
-    stream_src = spark.readStream.schema(ev.schema).parquet(staged)
-    out = streaming_zorder_bucket(
-        stream_src, bounds, F.col("us"), F.col("user_id")
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("z_twin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.event_id: r.zbucket
-        for r in spark.sql("select event_id, zbucket from z_twin").collect()
-    }
-    assert got == want
-
-    # out-of-range appends clamp to edge cells (batch semantics would
-    # re-grid and move every old bucket — the twin must never do that)
-    late = spark.createDataFrame(
-        [(1, -10**18, -999), (2, 10**18, 10**9)],
-        "event_id long, us long, user_id long",
-    )
-    lt = streaming_zorder_bucket(late, bounds, F.col("us"), F.col("user_id"))
-    vals = {r.event_id: r.zbucket for r in lt.collect()}
-    assert vals[1] == 0
-    assert vals[2] == (1 << 6) - 1  # all-ones prefix = top corner cell
-
-
 def test_zorder_read_query_prunes_in_path(spark, sf_dir):
     """z_io_zorder_read enforces its own pruning contract with raises —
     running it green IS the pin (candidates skip >= 1/4 of buckets,

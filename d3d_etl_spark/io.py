@@ -381,24 +381,6 @@ def export_sqlite(
     return len(pdf)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int = 16
-) -> None:
-    """Persist as a bucketed+sorted managed table: rows are hash-partitioned
-    into `n_buckets` files per partition ON WRITE, so equi-joins and
-    aggregations on the bucket key read co-located data and skip the shuffle
-    entirely (plan shows zero Exchange on the bucketed side). The 100 TB
-    pattern for fact-to-fact joins repeated across many queries: pay the
-    shuffle once at ingest, never again."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 # --- CSV compat path (S1) ---------------------------------------------------
 # The reference's storage IS csv (every stage boundary, SURVEY.md §1.1); the
 # engine's native storage is parquet, but a migrating user's first run reads

@@ -1,4 +1,4 @@
-"""BPE tokenizer training on Spark (north-star tokenizer surface, round 4).
+"""BPE tokenizer training on Spark (the north-star tokenizer surface).
 
 Classic byte-pair-encoding training is an ITERATIVE algorithm: each round
 picks the most frequent adjacent symbol pair (weighted by word frequency)

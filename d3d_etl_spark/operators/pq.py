@@ -108,9 +108,9 @@ def pq_encode_comps(
     `enc_parts`: optional count-scaled partition count for the candidate
     (id, sub, code) table. The encode chain's agg + argmin-window
     otherwise exchange at the FIXED session shuffle-partition count, so
-    per-task agg/sort state grows linearly with the corpus (the round-10
-    registry audit measured z_sim_pq_refine's top task 49 -> 164 MB
-    across the 10x pair). A user repartition on (id, sub) satisfies BOTH
+    per-task agg/sort state grows linearly with the corpus (a registry
+    audit measured z_sim_pq_refine's top task 49 -> 164 MB across a 10x
+    scale step). A user repartition on (id, sub) satisfies BOTH
     the aggregate's and the window's clustering (subset rule), so one
     exchange serves the whole chain and per-task state is vectors-per-
     task-bounded. Partitioning-only — results identical."""
@@ -135,9 +135,8 @@ def pq_encode_comps(
     # window's per-task SORT for dimension-bounded hash-agg state, and a
     # hash partitioning on (id, sub) from either the d agg above (subset
     # rule) or the caller's enc_parts repartition satisfies its
-    # clustering, so no further exchange. The window form's sort pages
-    # were the round-10 registry audit's 49 -> 164 MB task-peak grower on
-    # z_sim_pq_refine.
+    # clustering, so no further exchange. A window form's sort pages grow
+    # z_sim_pq_refine's task peak 49 -> 164 MB across a 10x scale step.
     best = F.min_by(F.struct("code", "dist"), F.struct("dist", "code")).alias("_b")
     return (
         d.groupBy(id_col, "sub")

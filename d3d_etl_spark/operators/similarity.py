@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, per the engine's scale doctrine:
+Per the engine's scale doctrine:
 - brute-force cosine top-k: the exactness baseline. One broadcast of the
   query vector, one narrow map (zip_with dot product), one top-k. Linear
   scan — right answer, right plan for a single query over any data size
@@ -9,6 +9,13 @@ Two tiers, per the engine's scale doctrine:
   (deterministic under any partitioning), every vector assigned to its
   nearest centroid. At query time you probe only the closest cells —
   the list-pruning path that replaces the linear scan at 100 TB.
+- pair search: every GEMM pair engine (all-pairs blocked, ANN-gated,
+  within-cluster; pair or contrastive rows) is one tagging rule
+  (:func:`_block_tagged`: rows replicated into id-hash block pairs, so
+  each unordered pair of a group meets in exactly one task) feeding one
+  Arrow kernel (:func:`_block_gemm`: an id-sorted matrix, one round-6
+  cosine block, then a pair or contrastive emitter). The JVM-side HOF
+  engine :func:`within_cluster_near_pairs` is its equivalence reference.
 
 Similarities are computed in double and rounded to 6 dp before any ordering
 or publication: the fold order of a 64-term dot product can differ across
@@ -175,96 +182,28 @@ def blocked_near_pairs(
     """All-pairs cosine >= threshold via blocked matrix multiplication.
 
     The exact-pairs scale shape: vectors are hashed into `n_blocks` blocks,
-    each of the B(B+1)/2 unordered block pairs becomes one cogroup task that
-    computes an (na x nb) similarity matrix with one BLAS matmul, and only
+    each of the B(B+1)/2 unordered block pairs becomes one grouped GEMM
+    task that computes a similarity matrix with one BLAS matmul, and only
     qualifying pairs leave the task. Versus the naive theta-join
     (`a.join(b, id_a < id_b)` + per-pair array folds) this replaces O(n^2)
     codegen'd 64-term folds with dense GEMM — measured 40x at sf0.1 — and it
     parallelizes as B^2/2 independent tasks instead of one quadratic
-    nested-loop join. At 100 TB you size n_blocks so a block fits executor
-    memory (replication factor is (B+1)/2 per side) and front it with
-    LSH/IVF gating; values here are exact, matching the brute-force oracle.
-    Each unordered pair lands in exactly one block-pair task, so no distinct
-    is needed afterwards.
+    nested-loop join. At 100 TB you size n_blocks so a block pair fits
+    executor memory (each row is replicated into the B block pairs that
+    contain its block) and front it with LSH/IVF gating; values here are
+    exact, matching the brute-force oracle. Each unordered pair lands in
+    exactly one block-pair task, so no distinct is needed afterwards.
 
     Output: (vec_a, vec_b, sim) with vec_a < vec_b, sim rounded to 6 dp
     (absorbs GEMM-vs-sequential fold-order noise, ~1e-15).
 
-    The cogroup runs applyInArrow, not applyInPandas: fixed-width vector
+    The tasks run applyInArrow, not applyInPandas: fixed-width vector
     lists reshape straight from the Arrow flat value buffer into the
     (n, dim) matrix, skipping the pandas object-array detour on both sides
     of the UDF (measured ~30% end-to-end at sf0.1: 2.0s -> 1.3s warm).
     """
-    import pyarrow as pa
-
-    spark = emb.sparkSession
-    pair_rows = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-    pair_df = spark.createDataFrame(pair_rows, "bi int, bj int")
-    base = emb.select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-    )
-    a_side = (
-        base.alias("ea")
-        .join(F.broadcast(pair_df.alias("pa")), F.col("ea.blk") == F.col("pa.bi"))
-        .select("pa.bi", "pa.bj", "ea.vid", "ea.vec")
-    )
-    # distinct column names on the b side: cogroup's analyzer otherwise flags
-    # the two inputs (same source, same attribute ids) as an ambiguous self-join
-    b_side = (
-        base.alias("eb")
-        .join(F.broadcast(pair_df.alias("pb")), F.col("eb.blk") == F.col("pb.bj"))
-        .select(
-            F.col("pb.bi").alias("b_bi"),
-            F.col("pb.bj").alias("b_bj"),
-            F.col("eb.vid").alias("b_vid"),
-            F.col("eb.vec").alias("b_vec"),
-        )
-    )
-
-    out_schema = pa.schema(
-        [("vec_a", pa.int64()), ("vec_b", pa.int64()), ("sim", pa.float64())]
-    )
-
-    def _mat(tbl: "pa.Table", col: str):
-        import numpy as np
-
-        c = tbl.column(col).combine_chunks()
-        flat = c.flatten().to_numpy(zero_copy_only=False)
-        return flat.reshape(len(c), -1), np
-
-    def gemm_pairs(la: "pa.Table", lb: "pa.Table") -> "pa.Table":
-        if la.num_rows == 0 or lb.num_rows == 0:
-            return out_schema.empty_table()
-        A, np = _mat(la, "vec")
-        B, _ = _mat(lb, "b_vec")
-        na = np.sqrt(np.einsum("ij,ij->i", A, A))
-        nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-        sims = _np_round6_half_away((A @ B.T) / np.outer(na, nb))
-        # zero-norm guard (pair-stage contract): a zero vector has no
-        # cosine — numpy yields NaN/inf here, Spark's double division
-        # yields NULL, and both drop the pair; the explicit isfinite mask
-        # pins that agreement instead of leaning on NaN-comparison quirks
-        # (IEEE engines disagree on NaN >= tau).
-        ia, jb = np.nonzero(np.isfinite(sims) & (sims >= threshold))
-        if ia.size == 0:
-            return out_schema.empty_table()
-        ida = la.column("vid").combine_chunks().to_numpy()[ia]
-        idb = lb.column("b_vid").combine_chunks().to_numpy()[jb]
-        s = sims[ia, jb]
-        if la.column("bi")[0].as_py() == la.column("bj")[0].as_py():
-            keep = ida < idb  # diagonal block holds both orientations + self
-            ida, idb, s = ida[keep], idb[keep], s[keep]
-        lo = np.minimum(ida, idb)
-        hi = np.maximum(ida, idb)
-        return pa.table({"vec_a": lo, "vec_b": hi, "sim": s}, schema=out_schema)
-
-    return (
-        a_side.groupBy("bi", "bj")
-        .cogroup(b_side.groupBy("b_bi", "b_bj"))
-        .applyInArrow(gemm_pairs, "vec_a long, vec_b long, sim double")
-    )
+    tagged = _block_tagged(emb, [], id_col, vec_col, n_sub=n_blocks)
+    return _block_gemm(tagged, ["_bi", "_bj"], _emit_pairs, threshold, _PAIR_FIELDS)
 
 
 def hyperplane_table(spark, n_planes: int, dim: int):
@@ -288,19 +227,14 @@ def hyperplane_buckets(emb: DataFrame, planes: DataFrame, id_col: str = "vec_id"
     At scale this is the ANN index build: one narrow pass per vector (the
     plane table is broadcast), bucket cardinality 2^n_planes; queries probe
     only their own bucket instead of scanning the corpus.
+
+    This is :func:`hyperplane_band_buckets` with one band as wide as the
+    long bucket (64 bits): every plane of a table of at most 64 planes lands
+    in band 0 at bit `plane`.
     """
-    comps = emb.select(id_col, F.posexplode(vec_col).alias("pos", "x")).select(
-        id_col, "pos", F.col("x").cast("double").alias("x")
+    return hyperplane_band_buckets(emb, planes, 64, id_col, vec_col).select(
+        id_col, "bucket"
     )
-    dots = (
-        comps.join(F.broadcast(planes), "pos")
-        .groupBy(id_col, "plane")
-        .agg(F.sum(F.col("x") * F.col("w")).alias("dot"))
-    )
-    bit = F.when(
-        F.col("dot") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), CAST(plane AS INT))")
-    ).otherwise(F.lit(0).cast("long"))
-    return dots.groupBy(id_col).agg(F.sum(bit).alias("bucket"))
 
 
 def hyperplane_band_buckets(
@@ -312,8 +246,8 @@ def hyperplane_band_buckets(
 ) -> DataFrame:
     """(id, band, bucket): hyperplane sign bits packed PER BAND.
 
-    The pair-search variant of :func:`hyperplane_buckets`: n_planes bits
-    split into bands of `band_size` bits each, so two vectors are candidate
+    The general form of :func:`hyperplane_buckets`: n_planes bits split
+    into bands of `band_size` bits each, so two vectors are candidate
     neighbours when they agree on ALL bits of ANY band — the same
     banding-amplification trick as MinHash LSH (text side,
     operators/dedup.py lsh_band_keys). Recall for a pair at angle θ is
@@ -337,8 +271,64 @@ def hyperplane_band_buckets(
 
 ANN_MAX_BUCKET = 4096  # hot-bucket guard: max rows per GEMM block (see below)
 
+_PAIR_FIELDS = [("vec_a", "long"), ("vec_b", "long"), ("sim", "double")]
+_CONTRASTIVE_FIELDS = [
+    ("anchor", "long"), ("other", "long"), ("sim", "double"), ("is_pos", "boolean"),
+]
 
-def _banded_block_tagged(
+
+def _block_tagged(
+    df: DataFrame,
+    group_cols: list,
+    id_col: str,
+    vec_col: str,
+    carry: tuple[str, ...] = (),
+    n_sub=None,
+) -> DataFrame:
+    """(group cols..., vid, vec, [carry...], _blk, _bi, _bj) rows: the one
+    block-pair rule of the GEMM pair engines.
+
+    Each row gets an id-hash block `_blk` in [0, n_sub) and is replicated
+    into the n_sub unordered block pairs (_bi, _bj) that contain its block.
+    Within a group every unordered pair of rows therefore meets in exactly
+    one (_bi, _bj) task: the diagonal task (b, b) when both rows sit in
+    block b, the off-diagonal task otherwise. `n_sub` is an int or a
+    per-row Column (a hot bucket's own split count); n_sub=None keeps the
+    whole group as one block and adds no block columns.
+
+    Ids must be integral: the kernel ships them as int64, and a
+    non-integral id would NULL-cast silently, so this fails fast instead.
+    Carry columns must be numeric and ship as float64."""
+    from d3d_etl_spark.functions.strings import md5_int
+
+    id_type = dict(df.dtypes).get(id_col)
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(f"GEMM pair engine requires an integral {id_col} (got {id_type})")
+    rows = df.select(
+        *group_cols,
+        F.col(id_col).cast("long").alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+        *[F.col(c).cast("double").alias(c) for c in carry],
+        *([] if n_sub is None else [F.lit(n_sub).alias("_nsub")]),
+    )
+    if n_sub is None:
+        return rows
+    return (
+        rows.withColumn(
+            "_blk",
+            F.pmod(md5_int(F.col("vid").cast("string")), F.col("_nsub")).cast("int"),
+        )
+        .withColumn("_j", F.explode(F.expr("sequence(0, _nsub - 1)")))
+        .select(
+            *rows.columns[:-1],
+            "_blk",
+            F.least("_blk", "_j").alias("_bi"),
+            F.greatest("_blk", "_j").alias("_bj"),
+        )
+    )
+
+
+def _ann_tagged(
     emb: DataFrame,
     dim: int,
     n_planes: int,
@@ -347,10 +337,9 @@ def _banded_block_tagged(
     vec_col: str,
     max_bucket: int,
 ) -> DataFrame:
-    """(vid, vec, band, bucket, _blk, _bi, _bj) rows: hyperplane band
-    buckets + the hot-bucket id-hash sub-block replication — the shared
-    front half of the gated GEMM operators (pair emission and contrastive
-    row emission differ only in what the Arrow worker returns).
+    """:func:`_block_tagged` rows grouped by hyperplane (band, bucket),
+    each bucket split into ceil(size / max_bucket) blocks: the shared
+    front half of the gated GEMM operators.
 
     Hot-bucket detection is a WINDOW count over (band, bucket): stays
     inside the one plan (no checkpoint barrier, no separate probe job —
@@ -358,49 +347,30 @@ def _banded_block_tagged(
     the banding lineage on both sides or pays two extra jobs for a
     barrier+driver probe). One extra exchange of the n_bands-rows-per-id
     band table; _nsub is 1 everywhere on a clean corpus, so the explode
-    emits exactly one row per input and the block keys are constant.
-    Each unordered pair of rows meets in exactly one (bi, bj) task per
-    band."""
+    emits exactly one row per input and the block keys are constant."""
     from pyspark.sql import Window
-
-    from d3d_etl_spark.functions.strings import md5_int
 
     if n_planes % n_bands:
         raise ValueError("n_planes must divide evenly into n_bands bands")
-    spark = emb.sparkSession
-    planes = hyperplane_table(spark, n_planes, dim)
+    planes = hyperplane_table(emb.sparkSession, n_planes, dim)
     bb = hyperplane_band_buckets(emb, planes, n_planes // n_bands, id_col, vec_col)
-    w_bkt = Window.partitionBy("band", "bucket")
-    bb = bb.withColumn(
-        "_nsub",
-        F.greatest(
-            F.lit(1), F.ceil(F.count("*").over(w_bkt) / F.lit(max_bucket))
-        ).cast("int"),
-    )
-    base = emb.select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
+    nsub = F.greatest(
+        F.lit(1),
+        F.ceil(F.count("*").over(Window.partitionBy("band", "bucket")) / F.lit(max_bucket)),
+    ).cast("int")
     # bucket membership lists are corpus-sized: this join shuffles both
     # sides on the id — one exchange, then the grouped GEMM reuses the
     # (band, bucket, block-pair) clustering from the groupBy
-    return (
-        base.join(bb.withColumnRenamed(id_col, "vid"), "vid")
-        .withColumn(
-            "_blk",
-            F.pmod(md5_int(F.col("vid").cast("string")), F.col("_nsub")).cast("int"),
-        )
-        .withColumn("_j", F.explode(F.expr("sequence(0, _nsub - 1)")))
-        .select(
-            "vid",
-            "vec",
-            "band",
-            "bucket",
-            "_blk",
-            F.least("_blk", "_j").alias("_bi"),
-            F.greatest("_blk", "_j").alias("_bj"),
-        )
+    return _block_tagged(
+        emb.join(bb.withColumn("_nsub", nsub), id_col),
+        ["band", "bucket"],
+        id_col,
+        vec_col,
+        n_sub=F.col("_nsub"),
     )
+
+
+_ANN_KEYS = ["band", "bucket", "_bi", "_bj"]
 
 
 def ann_gated_near_pairs(
@@ -423,7 +393,7 @@ def ann_gated_near_pairs(
     GEMM task over vectors that already agree on `band_size` hyperplane
     bits. Work is sum(bucket_size^2) per band — proportional to how
     clustered the corpus actually is, not to n^2. Replication is n_bands
-    rows per vector (vs (B+1)/2 per side for the blocked exact pass).
+    rows per vector (vs B per row for the blocked exact pass).
     A pair found in several bands is deduped by a final (vec_a, vec_b)
     group-max; sims are identical across copies (same rounded GEMM value).
 
@@ -448,68 +418,8 @@ def ann_gated_near_pairs(
     as resplit_oversized_clusters on the k-means side, but lossless here
     because sub-blocks still meet in block-pair tasks.
     """
-    import pyarrow as pa
-
-    tagged = _banded_block_tagged(
-        emb, dim, n_planes, n_bands, id_col, vec_col, max_bucket
-    )
-
-    out_schema = pa.schema(
-        [("vec_a", pa.int64()), ("vec_b", pa.int64()), ("sim", pa.float64())]
-    )
-
-    def _gemm(np, A, B):
-        na = np.sqrt(np.einsum("ij,ij->i", A, A))
-        nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-        return _np_round6_half_away((A @ B.T) / np.outer(na, nb))
-
-    def gemm_bucket_pairs(tbl: "pa.Table") -> "pa.Table":
-        import numpy as np
-
-        if tbl.num_rows < 2:
-            return out_schema.empty_table()
-        c = tbl.column("vec").combine_chunks()
-        M = c.flatten().to_numpy(zero_copy_only=False).reshape(len(c), -1)
-        ids = tbl.column("vid").combine_chunks().to_numpy()
-        bi = tbl.column("_bi")[0].as_py()
-        bj = tbl.column("_bj")[0].as_py()
-        if bi == bj:
-            # diagonal block: upper-triangle self-GEMM
-            sims = _gemm(np, M, M)
-            iu, ju = np.triu_indices(len(ids), k=1)
-            # zero-norm guard: see blocked_near_pairs — non-finite never pass
-            keep = np.isfinite(sims[iu, ju]) & (sims[iu, ju] >= threshold)
-            if not keep.any():
-                return out_schema.empty_table()
-            ia, jb = iu[keep], ju[keep]
-            lo = np.minimum(ids[ia], ids[jb])
-            hi = np.maximum(ids[ia], ids[jb])
-            return pa.table(
-                {"vec_a": lo, "vec_b": hi, "sim": sims[ia, jb]}, schema=out_schema
-            )
-        # off-diagonal block pair: full cross-GEMM between the two id-hash
-        # sub-blocks (disjoint row sets, so no self/orientation filtering)
-        blk = tbl.column("_blk").combine_chunks().to_numpy()
-        a_ix = np.nonzero(blk == bi)[0]
-        b_ix = np.nonzero(blk == bj)[0]
-        if a_ix.size == 0 or b_ix.size == 0:
-            return out_schema.empty_table()
-        sims = _gemm(np, M[a_ix], M[b_ix])
-        ia, jb = np.nonzero(np.isfinite(sims) & (sims >= threshold))
-        if ia.size == 0:
-            return out_schema.empty_table()
-        ida = ids[a_ix][ia]
-        idb = ids[b_ix][jb]
-        lo = np.minimum(ida, idb)
-        hi = np.maximum(ida, idb)
-        return pa.table(
-            {"vec_a": lo, "vec_b": hi, "sim": sims[ia, jb]}, schema=out_schema
-        )
-
-    pairs = (
-        tagged.groupBy("band", "bucket", "_bi", "_bj")
-        .applyInArrow(gemm_bucket_pairs, "vec_a long, vec_b long, sim double")
-    )
+    tagged = _ann_tagged(emb, dim, n_planes, n_bands, id_col, vec_col, max_bucket)
+    pairs = _block_gemm(tagged, _ANN_KEYS, _emit_pairs, threshold, _PAIR_FIELDS)
     return pairs.groupBy("vec_a", "vec_b").agg(F.max("sim").alias("sim"))
 
 
@@ -545,87 +455,8 @@ def ann_gated_contrastive_rows(
     because every partner appears in some task and the order is total.
     Columns are id-sorted before the GEMM so numpy's first-max argmax IS
     the min-id tiebreak."""
-    import pyarrow as pa
-
-    tagged = _banded_block_tagged(
-        emb, dim, n_planes, n_bands, id_col, vec_col, max_bucket
-    )
-
-    out_schema = _contrastive_schema(pa)
-
-    def gemm_contrastive(tbl: "pa.Table") -> "pa.Table":
-        import numpy as np
-
-        if tbl.num_rows < 2:
-            return out_schema.empty_table()
-        c = tbl.column("vec").combine_chunks()
-        M = c.flatten().to_numpy(zero_copy_only=False).reshape(len(c), -1)
-        ids = tbl.column("vid").combine_chunks().to_numpy()
-        order = np.argsort(ids, kind="stable")
-        M, ids = M[order], ids[order]
-        bi = tbl.column("_bi")[0].as_py()
-        bj = tbl.column("_bj")[0].as_py()
-        out: tuple = ([], [], [], [])
-        if bi == bj:
-            sims = _gemm_cos(np, M, M)
-            np.fill_diagonal(sims, -np.inf)  # a vector never partners itself
-            _contrastive_emit(np, ids, ids, sims, tau, out)
-        else:
-            blk = tbl.column("_blk").combine_chunks().to_numpy()[order]
-            a_ix = np.nonzero(blk == bi)[0]
-            b_ix = np.nonzero(blk == bj)[0]
-            if a_ix.size and b_ix.size:
-                sims = _gemm_cos(np, M[a_ix], M[b_ix])
-                _contrastive_emit(np, ids[a_ix], ids[b_ix], sims, tau, out)
-                _contrastive_emit(np, ids[b_ix], ids[a_ix], sims.T, tau, out)
-        if not out[0]:
-            return out_schema.empty_table()
-        return pa.table(
-            {"anchor": out[0], "other": out[1], "sim": out[2], "is_pos": out[3]},
-            schema=out_schema,
-        )
-
-    return tagged.groupBy("band", "bucket", "_bi", "_bj").applyInArrow(
-        gemm_contrastive, "anchor long, other long, sim double, is_pos boolean"
-    )
-
-
-def _contrastive_schema(pa):
-    return pa.schema(
-        [
-            ("anchor", pa.int64()),
-            ("other", pa.int64()),
-            ("sim", pa.float64()),
-            ("is_pos", pa.bool_()),
-        ]
-    )
-
-
-def _gemm_cos(np, A, B):
-    na = np.sqrt(np.einsum("ij,ij->i", A, A))
-    nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-    return _np_round6_half_away((A @ B.T) / np.outer(na, nb))
-
-
-def _contrastive_emit(np, ids_a, ids_b, sims, tau, out):
-    """Rows of `sims` anchor on ids_a, columns on ids_b (id-ascending).
-    Appends positive cells (sim >= tau) and the per-row best sub-tau cell
-    (tie: first max = min id, columns are id-sorted) to `out`."""
-    finite = np.isfinite(sims)
-    pi, pj = np.nonzero(finite & (sims >= tau))
-    for k in range(pi.size):
-        out[0].append(ids_a[pi[k]])
-        out[1].append(ids_b[pj[k]])
-        out[2].append(sims[pi[k], pj[k]])
-        out[3].append(True)
-    masked = np.where(finite & (sims < tau), sims, -np.inf)
-    best_j = np.argmax(masked, axis=1)
-    best_v = masked[np.arange(masked.shape[0]), best_j]
-    for i in np.nonzero(np.isfinite(best_v))[0]:
-        out[0].append(ids_a[i])
-        out[1].append(ids_b[best_j[i]])
-        out[2].append(best_v[i])
-        out[3].append(False)
+    tagged = _ann_tagged(emb, dim, n_planes, n_bands, id_col, vec_col, max_bucket)
+    return _block_gemm(tagged, _ANN_KEYS, _emit_contrastive, tau, _CONTRASTIVE_FIELDS)
 
 
 def within_cluster_contrastive_rows(
@@ -644,44 +475,124 @@ def within_cluster_contrastive_rows(
     registry audit). Each vector lives in exactly one cluster, so the
     emitted negative IS the scope-global hardest and positives need no
     cross-task dedup."""
+    tagged = _block_tagged(clustered, [F.col(label_col).alias("_lbl")], id_col, vec_col)
+    return _block_gemm(tagged, ["_lbl"], _emit_contrastive, tau, _CONTRASTIVE_FIELDS)
+
+
+_ARROW_TYPES = {"long": "int64", "double": "float64", "boolean": "bool_"}
+
+
+def _block_gemm(
+    tagged: DataFrame,
+    keys: list[str],
+    emit,
+    tau: float,
+    fields: list[tuple[str, str]],
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one cosine-block kernel behind every GEMM pair engine: group
+    :func:`_block_tagged` rows by `keys` and run one Arrow task per group.
+
+    The task sorts its rows by id (so an emitter's first-max argmax is the
+    min-id tie-break), reshapes the Arrow vector lists into one (n, dim)
+    matrix and takes one :func:`_gemm_cos`: a self-GEMM for a diagonal
+    block (no _bi/_bj columns, or _bi == _bj), a cross-GEMM between the
+    rows with _blk == _bi and those with _blk == _bj otherwise. It hands
+    `emit(np, a, b, sims, diagonal, tau)` the two sides as [ids, *carry]
+    arrays; the emitter returns the output columns in `fields` order
+    ((name, ddl type) pairs)."""
     import pyarrow as pa
 
-    id_type = dict(clustered.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"GEMM contrastive engine requires an integral {id_col} (got {id_type})"
-        )
-    out_schema = _contrastive_schema(pa)
+    schema = pa.schema([(n, getattr(pa, _ARROW_TYPES[t])()) for n, t in fields])
 
-    def work(tbl: "pa.Table") -> "pa.Table":
+    def gemm_blocks(tbl: "pa.Table") -> "pa.Table":
         import numpy as np
 
         if tbl.num_rows < 2:
-            return out_schema.empty_table()
-        c = tbl.column("vec").combine_chunks()
-        M = c.flatten().to_numpy(zero_copy_only=False).reshape(len(c), -1)
+            return schema.empty_table()
         ids = tbl.column("vid").combine_chunks().to_numpy()
         order = np.argsort(ids, kind="stable")
-        M, ids = M[order], ids[order]
-        sims = _gemm_cos(np, M, M)
-        np.fill_diagonal(sims, -np.inf)
-        out: tuple = ([], [], [], [])
-        _contrastive_emit(np, ids, ids, sims, tau, out)
-        if not out[0]:
-            return out_schema.empty_table()
-        return pa.table(
-            {"anchor": out[0], "other": out[1], "sim": out[2], "is_pos": out[3]},
-            schema=out_schema,
-        )
+        vec = tbl.column("vec").combine_chunks()
+        M = vec.flatten().to_numpy(zero_copy_only=False).reshape(len(vec), -1)[order]
+        rows = [ids[order]] + [
+            tbl.column(c).combine_chunks().to_numpy(zero_copy_only=False)[order]
+            for c in carry
+        ]
+        bi = bj = 0
+        if "_bi" in tbl.column_names:
+            bi, bj = tbl.column("_bi")[0].as_py(), tbl.column("_bj")[0].as_py()
+        if bi == bj:
+            a, b, sims = rows, rows, _gemm_cos(np, M, M)
+        else:
+            blk = tbl.column("_blk").combine_chunks().to_numpy()[order]
+            sa, sb = blk == bi, blk == bj
+            a, b = [r[sa] for r in rows], [r[sb] for r in rows]
+            sims = _gemm_cos(np, M[sa], M[sb])
+        if sims.size == 0:
+            return schema.empty_table()
+        cols = emit(np, a, b, sims, bi == bj, tau)
+        return pa.table(dict(zip(schema.names, cols)), schema=schema)
 
-    base = clustered.select(
-        F.col(label_col).alias("_lbl"),
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    return base.groupBy("_lbl").applyInArrow(
-        work, "anchor long, other long, sim double, is_pos boolean"
-    )
+    ddl = ", ".join(f"{n} {t}" for n, t in fields)
+    return tagged.groupBy(*keys).applyInArrow(gemm_blocks, ddl)
+
+
+def _gemm_cos(np, A, B):
+    """6-dp-rounded cosine of every (row of A, row of B) pair: one BLAS matmul
+    over the outer product of the row norms. A zero-norm row gives a
+    non-finite cell, which every emitter drops."""
+    def norm(X):
+        return np.sqrt(np.einsum("ij,ij->i", X, X))
+
+    return _np_round6_half_away((A @ B.T) / np.outer(norm(A), norm(B)))
+
+
+def _emit_pairs(np, a, b, sims, diagonal, tau):
+    """Cells with sim >= tau as (id_lo, id_hi, sim, c1_lo, c1_hi, ...):
+    carries swap WITH their ids. A diagonal block keeps its strict upper
+    triangle — ids are sorted, so that is id_a < id_b and no self pair.
+
+    Zero-norm guard (pair-stage contract): a zero vector has no cosine —
+    numpy yields NaN/inf here, Spark's double division yields NULL, and
+    both drop the pair; the explicit isfinite mask pins that agreement
+    instead of leaning on NaN-comparison quirks (IEEE engines disagree on
+    NaN >= tau)."""
+    ok = np.isfinite(sims) & (sims >= tau)
+    if diagonal:
+        ok = np.triu(ok, 1)
+    i, j = np.nonzero(ok)
+    swap = a[0][i] > b[0][j]
+    cols = []
+    for x, y in zip(a, b):
+        cols += [np.where(swap, y[j], x[i]), np.where(swap, x[i], y[j])]
+    cols.insert(2, sims[i, j])
+    return cols
+
+
+def _emit_contrastive(np, a, b, sims, diagonal, tau):
+    """(anchor, other, sim, is_pos): every cell with sim >= tau plus each
+    anchor row's best sub-tau cell (tie: first max = min id, columns are
+    id-sorted), from both orientations of an off-diagonal block."""
+    if diagonal:
+        np.fill_diagonal(sims, -np.inf)  # a vector never partners itself
+        sides = [(a[0], b[0], sims)]
+    else:
+        sides = [(a[0], b[0], sims), (b[0], a[0], sims.T)]
+    parts = []
+    for ids_a, ids_b, s in sides:
+        finite = np.isfinite(s)
+        pi, pj = np.nonzero(finite & (s >= tau))
+        masked = np.where(finite & (s < tau), s, -np.inf)
+        best_j = np.argmax(masked, axis=1)
+        best_v = masked[np.arange(len(best_j)), best_j]
+        ni = np.nonzero(np.isfinite(best_v))[0]
+        parts.append((
+            np.concatenate([ids_a[pi], ids_a[ni]]),
+            np.concatenate([ids_b[pj], ids_b[best_j[ni]]]),
+            np.concatenate([s[pi, pj], best_v[ni]]),
+            np.arange(pi.size + ni.size) < pi.size,
+        ))
+    return [np.concatenate(c) for c in zip(*parts)]
 
 
 def ivf_probe_labels(
@@ -1008,57 +919,9 @@ def within_cluster_near_pairs_gemm(
     (shipped as float64 through Arrow), and ids must be integral — the HOF
     engine accepts any orderable id type, this one fails fast instead of
     silently NULL-casting."""
-    import pyarrow as pa
-
-    id_type = dict(clustered.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"GEMM pair engine requires an integral {id_col} (got {id_type}); "
-            "use within_cluster_near_pairs for non-integral ids"
-        )
-
-    tagged = clustered.select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(label_col).alias("_lbl"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        *[F.col(c).cast("double").alias(c) for c in carry],
+    fields = [("id_a", "long"), ("id_b", "long"), ("pair_sim", "double")]
+    fields += [(f"{c}_{s}", "double") for c in carry for s in ("a", "b")]
+    tagged = _block_tagged(
+        clustered, [F.col(label_col).alias("_lbl")], id_col, vec_col, carry
     )
-    fields = [("id_a", pa.int64()), ("id_b", pa.int64()), ("pair_sim", pa.float64())]
-    fields += [(f"{c}_{s}", pa.float64()) for c in carry for s in ("a", "b")]
-    out_schema = pa.schema(fields)
-    ddl = ", ".join(
-        f"{n} {'long' if t == pa.int64() else 'double'}" for n, t in fields
-    )
-
-    def gemm_cluster_pairs(tbl: "pa.Table") -> "pa.Table":
-        import numpy as np
-
-        if tbl.num_rows < 2:
-            return out_schema.empty_table()
-        c = tbl.column("vec").combine_chunks()
-        A = c.flatten().to_numpy(zero_copy_only=False).reshape(len(c), -1)
-        norms = np.sqrt(np.einsum("ij,ij->i", A, A))
-        sims = _np_round6_half_away((A @ A.T) / np.outer(norms, norms))
-        iu, ju = np.triu_indices(len(norms), k=1)
-        # zero-norm guard: see blocked_near_pairs — non-finite sims never pass
-        keep = np.isfinite(sims[iu, ju]) & (sims[iu, ju] >= tau)
-        if not keep.any():
-            return out_schema.empty_table()
-        ids = tbl.column("vid").combine_chunks().to_numpy()
-        ia, jb = iu[keep], ju[keep]
-        # canonical orientation id_a < id_b; carries swap WITH their ids
-        a_first = ids[ia] < ids[jb]
-        lo_ix = np.where(a_first, ia, jb)
-        hi_ix = np.where(a_first, jb, ia)
-        cols = {
-            "id_a": ids[lo_ix],
-            "id_b": ids[hi_ix],
-            "pair_sim": sims[ia, jb],
-        }
-        for cname in carry:
-            cv = tbl.column(cname).combine_chunks().to_numpy(zero_copy_only=False)
-            cols[f"{cname}_a"] = cv[lo_ix]
-            cols[f"{cname}_b"] = cv[hi_ix]
-        return pa.table(cols, schema=out_schema)
-
-    return tagged.groupBy("_lbl").applyInArrow(gemm_cluster_pairs, ddl)
+    return _block_gemm(tagged, ["_lbl"], _emit_pairs, tau, fields, carry)

@@ -6,8 +6,8 @@ A6 global-scalar ratio, A8 pivot, A9 unpivot, A10 value_counts, A11
 weighted average. All money/double sums go through exact integer cents
 (functions.money) so results are partition-order independent.
 
-Round-3 consolidation (VERDICT.md "Next round" #2): the aggregation
-micro-queries are published as ONE tagged union (`agg_family`) so every
+The aggregation micro-queries are published as ONE tagged union
+(`agg_family`) so every
 SURVEY §2.4 row's evidence sits inside the driver's 50-query window; each
 arm keeps its own source, grouping and oracle SQL, normalized onto a
 shared (part, k1, k2, i1-i4, d1-d3) schema. The pivot keeps its own query
@@ -137,12 +137,11 @@ def agg_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # part='conditional' (A4/A5). ONE events aggregate expression serves
     # BOTH this arm and the unpivot arm below (the unpivot's clicks/
-    # purchases/errors are exactly _c/_p/_e). r13 pinned the shared
-    # subtree behind an eager localCheckpoint so the events scan+shuffle
-    # ran once; r14 re-adjudicated it per VERDICT r13 next #4 with a
-    # three-way interleaved A/B (eager ckpt / lazy ckpt / none, min-of-3
-    # x 3 cycles): NONE won (1.64/2.10/2.58 s vs ckpt 1.76/2.58/2.61,
-    # lazy worst) — the checkpoint's materialization job + barrier costs
+    # purchases/errors are exactly _c/_p/_e). The shared subtree carries
+    # no barrier: in a three-way interleaved A/B (eager checkpoint / lazy
+    # checkpoint / none, min-of-3 x 3 cycles) none won (1.64/2.10/2.58 s
+    # vs eager 1.76/2.58/2.61, lazy worst) — the checkpoint's
+    # materialization job + barrier costs
     # more than the second pass it saves, and per-branch column pruning
     # means AQE exchange reuse never fires either way (§2.4 reuse is not
     # free). The recomputation is one extra scan + MAP-SIDE partial agg +
@@ -190,8 +189,8 @@ def agg_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # part='global_ratio' (A6) — group metric / broadcast global scalar
     per_nation = (
-        # customer scales with the corpus (round-8 doctrine): shuffle-hash;
-        # nation is a true dimension and stays broadcast
+        # customer scales with the corpus, so it is no dimension:
+        # shuffle-hash; nation is a true dimension and stays broadcast
         orders.join(cust.hint("shuffle_hash"), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")

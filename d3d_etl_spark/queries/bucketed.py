@@ -1,6 +1,6 @@
 """z_bucketed_spine — the bucketed co-located fact-fact join exercised in a
-real pipeline query (round-3 VERDICT item 5: "bench row + plan assert inside
-the query path, not just the synthetic pin").
+real pipeline query: a bench row and a plan assert inside the query path,
+not just a synthetic pin.
 
 The parsed-play spine (the table every domain query re-joins; reference
 stores it as parsed_pbp CSV between stages, processors/run_all.py) is

@@ -1,5 +1,5 @@
 """z_corpus_curation — the end-to-end corpus CURATION pipeline as one
-oracled query, composing the round-4 quality operators the way a real
+oracled query, composing the corpus quality operators the way a real
 training-data run chains them:
 
 1. statistical quality gate: drop documents whose bigram-LM mean surprisal

@@ -626,8 +626,9 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 consolidation: signatures + banded near pairs publish as one
-# tagged union (part='sig' one row per doc with its 60-bit simhash;
+# Signatures + banded near pairs publish as one tagged union, so both
+# sit inside the driver's 50-query window (part='sig' one row per doc with
+# its 60-bit simhash;
 # part='pair' the pigeonhole-banded hamming<=5 candidates). Normalized:
 # (part, a, b, h) — sig: a=doc_id, h=simhash; pair: a/b=doc pair, h=hamming.
 # ---------------------------------------------------------------------------

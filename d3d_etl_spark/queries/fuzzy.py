@@ -160,8 +160,8 @@ def _fuzzy_variation_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 consolidation: both fuzzy-resolution queries publish as one union
-# (the tier column already distinguishes exact/fuzzy cascade output from the
+# Both fuzzy-resolution queries publish as one union (the tier column
+# distinguishes exact/fuzzy cascade output from the
 # variation-equi-join tier; the variation arm has no numeric score).
 # ---------------------------------------------------------------------------
 

@@ -76,8 +76,8 @@ GROUP BY split
 
 @register("corpus_pipeline", _PIPELINE_ORACLE, tags=("dedup", "sampling", "text"), bench=True)
 def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO fan_out on the scan (r13 final): quiet-host A/B kept this query
-    # elevated (~5.5 s vs the 4.2 s r12 baseline) with the scan fanned;
+    # NO fan_out on the scan: a quiet-host A/B measured this query at
+    # ~5.5 s with the scan fanned vs 4.2 s without;
     # shingle_base applies its own guard where the rebalance pays, and the
     # `kept` tokenize pass is too light to amortize a payload exchange.
     docs = load_table(spark, sf_dir, "documents")

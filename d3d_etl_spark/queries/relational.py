@@ -113,7 +113,7 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")
     )
     rev = cents(F.col("l_extendedprice")) * (100 - cents(F.col("l_discount")))
-    # customer scales WITH the corpus (it is not a dimension): the round-8
+    # customer scales WITH the corpus (it is not a dimension): the
     # scope=all stress audit measured its forced broadcast growing 3.3x
     # per 10x data — shuffle-hash with the filtered customer side as build
     return (
@@ -163,9 +163,9 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Only nation/region are TRUE dimensions (fixed cardinality at any
     # corpus size) — they broadcast. orders/customer/supplier scale with
     # the SF, so their joins shuffle-hash with the smaller (filtered) side
-    # as build: the round-1 all-broadcast plan won the toy-scale benchmark
-    # but the round-8 scope=all stress audit measured its relations growing
-    # linearly (the q3 twin breached the flatness bound) — at 100 TB a
+    # as build: an all-broadcast plan wins the toy-scale benchmark, but
+    # the scope=all stress audit measures its relations growing linearly
+    # (the q3 twin breaches the flatness bound) — at 100 TB a
     # customer broadcast is a multi-GB relation on every executor.
     return (
         li.join(orders.hint("shuffle_hash"), li.l_orderkey == orders.o_orderkey)
@@ -182,9 +182,10 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# join_family — the non-equi-enrichment join surface as one tagged union
-# (round-3 consolidation, VERDICT "Next round" #2). Each arm keeps its own
-# join strategy and oracle; normalized onto (part, key, name, seg, i1, i2, v):
+# join_family — the non-equi-enrichment join surface as one tagged union,
+# so every arm sits inside the driver's 50-query window. Each arm keeps its
+# own join strategy and oracle; normalized onto (part, key, name, seg, i1,
+# i2, v):
 #   part='semi'  J3 existence filter as left_semi
 #   part='anti'  J8/U2 incremental "todo = all - done" as left_anti
 #                (io.incremental_todo, reference collect_pbp.py resume scan)

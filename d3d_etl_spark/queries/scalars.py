@@ -5,13 +5,13 @@ Everything here is a pure Catalyst expression (whole-stage codegen, no UDFs,
 no shuffle beyond the final exchange) — the reference does all of it with
 row-wise pandas string/number ops.
 
-Round-3 consolidation (VERDICT.md "Next round" #2): the five scalar
-micro-queries are published as ONE tagged union (`scalar_funcs`) so the
+The five scalar micro-queries are published as ONE tagged union
+(`scalar_funcs`) so the
 whole scalar surface sits inside the driver's 50-query correctness window;
 each arm keeps its own source table, operators and oracle SQL, normalized
 onto a shared (part, k1, k2, i1-i3, d1-d5, s1-s5, dt1, dt2) schema. The
 three set operations union the same way (`set_ops`). Per-function unit
-tests in tests/test_functions.py are unchanged.
+tests live in tests/test_functions.py.
 """
 
 from __future__ import annotations

@@ -126,8 +126,8 @@ handed AS (
 
 
 # ---------------------------------------------------------------------------
-# domain_splits — all four reference grains as ONE tagged union (round-3
-# consolidation; the reference publishes them as four tables,
+# domain_splits — all four reference grains as ONE tagged union (the
+# reference publishes them as four tables,
 # leaderboards/main.py:120-128). Per-grain the opposing-hand column differs
 # (batter-side splits vs pitcher THROWS, pitcher-side vs batter BATS), so
 # the split labels are unified to vs_l / vs_r ("vs left/right-handed

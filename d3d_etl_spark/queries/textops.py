@@ -235,7 +235,7 @@ FROM (
 def corpus_tfidf_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    # NO fan_out here (r13 final): interleaved quiet-host A/B measured the
+    # NO fan_out here: an interleaved quiet-host A/B measured the
     # round-robin rebalance of the text rows costing +60% on this query at
     # bench scale (1.01 -> 1.60 s min-of-cycles) — the tokenize map is too
     # light to amortize the exchange + sort-before-repartition of the
@@ -934,12 +934,12 @@ def z_corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five rounds of actual BPE training over the corpus word-count table
     (operators/bpe.py): each round re-aggregates pair counts over word
     TYPES, driver-fetches the argmax, and applies the merge as a per-row
-    left-to-right fold. The round-over-round greedy argmax is driver
+    left-to-right fold. The merge-after-merge greedy argmax is driver
     control flow, like connected_components and the k-means loop — but
     the WHOLE trajectory is oracled (_bpe_train_oracle's
     replace-encoding unroll), on top of the exact pin against a
     pure-python BPE reference in tests/test_operators.py and the oracled
-    round-1 statistic z_corpus_bpe_pairs."""
+    first-merge statistic z_corpus_bpe_pairs."""
     from d3d_etl_spark.operators.bpe import train_bpe
 
     docs = load_table(spark, sf_dir, "documents")

@@ -242,7 +242,7 @@ def _runs_win(plays: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # domain_value — all four reference value-board grains as ONE tagged union
-# (round-3 consolidation; reference value.py:34-135 publishes batter /
+# (reference value.py:34-135 publishes batter /
 # pitcher / batting-team / pitching-team tables with identical columns).
 # Pitching grains keep the reference's sign flips. entity = player or team
 # id; team_id = the entity's team (== entity at team grain).

@@ -2,10 +2,10 @@
 §2.2 P5 keep-last dedup) over the `events`, `customer`, `supplier`, `part`
 and `orders` tables.
 
-Round-3 consolidation (VERDICT.md "Next round" #2): the per-event window
-micro-queries are now published as ONE wide query (`events_window_family`)
-computing every W-operator column over a single (user_id | ts, event_id)
-window partition — 8 formerly separate queries, one shuffle total. The
+The per-event window micro-queries are published as ONE wide query
+(`events_window_family`) computing every W-operator column over a single
+(user_id | ts, event_id) window partition — 8 window operators, one
+shuffle total. The
 group-grain window ops (first/last per key, z-score, rescale-to-target)
 are one tagged union (`keyed_window_family`). The beyond-SURVEY extras
 (RANGE frames over a date axis, the rank-function family) live in

@@ -52,7 +52,7 @@ def get_spark(
             _spec = master.split("[")[1].rstrip("]")
             # `local[*]` means "all cores" — resolve it via os.cpu_count()
             # instead of a hardcoded fallback, so a small machine asking
-            # for * gets a heap sized to ITS cores, not to 32 (ADVICE r13)
+            # for * gets a heap sized to ITS cores
             _n_local = (os.cpu_count() or 1) if _spec == "*" else int(_spec)
         else:
             _n_local = 0
@@ -77,11 +77,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.maxResultSize", "2g")
-        # a loaded single host (driver harness + pytest sharing 32 cores)
+        # a loaded single host (a harness and pytest sharing the cores)
         # can stall a broadcast build past the 300 s default and produce a
-        # spurious awaitResult failure on a correct query (observed on the
-        # widest join tree, z_war_park, under round-4 judging contention);
-        # env-overridable so the driver can tighten it on a quiet cluster
+        # spurious awaitResult failure on a correct query (the widest join
+        # tree, z_war_park, is the first to hit it); env-overridable so a
+        # quiet cluster can tighten it
         .config(
             "spark.sql.broadcastTimeout",
             os.environ.get("SPARK_GRAFT_BROADCAST_TIMEOUT", "1200"),
@@ -98,9 +98,9 @@ def get_spark(
     spark = builder.getOrCreate()
     # spark.driver.memory only takes effect at JVM launch: a get_spark()
     # after an existing session silently keeps the old heap, so warn when
-    # the live value differs from the request (ADVICE r13 — tests sharing
-    # a session may otherwise run under a different memory profile than
-    # the bench without any signal).
+    # the live value differs from the request (tests sharing a session may
+    # otherwise run under a different memory profile than the bench
+    # without any signal).
     if driver_mem:
         live = spark.conf.get("spark.driver.memory", None)
         if live is not None and live != driver_mem:

@@ -83,36 +83,6 @@ def test_export_sqlite_slice_replace(spark, tmp_path):
     assert rows == [(2023, "a", 1.0), (2024, "b", 9.0), (2024, "c", 3.0)]
 
 
-def test_bucketed_join_skips_shuffle(spark, sf_dir):
-    """Both sides bucketed on the join key -> SortMergeJoin with ZERO
-    Exchange operators (the co-located fact-to-fact join path)."""
-    from d3d_etl_spark.io import load_table, write_bucketed
-    from d3d_etl_spark.plans.inspect import count_shuffles
-
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 8)
-    write_bucketed(lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-                   "b_lineitem", ["o_orderkey"], 8)
-    try:
-        joined = (
-            spark.table("b_orders")
-            .join(spark.table("b_lineitem"), "o_orderkey")
-            .select("o_orderkey", "o_totalprice", "l_quantity")
-        )
-        assert count_shuffles(joined) == 0, "bucketed join must not shuffle"
-        # and the result is the plain join's result
-        plain = (
-            orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-            .select("o_orderkey", "o_totalprice", "l_quantity")
-        )
-        assert joined.count() == plain.count()
-        assert joined.agg(F.sum("l_quantity")).first()[0] == plain.agg(F.sum("l_quantity")).first()[0]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_csv_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
     """S1 compat: CSV dialect round-trips every value bit-exactly, so a
     migrating user's CSV scan equals the native parquet scan."""

@@ -7,6 +7,8 @@ dimensions, or grows extra shuffles.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from d3d_etl_spark.plans.inspect import count_shuffles, has_pushed_filter, summarize_plan
@@ -317,19 +319,27 @@ def test_sim_canon_pair_stage_ann_gated(spark):
     assert "ann_gated_near_pairs" in src, "canon arm lost the ANN gate"
     assert "blocked_near_pairs(" not in src, "canon arm calls the un-gated pair path"
 
-    # plan-shape pin: the gated operator runs ONE grouped Arrow GEMM keyed
-    # by (band, bucket) — not the exact operator's block-pair COgroup
+    # plan-shape pin: both pair paths run the one grouped Arrow GEMM, so
+    # what tells the gate apart is the grouping — the gated operator keys
+    # its GEMM tasks by (band, bucket), the all-pairs path by block pair only
     emb = spark.createDataFrame(
         [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    plan = (
-        ann_gated_near_pairs(emb, 0.9, 8, 8, 4)
-        ._jdf.queryExecution().executedPlan().toString()
+
+    def gemm_keys(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = [ln for ln in plan.splitlines() if "FlatMapGroupsInArrow" in ln]
+        assert len(lines) == 1, "pair stage must be one grouped GEMM"
+        return set(re.findall(r"(\w+)#\d+", lines[0].split("]")[0]))
+
+    from d3d_etl_spark.operators.similarity import blocked_near_pairs
+
+    assert {"band", "bucket"} <= gemm_keys(ann_gated_near_pairs(emb, 0.9, 8, 8, 4)), (
+        "gated pair stage must group its GEMM by (band, bucket)"
     )
-    assert "FlatMapGroupsInArrow" in plan, "gated pair stage must be the grouped GEMM"
-    assert "FlatMapCoGroupsInArrow" not in plan, (
-        "gated path must not fall back to the all-pairs block cogroup"
+    assert not {"band", "bucket"} & gemm_keys(blocked_near_pairs(emb, 0.9)), (
+        "the all-pairs path must not pass the gate check"
     )
 
 

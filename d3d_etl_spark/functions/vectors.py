@@ -27,7 +27,24 @@ def cosine(a: Column, b: Column) -> Column:
     # vector would otherwise THROW (DIVIDE_BY_ZERO) and kill the whole
     # job on one degenerate row; try_divide yields NULL — exactly what
     # DuckDB's `/` gives the oracles — and every ranking site orders
-    # NULL sims last (coalesce-to-+inf min_by keys / desc NULLS LAST),
+    # NULL sims last (sim_desc_key min_by keys / desc NULLS LAST),
     # so a zero-norm vector loses every comparison instead of crashing
     # or winning.
     return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+def sim_desc_key(sim: Column) -> Column:
+    """Ascending key that orders a rounded sim as `ORDER BY sim DESC`
+    does in Spark windows and in DuckDB, for min_by argmax aggregates.
+
+    - `+ 0.0` turns the negated -0.0 into +0.0: struct ordering is
+      Double.compare, which splits the zeros, while both engines' ORDER BY
+      treats them as equal; a -0.0/+0.0 tie must fall to the id tie-break.
+    - NaN keys -inf, so it wins: struct ordering puts NaN after +inf, but
+      desc(sim) and DuckDB's ORDER BY sim DESC put NaN first.
+    - NULL keys +inf, so it loses (NULLS LAST): struct ordering would put
+      a NULL key first, and a zero-norm centroid would capture every
+      vector."""
+    return F.coalesce(
+        F.nanvl(-sim + F.lit(0.0), F.lit(float("-inf"))), F.lit(float("inf"))
+    )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d3d_etl_spark.functions.vectors import cosine
+from d3d_etl_spark.functions.vectors import cosine, sim_desc_key
 from d3d_etl_spark.io import barrier
 
 SIM_SCALE = 1_000_000  # embedding fixed-point scale for exact centroid sums
@@ -136,25 +136,12 @@ def assign_nearest_centroid(
     # sort of the corpus x K score table (the pq_encode_comps argmin
     # recipe). restrict_cols join the ORDER key after label: the window
     # never ordered on them, so any cross-restrict tie was
-    # nondeterministic before — this makes it deterministic. The `+ 0.0`
-    # on the negated key normalizes IEEE -0.0 to +0.0: Spark's struct
-    # ordering is Double.compare (distinguishes the zeros) while both
-    # engines' window/ORDER BY semantics treat them as EQUAL — without
-    # the normalization a -0.0/+0.0 top tie would pick the zeros apart
-    # instead of falling to the id tie-break. The coalesce reproduces the
-    # window's NULLS-LAST: a zero-norm vector or centroid makes sim NULL
-    # (try_divide above), and struct ordering would sort that NULL key
-    # FIRST — i.e. a degenerate all-zero centroid would capture every
-    # vector instead of none; keying it +inf makes NULL-sim candidates
-    # lose exactly as they do under desc(sim). The nanvl keys a NaN sim
-    # -inf so it WINS: Spark's struct ordering sorts NaN after +inf (would
-    # lose) while a desc(sim) window and the oracle's ORDER BY sim DESC put
-    # NaN FIRST (hostile inf/overflow components produce it; same pattern
-    # at every coalesce-key site).
+    # nondeterministic before — this makes it deterministic. sim_desc_key
+    # states how -0.0, NaN and a zero-norm vector's NULL sim order.
     best = F.min_by(
         F.struct(*restrict_cols, F.col(label_col), F.col("sim")),
         F.struct(
-            F.coalesce(F.nanvl(-F.col("sim") + F.lit(0.0), F.lit(float("-inf"))), F.lit(float("inf"))).alias("k"),
+            sim_desc_key(F.col("sim")).alias("k"),
             F.col(label_col),
             *[F.col(c) for c in restrict_cols],
         ),
@@ -498,9 +485,12 @@ def _block_gemm(
     matrix and takes one :func:`_gemm_cos`: a self-GEMM for a diagonal
     block (no _bi/_bj columns, or _bi == _bj), a cross-GEMM between the
     rows with _blk == _bi and those with _blk == _bj otherwise. It hands
-    `emit(np, a, b, sims, diagonal, tau)` the two sides as [ids, *carry]
-    arrays; the emitter returns the output columns in `fields` order
-    ((name, ddl type) pairs)."""
+    `emit(np, a, b, sims, diagonal, tau)` the two sides as [ids] arrays,
+    or [ids, row positions] when there are `carry` columns; the emitter
+    returns the output columns in `fields` order ((name, ddl type) pairs),
+    with the two position columns last. The kernel then replaces those
+    with each carry column taken at the positions: Arrow `take` keeps a
+    NULL carry NULL, where a numpy round trip would turn it into NaN."""
     import pyarrow as pa
 
     schema = pa.schema([(n, getattr(pa, _ARROW_TYPES[t])()) for n, t in fields])
@@ -514,10 +504,7 @@ def _block_gemm(
         order = np.argsort(ids, kind="stable")
         vec = tbl.column("vec").combine_chunks()
         M = vec.flatten().to_numpy(zero_copy_only=False).reshape(len(vec), -1)[order]
-        rows = [ids[order]] + [
-            tbl.column(c).combine_chunks().to_numpy(zero_copy_only=False)[order]
-            for c in carry
-        ]
+        rows = [ids[order]] + ([order] if carry else [])
         bi = bj = 0
         if "_bi" in tbl.column_names:
             bi, bj = tbl.column("_bi")[0].as_py(), tbl.column("_bj")[0].as_py()
@@ -531,6 +518,11 @@ def _block_gemm(
         if sims.size == 0:
             return schema.empty_table()
         cols = emit(np, a, b, sims, bi == bj, tau)
+        if carry:
+            pos = cols[-2:]
+            cols = cols[:-2] + [
+                tbl.column(c).combine_chunks().take(p) for c in carry for p in pos
+            ]
         return pa.table(dict(zip(schema.names, cols)), schema=schema)
 
     ddl = ", ".join(f"{n} {t}" for n, t in fields)
@@ -548,9 +540,10 @@ def _gemm_cos(np, A, B):
 
 
 def _emit_pairs(np, a, b, sims, diagonal, tau):
-    """Cells with sim >= tau as (id_lo, id_hi, sim, c1_lo, c1_hi, ...):
-    carries swap WITH their ids. A diagonal block keeps its strict upper
-    triangle — ids are sorted, so that is id_a < id_b and no self pair.
+    """Cells with sim >= tau as (id_lo, id_hi, sim, x_lo, x_hi, ...) for
+    every further side array x, which swaps WITH its ids. A diagonal
+    block keeps its strict upper triangle — ids are sorted, so that is
+    id_a < id_b and no self pair.
 
     Zero-norm guard (pair-stage contract): a zero vector has no cosine —
     numpy yields NaN/inf here, Spark's double division yields NULL, and

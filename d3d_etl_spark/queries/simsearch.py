@@ -1,14 +1,27 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-- sim_topk_bruteforce: exact cosine top-k for one query vector (the
-  baseline: broadcast query + narrow map + top-k partial agg).
-- sim_ivf_assign: IVF coarse quantizer step — exact-integer label centroids,
-  nearest-centroid assignment (the list-pruning scale path for ANN).
-- sim_near_pairs: thresholded all-pairs cosine (near-dup-by-embedding shape;
-  at scale this is always LSH/IVF-gated, shown here exact).
+21 registered queries in four groups:
+
+- search and assignment families: sim_topk_family (brute force, LSH, int8,
+  IVF), sim_assign_family (IVF assignment, one k-means step),
+  sim_near_dedup (all-pairs and ANN-gated near-dup pairs);
+- dedup and training: z_sim_semdedup, z_sim_d4, z_sim_kmeans_iter,
+  z_sim_contrastive(_ann), z_sim_power_iter, z_graph_pagerank,
+  z_sim_pipeline;
+- PQ and IVF-PQ search: z_sim_pq, z_sim_pq_refine, z_sim_ivfpq(_residual,
+  _trained), and the two recall curves z_sim_recall_sweep and
+  z_sim_ivf_scaledk (one helper, _recall_curve);
+- IVF serving: z_sim_incremental, z_sim_pq_incremental, z_sim_pq_rerank
+  answer a new ingest batch against a persisted index. They run on one
+  chain: serving_split (the one batch split), ivf_index_state and
+  pq_index_state (cells trained by _train_cells), _inc_probe_cand (probe
+  to candidates) and _exact_top1 (selective fetch, cosine, top-1). The
+  audits raw_serving_recall, serving_recall_profile and
+  inc_serving_profile reuse the same chain.
 
 Oracles unnest both vectors positionally (DuckDB zips parallel unnests) and
-mirror the dot/norm/round-6 formula.
+mirror the dot/norm/round-6 formula; the serving oracles embed one CTE
+chain (_INC_PROBE_CTES, _exact_top1_ctes).
 """
 
 from __future__ import annotations
@@ -61,10 +74,14 @@ LIMIT {_TOPK}
 """
 
 
+def _query(emb: DataFrame) -> DataFrame:
+    """The one-row (q_vec) frame of the fixed query vector."""
+    return emb.where(F.col("vec_id") == _QUERY_ID).select(F.col("embedding").alias("q_vec"))
+
+
 def _topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(F.col("embedding").alias("q_vec"))
-    return cosine_topk(emb.where(F.col("vec_id") != _QUERY_ID), query, _TOPK)
+    return cosine_topk(emb.where(F.col("vec_id") != _QUERY_ID), _query(emb), _TOPK)
 
 
 _IVF_ORACLE = """
@@ -193,7 +210,7 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != _QUERY_ID)
         .select("vec_id")
     )
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(F.col("embedding").alias("q_vec"))
+    query = _query(emb)
     # candidates = one LSH bucket (~n/2^planes ids): broadcast the semi-join
     # probe so the corpus scan never shuffles (was a SortMergeJoin)
     cands = emb.join(F.broadcast(cand_ids), "vec_id", "left_semi")
@@ -773,6 +790,23 @@ def serving_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     return clustered_corpus(emb, g), bmod
 
 
+def serving_split(
+    spark: SparkSession, sf_dir: str, planted: bool = True
+) -> tuple[DataFrame, DataFrame, int]:
+    """(new, old, bmod): the one batch split of the serving family.
+    vec_id % bmod == 0 is the new ingest batch; every other row is the
+    indexed corpus. `planted` splits the planted serving corpus (every
+    registered query); planted=False splits the provided table with the
+    same bmod (raw_serving_recall)."""
+    if planted:
+        corp, bmod = serving_corpus(spark, sf_dir)
+    else:
+        corp = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        _, bmod = serving_params(table_count(spark, sf_dir, "embeddings"))
+    is_new = F.col("vec_id") % bmod == 0
+    return corp.where(is_new), corp.where(~is_new), bmod
+
+
 # the corpus-derivation CTEs every serving oracle starts from: srvp the
 # derived params (g, bmod) from the table count, cemb the planted corpus
 # at (vec_id, pos, x) grain — the exact SQL image of clustered_corpus
@@ -808,19 +842,24 @@ def _hash_sample_ids(df: DataFrame, k: int) -> list[int]:
     ]
 
 
-def _sample_seeded_cells(old: DataFrame, k: int) -> DataFrame:
-    """(vec_id, assigned_label, sim) — K-cell training with DETERMINISTIC
-    K-SAMPLE SEEDING + two Lloyd refinements. Random-PARTITION seeding
-    (kmeans2_assign_emb's hash-partition rule) puts every initial centroid
-    at ~the grand mean, and on a clusterable corpus the planted blocs then
-    pile into a handful of cells (measured: 4 non-empty of K=20 at
-    sf0.01) — the classic empty-cell collapse. Seeding from K ACTUAL
-    vectors (the K smallest by md5 rank — a deterministic uniform sample,
-    no planted structure consumed) anchors each initial cell at full
-    vector norm, so distinct neighborhoods claim distinct cells. Seed
-    selection is a TakeOrdered(k) + a K-row broadcast map — dimension-
-    bounded driver state, same class as the centroid collects."""
+def _train_cells(old: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """(cells, cents, k): K = ceil(sqrt(|old|)) coarse cells learned from
+    the `old` vectors alone. cells is (vec_id, label), cents the
+    exact-integer (label, pos, c) centroids of those cells.
+
+    Seeding is DETERMINISTIC K-SAMPLE: the K smallest vec_ids by md5 rank
+    seed one cell each, then two Lloyd refinements. Random-PARTITION
+    seeding (kmeans2_assign_emb's hash rule) puts every initial centroid
+    at ~the grand mean, and on a clusterable corpus the planted blocs
+    then pile into a handful of cells (measured: 4 non-empty of K=20 at
+    sf0.01), the classic empty-cell collapse. A seed that is an actual
+    vector sits at full vector norm, so distinct neighborhoods claim
+    distinct cells. Seed selection is a TakeOrdered(k) plus a K-row
+    broadcast map: dimension-bounded driver state."""
+    import math
+
     spark = old.sparkSession
+    k = math.ceil(math.sqrt(old.count()))
     seed_map = spark.createDataFrame(
         [(int(v), i) for i, v in enumerate(_hash_sample_ids(old, k))],
         "vec_id long, cluster int",
@@ -838,39 +877,35 @@ def _sample_seeded_cells(old: DataFrame, k: int) -> DataFrame:
         "vec_id",
     )
     cents2 = label_centroids(relabeled, "cluster")
-    return assign_nearest_centroid(old, cents2, "cluster")
+    # the centroid mean below and raw_serving_recall's assignment both
+    # read cells (ivf_index_state's one-time build reads it once)
+    cells = barrier(
+        assign_nearest_centroid(old, cents2, "cluster").select(
+            "vec_id", F.col("assigned_label").alias("label")
+        )
+    )
+    cents = label_centroids(old.join(cells.hint("shuffle_hash"), "vec_id"), "label")
+    return cells, cents, k
 
 
 def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, assignments) of the batch-1 index, persisted per scale.
 
-    Centroids: (label, pos, c) exact-integer-sum components over
-    K = ceil(sqrt(N_old)) coarse cells LEARNED from the old serving-corpus
-    vectors alone (_sample_seeded_cells: deterministic k-sample seeding +
-    Lloyd refinements — corpus-derived K per the z_sim_ivf_scaledk
-    doctrine; no planted labels consumed); assignments:
-    (vec_id, assigned_label, sim) from the same nearest-centroid rule the
-    steady-state query uses. The
+    Centroids: (label, pos, c) of the K = ceil(sqrt(N_old)) cells that
+    _train_cells learns from the old serving-corpus vectors (no planted
+    labels consumed); assignments: (vec_id, assigned_label, sim) from the
+    same nearest-centroid rule the steady-state query uses. The
     incremental oracle reads THIS persisted state, so training changes the
     index content, not the serving contract."""
-    import math
-
-    def old_batch() -> DataFrame:
-        corp, bmod = serving_corpus(spark, sf_dir)
-        return corp.where(F.col("vec_id") % bmod != 0)
 
     def build_cents(tmp: str) -> None:
-        old = old_batch()
-        k_cells = math.ceil(math.sqrt(old.count()))
-        asgn2 = _sample_seeded_cells(old, k_cells)
-        cells = asgn2.select("vec_id", F.col("assigned_label").alias("label"))
-        trained = old.join(cells.hint("shuffle_hash"), "vec_id")
-        label_centroids(trained, "label").write.mode("overwrite").parquet(tmp)
+        _, cents, _ = _train_cells(serving_split(spark, sf_dir)[1])
+        cents.write.mode("overwrite").parquet(tmp)
 
     cents = read_parquet(spark, IVF_CENTS.ensure(sf_dir, build_cents))
 
     def build_assign(tmp: str) -> None:
-        assign_nearest_centroid(old_batch(), cents, "label").write.mode(
+        assign_nearest_centroid(serving_split(spark, sf_dir)[1], cents, "label").write.mode(
             "overwrite"
         ).parquet(tmp)
 
@@ -909,19 +944,22 @@ cand AS (
   FROM probe p JOIN assign a ON p.label = a.label
 )"""
 
-_INC_ORACLE = f"""
-WITH {_INC_PROBE_CTES},
-oldv AS (
+def _exact_top1_ctes(pairs: str) -> str:
+    """SQL image of _exact_top1 over the (vec_id, old_id) CTE `pairs`:
+    the candidate old vectors' selective fetch, the rounded cosine, and
+    top1 (vec_id, old_id, sim), first by (sim DESC, old_id). Needs the
+    srvp, cemb and newv CTEs of _INC_PROBE_CTES."""
+    return f"""oldv AS (
   SELECT c.vec_id AS old_id, c.x AS y, c.pos
   FROM cemb c CROSS JOIN srvp s
   WHERE c.vec_id % s.bmod != 0
-    AND c.vec_id IN (SELECT old_id FROM cand)
+    AND c.vec_id IN (SELECT old_id FROM {pairs})
 ),
 nnorm AS (SELECT vec_id, SUM(x * x) AS nx2 FROM newv GROUP BY 1),
 onorm AS (SELECT old_id, SUM(y * y) AS ny2 FROM oldv GROUP BY 1),
 dots AS (
   SELECT c.vec_id, c.old_id, SUM(n.x * o.y) AS dot
-  FROM cand c
+  FROM {pairs} c
   JOIN newv n ON n.vec_id = c.vec_id
   JOIN oldv o ON o.old_id = c.old_id AND o.pos = n.pos
   GROUP BY 1, 2
@@ -932,18 +970,21 @@ sims AS (
   FROM dots d
   JOIN nnorm nn ON d.vec_id = nn.vec_id
   JOIN onorm oo ON d.old_id = oo.old_id
-)
-SELECT s.vec_id,
-       p.label AS assigned_label,
-       s.old_id AS nn_id,
-       s.sim AS nn_sim
-FROM (
-  SELECT vec_id, old_id, sim,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, old_id) AS rn
-  FROM sims
-) s
-JOIN probe p ON p.vec_id = s.vec_id AND p.rn = 1
-WHERE s.rn = 1
+),
+top1 AS (
+  SELECT vec_id, old_id, sim FROM (
+    SELECT vec_id, old_id, sim,
+           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, old_id) AS rn
+    FROM sims
+  ) WHERE rn = 1
+)"""
+
+
+_INC_ORACLE = f"""
+WITH {_INC_PROBE_CTES},
+{_exact_top1_ctes("cand")}
+SELECT t.vec_id, p.label AS assigned_label, t.old_id AS nn_id, t.sim AS nn_sim
+FROM top1 t JOIN probe p ON p.vec_id = t.vec_id AND p.rn = 1
 """
 
 
@@ -980,6 +1021,7 @@ def _inc_probe_cand(
     keeps labels the probes missed). Callers that previously re-counted
     these tables would pay three extra driver jobs per invocation; they
     read the dict instead."""
+    from d3d_etl_spark.functions.vectors import sim_desc_key
     from d3d_etl_spark.operators.similarity import centroid_arrays
 
     # ARRAY-NATIVE probe ranking: posexploding the batch against the
@@ -990,9 +1032,8 @@ def _inc_probe_cand(
     # chain into a single projection: per vector, fold each centroid's
     # dot sequentially (ascending pos — the same effective order as the
     # replaced SUMs), sort the K-entry key array, slice nprobe, explode.
-    # The sort key struct (coalesce(-psim + 0.0, +inf), label) is the
-    # window's (psim DESC NULLS LAST, label ASC) exactly — the committed
-    # min_by-key contract — so probe membership
+    # The sort key struct (sim_desc_key(psim), label) is the
+    # window's (psim DESC NULLS LAST, label ASC) exactly, so probe membership
     # AND rn ranks are unchanged. fan_out: the batch otherwise rides the
     # embeddings scan's single split at bench scale and the fold chain
     # would run on one core; production-sized scans pass through.
@@ -1009,7 +1050,7 @@ def _inc_probe_cand(
         d = F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
         psim = F.round(F.try_divide(d, F.sqrt(F.col("_nx2")) * F.sqrt(s["nc2"])), 6)
         return F.struct(
-            F.coalesce(F.nanvl(-psim + F.lit(0.0), F.lit(float("-inf"))), F.lit(float("inf"))).alias("k"),
+            sim_desc_key(psim).alias("k"),
             s["label"].alias("label"),
         )
 
@@ -1118,6 +1159,61 @@ def _inc_probe_cand(
     return probe, cand, stats
 
 
+def _exact_top1(pairs: DataFrame, new: DataFrame, old: DataFrame) -> DataFrame:
+    """(vec_id, old_id, sim): each new vector's best candidate by exact
+    6-dp cosine over the candidate pairs `pairs` (vec_id, old_id), the
+    split's `new` and `old` (vec_id, embedding) frames. The engine twin
+    of _exact_top1_ctes; `pairs` is read twice, so callers barrier it.
+
+    Only candidate old vectors are read back: the candidate-id set is the
+    semi join's build side (pair-bounded; the hint keeps the planner off a
+    sorting SMJ). The verify is ARRAY-NATIVE, one zip_with dot per pair:
+    an exploded-components triple join materializes |pairs| x dim rows
+    (measured: a 2.2 GB checkpoint partition read by ONE task at sf1).
+    The 6-dp rounding absorbs the <1e-13 fold divergence from the
+    oracle's exploded SUM.
+
+    Top-1 is a min_by HASH AGGREGATE over (sim_desc_key(sim), old_id),
+    exactly a (sim desc, old_id asc) window's first row: old_id is unique
+    per group, so the order has no ties. It rides the pairs' vec_id
+    partitioning (no further exchange) and skips the window's per-task
+    sort of the pair-grain table."""
+    from d3d_etl_spark.functions.vectors import cosine, sim_desc_key
+
+    old_vecs = old.join(
+        pairs.select(F.col("old_id").alias("vec_id")).distinct().hint("shuffle_hash"),
+        "vec_id",
+        "left_semi",
+    ).select(F.col("vec_id").alias("old_id"), F.col("embedding").alias("yv"))
+    new_vecs = new.select("vec_id", F.col("embedding").alias("xv"))
+    return (
+        pairs.join(new_vecs.hint("shuffle_hash"), "vec_id")
+        .join(old_vecs.hint("shuffle_hash"), "old_id")
+        .select(
+            "vec_id",
+            "old_id",
+            F.round(cosine(F.col("xv"), F.col("yv")), 6).alias("sim"),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.min_by(
+                F.struct("old_id", "sim"),
+                F.struct(sim_desc_key(F.col("sim")).alias("k"), "old_id"),
+            ).alias("_b")
+        )
+        .select("vec_id", F.col("_b.old_id").alias("old_id"), F.col("_b.sim").alias("sim"))
+    )
+
+
+def _ivf_assign_l(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(cents, assign) of ivf_index_state, assign keyed (old_id, label)
+    as _inc_probe_cand reads it."""
+    cents, assign = ivf_index_state(spark, sf_dir)
+    return cents, assign.select(
+        F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label")
+    )
+
+
 @register(
     "z_sim_incremental", _INC_ORACLE, tags=("similarity", "incremental"), bench=True
 )
@@ -1129,83 +1225,19 @@ def z_sim_incremental(
     `pairs_per_task` exposes the fan/score grain for the stress tier's
     serving-grain saturation sweep (partitioning-only; the result set is
     grain-independent)."""
-    corp, bmod = serving_corpus(spark, sf_dir)
-    cents, assign = ivf_index_state(spark, sf_dir)
-    assign = assign.select(F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label"))
-
-    # The pair verify is ARRAY-NATIVE: an exploded-components triple join
-    # materializes |cand| x dim
-    # rows (measured: a 2.2 GB checkpoint partition read by ONE task at
-    # sf1, query timed out). One zip_with dot per pair keeps the
-    # intermediate at pair grain; the 6-dp rounding contract absorbs the
-    # <1e-13 fold divergence vs the oracle's exploded SUM, exactly as in
-    # the brute-force arm.
+    new, old, _ = serving_split(spark, sf_dir)
     probe, cand, _ = _inc_probe_cand(
-        spark, corp.where(F.col("vec_id") % bmod == 0), cents, assign, pairs_per_task
+        spark, new, *_ivf_assign_l(spark, sf_dir), pairs_per_task
     )
-    cand = barrier(cand)  # old_vecs' id fetch and the pair verify join
-
-    new_vecs = (
-        corp.where(F.col("vec_id") % bmod == 0)
-        .select("vec_id", F.col("embedding").alias("xv"))
-    )
-    # selective fetch: only candidate old vectors are ever read back
-    # (the candidate-id set is the semi join's build side — pair-bounded,
-    # and the hint keeps the planner off a sorting SMJ)
-    old_vecs = (
-        corp.where(F.col("vec_id") % bmod != 0)
-        .join(
-            cand.select(F.col("old_id").alias("vec_id")).distinct().hint("shuffle_hash"),
-            "vec_id",
-            "left_semi",
-        )
-        .select(F.col("vec_id").alias("old_id"), F.col("embedding").alias("yv"))
-    )
-    from d3d_etl_spark.functions.vectors import cosine
-
-    sims = (
-        cand.join(new_vecs.hint("shuffle_hash"), "vec_id")
-        .join(old_vecs.hint("shuffle_hash"), "old_id")
-        .select(
-            "vec_id",
-            "old_id",
-            F.round(cosine(F.col("xv"), F.col("yv")), 6).alias("sim"),
-        )
-    )
-    # top-1 as a HASH AGGREGATE, not a row_number window (the
-    # pq_encode_comps argmin recipe): min_by over the total order
-    # (-sim, old_id) is exactly the window's (sim desc, old_id asc) first
-    # row — sim is already 6-dp rounded so its negation is exact, and
-    # old_id is unique within the group so the order has no ties. The agg
-    # rides cand's count-scaled vec_id partitioning (subset rule, zero
-    # further exchange) and drops the window's per-task SORT of the
-    # pair-grain table — per-task state becomes batch-grain group slots.
-    # coalesce-to-+inf = the window's NULLS-LAST for a zero-norm pair's
-    # NULL sim (see assign_nearest_centroid).
-    top1 = (
-        sims.groupBy("vec_id")
-        .agg(
-            F.min_by(
-                F.struct("old_id", "sim"),
-                F.struct(
-                    F.coalesce(F.nanvl(-F.col("sim") + F.lit(0.0), F.lit(float("-inf"))), F.lit(float("inf"))).alias("k"),
-                    "old_id",
-                ),
-            ).alias("_b")
-        )
-        .select("vec_id", F.col("_b.old_id").alias("old_id"), F.col("_b.sim").alias("sim"))
-    )
-    return (
-        top1.join(
-            probe.where(F.col("rn") == 1).select("vec_id", "label").hint("shuffle_hash"),
-            "vec_id",
-        )
-        .select(
-            "vec_id",
-            F.col("label").alias("assigned_label"),
-            F.col("old_id").alias("nn_id"),
-            F.col("sim").alias("nn_sim"),
-        )
+    top1 = _exact_top1(barrier(cand), new, old)
+    return top1.join(
+        probe.where(F.col("rn") == 1).select("vec_id", "label").hint("shuffle_hash"),
+        "vec_id",
+    ).select(
+        "vec_id",
+        F.col("label").alias("assigned_label"),
+        F.col("old_id").alias("nn_id"),
+        F.col("sim").alias("nn_sim"),
     )
 
 
@@ -1215,14 +1247,10 @@ def inc_serving_profile(spark: SparkSession, sf_dir: str) -> dict:
     pairs per served vector must grow ~sqrt(10)x across an sf0.1 -> sf1
     pair (Theta(nprobe * N/K) with K = ceil(sqrt(N_old))), and the batch
     row count must be ~_SRV_BATCH_ROWS once the corpus clears 4x that."""
-    corp, bmod = serving_corpus(spark, sf_dir)
-    n = table_count(spark, sf_dir, "embeddings")  # corp is row-for-row the table
-    cents, assign = ivf_index_state(spark, sf_dir)
-    assign_l = assign.select(
-        F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label")
-    )
-    new_batch = corp.where(F.col("vec_id") % bmod == 0)
-    _, _, stats = _inc_probe_cand(spark, new_batch, cents, assign_l)
+    new, _, bmod = serving_split(spark, sf_dir)
+    n = table_count(spark, sf_dir, "embeddings")  # the split covers the table
+    cents, assign = _ivf_assign_l(spark, sf_dir)
+    _, _, stats = _inc_probe_cand(spark, new, cents, assign)
     n_batch = n - stats["n_old"]
     n_pairs = stats["n_pairs"]
     return {
@@ -1236,9 +1264,10 @@ def inc_serving_profile(spark: SparkSession, sf_dir: str) -> dict:
     }
 
 
-def _bruteforce_nn(corp_rows: list, bmod: int) -> dict[int, int]:
+def _bruteforce_nn(new_rows: list, old_rows: list) -> dict[int, int]:
     """True nearest OLD neighbor per new-batch vector by chunked numpy
-    brute force — 6-dp-rounded cosine, (sim desc, old_id asc) tie-break,
+    brute force over the collected rows of serving_split's two sides —
+    6-dp-rounded cosine, (sim desc, old_id asc) tie-break,
     the engine/oracle ranking contract. Rounding is HALF-AWAY (the shared
     _np_round6_half_away helper), matching F.round/DuckDB ROUND — np.round
     is banker's, so a sim on an exact 5e-7 boundary would otherwise give
@@ -1250,13 +1279,15 @@ def _bruteforce_nn(corp_rows: list, bmod: int) -> dict[int, int]:
 
     from d3d_etl_spark.operators.similarity import _np_round6_half_away
 
-    vid = np.array([r["vec_id"] for r in corp_rows])
-    X = np.array([r["embedding"] for r in corp_rows])
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    new_m = vid % bmod == 0
-    old_ids, old_X = vid[~new_m], Xn[~new_m]
+    def unit(rows):
+        X = np.array([r["embedding"] for r in rows])
+        return np.array([r["vec_id"] for r in rows]), X / np.linalg.norm(
+            X, axis=1, keepdims=True
+        )
+
+    new_ids, new_X = unit(new_rows)
+    old_ids, old_X = unit(old_rows)
     out: dict[int, int] = {}
-    new_ids, new_X = vid[new_m], Xn[new_m]
     for i0 in range(0, len(new_ids), 256):
         S = _np_round6_half_away(new_X[i0 : i0 + 256] @ old_X.T)
         for j in range(S.shape[0]):
@@ -1273,8 +1304,8 @@ def serving_recall_profile(spark: SparkSession, sf_dir: str) -> dict:
     not silently trade recall at scale)."""
     from d3d_etl_spark.queries.registry import REGISTRY
 
-    corp, bmod = serving_corpus(spark, sf_dir)
-    true_nn = _bruteforce_nn(corp.collect(), bmod)
+    new, old, _ = serving_split(spark, sf_dir)
+    true_nn = _bruteforce_nn(new.collect(), old.collect())
     out: dict = {"n_new": len(true_nn)}
     for key, qname in (("exact", "z_sim_incremental"), ("rerank", "z_sim_pq_rerank")):
         got = {
@@ -1291,7 +1322,7 @@ def raw_serving_recall(
     spark: SparkSession, sf_dir: str, nprobe: int = _INC_NPROBE
 ) -> dict:
     """Worst-case serving recall row: the SAME scaled-K
-    train/probe/verify machinery served over the PROVIDED embeddings
+    train/probe/verify chain served over the PROVIDED embeddings
     table — no planted neighborhoods, ephemeral state (nothing
     persisted). The synthetic test embeddings are near-isotropic
     (between-cluster variance ~2%), so nearest-neighbor structure is
@@ -1302,62 +1333,24 @@ def raw_serving_recall(
     the stress tier publish the full recall/cost knob curve
     (nprobe in {3, 8, 16, K}); the nprobe=K point probes every cell, so
     its candidates are ALL old vectors and recall@1 must be exactly 1.0
-    — a brute-force-equivalence sanity check on the whole chain. Scale
-    shape: identical to the planted serving arm (same helpers); the only
-    driver-side extra is the audit's brute-force reference."""
-    from pyspark.sql import Window
-
-    from d3d_etl_spark.functions.vectors import cosine
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = table_count(spark, sf_dir, "embeddings")
-    _, bmod = serving_params(n)
-    old = emb.where(F.col("vec_id") % bmod != 0)
-    new = emb.where(F.col("vec_id") % bmod == 0)
-    import math
-
-    k_cells = math.ceil(math.sqrt(n - new.count()))
-    asgn = _sample_seeded_cells(old, k_cells)
-    cells = barrier(asgn.select(
-        "vec_id", F.col("assigned_label").alias("label")
-    ))
-    cents = label_centroids(old.join(cells.hint("shuffle_hash"), "vec_id"), "label")
-    assign = cells.select(F.col("vec_id").alias("old_id"), "label")
+    — a brute-force-equivalence sanity check on the whole chain. The
+    cells serve as the assignment (no reassignment pass)."""
+    new, old, _ = serving_split(spark, sf_dir, planted=False)
+    cells, cents, k_cells = _train_cells(old)
     probe, cand, rstats = _inc_probe_cand(
-        spark, new, cents, assign, nprobe=min(nprobe, k_cells)
+        spark, new, cents, cells.select(F.col("vec_id").alias("old_id"), "label"),
+        nprobe=min(nprobe, k_cells),
     )
-    cand = barrier(cand)  # old_vecs' id fetch and the pair verify join
-    new_vecs = new.select("vec_id", F.col("embedding").alias("xv"))
-    old_vecs = (
-        old.join(
-            cand.select(F.col("old_id").alias("vec_id")).distinct().hint("shuffle_hash"),
-            "vec_id",
-            "left_semi",
-        )
-        .select(F.col("vec_id").alias("old_id"), F.col("embedding").alias("yv"))
-    )
-    sims = (
-        cand.join(new_vecs.hint("shuffle_hash"), "vec_id")
-        .join(old_vecs.hint("shuffle_hash"), "old_id")
-        .select(
-            "vec_id", "old_id", F.round(cosine(F.col("xv"), F.col("yv")), 6).alias("sim")
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("old_id"))
-    got = {
-        r["vec_id"]: r["old_id"]
-        for r in sims.withColumn("rn", F.row_number().over(w)).where("rn = 1").collect()
-    }
-    true_nn = _bruteforce_nn(emb.collect(), bmod)
-    n_pairs = rstats["n_pairs"]
+    got = {r["vec_id"]: r["old_id"] for r in _exact_top1(barrier(cand), new, old).collect()}
+    true_nn = _bruteforce_nn(new.collect(), old.collect())
     hits = sum(1 for v, nid in got.items() if true_nn.get(v) == nid)
     return {
-        "n": n,
+        "n": table_count(spark, sf_dir, "embeddings"),
         "nprobe": min(nprobe, k_cells),
         "k_cells": k_cells,
         "n_new": len(true_nn),
         "served": len(got),
-        "cand_per_new": round(n_pairs / max(1, len(true_nn)), 1),
+        "cand_per_new": round(rstats["n_pairs"] / max(1, len(true_nn)), 1),
         "recall@1": round(hits / max(1, len(got)), 4) if got else 0.0,
         "hits": f"{hits}/{len(got)}",
     }
@@ -2064,21 +2057,22 @@ def z_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "-",
         ).alias("code_sig")
     )
-    topk = (
+    # unique-key corpus-corpus join: sort-free shuffled hash
+    rows = scores.join(sig.hint("shuffle_hash"), "vec_id")
+    return _flag_top(rows, scores, _PQ_KSEL, "code_sig")
+
+
+def _flag_top(rows: DataFrame, scores: DataFrame, k: int, col: str) -> DataFrame:
+    """(vec_id, col, adist, sel) of `rows`: sel = 1 on the k best
+    (adist, vec_id) rows of `scores`, else 0. A partial TakeOrdered and a
+    broadcast flag join, never a global window over the candidates."""
+    top = (
         scores.orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(_PQ_KSEL)
+        .limit(k)
         .select("vec_id", F.lit(1).alias("_sel"))
     )
-    return (
-        # unique-key corpus-corpus join: sort-free shuffled hash
-        scores.join(sig.hint("shuffle_hash"), "vec_id")
-        .join(F.broadcast(topk), "vec_id", "left")
-        .select(
-            "vec_id",
-            "code_sig",
-            "adist",
-            F.coalesce(F.col("_sel"), F.lit(0)).cast("int").alias("sel"),
-        )
+    return rows.join(F.broadcast(top), "vec_id", "left").select(
+        "vec_id", col, "adist", F.coalesce(F.col("_sel"), F.lit(0)).cast("int").alias("sel")
     )
 
 
@@ -2092,7 +2086,7 @@ def z_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per vector.
 # ---------------------------------------------------------------------------
 
-# the IVF coarse-probe CTE block (comps -> cents -> qv -> probe), shared
+# the IVF coarse-probe CTE block (comps -> cents -> qv -> probe -> cand), shared
 # by every IVF-composed oracle (z_sim_ivfpq, z_sim_ivfpq_residual) — the
 # prefix-parameterized-helper discipline: one definition, never copied.
 _IVF_PROBE_CTES = f"""comps AS (
@@ -2114,15 +2108,15 @@ probe AS (
     FROM cents c JOIN qv q ON c.pos = q.pos
     GROUP BY c.label
   ) ORDER BY sim DESC, label LIMIT {_NPROBE}
+),
+cand AS (
+  SELECT e.vec_id, e.label FROM embeddings e
+  WHERE e.label IN (SELECT label FROM probe) AND e.vec_id != {_QUERY_ID}
 )"""
 
 _IVFPQ_ORACLE = f"""
 WITH {_PQ_CTES},
 {_IVF_PROBE_CTES},
-cand AS (
-  SELECT e.vec_id, e.label FROM embeddings e
-  WHERE e.label IN (SELECT label FROM probe) AND e.vec_id != {_QUERY_ID}
-),
 csc AS (
   SELECT sc.vec_id, sc.adist FROM sc JOIN cand ON sc.vec_id = cand.vec_id
 )
@@ -2139,37 +2133,29 @@ def z_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. Beyond-reference LLM-pipeline operator (the FAISS billion-scale
     search composition)."""
     from d3d_etl_spark.operators.pq import pq_adc_scores
-    from d3d_etl_spark.operators.similarity import ivf_probe_labels, label_centroids
 
     codes, adc, emb = _pq_parts(spark, sf_dir)
-    cents = label_centroids(emb, "label")
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(F.col("embedding").alias("q_vec"))
-    probe = ivf_probe_labels(cents, query, "label", _NPROBE)
+    _, cand = _probe_cand(emb)
+    scores = barrier(pq_adc_scores(
+        codes.join(cand.select("vec_id"), "vec_id", "left_semi"), adc
+    ))  # feeds the top-k AND the published rows
+    return _flag_top(scores.join(cand, "vec_id"), scores, _ANN_K, "label")
+
+
+def _probe_cand(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(probe, cand) of the IVF coarse stage over `emb` (vec_id, label,
+    embedding): the _NPROBE cells whose exact-integer centroids are
+    closest to the query, and their members but the query as (vec_id,
+    label). The engine twin of _IVF_PROBE_CTES."""
+    from d3d_etl_spark.operators.similarity import ivf_probe_labels
+
+    probe = ivf_probe_labels(label_centroids(emb, "label"), _query(emb), "label", _NPROBE)
     cand = (
         emb.join(F.broadcast(probe), "label", "left_semi")
         .where(F.col("vec_id") != _QUERY_ID)
         .select("vec_id", "label")
     )
-    scores = barrier(pq_adc_scores(
-        codes.join(cand.select("vec_id"), "vec_id", "left_semi"), adc
-    ))  # feeds the top-k AND the published rows
-    # partial TakeOrdered + broadcast flag — never a global window over the
-    # candidate set (nprobe/k of the corpus at scale)
-    topk = (
-        scores.orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(_ANN_K)
-        .select("vec_id", F.lit(1).alias("_sel"))
-    )
-    return (
-        scores.join(cand, "vec_id")
-        .join(F.broadcast(topk), "vec_id", "left")
-        .select(
-            "vec_id",
-            "label",
-            "adist",
-            F.coalesce(F.col("_sel"), F.lit(0)).cast("int").alias("sel"),
-        )
-    )
+    return probe, cand
 
 
 # ---------------------------------------------------------------------------
@@ -2239,15 +2225,11 @@ radc AS (
   FROM rcb JOIN qres q ON rcb.sub = q.sub AND rcb.pos = q.pos
   GROUP BY 1, 2, 3
 ),
-rcand AS (
-  SELECT e.vec_id, e.label FROM embeddings e
-  WHERE e.label IN (SELECT label FROM probe) AND e.vec_id != {_QUERY_ID}
-),
 rsc AS (
-  SELECT renc.vec_id, rcand.label, CAST(SUM(radc.d) AS BIGINT) AS adist
+  SELECT renc.vec_id, cand.label, CAST(SUM(radc.d) AS BIGINT) AS adist
   FROM renc
-  JOIN rcand ON renc.vec_id = rcand.vec_id
-  JOIN radc ON radc.label = rcand.label AND radc.sub = renc.sub AND radc.code = renc.code
+  JOIN cand ON renc.vec_id = cand.vec_id
+  JOIN radc ON radc.label = cand.label AND radc.sub = renc.sub AND radc.code = renc.code
   GROUP BY 1, 2
 )
 SELECT vec_id, label, adist,
@@ -2297,7 +2279,6 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
     already know the vector count pass `n_vec` (both registered callers
     read the memoized table count, so no per-invocation count job runs)."""
     from d3d_etl_spark.operators.pq import pq_codebooks_from_comps, pq_encode_comps
-    from d3d_etl_spark.operators.similarity import ivf_probe_labels, label_centroids
 
     icents, res = residual_comps(emb)
     # Scale the residual table's task count with the VECTOR count before
@@ -2318,14 +2299,7 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
     ))
     rcodes = pq_encode_comps(res.select("vec_id", "sub", "pos", "xs"), rcb)
 
-    cents = label_centroids(emb, "label")
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(F.col("embedding").alias("q_vec"))
-    probe = ivf_probe_labels(cents, query, "label", _NPROBE)
-    cand = (
-        emb.join(F.broadcast(probe), "label", "left_semi")
-        .where(F.col("vec_id") != _QUERY_ID)
-        .select("vec_id", "label")
-    )
+    probe, cand = _probe_cand(emb)
     # per-probed-cell query residual -> per-cell ADC table (nprobe*m*ks
     # rows): the query's residual differs per cell, unlike plain PQ
     qres = (
@@ -2358,17 +2332,7 @@ def _ivfpq_residual_search(emb: DataFrame, n_vec: int | None = None) -> DataFram
         .groupBy("vec_id", "label")
         .agg(F.sum("d").cast("long").alias("adist"))
     )
-    topk = (
-        scores.orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(_ANN_K)
-        .select("vec_id", F.lit(1).alias("_sel"))
-    )
-    return scores.join(F.broadcast(topk), "vec_id", "left").select(
-        "vec_id",
-        "label",
-        "adist",
-        F.coalesce(F.col("_sel"), F.lit(0)).cast("int").alias("sel"),
-    )
+    return _flag_top(scores, scores, _ANN_K, "label")
 
 
 @register("z_sim_ivfpq_residual", _IVFPQR_ORACLE, tags=("similarity",))
@@ -2447,84 +2411,113 @@ def z_sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SWEEP_NPROBES = (1, 2, 4, 8)
 _SWEEP_K = 10
 
-_SWEEP_ARMS = "\nUNION ALL\n".join(
-    f"""SELECT CAST({n} AS INT) AS nprobe,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM sims WHERE rn <= {n}) AS n_cand,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM
-          (SELECT vec_id FROM sims WHERE rn <= {n}
-           ORDER BY sim DESC, vec_id LIMIT {_SWEEP_K}) a
-          JOIN exact USING (vec_id)) AS hits,
-       CAST({_SWEEP_K} AS INT) AS k"""
-    for n in _SWEEP_NPROBES
-)
 
-_SWEEP_ORACLE = f"""
-WITH comps AS (
-  SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x,
-         unnest(range(len(embedding))) AS pos
-  FROM embeddings
+def _recall_curve_sql(comps: str, cells: str, probes: str, extra: str = "") -> str:
+    """SQL image of _recall_curve, as CTEs plus the final SELECT: `comps`
+    (vec_id, x, pos) names the corpus components, `cells` (vec_id, cell)
+    each vector's coarse cell, `probes` a SELECT of the INT nprobe
+    values; `extra` appends columns to the output."""
+    return f"""cc AS (
+  SELECT c.vec_id, a.cell, c.x, c.pos FROM {comps} c JOIN {cells} a ON c.vec_id = a.vec_id
 ),
-cents AS (
-  SELECT label, pos,
+ccents AS (
+  SELECT cell, pos,
          CAST(SUM(CAST(ROUND(x * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000 AS c
-  FROM comps GROUP BY label, pos
+  FROM cc GROUP BY cell, pos
 ),
-qv AS (SELECT pos, x AS qx FROM comps WHERE vec_id = {_QUERY_ID}),
+qv AS (SELECT pos, x AS qx FROM {comps} WHERE vec_id = {_QUERY_ID}),
 cellrank AS (
-  SELECT label, ROW_NUMBER() OVER (ORDER BY sim DESC, label) AS rn FROM (
-    SELECT c.label,
+  SELECT cell, ROW_NUMBER() OVER (ORDER BY sim DESC, cell) AS rn FROM (
+    SELECT c.cell,
            ROUND(SUM(q.qx * c.c) / (SQRT(SUM(c.c * c.c)) * SQRT(SUM(q.qx * q.qx))), 6) AS sim
-    FROM cents c JOIN qv q ON c.pos = q.pos
-    GROUP BY c.label
+    FROM ccents c JOIN qv q ON c.pos = q.pos
+    GROUP BY c.cell
   )
 ),
 vs AS (
-  SELECT e.vec_id, e.label,
+  SELECT e.vec_id,
          ROUND(SUM(e.x * q.qx) / (SQRT(SUM(e.x * e.x)) * SQRT(SUM(q.qx * q.qx))), 6) AS sim
-  FROM comps e JOIN qv q ON e.pos = q.pos
+  FROM {comps} e JOIN qv q ON e.pos = q.pos
   WHERE e.vec_id != {_QUERY_ID}
-  GROUP BY 1, 2
+  GROUP BY 1
 ),
-sims AS (SELECT v.vec_id, r.rn, v.sim FROM vs v JOIN cellrank r ON v.label = r.label),
-exact AS (SELECT vec_id FROM vs ORDER BY sim DESC, vec_id LIMIT {_SWEEP_K})
-{_SWEEP_ARMS}
+sims AS (
+  SELECT v.vec_id, r.rn, v.sim
+  FROM vs v JOIN {cells} a ON v.vec_id = a.vec_id
+  JOIN cellrank r ON a.cell = r.cell
+),
+exact AS (SELECT vec_id FROM vs ORDER BY sim DESC, vec_id LIMIT {_SWEEP_K}),
+probes AS ({probes}),
+ranked_c AS (
+  SELECT p.nprobe, s.vec_id,
+         ROW_NUMBER() OVER (PARTITION BY p.nprobe ORDER BY s.sim DESC, s.vec_id) AS rr
+  FROM probes p JOIN sims s ON s.rn <= p.nprobe
+),
+counts AS (SELECT nprobe, CAST(COUNT(*) AS BIGINT) AS n_cand FROM ranked_c GROUP BY 1),
+hitc AS (
+  SELECT t.nprobe, CAST(COUNT(e.vec_id) AS BIGINT) AS hits
+  FROM (SELECT nprobe, vec_id FROM ranked_c WHERE rr <= {_SWEEP_K}) t
+  LEFT JOIN exact e ON t.vec_id = e.vec_id
+  GROUP BY 1
+)
+SELECT p.nprobe,
+       COALESCE(c.n_cand, 0) AS n_cand,
+       COALESCE(h.hits, 0) AS hits,
+       CAST({_SWEEP_K} AS INT) AS k{extra}
+FROM probes p
+LEFT JOIN counts c ON p.nprobe = c.nprobe
+LEFT JOIN hitc h ON p.nprobe = h.nprobe
 """
 
 
-@register("z_sim_recall_sweep", _SWEEP_ORACLE, tags=("similarity",))
-def z_sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@K and candidate cost of IVF cell pruning, per nprobe — the
-    ANN tuning curve, every point driver-hashed against brute force."""
+_SWEEP_ORACLE = """
+WITH comps AS (
+  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+         unnest(range(len(embedding))) AS pos
+  FROM embeddings
+),
+""" + _recall_curve_sql(
+    "comps",
+    "(SELECT vec_id, label AS cell FROM embeddings)",
+    f"SELECT CAST(unnest({list(_SWEEP_NPROBES)}) AS INT) AS nprobe",
+)
+
+
+def _recall_curve(
+    emb: DataFrame, cents: DataFrame, cell: str, nprobes, cells=None, **lits
+) -> DataFrame:
+    """(nprobe, n_cand, hits, k, *lits): recall@K of cell-pruned exact
+    search for the fixed query vs the brute-force top-K, one row per
+    nprobe. `cents` (cell, pos, c) are the cell centroids, ranked by
+    cosine to the query; the `cell` column rides on `emb` or, when
+    `cells` (vec_id, cell) is given, joins on from it. One barriered
+    scoring pass feeds the exact top-K and every arm; an arm is a filter
+    rn <= nprobe, a distributed TakeOrdered(K) and two 1-row aggs. `lits`
+    add int literal columns."""
     from d3d_etl_spark.functions.vectors import cosine
     from d3d_etl_spark.operators.similarity import ivf_ranked_cells
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(
-        F.col("embedding").alias("q_vec")
-    )
-    ranked = ivf_ranked_cells(label_centroids(emb, "label"), query, "label")
-    # one scoring pass feeds exact + all four arms
-    sims = barrier(
+    query = _query(emb)
+    sims = (
         emb.where(F.col("vec_id") != _QUERY_ID)
         .crossJoin(F.broadcast(query))
         .select(
             "vec_id",
-            "label",
+            *([] if cells is not None else [cell]),
             F.round(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("sim"),
         )
-        .join(F.broadcast(ranked), "label")
     )
+    if cells is not None:
+        sims = sims.join(cells.hint("shuffle_hash"), "vec_id")
+    ranked = ivf_ranked_cells(cents, query, cell)
+    sims = barrier(sims.join(F.broadcast(ranked), cell))
     exact = F.broadcast(
         sims.orderBy(F.desc("sim"), F.asc("vec_id")).limit(_SWEEP_K).select("vec_id")
     )
     out = None
-    for n in _SWEEP_NPROBES:
+    for n in nprobes:
         cand = sims.where(F.col("rn") <= n)
-        ann = (
-            cand.orderBy(F.desc("sim"), F.asc("vec_id"))
-            .limit(_SWEEP_K)
-            .select("vec_id")
-        )
+        ann = cand.orderBy(F.desc("sim"), F.asc("vec_id")).limit(_SWEEP_K).select("vec_id")
         arm = (
             cand.agg(F.count("*").cast("long").alias("n_cand"))
             .crossJoin(
@@ -2537,10 +2530,19 @@ def z_sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_cand",
                 "hits",
                 F.lit(_SWEEP_K).cast("int").alias("k"),
+                *[F.lit(v).cast("int").alias(c) for c, v in lits.items()],
             )
         )
         out = arm if out is None else out.unionByName(arm)
     return out
+
+
+@register("z_sim_recall_sweep", _SWEEP_ORACLE, tags=("similarity",))
+def z_sim_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """recall@K and candidate cost of IVF cell pruning, per nprobe — the
+    ANN tuning curve, every point driver-hashed against brute force."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _recall_curve(emb, label_centroids(emb, "label"), "label", _SWEEP_NPROBES)
 
 
 # ---------------------------------------------------------------------------
@@ -3027,8 +3029,7 @@ def pq_index_state(
     lab = assign.select("vec_id", F.col("assigned_label").alias("label"))
 
     def old_batch() -> DataFrame:
-        corp, bmod = serving_corpus(spark, sf_dir)
-        return corp.where(F.col("vec_id") % bmod != 0)
+        return serving_split(spark, sf_dir)[1]
 
     def old_comps() -> DataFrame:
         return pq_subspace_comps(old_batch(), _DIM, _PQ_M).join(
@@ -3190,66 +3191,32 @@ short AS (
     FROM scored
   ) WHERE rn <= (SELECT r_eff FROM rparams)
 ),
-soldv AS (
-  SELECT c.vec_id AS old_id, c.x AS y, c.pos
-  FROM cemb c CROSS JOIN srvp s
-  WHERE c.vec_id % s.bmod != 0
-    AND c.vec_id IN (SELECT old_id FROM short)
-),
-rnorm AS (SELECT vec_id, SUM(x * x) AS nx2 FROM newv GROUP BY 1),
-ronorm AS (SELECT old_id, SUM(y * y) AS ny2 FROM soldv GROUP BY 1),
-rdots AS (
-  SELECT sh.vec_id, sh.old_id, SUM(n.x * o.y) AS dot
-  FROM short sh
-  JOIN newv n ON n.vec_id = sh.vec_id
-  JOIN soldv o ON o.old_id = sh.old_id AND o.pos = n.pos
-  GROUP BY 1, 2
-),
-rsims AS (
-  SELECT d.vec_id, d.old_id,
-         ROUND(d.dot / (SQRT(nn.nx2) * SQRT(oo.ny2)), 6) AS sim
-  FROM rdots d
-  JOIN rnorm nn ON d.vec_id = nn.vec_id
-  JOIN ronorm oo ON d.old_id = oo.old_id
-)
-SELECT vec_id, old_id AS nn_id, sim AS nn_sim FROM (
-  SELECT vec_id, old_id, sim,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, old_id) AS rn
-  FROM rsims
-) WHERE rn = 1
+{_exact_top1_ctes("short")}
+SELECT vec_id, old_id AS nn_id, sim AS nn_sim FROM top1
 """
 
 
 def _pq_inc_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    corp: DataFrame | None = None,
-    bmod: int | None = None,
+    spark: SparkSession, sf_dir: str, new: DataFrame
 ) -> tuple[DataFrame, dict]:
-    """((vec_id, old_id, adist), stats): the IVFADC candidate scores —
+    """((vec_id, old_id, adist), stats): the IVFADC candidate scores of
+    the new batch `new` (serving_split's first frame) —
     cell-gated candidates x exact-integer ADC over stored codes — shared
     by the pure ADC serving arm (z_sim_pq_incremental) and the
     exact-refine arm (z_sim_pq_rerank). The engine twin of the
-    _PQ_INC_CTES `scored` table. Callers that already derived the serving
-    corpus pass (corp, bmod) so the count job and derivation lineage
-    aren't planned twice (review finding). `stats` is _inc_probe_cand's
+    _PQ_INC_CTES `scored` table. `stats` is _inc_probe_cand's
     scalar dict — the rerank arm reads n_old from it instead of running
     a per-invocation corpus count job."""
     from d3d_etl_spark.operators.pq import pq_subspace_comps
 
-    if corp is None or bmod is None:
-        corp, bmod = serving_corpus(spark, sf_dir)
     icents, cb, old_codes = pq_index_state(spark, sf_dir)
     old_codes = old_codes.select(F.col("vec_id").alias("old_id"), "sub", "code")
-    cents, assign = ivf_index_state(spark, sf_dir)
-    assign = assign.select(
-        F.col("vec_id").alias("old_id"), F.col("assigned_label").alias("label")
-    )
+    cents, assign = _ivf_assign_l(spark, sf_dir)
     # fan the thin single-split batch once; _inc_probe_cand's own fan_out
     # then sees >= session parallelism and passes it through, so the qres
     # residual chain below shares the rebalance instead of re-serializing
     # on the scan split (unfanned, the dt map side ran as ONE 1.5 s task)
-    new = fan_out(corp.where(F.col("vec_id") % bmod == 0))
+    new = fan_out(new)
     # cand_key="old_id": the ONLY consumer below is the codes join, keyed
     # on old_id — the vec_id layout would make the pair table cross two
     # exchanges back to back (vec_id, then old_id). One consumer, so no
@@ -3370,7 +3337,7 @@ def z_sim_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     task + timeout at sf1. The cell gate bounds candidates at nprobe x cell
     occupancy and shares its definition (engine helper + oracle CTEs) with
     z_sim_incremental."""
-    scored, _ = _pq_inc_scored(spark, sf_dir)
+    scored, _ = _pq_inc_scored(spark, sf_dir, serving_split(spark, sf_dir)[0])
     # top-1 as a min_by hash aggregate over the (adist, old_id) total
     # order — the exact arm's sort-free argmin recipe; adist is an exact
     # integer and old_id unique per group, so no ties
@@ -3408,10 +3375,8 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scored."""
     from pyspark.sql import Window
 
-    from d3d_etl_spark.functions.vectors import cosine
-
-    corp, bmod = serving_corpus(spark, sf_dir)
-    scored, stats = _pq_inc_scored(spark, sf_dir, corp, bmod)
+    new, old, _ = serving_split(spark, sf_dir)
+    scored, stats = _pq_inc_scored(spark, sf_dir, new)
     # occupancy-scaled shortlist width (see _PQ_RERANK_R_MIN):
     # n_old is a driver scalar shared with the oracle's rparams CTE via
     # the exact integer rerank_r rule. It comes from the probe
@@ -3421,50 +3386,15 @@ def z_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-invocation corpus count job.
     n_old = stats["n_old"]
     w_adc = Window.partitionBy("vec_id").orderBy(F.asc("adist"), F.asc("old_id"))
-    # |new| x R rows — batch-grain, reused twice
+    # |new| x R rows — batch-grain, reused twice; the shortlist keeps its
+    # row_number window (top-R needs ranks)
     short = barrier(
         scored.withColumn("rn", F.row_number().over(w_adc))
         .where(F.col("rn") <= rerank_r(n_old))
         .select("vec_id", "old_id")
     )
-    new_vecs = corp.where(F.col("vec_id") % bmod == 0).select(
-        "vec_id", F.col("embedding").alias("xv")
-    )
-    old_vecs = (
-        corp.where(F.col("vec_id") % bmod != 0)
-        .join(
-            short.select(F.col("old_id").alias("vec_id")).distinct().hint("shuffle_hash"),
-            "vec_id",
-            "left_semi",
-        )
-        .select(F.col("vec_id").alias("old_id"), F.col("embedding").alias("yv"))
-    )
-    sims = (
-        short.join(new_vecs.hint("shuffle_hash"), "vec_id")
-        .join(old_vecs.hint("shuffle_hash"), "old_id")
-        .select(
-            "vec_id",
-            "old_id",
-            F.round(cosine(F.col("xv"), F.col("yv")), 6).alias("sim"),
-        )
-    )
-    # re-rank winner as a min_by hash aggregate (the exact arm's sort-free
-    # argmin): min over (-sim, old_id) = (sim desc, old_id asc) first row;
-    # the shortlist window above keeps its row_number (top-R needs ranks).
-    # coalesce-to-+inf = the window's NULLS-LAST for a zero-norm pair's
-    # NULL sim (see assign_nearest_centroid).
-    return (
-        sims.groupBy("vec_id")
-        .agg(
-            F.min_by(
-                F.struct("old_id", "sim"),
-                F.struct(
-                    F.coalesce(F.nanvl(-F.col("sim") + F.lit(0.0), F.lit(float("-inf"))), F.lit(float("inf"))).alias("k"),
-                    "old_id",
-                ),
-            ).alias("_b")
-        )
-        .select("vec_id", F.col("_b.old_id").alias("nn_id"), F.col("_b.sim").alias("nn_sim"))
+    return _exact_top1(short, new, old).select(
+        "vec_id", F.col("old_id").alias("nn_id"), F.col("sim").alias("nn_sim")
     )
 
 
@@ -3492,62 +3422,13 @@ WITH kq AS (
   SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS kc FROM embeddings
 ),
 {_km2_ctes("SELECT kc FROM kq")},
-comps3 AS (
-  SELECT e0.vec_id, a.cluster, e0.x, e0.pos
-  FROM e0 JOIN asgn2 a ON e0.vec_id = a.vec_id
-),
-cents3 AS (
-  SELECT cluster, pos,
-         CAST(SUM(CAST(ROUND(x * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000 AS c
-  FROM comps3 GROUP BY cluster, pos
-),
-qv AS (SELECT pos, x AS qx FROM e0 WHERE vec_id = {_QUERY_ID}),
-cellrank AS (
-  SELECT cluster, ROW_NUMBER() OVER (ORDER BY sim DESC, cluster) AS rn FROM (
-    SELECT c.cluster,
-           ROUND(SUM(q.qx * c.c) / (SQRT(SUM(c.c * c.c)) * SQRT(SUM(q.qx * q.qx))), 6) AS sim
-    FROM cents3 c JOIN qv q ON c.pos = q.pos
-    GROUP BY c.cluster
-  )
-),
-vs AS (
-  SELECT e.vec_id,
-         ROUND(SUM(e.x * q.qx) / (SQRT(SUM(e.x * e.x)) * SQRT(SUM(q.qx * q.qx))), 6) AS sim
-  FROM e0 e JOIN qv q ON e.pos = q.pos
-  WHERE e.vec_id != {_QUERY_ID}
-  GROUP BY 1
-),
-sims AS (
-  SELECT v.vec_id, r.rn, v.sim
-  FROM vs v JOIN asgn2 a ON v.vec_id = a.vec_id
-  JOIN cellrank r ON a.cluster = r.cluster
-),
-exact AS (SELECT vec_id FROM vs ORDER BY sim DESC, vec_id LIMIT {_SWEEP_K}),
-probes AS (
-  SELECT DISTINCT GREATEST(1, CAST(CEIL(kc / d.d) AS INT)) AS nprobe
-  FROM kq, (SELECT unnest([{", ".join(str(d) for d in _SCALEDK_DIVS)}]) AS d) d
-),
-ranked_c AS (
-  SELECT p.nprobe, s.vec_id,
-         ROW_NUMBER() OVER (PARTITION BY p.nprobe ORDER BY s.sim DESC, s.vec_id) AS rr
-  FROM probes p JOIN sims s ON s.rn <= p.nprobe
-),
-counts AS (SELECT nprobe, CAST(COUNT(*) AS BIGINT) AS n_cand FROM ranked_c GROUP BY 1),
-hitc AS (
-  SELECT t.nprobe, CAST(COUNT(e.vec_id) AS BIGINT) AS hits
-  FROM (SELECT nprobe, vec_id FROM ranked_c WHERE rr <= {_SWEEP_K}) t
-  LEFT JOIN exact e ON t.vec_id = e.vec_id
-  GROUP BY 1
+""" + _recall_curve_sql(
+    "e0",
+    "(SELECT vec_id, cluster AS cell FROM asgn2)",
+    "SELECT DISTINCT GREATEST(1, CAST(CEIL(kc / d.d) AS INT)) AS nprobe "
+    f"FROM kq, (SELECT unnest({list(_SCALEDK_DIVS)}) AS d) d",
+    ", (SELECT CAST(kc AS INT) FROM kq) AS k_cells",
 )
-SELECT p.nprobe,
-       COALESCE(c.n_cand, 0) AS n_cand,
-       COALESCE(h.hits, 0) AS hits,
-       CAST({_SWEEP_K} AS INT) AS k,
-       (SELECT CAST(kc AS INT) FROM kq) AS k_cells
-FROM probes p
-LEFT JOIN counts c ON p.nprobe = c.nprobe
-LEFT JOIN hitc h ON p.nprobe = h.nprobe
-"""
 
 
 @register("z_sim_ivf_scaledk", _SCALEDK_ORACLE, tags=("similarity",))
@@ -3560,66 +3441,11 @@ def z_sim_ivf_scaledk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving family (ivf_index_state) actually serves with."""
     import math
 
-    from d3d_etl_spark.functions.vectors import cosine
-    from d3d_etl_spark.operators.similarity import ivf_ranked_cells, label_centroids
-
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_count(spark, sf_dir, "embeddings")  # memoized — drives K on both engines
     k_cells = math.ceil(math.sqrt(n))
     _, asgn2 = kmeans2_assign_emb(emb, k=k_cells)
-    relabeled = emb.join(
-        asgn2.select("vec_id", F.col("assigned_label").alias("cluster")).hint(
-            "shuffle_hash"
-        ),
-        "vec_id",
-    )
-    cents3 = label_centroids(relabeled, "cluster")
-    query = emb.where(F.col("vec_id") == _QUERY_ID).select(
-        F.col("embedding").alias("q_vec")
-    )
-    ranked = ivf_ranked_cells(cents3, query, "cluster")
-    # one scoring pass feeds exact + every arm
-    sims = barrier(
-        emb.where(F.col("vec_id") != _QUERY_ID)
-        .crossJoin(F.broadcast(query))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("sim"),
-        )
-        .join(
-            asgn2.select("vec_id", F.col("assigned_label").alias("cluster")).hint(
-                "shuffle_hash"
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(ranked), "cluster")
-    )
-    exact = F.broadcast(
-        sims.orderBy(F.desc("sim"), F.asc("vec_id")).limit(_SWEEP_K).select("vec_id")
-    )
+    cells = asgn2.select("vec_id", F.col("assigned_label").alias("cluster"))
+    cents = label_centroids(emb.join(cells.hint("shuffle_hash"), "vec_id"), "cluster")
     nprobes = sorted({max(1, math.ceil(k_cells / d)) for d in _SCALEDK_DIVS})
-    out = None
-    for np_ in nprobes:
-        cand = sims.where(F.col("rn") <= np_)
-        ann = (
-            cand.orderBy(F.desc("sim"), F.asc("vec_id"))
-            .limit(_SWEEP_K)
-            .select("vec_id")
-        )
-        arm = (
-            cand.agg(F.count("*").cast("long").alias("n_cand"))
-            .crossJoin(
-                ann.join(exact, "vec_id", "left_semi").agg(
-                    F.count("*").cast("long").alias("hits")
-                )
-            )
-            .select(
-                F.lit(np_).cast("int").alias("nprobe"),
-                "n_cand",
-                "hits",
-                F.lit(_SWEEP_K).cast("int").alias("k"),
-                F.lit(k_cells).cast("int").alias("k_cells"),
-            )
-        )
-        out = arm if out is None else out.unionByName(arm)
-    return out
+    return _recall_curve(emb, cents, "cluster", nprobes, cells=cells, k_cells=k_cells)

@@ -540,3 +540,28 @@ def test_within_cluster_pairs_gemm_equals_hof(spark, sf_dir):
     }
     assert hof == gemm
     assert hof, "no pairs at tau"
+
+
+def test_within_cluster_pairs_gemm_keeps_null_carry(spark):
+    """A NULL carry stays NULL through the GEMM kernel, as in the HOF
+    engine, and a NaN carry stays NaN. csim is NULL for a vector whose
+    centroid has zero norm (assign_nearest_centroid's try_divide)."""
+    import math
+
+    from d3d_etl_spark.operators.similarity import (
+        within_cluster_near_pairs,
+        within_cluster_near_pairs_gemm,
+    )
+
+    clustered = spark.createDataFrame(
+        [
+            (7, 0, [1.0, 0.0, 0.0], None),
+            (3, 0, [1.0, 0.01, 0.0], float("nan")),
+        ],
+        "vec_id long, cluster int, embedding array<double>, csim double",
+    )
+    for engine in (within_cluster_near_pairs, within_cluster_near_pairs_gemm):
+        (r,) = engine(clustered, 0.9, carry=("csim",)).collect()
+        assert (r.id_a, r.id_b) == (3, 7), engine.__name__
+        assert math.isnan(r.csim_a), engine.__name__
+        assert r.csim_b is None, engine.__name__

@@ -116,11 +116,20 @@ def _duck_assign(vecs, cents):
 
 
 def test_serving_top1_min_by_matches_sql_window(spark):
-    """The serving top-1 min_by shape (z_sim_incremental /
-    z_sim_pq_rerank) vs the oracle's ROW_NUMBER(ORDER BY sim DESC,
-    old_id) on seeded random pair tables with NULL sims mixed in —
-    including groups that are entirely NULL and exact sim ties."""
+    """The serving top-1 min_by shape (simsearch._exact_top1, keyed by
+    the package's sim_desc_key) vs the oracle's ROW_NUMBER(ORDER BY sim
+    DESC, old_id) on seeded random pair tables with NULL sims mixed in —
+    including groups that are entirely NULL, exact sim ties, and a NaN
+    sim, which DuckDB's ORDER BY sim DESC puts first."""
+    import math
+
     from pyspark.sql import functions as F
+
+    from d3d_etl_spark.functions.vectors import sim_desc_key
+
+    def nan_tag(sim):
+        # NaN != NaN: compare a NaN winner by tag on both sides
+        return "nan" if sim is not None and math.isnan(sim) else sim
 
     r = random.Random(0x701)
     rows = []
@@ -133,18 +142,17 @@ def test_serving_top1_min_by_matches_sql_window(spark):
     # one all-NULL group and one all-tied group
     rows += [(98, 1, None), (98, 2, None)]
     rows += [(99, 5, 0.5), (99, 3, 0.5), (99, 9, 0.5)]
+    # a NaN sim outranks every real sim under ORDER BY sim DESC
+    rows += [(97, 4, 0.9), (97, 6, float("nan")), (97, 8, None)]
 
     sims = spark.createDataFrame(rows, "vec_id long, old_id long, sim double")
     got = {
-        x["vec_id"]: (x["old_id"], x["sim"])
+        x["vec_id"]: (x["old_id"], nan_tag(x["sim"]))
         for x in sims.groupBy("vec_id")
         .agg(
             F.min_by(
                 F.struct("old_id", "sim"),
-                F.struct(
-                    F.coalesce(-F.col("sim") + F.lit(0.0), F.lit(float("inf"))).alias("k"),
-                    "old_id",
-                ),
+                F.struct(sim_desc_key(F.col("sim")).alias("k"), "old_id"),
             ).alias("_b")
         )
         .select("vec_id", F.col("_b.old_id").alias("old_id"), F.col("_b.sim").alias("sim"))
@@ -155,7 +163,7 @@ def test_serving_top1_min_by_matches_sql_window(spark):
         con.execute("CREATE TABLE s (vec_id BIGINT, old_id BIGINT, sim DOUBLE)")
         con.executemany("INSERT INTO s VALUES (?, ?, ?)", rows)
         want = {
-            int(v): (int(o), sim)
+            int(v): (int(o), nan_tag(sim))
             for v, o, sim in con.execute(
                 """SELECT vec_id, old_id, sim FROM (
                      SELECT vec_id, old_id, sim,

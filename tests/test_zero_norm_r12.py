@@ -75,8 +75,8 @@ def test_all_null_sims_keep_window_semantics(spark):
 
 
 def test_serving_top1_null_guard_shape(spark):
-    """The serving top-1 min_by shape (simsearch z_sim_incremental /
-    z_sim_pq_rerank sites): a NULL-sim pair must lose to any real-sim
+    """The serving top-1 min_by shape (simsearch._exact_top1, keyed by
+    the package's sim_desc_key): a NULL-sim pair must lose to any real-sim
     pair within the group, and win only when the group is all-NULL."""
     sims = spark.createDataFrame(
         [
@@ -86,15 +86,14 @@ def test_serving_top1_null_guard_shape(spark):
         ],
         "vec_id long, old_id long, sim double",
     )
+    from d3d_etl_spark.functions.vectors import sim_desc_key
+
     top1 = (
         sims.groupBy("vec_id")
         .agg(
             F.min_by(
                 F.struct("old_id", "sim"),
-                F.struct(
-                    F.coalesce(-F.col("sim") + F.lit(0.0), F.lit(float("inf"))).alias("k"),
-                    "old_id",
-                ),
+                F.struct(sim_desc_key(F.col("sim")).alias("k"), "old_id"),
             ).alias("_b")
         )
         .select("vec_id", F.col("_b.old_id").alias("old_id"), F.col("_b.sim").alias("sim"))

@@ -14,7 +14,8 @@ printed line stays compact (under ~2 KB, so a tail-capped stdout capture
 still parses it); the full payload, the same dict plus per-query
 `samples`, is written to the sidecar BENCH.json next to this script.
 `cpus` is the session's defaultParallelism and `heap` its live
-spark.driver.memory: runs compare only at the same (sf, cpus, heap).
+spark.driver.memory: runs compare only at the same (sf, cpus, heap). The
+sidecar also records `spark_version` and `python_version`.
 
 Each sample holds the three timed runs ({min, median, runs}), so host
 noise (median far above min, runs scattered) can be told from a plan
@@ -40,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import platform
 import re
 import sys
 import time
@@ -265,6 +267,8 @@ def main() -> None:
     with open(sidecar, "w") as f:
         json.dump(
             {**payload,
+             "spark_version": spark.version,
+             "python_version": platform.python_version(),
              "task_mem_regressions": regressions,
              "task_mem_acknowledged": acknowledged, "samples": samples},
             f,

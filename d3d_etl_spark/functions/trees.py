@@ -1,10 +1,10 @@
 """Fixed Column trees, built once per live JVM gateway.
 
-Every `F.*` call and Column method is one synchronous Python -> JVM call
-plus PySpark's call-site bookkeeping around it (about ten round trips per
-tree node). A tree that depends only on column names, literals and window
-specs is the same tree on every call, so it is built once and handed to
-every later plan.
+Every `F.*` call and Column method is a synchronous Python -> JVM call
+(several per tree node; about ten with PySpark's call-site capture, which
+`session.get_spark` turns off). A tree that depends only on column names,
+literals and window specs is the same tree on every call, so it is built
+once and handed to every later plan.
 """
 
 from __future__ import annotations

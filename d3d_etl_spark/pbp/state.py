@@ -6,9 +6,9 @@ implements at pbp_parser/columns.py:332-529: explicit runner-segment
 processing, substitution renames, and the forced-advance cascade when the
 batter takes a base. Implementation is fresh Python (not a copy): one pure
 step function, fsm_step, driven by the batch parse's Arrow runner
-(base_state_arrow_iter) and by the per-game grouped map (base_state_fsm)
-— state never crosses games, so N games parallelize perfectly across the
-cluster.
+(base_state_arrow_iter) and, in the tests, by a per-game grouped map
+(tests/base_state_reference.py) — state never crosses games, so N games
+parallelize perfectly across the cluster.
 
 Narration grammar per FIXTURES.md §1: segments joined by ';', first segment
 is the batter's event, later segments are runner events
@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 import pyarrow as pa
 
 from d3d_etl_spark.pbp.events import EVENT_RULES, NO_PLAY
@@ -58,12 +57,6 @@ _FORCE_EVENTS = {"BB", "IBB", "HBP", "CI"}
 
 # what the FSM adds to each play, in output order
 STATE_COLUMNS = ("bases_before", "bases_after", "r1_name", "r2_name", "r3_name")
-
-# the per-game grouped map's output (base_state_fsm)
-BASE_STATE_SCHEMA = (
-    "contest_id long, play_id long, bases_before string, bases_after string, "
-    "r1_name string, r2_name string, r3_name string"
-)
 
 
 def _classify(text: str) -> str:
@@ -146,8 +139,9 @@ def fsm_step(
     """One play's state transition (pure: copies the base dict).
 
     Returns (new_bases, new_cur_half, bases_before, bases_after,
-    r1_before, r2_before, r3_before). Shared by both runners (batch Arrow
-    map, grouped map) so they have identical semantics by construction.
+    r1_before, r2_before, r3_before). Shared by the batch Arrow map and
+    the tests' per-game grouped map, so both have identical semantics by
+    construction.
     """
     half_key = (inning, half)
     if half_key != cur_half:
@@ -211,8 +205,8 @@ def base_state_arrow_iter(batches):
     partition order instead of paying per-game group overhead, and it is
     carried ACROSS Arrow batches — batches arrive in partition order, so a
     game may straddle a batch boundary. Bit-identical to the per-game
-    grouped map (base_state_fsm) — pinned by
-    tests/test_pbp.py::test_partitioned_fsm_matches_grouped. The grouped
+    grouped map in tests/base_state_reference.py — pinned by
+    tests/test_pbp.py::test_partitioned_fsm_matches_grouped. A grouped
     map is not the batch path: at bench scale AQE coalesces its small
     shuffle to ONE partition, serializing every game on one core, and each
     game pays its own pandas construction."""
@@ -235,24 +229,3 @@ def base_state_arrow_iter(batches):
             batch.columns + [pa.array(col, pa.string()) for col in out],
             names=batch.schema.names + list(STATE_COLUMNS),
         )
-
-
-def base_state_fsm(group: pd.DataFrame) -> pd.DataFrame:
-    """One game's plays (sorted by play_id) -> base-state columns: the
-    per-game grouped map, kept as the reference the batch Arrow runner is
-    tested against."""
-    bases: dict[int, str | None] = {1: None, 2: None, 3: None}
-    cur_half: tuple | None = None
-    out_rows: list[tuple] = []
-    for row in group.itertuples(index=False):
-        bases, cur_half, before, after, r1, r2, r3 = fsm_step(
-            bases, cur_half, row.inning, row.half, row.play_text
-        )
-        out_rows.append((row.contest_id, row.play_id, before, after, r1, r2, r3))
-    return pd.DataFrame(
-        out_rows,
-        columns=[
-            "contest_id", "play_id", "bases_before", "bases_after",
-            "r1_name", "r2_name", "r3_name",
-        ],
-    )

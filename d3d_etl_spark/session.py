@@ -10,6 +10,17 @@ runs on local[32] for tests and on a large cluster unchanged:
   become plain `write.mode("overwrite")` on partitioned tables.
 - Arrow enabled — every pandas-UDF boundary is Arrow-batched.
 - Session timezone UTC so timestamp semantics are stable across engines.
+- Python workers fork from `d3d_etl_spark.worker_daemon`
+  (`spark.python.daemon.module`), which stops each task from rereading
+  the zip and jar directories on the worker's `sys.path`; the package root
+  joins `spark.executorEnv.PYTHONPATH` (after any `extra_conf` value) so the
+  daemon imports from any working directory. Deploy rule: executors must
+  be able to import this package, which its by-reference UDFs (functions
+  pickled by module and name) already require.
+- `spark.python.sql.dataFrameDebugging.enabled=false`: PySpark no longer
+  records the Python call site (a stack walk and a handful of JVM calls)
+  around every Column method and `F.col`. The only loss is the Python
+  file:line in the DataFrame context of an analysis or runtime error.
 """
 
 from __future__ import annotations
@@ -19,6 +30,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# the directory that holds the d3d_etl_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -90,10 +104,18 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS) which Spark has no native
         # type for; read as long and convert at the scan (io.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "d3d_etl_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if driver_mem:
         builder = builder.config("spark.driver.memory", driver_mem)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    py_path = extra_conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    py_path = [p for p in py_path if p]
+    if _PACKAGE_ROOT not in py_path:
+        py_path.append(_PACKAGE_ROOT)
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(py_path)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # spark.driver.memory only takes effect at JVM launch: a get_spark()

@@ -317,7 +317,8 @@ def test_partitioned_fsm_matches_grouped(spark):
     Arrow batch boundaries (forced tiny batch size)."""
     from d3d_etl_spark.operators.fsm import run_grouped_fsm
     from d3d_etl_spark.pbp.parser import add_events, add_metadata
-    from d3d_etl_spark.pbp.state import BASE_STATE_SCHEMA, STATE_COLUMNS, base_state_fsm
+    from base_state_reference import BASE_STATE_SCHEMA, base_state_fsm
+    from d3d_etl_spark.pbp.state import STATE_COLUMNS
     from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
 
     raw = spark.createDataFrame(generate_games(40, seed=7), RAW_SCHEMA)

@@ -481,15 +481,43 @@ def test_pbp_refresh_build_trips(spark, tmp_path, monkeypatch):
     garbage-collection deletes). A tree rebuilt per call costs about ten
     trips per node; rebuilding them all measured 3434 trips, the cached
     build 335."""
-    from py4j.clientserver import ClientServerConnection
-
     from d3d_etl_spark.io import read_parquet
     from d3d_etl_spark.pbp.pipeline import run_analytics
     from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
 
     path = str(tmp_path / "narration")
     spark.createDataFrame(generate_games(20, seed=5), RAW_SCHEMA).write.parquet(path)
-    trips = []
+    trips = _trip_counter(monkeypatch)
+    for warm in (False, True):
+        raw = read_parquet(spark, path)
+        if warm:
+            trips.append(0)
+        out = run_analytics(raw)
+        out.batting, out.situational
+    assert trips[0] < 500, trips[0]
+
+
+def test_q1_build_trips(spark, sf_dir, monkeypatch):
+    """Building q1_pricing_summary's plan costs few py4j round trips once
+    PySpark stops recording a Python call site around every Column method
+    and `F.col` (session.get_spark sets
+    spark.python.sql.dataFrameDebugging.enabled=false): that bookkeeping
+    costs several JVM calls per wrapped call. Counted on the second of two
+    builds, without `m` commands: 158 measured, 618 with the call sites."""
+    trips = _trip_counter(monkeypatch)
+    for warm in (False, True):
+        if warm:
+            trips.append(0)
+        REGISTRY["q1_pricing_summary"].fn(spark, sf_dir)
+    assert trips[0] < 250, trips[0]
+
+
+def _trip_counter(monkeypatch) -> list:
+    """Count py4j round trips other than `m` (garbage-collection deletes)
+    into trips[0] once the caller appends it; until then count nothing."""
+    from py4j.clientserver import ClientServerConnection
+
+    trips: list = []
     send = ClientServerConnection.send_command
 
     def counted(self, command, *args, **kwargs):
@@ -498,13 +526,7 @@ def test_pbp_refresh_build_trips(spark, tmp_path, monkeypatch):
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    for warm in (False, True):
-        raw = read_parquet(spark, path)
-        if warm:
-            trips.append(0)
-        out = run_analytics(raw)
-        out.batting, out.situational
-    assert trips[0] < 500, trips[0]
+    return trips
 
 
 def test_fixture_war_runs_production_chain(spark, monkeypatch):

@@ -225,7 +225,8 @@ def test_fsm_mega_game_parity(spark):
     the mega-game's partition beyond hash placement."""
     from d3d_etl_spark.operators.fsm import run_grouped_fsm
     from d3d_etl_spark.pbp.parser import add_base_state, add_events, add_metadata
-    from d3d_etl_spark.pbp.state import BASE_STATE_SCHEMA, STATE_COLUMNS, base_state_fsm
+    from base_state_reference import BASE_STATE_SCHEMA, base_state_fsm
+    from d3d_etl_spark.pbp.state import STATE_COLUMNS
     from d3d_etl_spark.pbp.synth import RAW_SCHEMA, generate_games
 
     rows = generate_games(20, seed=13)
